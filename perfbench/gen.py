@@ -1,180 +1,68 @@
 """Seeded input generators for the benchmark.
 
-``write_tables`` writes query tables (the TPC-H-shaped star schema plus
-``events``, ``documents`` and ``embeddings``) as one parquet file each,
-with the column names, types and value domains of the engine's fixture
-tables.  ``write_read_pairs`` writes the read-pair
-input of the two-stage pipeline.  The same seed always gives the same
-bytes of input; the program under test only ever sees the files.
+``write_tables`` writes the two query tables the workloads read,
+``documents`` and ``embeddings``, as one parquet file each, with the
+schemas of the engine's fixture tables.  ``write_read_pairs`` writes the
+read-pair input of the two-stage pipeline.  The same seed always gives
+the same bytes of input; the program under test only ever sees the files.
+
+The query tables follow the fixture tables at scale factor 0.01.  The
+figures next to each constant were measured on those tables (and on
+sf0.1, where the shares are the same); ``python3 perfbench/gen.py
+--describe DIR`` prints them for any directory of tables, so the
+generated tables can be compared with a fixture directory directly.
 """
 
 from __future__ import annotations
 
-import datetime as dt
+import argparse
+import collections
+import json
 import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-# Rows per table, the fixture tables' counts at scale factor 0.01.
-TABLE_ROWS = {
-    "customer": 1500,
-    "supplier": 100,
-    "part": 2000,
-    "orders": 15000,
-    "lineitem": 60000,
-    "events": 10000,
-    "documents": 500,
-    "embeddings": 500,
-}
-EVENT_USERS = 150
-EMBED_DIM = 64
-EMBED_BASE_SEED = 20240101  # the fixed vector set every seed rotates
-NEAR_DUP_FRAC = 0.05  # documents that copy an earlier one plus a marker word
-
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PART_ADJ = ["small", "large", "red", "blue", "hot", "old", "new", "shiny"]
-PART_NOUN = ["ring", "widget", "bolt", "gear", "gizmo", "plate", "anvil", "spring"]
-PART_TYPES = ["ECONOMY", "STANDARD", "LARGE", "SMALL", "MEDIUM", "PROMO"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
-LANGS = ["en", "de", "es", "fr", "zh"]
-LANG_P = [0.44, 0.14, 0.14, 0.14, 0.14]
+# Fixture sf0.01: 500 documents, 500 embeddings (sf0.1: 5,000 and 2,000).
+TABLE_ROWS = {"documents": 500, "embeddings": 500}
+# Fixture: 10 to 99 words per document, uniform (sf0.01 median 56, mean 54.3).
+DOC_WORDS = (10, 99)
+# Fixture: these 30 words, each at about 1/30 of all words, plus the marker.
 VOCAB = (
     "a the big small fast slow data table row column key value join merge "
     "hash sort scan filter group agg window stream batch query spark order "
     "line part customer vector"
 ).split()
+# Fixture: 25 of 500 documents (sf0.1: 250 of 5,000) are another
+# document's text followed by the word "dup".
+NEAR_DUP_FRAC = 0.05
+DUP_MARKER = "dup"
+# Fixture sf0.01: en 218, zh 75, es 73, de 70, fr 64 of 500.
+LANGS = ["en", "de", "es", "fr", "zh"]
+LANG_P = [0.44, 0.14, 0.14, 0.14, 0.14]
+# Fixture: document i comes from source src{i % 20}.
+SOURCES = 20
+# Fixture: 64-d unit vectors with independent Gaussian directions.
+# Pairwise cosine mean 0.000, sd 0.125; 59 pairs above 0.4 (the engine's
+# pair threshold); nearest-neighbour cosine median 0.367.  Labels 0-9
+# are not tied to the geometry (same-label cosine mean 0.002).
+EMBED_DIM = 64
+EMBED_LABELS = 10
+EMBED_BASE_SEED = 20240101  # the fixed vector set every seed rotates
 
 
-def _ts(start: dt.datetime, seconds: np.ndarray) -> pa.Array:
-    base = int(start.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-    return pa.array(base + (seconds * 1_000_000).astype(np.int64), pa.timestamp("us"))
-
-
-def _money(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _region(rng, n) -> pa.Table:
-    return pa.table({"r_regionkey": pa.array(range(5), pa.int32()), "r_name": REGIONS})
-
-
-def _nation(rng, n) -> pa.Table:
-    return pa.table(
-        {
-            "n_nationkey": pa.array(range(25), pa.int32()),
-            "n_name": [f"NATION_{i}" for i in range(25)],
-            "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-        }
-    )
-
-
-def _customer(rng, n) -> pa.Table:
-    k = n["customer"]
-    return pa.table(
-        {
-            "c_custkey": pa.array(np.arange(k), pa.int64()),
-            "c_name": [f"Customer#{i:09d}" for i in range(k)],
-            "c_nationkey": pa.array(rng.integers(0, 25, k), pa.int32()),
-            "c_acctbal": _money(rng, -999.99, 9999.99, k),
-            "c_mktsegment": rng.choice(SEGMENTS, k).tolist(),
-        }
-    )
-
-
-def _supplier(rng, n) -> pa.Table:
-    k = n["supplier"]
-    return pa.table(
-        {
-            "s_suppkey": pa.array(np.arange(k), pa.int64()),
-            "s_name": [f"Supplier#{i:09d}" for i in range(k)],
-            "s_nationkey": pa.array(rng.integers(0, 25, k), pa.int32()),
-            "s_acctbal": _money(rng, -999.99, 9999.99, k),
-        }
-    )
-
-
-def _part(rng, n) -> pa.Table:
-    k = n["part"]
-    keys = np.arange(k)
-    return pa.table(
-        {
-            "p_partkey": pa.array(keys, pa.int64()),
-            "p_name": [
-                f"{PART_ADJ[a]} {PART_NOUN[b]}"
-                for a, b in zip(rng.integers(0, 8, k), rng.integers(0, 8, k))
-            ],
-            "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, k)],
-            "p_type": rng.choice(PART_TYPES, k).tolist(),
-            "p_size": pa.array(rng.integers(1, 51, k), pa.int32()),
-            "p_retailprice": np.round(900.0 + (keys % 1000) / 10.0, 1),
-        }
-    )
-
-
-def _orders(rng, n) -> pa.Table:
-    k = n["orders"]
-    return pa.table(
-        {
-            "o_orderkey": pa.array(np.arange(k), pa.int64()),
-            "o_custkey": pa.array(rng.integers(0, n["customer"], k), pa.int64()),
-            "o_orderstatus": rng.choice(["F", "O", "P"], k).tolist(),
-            "o_totalprice": _money(rng, 1000.0, 500000.0, k),
-            "o_orderdate": _ts(dt.datetime(1995, 1, 1), rng.integers(0, 2404, k) * 86400.0),
-            "o_orderpriority": rng.choice(PRIORITIES, k).tolist(),
-        }
-    )
-
-
-def _lineitem(rng, n) -> pa.Table:
-    k = n["lineitem"]
-    qty = rng.integers(1, 51, k).astype(np.float64)
-    return pa.table(
-        {
-            "l_orderkey": pa.array(rng.integers(0, n["orders"], k), pa.int64()),
-            "l_partkey": pa.array(rng.integers(0, n["part"], k), pa.int64()),
-            "l_suppkey": pa.array(rng.integers(0, n["supplier"], k), pa.int64()),
-            "l_linenumber": pa.array(rng.integers(1, 8, k), pa.int32()),
-            "l_quantity": qty,
-            "l_extendedprice": np.round(qty * rng.uniform(500.0, 3000.0, k), 2),
-            "l_discount": rng.integers(0, 11, k) / 100.0,
-            "l_tax": rng.integers(0, 9, k) / 100.0,
-            "l_returnflag": rng.choice(["A", "N", "R"], k).tolist(),
-            "l_linestatus": rng.choice(["O", "F"], k).tolist(),
-            "l_shipdate": _ts(dt.datetime(1995, 1, 2), rng.integers(0, 2498, k) * 86400.0),
-        }
-    )
-
-
-def _events(rng, n) -> pa.Table:
-    k = n["events"]
-    return pa.table(
-        {
-            "event_id": pa.array(np.arange(k), pa.int64()),
-            "ts": _ts(dt.datetime(2024, 1, 1), np.sort(rng.uniform(0.0, 30 * 86400.0, k))),
-            "user_id": pa.array(rng.integers(0, EVENT_USERS, k), pa.int64()),
-            "event_type": rng.choice(EVENT_TYPES, k).tolist(),
-            "value": np.maximum(np.round(rng.lognormal(3.5, 0.85, k), 2), 0.01),
-            "props": [f'{{"k": {v}}}' for v in rng.integers(0, 100, k)],
-        }
-    )
-
-
-def _documents(rng, n) -> pa.Table:
+def _documents(rng: np.random.Generator, k: int) -> pa.Table:
     # The seed draws the content; the shape is fixed: every seed gives the
     # same word counts, the same number of near-duplicates and the same
     # language mix, so runs with different seeds do the same amount of work.
-    k = n["documents"]
-    lengths = rng.permutation(10 + np.arange(k) % 90)
-    n_dups = round(NEAR_DUP_FRAC * k)
-    dups = set(rng.choice(np.arange(1, k), n_dups, replace=False).tolist())
+    span = DOC_WORDS[1] - DOC_WORDS[0] + 1
+    lengths = rng.permutation(DOC_WORDS[0] + np.arange(k) * span // k)
+    dups = set(rng.choice(np.arange(1, k), round(NEAR_DUP_FRAC * k), replace=False).tolist())
     texts: list[str] = []
     for i in range(k):
         if i in dups:
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
+            texts.append(f"{texts[int(rng.integers(0, i))]} {DUP_MARKER}")
         else:
             texts.append(" ".join(rng.choice(VOCAB, int(lengths[i]))))
     langs = np.resize(np.repeat(LANGS, np.round(np.array(LANG_P) * k).astype(int)), k)
@@ -183,17 +71,16 @@ def _documents(rng, n) -> pa.Table:
             "doc_id": pa.array(np.arange(k), pa.int64()),
             "text": texts,
             "lang": rng.permutation(langs).tolist(),
-            "source": [f"src{i % 20}" for i in range(k)],
+            "source": [f"src{i % SOURCES}" for i in range(k)],
             "n_chars": pa.array([len(s) for s in texts], pa.int64()),
         }
     )
 
 
-def _embeddings(rng, n) -> pa.Table:
+def _embeddings(rng: np.random.Generator, k: int) -> pa.Table:
     # The seed rotates one fixed set of unit vectors: coordinates change
     # with the seed, pairwise distances (so the neighbour graphs the ANN
     # queries build and walk) do not, and neither does the work they do.
-    k = n["embeddings"]
     base = np.random.default_rng(EMBED_BASE_SEED).standard_normal((k, EMBED_DIM))
     base /= np.linalg.norm(base, axis=1, keepdims=True)
     rotation, _ = np.linalg.qr(rng.standard_normal((EMBED_DIM, EMBED_DIM)))
@@ -202,41 +89,65 @@ def _embeddings(rng, n) -> pa.Table:
         {
             "vec_id": pa.array(np.arange(k), pa.int64()),
             "embedding": pa.array(list(vec), pa.list_(pa.float32())),
-            "label": pa.array(rng.permutation(np.arange(k) % 10), pa.int32()),
+            "label": pa.array(rng.permutation(np.arange(k) % EMBED_LABELS), pa.int32()),
         }
     )
 
 
-MAKERS = {
-    "region": _region,
-    "nation": _nation,
-    "customer": _customer,
-    "supplier": _supplier,
-    "part": _part,
-    "orders": _orders,
-    "lineitem": _lineitem,
-    "events": _events,
-    "documents": _documents,
-    "embeddings": _embeddings,
-}
-TABLES = list(MAKERS)
+MAKERS = {"documents": _documents, "embeddings": _embeddings}
 
 
-def write_tables(seed: int, out_dir: str, names: list[str] = TABLES) -> dict[str, int]:
-    """Write tables ``names`` for ``seed`` under ``out_dir``; returns rows
-    per table.  Each table draws from its own generator, so its bytes do
-    not depend on which other tables are written."""
+def write_tables(seed: int, out_dir: str) -> dict[str, int]:
+    """Write every table for ``seed`` under ``out_dir``; returns rows per
+    table."""
     os.makedirs(out_dir, exist_ok=True)
     rows = {}
-    for name in names:
-        rng = np.random.default_rng([seed, TABLES.index(name)])
-        table = MAKERS[name](rng, TABLE_ROWS)
+    for i, (name, make) in enumerate(MAKERS.items()):
+        table = make(np.random.default_rng([seed, i]), TABLE_ROWS[name])
         pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
         rows[name] = table.num_rows
     return rows
 
 
+def describe(data_dir: str) -> dict:
+    """The statistics the constants above were set from, measured on the
+    tables in ``data_dir``."""
+    docs = pq.read_table(os.path.join(data_dir, "documents.parquet")).to_pydict()
+    texts = docs["text"]
+    words = np.array([len(t.split()) for t in texts])
+    known = set(texts)
+    marked = [t for t in texts if t.endswith(" " + DUP_MARKER)]
+    emb = pq.read_table(os.path.join(data_dir, "embeddings.parquet")).to_pydict()
+    vec = np.array(emb["embedding"], dtype=np.float64)
+    cos = vec @ vec.T
+    upper = cos[np.triu_indices(len(vec), 1)]
+    np.fill_diagonal(cos, -2.0)
+    return {
+        "documents": len(texts),
+        "words_min_median_max": [int(words.min()), float(np.median(words)), int(words.max())],
+        "vocabulary": len({w for t in texts for w in t.split()} - {DUP_MARKER}),
+        "near_dups": len(marked),
+        "near_dups_of_a_document": sum(t[: -len(DUP_MARKER) - 1] in known for t in marked),
+        "langs": dict(sorted(collections.Counter(docs["lang"]).items())),
+        "sources": len(set(docs["source"])),
+        "embeddings": len(vec),
+        "dim": vec.shape[1],
+        "cos_mean_sd": [round(float(upper.mean()), 3), round(float(upper.std()), 3)],
+        "pairs_above_0.4": int((upper > 0.4).sum()),
+        "nn_cos_median": round(float(np.median(cos.max(axis=1))), 3),
+    }
+
+
 # -- read pairs for the two-stage pipeline --------------------------------
+#
+# No measured run of the reference workflow ships with the repo, so the
+# read-pair shape is chosen, not measured.  SAMPLES is the sample count of
+# the 200k-pair probe that sized this workload.  ZIPF_S makes sample_00 a
+# hot group (about a third of all pairs), the skew the per-sample
+# applyInPandas stage has to absorb.  The two prune fractions give the
+# Undetermined / empty-payload filter work on every run; the engine's
+# read-pair fixture holds one row of each kind.  READ_LEN spans common
+# short-read lengths.
 
 READ_PAIRS = 5_000
 SAMPLES = 24
@@ -311,3 +222,9 @@ def write_read_pairs(seed: int, path: str) -> dict:
         "samples": samples,
         "sam_rows": sam_rows,
     }
+
+
+if __name__ == "__main__":
+    ap = argparse.ArgumentParser(description="Print the statistics of a table directory.")
+    ap.add_argument("--describe", required=True, metavar="DIR")
+    print(json.dumps(describe(ap.parse_args().describe), indent=1))

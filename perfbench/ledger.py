@@ -49,6 +49,7 @@ WRAPPED = [
     ("flink_pipeline_spark.caching", "eager_checkpoint", "caching.eager_checkpoint"),
     ("flink_pipeline_spark.operators.llm", "nsw_beam", "operators.nsw_beam"),
     ("flink_pipeline_spark.operators.llm", "cosine_pairs", "operators.cosine_pairs"),
+    ("flink_pipeline_spark.operators.llm", "cosine_pairs_ivf", "operators.cosine_pairs"),
     ("flink_pipeline_spark.operators.llm", "minhash_wide", "operators.minhash_signatures"),
     ("flink_pipeline_spark.operators.llm", "minhash_signatures", "operators.minhash_signatures"),
     ("flink_pipeline_spark.operators.llm", "connected_components", "operators.connected_components"),

@@ -4,11 +4,14 @@
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
 Run from the repository root.  The run generates its inputs from
-``--seed``, sets the engine up three times (the median is ``setup_s``; each set-up
-ends with a warm-up pass that checks every operation's output), then
-issues operations in a closed
-loop with one client (each starts when the previous one returned) for
-``--seconds`` seconds, in passes over the workload.  The last line of
+``--seed`` and sets the engine up: registry import, session, store wipe
+and two warm-up passes, the first of which checks every operation's
+output.  Then it issues operations in a closed loop with one client
+(each starts when the previous one returned) for ``--seconds`` seconds
+and at least two passes over the workload.  Two more set-ups follow:
+each rebuilds the session, wipes the stores and repeats the first call
+of every operation that published a persisted store during warm-up.
+``setup_s`` is the median of the three set-ups.  The last line of
 standard output is one JSON object with the metrics: the end-to-end
 metrics with ``--trace 0``, the per-layer ledger with ``--trace 1``.
 Everything the run writes lands under ``.perfbench_work/``.
@@ -32,7 +35,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 SETUPS = 3
-MIN_PASSES = 3
+MIN_PASSES = 2
 STORE_ROOTS = {  # module constant -> directory under WORK/stores
     "HNSW_INDEX_CACHE": "hnsw",
     "PQ_INDEX_CACHE": "pq",
@@ -68,6 +71,11 @@ def _redirect_stores() -> None:
                 setattr(mod, const, os.path.join(WORK, "stores", sub))
 
 
+def _store_files() -> set[str]:
+    root = os.path.join(WORK, "stores")
+    return {os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs}
+
+
 def _session(cpus: int, trace: bool):
     from flink_pipeline_spark.session import EngineConf, get_session
 
@@ -101,18 +109,6 @@ def _vm_hwm_kb(pid: int | str) -> int:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1])
     return 0
-
-
-def _tail(values: list[float]) -> tuple[float, float, int]:
-    """Value at the highest percentile with at least ten samples beyond
-    it: (value, percentile, samples beyond).  Below 11 samples, the
-    median."""
-    xs = sorted(values)
-    n = len(xs)
-    if n < 11:
-        return statistics.median(xs), 50.0, n - (n // 2 + 1)
-    k = n - 11  # zero-based index with exactly ten samples above it
-    return xs[k], 100.0 * (k + 1) / n, n - k - 1
 
 
 def _run_op(op, spark, ledger=None) -> tuple[float, bool]:
@@ -171,8 +167,54 @@ def main(argv=None) -> int:
     attempted = failed = 0
     setups, session_s, setup_publish = [], [], []
     mismatched: set[str] = set()
+    store_ops = []  # the operations whose first call publishes a persisted store
+    latencies: dict[str, list[float]] = {op.name: [] for op in ops}
+    pass_times, layer_rows, out_bytes = [], [], []
     spark = None
-    for i in range(SETUPS):
+
+    def check(op) -> None:
+        nonlocal attempted, failed
+        attempted += 1
+        try:
+            ok = op.check(spark)
+        except Exception as e:  # an op that raises is counted, the run goes on
+            print(f"perfbench: {op.name} raised {e!r}"[:500], file=sys.stderr)
+            ok = False
+        if not ok:
+            failed += 1
+            mismatched.add(op.name)
+
+    def run_pass(timed: bool) -> None:
+        nonlocal attempted, failed
+        tracer = ledger if timed else None
+        t_p = time.perf_counter()
+        with tracer.pass_() if tracer is not None else nullcontext() as rec:
+            for op in ops:
+                attempted += 1
+                try:
+                    lat, ok = _run_op(op, spark, tracer)
+                    failed += not ok
+                    if timed:
+                        latencies[op.name].append(lat)
+                except Exception as e:
+                    print(f"perfbench: {op.name} raised {e!r}"[:500], file=sys.stderr)
+                    failed += 1
+        if timed:
+            pass_times.append(time.perf_counter() - t_p)
+        for op in ops:
+            if timed and hasattr(op, "output_bytes"):
+                out_bytes.append(op.output_bytes())
+            getattr(op, "cleanup", lambda: None)()
+        if tracer is not None:
+            layer_rows.append(ledger.pass_metrics(rec, *ledger.spark_status()))
+
+    def set_up(first: bool) -> None:
+        """The first set-up warms up with two passes over every operation;
+        the first pass checks every output and notes the operations that
+        publish a store.  A later set-up repeats only the work found to
+        belong to set-up: session build and the first call of each of
+        those operations."""
+        nonlocal spark
         t0 = time.perf_counter()
         if spark is not None:
             spark.stop()
@@ -181,61 +223,40 @@ def main(argv=None) -> int:
         session_s.append(time.perf_counter() - t_s)
         if ledger is not None:
             ledger.bind(spark)
-            if i == 0:
+            if first:
                 ledger.instrument()
             n_pub = ledger.calls("streaming.publish_store")
         shutil.rmtree(os.path.join(WORK, "stores"), ignore_errors=True)
-        for op in ops:  # warm-up pass, which also checks every output
-            attempted += 1
-            try:
-                ok = op.check(spark)
-            except Exception as e:  # an op that raises is counted, the run goes on
-                print(f"perfbench: {op.name} raised {e!r}"[:500], file=sys.stderr)
-                ok = False
-            if not ok:
-                failed += 1
-                mismatched.add(op.name)
-        setups.append(time.perf_counter() - t0 + (import_s if i == 0 else 0.0))
+        for op in ops if first else store_ops:
+            stored = _store_files()
+            check(op)
+            if first and _store_files() != stored:
+                store_ops.append(op)
+        if first:
+            run_pass(timed=False)
+        setups.append(time.perf_counter() - t0 + (import_s if first else 0.0))
         if ledger is not None:
             setup_publish.append(ledger.calls("streaming.publish_store") - n_pub)
 
-    latencies: dict[str, list[float]] = {op.name: [] for op in ops}
-    pass_times, layer_rows, out_bytes = [], [], []
+    set_up(first=True)
     t_end = time.perf_counter() + args.seconds
     while len(pass_times) < MIN_PASSES or time.perf_counter() < t_end:
-        t_p = time.perf_counter()
-        with ledger.pass_() if ledger is not None else nullcontext() as rec:
-            for op in ops:
-                attempted += 1
-                try:
-                    lat, ok = _run_op(op, spark, ledger)
-                    latencies[op.name].append(lat)
-                    failed += not ok
-                except Exception as e:
-                    print(f"perfbench: {op.name} raised {e!r}"[:500], file=sys.stderr)
-                    failed += 1
-        pass_times.append(time.perf_counter() - t_p)
-        for op in ops:
-            if hasattr(op, "output_bytes"):
-                out_bytes.append(op.output_bytes())
-            getattr(op, "cleanup", lambda: None)()
-        if ledger is not None:
-            layer_rows.append(ledger.pass_metrics(rec, *ledger.spark_status()))
+        run_pass(timed=True)
+    for _ in range(SETUPS - 1):  # after the timed passes, which they would cool
+        set_up(first=False)
 
     rss_kb = _vm_hwm_kb("self") + _vm_hwm_kb(SparkContext._gateway.proc.pid)
     _shutdown(spark)
 
     medians = {n: statistics.median(v) for n, v in latencies.items() if v}
-    pooled = [x for v in latencies.values() for x in v]
-    tail, tail_pct, tail_beyond = _tail(pooled) if pooled else (0.0, 0.0, 0)
     e2e = {
         "setup_s": (statistics.median(setups), "s"),
         "pass_s": (statistics.median(pass_times), "s"),
         "query_geomean_s": (
             math.exp(statistics.fmean(math.log(v) for v in medians.values()))
             if medians else 0.0, "s"),
-        "latency_tail_s": (tail, "s"),
     }
+    jobs_attributed = None
     if ledger is not None:
         layer = {k: statistics.median(r[k] for r in layer_rows) for k in layer_rows[0]}
         layer["session.get_session_s"] = statistics.median(session_s)
@@ -243,6 +264,9 @@ def main(argv=None) -> int:
         layer["pipeline.output_bytes"] = statistics.median(out_bytes) if out_bytes else 0
         layer["trace.pass_s"] = e2e["pass_s"][0]
         layer["mem.peak_rss_mb"] = rss_kb / 1024.0
+        # every job the status store lists for a pass falls in one phase
+        jobs_attributed = all(
+            r["plans.build_jobs"] + r["exec.jobs"] == r["trace.pass_jobs"] for r in layer_rows)
         metrics = {k: {"value": v, "unit": workloads.layer_unit(k)}
                    for k, v in sorted(layer.items()) if k in workloads.PER_LAYER}
     else:
@@ -251,9 +275,9 @@ def main(argv=None) -> int:
     print(json.dumps({
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "inputs": inputs, "input_gen_s": gen_s, "setups_s": setups,
+        "store_ops": [op.name for op in store_ops],
         "passes": len(pass_times), "pass_times_s": pass_times,
-        "op_median_s": medians, "latency_tail_pct": tail_pct,
-        "latency_tail_samples_beyond": tail_beyond, "latency_samples": len(pooled),
+        "op_median_s": medians, "jobs_attributed": jobs_attributed,
         "mismatched": sorted(mismatched), "failed_frac": failed / max(attempted, 1),
         "peak_rss_mb": rss_kb / 1024.0,
     }))
