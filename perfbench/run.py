@@ -5,13 +5,13 @@
 
 Run from the repository root.  The run generates its inputs from
 ``--seed`` and sets the engine up: registry import, session, store wipe
-and two warm-up passes, the first of which checks every operation's
-output.  Then it issues operations in a closed loop with one client
-(each starts when the previous one returned) for ``--seconds`` seconds
-and at least two passes over the workload.  Two more set-ups follow:
-each rebuilds the session, wipes the stores and repeats the first call
-of every operation that published a persisted store during warm-up.
-``setup_s`` is the median of the three set-ups.  The last line of
+and a warm-up that makes the first call of every operation, all at
+once, and checks every output.  Then it issues operations in a closed
+loop with one client (each starts when the previous one returned) for
+``--seconds`` seconds and at least one pass over the workload.  Two
+more set-ups follow: each rebuilds the session, wipes the stores and
+repeats the first call of every operation that publishes a persisted
+store.  ``setup_s`` is the median of the three set-ups.  The last line of
 standard output is one JSON object with the metrics: the end-to-end
 metrics with ``--trace 0``, the per-layer ledger with ``--trace 1``.
 Everything the run writes lands under ``.perfbench_work/``.
@@ -29,13 +29,14 @@ import statistics
 import sys
 import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import nullcontext
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 SETUPS = 3
-MIN_PASSES = 2
+MIN_PASSES = 1
 STORE_ROOTS = {  # module constant -> directory under WORK/stores
     "HNSW_INDEX_CACHE": "hnsw",
     "PQ_INDEX_CACHE": "pq",
@@ -71,9 +72,15 @@ def _redirect_stores() -> None:
                 setattr(mod, const, os.path.join(WORK, "stores", sub))
 
 
-def _store_files() -> set[str]:
+def _store_entries() -> set[str]:
+    """The published stores, as ``<store root>/<entry>``: an entry is one
+    published directory, named from its inputs, so the same call
+    publishes the same entry again."""
     root = os.path.join(WORK, "stores")
-    return {os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs}
+    if not os.path.isdir(root):
+        return set()
+    return {os.path.join(sub, e) for sub in os.listdir(root)
+            for e in os.listdir(os.path.join(root, sub))}
 
 
 def _session(cpus: int, trace: bool):
@@ -172,48 +179,77 @@ def main(argv=None) -> int:
     pass_times, layer_rows, out_bytes = [], [], []
     spark = None
 
-    def check(op) -> None:
-        nonlocal attempted, failed
-        attempted += 1
+    def first_call(op) -> tuple[bool, float]:
+        """Call ``op`` with its output check; (output ok, seconds).  Safe
+        on any thread: it only reads the run's state."""
+        t0 = time.perf_counter()
         try:
             ok = op.check(spark)
         except Exception as e:  # an op that raises is counted, the run goes on
             print(f"perfbench: {op.name} raised {e!r}"[:500], file=sys.stderr)
             ok = False
+        return ok, time.perf_counter() - t0
+
+    def tally(op, ok: bool) -> None:
+        nonlocal attempted, failed
+        attempted += 1
         if not ok:
             failed += 1
             mismatched.add(op.name)
 
-    def run_pass(timed: bool) -> None:
+    def check(op) -> None:
+        tally(op, first_call(op)[0])
+
+    def run_pass() -> None:
         nonlocal attempted, failed
-        tracer = ledger if timed else None
         t_p = time.perf_counter()
-        with tracer.pass_() if tracer is not None else nullcontext() as rec:
+        with ledger.pass_() if ledger is not None else nullcontext() as rec:
             for op in ops:
                 attempted += 1
                 try:
-                    lat, ok = _run_op(op, spark, tracer)
+                    lat, ok = _run_op(op, spark, ledger)
                     failed += not ok
-                    if timed:
-                        latencies[op.name].append(lat)
+                    latencies[op.name].append(lat)
                 except Exception as e:
                     print(f"perfbench: {op.name} raised {e!r}"[:500], file=sys.stderr)
                     failed += 1
-        if timed:
-            pass_times.append(time.perf_counter() - t_p)
+        pass_times.append(time.perf_counter() - t_p)
         for op in ops:
-            if timed and hasattr(op, "output_bytes"):
+            if hasattr(op, "output_bytes"):
                 out_bytes.append(op.output_bytes())
             getattr(op, "cleanup", lambda: None)()
-        if tracer is not None:
+        if ledger is not None:
             layer_rows.append(ledger.pass_metrics(rec, *ledger.spark_status()))
 
+    def warm_up() -> None:
+        """The first call of every operation, each checking its output,
+        all at once on threads of their own: they are independent, and a
+        cold JVM leaves cores idle between their jobs.  Then find the
+        operations whose first call publishes a store."""
+        with ThreadPoolExecutor(len(ops)) as pool:
+            firsts = list(pool.map(first_call, ops))
+        for op, (ok, _) in zip(ops, firsts):
+            tally(op, ok)
+        cold_s = {op.name: secs for op, (_, secs) in zip(ops, firsts)}
+        published = _store_entries()
+        if not published:
+            return
+        # Calls that ran at once cannot say which published what: wipe
+        # the stores and repeat the first calls one at a time, cheapest
+        # first, until every store is back.
+        shutil.rmtree(os.path.join(WORK, "stores"))
+        for op in sorted(ops, key=lambda o: cold_s[o.name]):
+            if published <= _store_entries():
+                break
+            before = _store_entries()
+            check(op)
+            if _store_entries() != before:
+                store_ops.append(op)
+
     def set_up(first: bool) -> None:
-        """The first set-up warms up with two passes over every operation;
-        the first pass checks every output and notes the operations that
-        publish a store.  A later set-up repeats only the work found to
-        belong to set-up: session build and the first call of each of
-        those operations."""
+        """The first set-up warms up (``warm_up``).  A later set-up
+        repeats only the work found to belong to set-up: session build
+        and the first call of each operation that publishes a store."""
         nonlocal spark
         t0 = time.perf_counter()
         if spark is not None:
@@ -227,13 +263,11 @@ def main(argv=None) -> int:
                 ledger.instrument()
             n_pub = ledger.calls("streaming.publish_store")
         shutil.rmtree(os.path.join(WORK, "stores"), ignore_errors=True)
-        for op in ops if first else store_ops:
-            stored = _store_files()
-            check(op)
-            if first and _store_files() != stored:
-                store_ops.append(op)
         if first:
-            run_pass(timed=False)
+            warm_up()
+        else:
+            for op in store_ops:
+                check(op)
         setups.append(time.perf_counter() - t0 + (import_s if first else 0.0))
         if ledger is not None:
             setup_publish.append(ledger.calls("streaming.publish_store") - n_pub)
@@ -241,7 +275,7 @@ def main(argv=None) -> int:
     set_up(first=True)
     t_end = time.perf_counter() + args.seconds
     while len(pass_times) < MIN_PASSES or time.perf_counter() < t_end:
-        run_pass(timed=True)
+        run_pass()
     for _ in range(SETUPS - 1):  # after the timed passes, which they would cool
         set_up(first=False)
 
