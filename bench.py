@@ -19,7 +19,8 @@ Protocol (reference experiment.py parity):
     window, 5 samples ride it out).
   * The two-stage pipeline (the reference's actual workload: demux
     convert + per-sample align) runs the same number of repeats with
-    up to 3 attempts each (experiment.py:341-357) and appends one CSV
+    up to 3 attempts each through flink_pipeline_spark.benchmark's
+    Experiment (experiment.py:341-357) and appends one CSV
     row per attempt to $SPARK_GRAFT_BENCH_CSV (default
     ./bench_results.csv) in the reference's exact results.csv schema
     (experiment.py:259-269):
@@ -313,45 +314,34 @@ HEADLINE = [
     "q_pq_rewrite_trigger",
 ]
 
-CSV_HEADER = "repeat_num,attempt_num,retcode,log_file,total_secs,bcl_secs,align_secs"
-MAX_RETRIES = 3  # reference experiment.py:330-357
-
 
 def _run_pipeline_experiment(spark, repeats: int, csv_path: str) -> None:
-    """The reference's Experiment.execute() on our Pipeline: N repeats,
-    <= MAX_RETRIES attempts each, one CSV row per attempt."""
+    """The reference's Experiment.execute() on our Pipeline:
+    benchmark.Experiment runs N repeats of up to max_retries attempts,
+    appending one CSV row per attempt as it goes."""
+    from flink_pipeline_spark.benchmark import Experiment, ExperimentConf
     from flink_pipeline_spark.pipeline import Pipeline, PipelineConf
     from flink_pipeline_spark.sources.fixtures import fixture_df
 
     pairs = fixture_df(spark, "read_pairs")
-    # rows are flushed per attempt: a failed repeat must still leave its
-    # retcode=1 attempt rows in the CSV (the reference schema exists to
-    # record exactly those), not vanish with a raised exception
-    first = not os.path.exists(csv_path)
-    with open(csv_path, "a") as f:
-        if first:
-            f.write(CSV_HEADER + "\n")
-        for rep in range(1, repeats + 1):
-            for attempt in range(1, MAX_RETRIES + 1):
-                out = tempfile.mkdtemp(prefix=f"bench_pipe_r{rep}a{attempt}_")
-                shutil.rmtree(out)  # Pipeline requires a fresh output dir
-                try:
-                    res = Pipeline(spark, PipelineConf(output_dir=out)).run(pairs)
-                    f.write(
-                        f"{rep},{attempt},0,-,{res.total_secs:.3f},"
-                        f"{res.convert_secs:.3f},{res.align_secs:.3f}\n"
-                    )
-                    f.flush()
-                    break
-                except Exception:
-                    f.write(f"{rep},{attempt},1,-,0.0,0.0,0.0\n")
-                    f.flush()
-                finally:
-                    shutil.rmtree(out, ignore_errors=True)
-            else:
-                raise RuntimeError(
-                    f"pipeline repeat {rep} failed {MAX_RETRIES} times"
-                )
+
+    def workload() -> dict:
+        out = tempfile.mkdtemp(prefix="bench_pipe_")
+        shutil.rmtree(out)  # Pipeline requires a fresh output dir
+        try:
+            res = Pipeline(spark, PipelineConf(output_dir=out)).run(pairs)
+        finally:
+            shutil.rmtree(out, ignore_errors=True)
+        return {
+            "bcl_secs": round(res.convert_secs, 3),
+            "align_secs": round(res.align_secs, 3),
+        }
+
+    conf = ExperimentConf(results_csv=csv_path, num_repeats=repeats)
+    if not Experiment(conf).execute(workload):
+        raise RuntimeError(
+            f"a pipeline repeat failed {conf.max_retries} times"
+        )
 
 
 def _wipe_persisted_stores() -> None:

@@ -34,9 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import literal_frame, parallel_frames
+from ..caching import parallel_frames
 from ..catalog import load_table
-from ..functions.portable import hash56, hash56_sql_duckdb, round_agg, round_sql
+from ..functions.portable import hash56, hash56_sql_duckdb
 from ..operators.llm import (
     NORM2_SQL,
     SQDIST_Q_PRE_SQL,
@@ -60,6 +60,7 @@ from .llm_ops import (
     _nsw_beam_sql,
     _nsw_graph_sql_for,
 )
+from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import register
 
 # the deleted slice: a deterministic ~1/8 hash residue, disjoint from
@@ -269,31 +270,9 @@ def _register_delete_recall():
             FROM gb{NSW_HOPS}
             WHERE node <> query_id
         ) t WHERE rank <= 3
-    ), m AS (
-        SELECT 'compacted' AS method, query_id, neighbor_id FROM cm
-        UNION ALL
-        SELECT 'rebuilt', query_id, neighbor_id FROM rm
-        UNION ALL
-        SELECT 'exact', query_id, neighbor_id FROM truth
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        FROM m LEFT JOIN truth t
-          ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest(['exact', 'compacted', 'rebuilt']) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall,
-           CASE WHEN coalesce(c.n_method, 0) = 0 THEN 0.0
-                ELSE {round_sql('c.hits::DOUBLE / c.n_method')} END AS prec
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt
+    ), {recall_rollup_sql(
+        {'exact': 'truth', 'compacted': 'cm', 'rebuilt': 'rm'}, NEIGHBOR_KEYS)}
+    SELECT * FROM rollup
     """
     )
 
@@ -385,52 +364,8 @@ def _register_delete_recall():
         reb = nsw_search(surv, queries, radj, **skw).select(
             "query_id", "neighbor_id"
         )
-        m = (
-            comp.withColumn("method", F.lit("compacted"))
-            .unionByName(reb.withColumn("method", F.lit("rebuilt")))
-            .unionByName(truth.withColumn("method", F.lit("exact")))
-        )
-        hit = truth.withColumn("is_hit", F.lit(1))
-        counts = (
-            m.join(hit, ["query_id", "neighbor_id"], "left")
-            .groupBy("method")
-            .agg(
-                F.count("*").cast("long").alias("n_method"),
-                F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-                .cast("long")
-                .alias("hits"),
-            )
-        )
-        grid = literal_frame(spark,
-            [("exact",), ("compacted",), ("rebuilt",)], "method STRING"
-        )
-        tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
-        return (
-            grid.join(counts, "method", "left")
-            .crossJoin(F.broadcast(tt))
-            .select(
-                "method",
-                "n_truth",
-                F.coalesce(F.col("n_method"), F.lit(0))
-                .cast("long")
-                .alias("n_method"),
-                F.coalesce(F.col("hits"), F.lit(0))
-                .cast("long")
-                .alias("hits"),
-                round_agg(
-                    F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                    / F.col("n_truth")
-                ).alias("recall"),
-                F.when(
-                    F.coalesce(F.col("n_method"), F.lit(0)) == 0, F.lit(0.0)
-                )
-                .otherwise(
-                    round_agg(
-                        F.col("hits").cast("double") / F.col("n_method")
-                    )
-                )
-                .alias("prec"),
-            )
+        return recall_rollup(
+            spark, truth, {"exact": truth, "compacted": comp, "rebuilt": reb}
         )
 
     return q_ann_delete_recall

@@ -20,9 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import literal_frame, parallel_frames
+from ..caching import parallel_frames
 from ..catalog import load_table
-from ..functions.portable import hash56_sql_duckdb, round_agg, round_sql
+from ..functions.portable import hash56_sql_duckdb
 from ..operators.llm import topk_neighbors, topk_neighbors_ivf
 from .llm_ops import (
     FILT_LABEL,
@@ -39,6 +39,7 @@ from .llm_ops import (
     hnsw_store_for,
     q_sim_filtered_topk,
 )
+from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import register
 
 # the filtered family's query set (vec_id < 5 — q_sim_filtered_topk's
@@ -190,33 +191,10 @@ q_sim_hnsw_filtered.__doc__ = q_sim_hnsw_filtered.__doc__.format(
               ON e.vec_id <> q.vec_id AND e.label = {FILT_LABEL}
             WHERE q.vec_id < 5
         ) t WHERE rank <= 3
-    ), {_hnsw_filtered_with()}, m AS (
-        SELECT 'pre' AS method, query_id, neighbor_id FROM pre
-        UNION ALL
-        SELECT 'post', query_id, neighbor_id FROM post
-        UNION ALL
-        SELECT 'graph', query_id, neighbor_id FROM gfinal
-        UNION ALL
-        SELECT 'exact', query_id, neighbor_id FROM truth
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        FROM m LEFT JOIN truth t
-          ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest(['exact', 'pre', 'post', 'graph']) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall,
-           CASE WHEN coalesce(c.n_method, 0) = 0 THEN 0.0
-                ELSE {round_sql('c.hits::DOUBLE / c.n_method')} END AS prec
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt
+    ), {_hnsw_filtered_with()}, {recall_rollup_sql(
+        {'exact': 'truth', 'pre': 'pre', 'post': 'post', 'graph': 'gfinal'},
+        NEIGHBOR_KEYS)}
+    SELECT * FROM rollup
     """,
 )
 def q_ann_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,51 +256,10 @@ def q_ann_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "neighbor_id"
         ),
     )
-    m = (
-        pre.withColumn("method", F.lit("pre"))
-        .unionByName(post.withColumn("method", F.lit("post")))
-        .unionByName(graph.withColumn("method", F.lit("graph")))
-        .unionByName(truth.withColumn("method", F.lit("exact")))
-    )
-    hit = truth.withColumn("is_hit", F.lit(1))
-    counts = (
-        m.join(hit, ["query_id", "neighbor_id"], "left")
-        .groupBy("method")
-        .agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-            .cast("long")
-            .alias("hits"),
-        )
-    )
-    grid = literal_frame(spark,
-        [("exact",), ("pre",), ("post",), ("graph",)], "method STRING"
-    )
-    tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    return (
-        grid.join(counts, "method", "left")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "method",
-            "n_truth",
-            F.coalesce(F.col("n_method"), F.lit(0))
-            .cast("long")
-            .alias("n_method"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            round_agg(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.col("n_truth")
-            ).alias("recall"),
-            F.when(
-                F.coalesce(F.col("n_method"), F.lit(0)) == 0, F.lit(0.0)
-            )
-            .otherwise(
-                round_agg(
-                    F.col("hits").cast("double") / F.col("n_method")
-                )
-            )
-            .alias("prec"),
-        )
+    return recall_rollup(
+        spark,
+        truth,
+        {"exact": truth, "pre": pre, "post": post, "graph": graph},
     )
 
 

@@ -27,15 +27,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.portable import round_agg
 from ..operators.multimodal import AFP_WINDOWS, audio_fp_bands, pcm_stream
-from .image_dedup import (
-    MAX_HAMMING,
-    _band_pairs,
-    _pairs_sql,
-    _RECALL_HITS,
-    _RECALL_ROW,
-)
+from .image_dedup import MAX_HAMMING, _band_pairs, _pairs_sql
+from .recall_rollup import recall_rollup, recall_rollup_sql
 from .registry import register
 
 AFP_DIR = os.path.abspath(
@@ -187,10 +181,8 @@ q_dedup_audio_fp.__doc__ = q_dedup_audio_fp.__doc__.format(mh=MAX_HAMMING)
         GROUP BY 1, 2
     ), truth AS (
         SELECT file_a, file_b FROM co WHERE dist <= {TRUTH_SUM_AFP}
-    ), denom AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth
-    ),{_RECALL_HITS.format(m="afp")}
-    {_RECALL_ROW.format(name="afp", m="afp")}
+    ), {recall_rollup_sql({'afp': 'afp_m'}, ('file_a', 'file_b'))}
+    SELECT * FROM rollup
     """,
 )
 def q_dedup_audio_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -231,26 +223,8 @@ def q_dedup_audio_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dist") <= TRUTH_SUM_AFP)
         .select("file_a", "file_b")
     )
-    denom = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    method = q_dedup_audio_fp(spark, sf_dir)
-    h = method.select("file_a", "file_b").join(
-        truth.withColumn("hit", F.lit(1)), ["file_a", "file_b"], "left"
-    ).agg(
-        F.count("*").cast("long").alias("n_method"),
-        F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("hits"),
-    )
-    prec = F.when(F.col("n_method") == 0, F.lit(0.0)).otherwise(
-        round_agg(F.col("hits").cast("double") / F.col("n_method"))
-    )
-    return h.crossJoin(F.broadcast(denom)).select(
-        F.lit("afp").alias("method"),
-        F.col("n_truth"),
-        "n_method",
-        "hits",
-        round_agg(
-            F.col("hits").cast("double") / F.col("n_truth")
-        ).alias("recall"),
-        prec.alias("prec"),
+    return recall_rollup(
+        spark, truth, {"afp": q_dedup_audio_fp(spark, sf_dir)}
     )
 
 

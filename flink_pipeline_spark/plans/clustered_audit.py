@@ -59,7 +59,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import literal_frame
 from ..catalog import load_table
 from ..functions.portable import HASH56_HEX_DIGITS, round_agg, round_sql
 from ..operators.llm import (
@@ -90,6 +89,7 @@ from .llm_ops import (
     hnsw_beam_audit,
 )
 from .maxsim import _maxsim_recall_frame
+from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import ORACLES, register
 
 CLUSTER_K = 8     # planted clusters == IVF seed count (one seed/cluster)
@@ -266,80 +266,6 @@ _TRUTH_CTE = f"""truth AS MATERIALIZED (
     )"""
 
 
-def _rollup_sql(methods: list[str]) -> str:
-    """m/counts/grid/tt CTEs + final select over method CTEs named
-    after themselves, plus the 'exact' row from truth — the shared
-    recall-rollup text (the q_pq_refresh_serve_recall shape)."""
-    m = "\n        UNION ALL\n        ".join(
-        ["SELECT 'exact' AS method, query_id, neighbor_id FROM truth"]
-        + [
-            f"SELECT '{name}', query_id, neighbor_id FROM {name}"
-            for name in methods
-        ]
-    )
-    grid = ", ".join(f"'{n}'" for n in ["exact"] + methods)
-    return f"""m AS (
-        {m}
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        FROM m LEFT JOIN truth t
-          ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest([{grid}]) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt"""
-
-
-def _recall_rollup(
-    spark: SparkSession, truth: DataFrame, methods: dict[str, DataFrame]
-) -> DataFrame:
-    """(method, n_truth, n_method, hits, recall): the Spark twin of
-    _rollup_sql — every frame must carry (query_id, neighbor_id)."""
-    m = truth.withColumn("method", F.lit("exact"))
-    for name, df in methods.items():
-        m = m.unionByName(df.withColumn("method", F.lit(name)))
-    hit = truth.withColumn("is_hit", F.lit(1))
-    counts = (
-        m.join(hit, ["query_id", "neighbor_id"], "left")
-        .groupBy("method")
-        .agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-            .cast("long")
-            .alias("hits"),
-        )
-    )
-    grid = literal_frame(spark,
-        [(n,) for n in ["exact"] + list(methods)], "method STRING"
-    )
-    tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    return (
-        grid.join(counts, "method", "left")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "method",
-            "n_truth",
-            F.coalesce(F.col("n_method"), F.lit(0))
-            .cast("long")
-            .alias("n_method"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            round_agg(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.col("n_truth")
-            ).alias("recall"),
-        )
-    )
-
-
 # -- the four audits --------------------------------------------------------
 
 def _gexp_clustered_oracle() -> str:
@@ -350,7 +276,9 @@ def _gexp_clustered_oracle() -> str:
         SELECT query_id, neighbor_id FROM ({rr}) x
     ), gexp AS (
         SELECT query_id, neighbor_id FROM ({gx}) x
-    ), {_TRUTH_CTE}, {_rollup_sql(['rerank', 'gexp'])}
+    ), {_TRUTH_CTE}, {recall_rollup_sql(
+        {'exact': 'truth', 'rerank': 'rerank', 'gexp': 'gexp'}, NEIGHBOR_KEYS)}
+    SELECT * EXCLUDE (prec) FROM rollup
     """
 
 
@@ -371,7 +299,7 @@ def q_gexp_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the registered rerank and graph-expand texts verbatim
     with every table moved to the clustered CTE (generation replayed
     elementwise, the drift-row discipline) + brute-force truth +
-    the shared rollup.
+    the shared recall rollup (plans/recall_rollup.py).
 
     Scale: the generation is a zero-shuffle projection; everything
     else is the registered rows' own plan classes."""
@@ -401,7 +329,9 @@ def q_gexp_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)
     )
-    return _recall_rollup(spark, truth, {"rerank": rerank, "gexp": gexp})
+    return recall_rollup(
+        spark, truth, {"exact": truth, "rerank": rerank, "gexp": gexp}
+    ).drop("prec")
 
 
 def _nsw_descent_clustered_oracle() -> str:

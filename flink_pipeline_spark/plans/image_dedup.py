@@ -25,8 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.portable import round_agg, round_sql
 from ..operators.multimodal import ahash_bands, dhash_bands, gray_pixels
+from .recall_rollup import recall_rollup, recall_rollup_sql
 from .registry import register
 
 PHASH_DIR = os.path.abspath(
@@ -262,25 +262,6 @@ def q_dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _band_pairs(dhash_bands(_load_phash_files(spark)))
 
 
-_RECALL_HITS = """
-    {m}_h AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_method,
-               CAST(coalesce(sum(CASE WHEN t.file_a IS NOT NULL
-                                      THEN 1 ELSE 0 END), 0) AS BIGINT)
-                 AS hits
-        FROM {m}_m m LEFT JOIN truth t
-          ON m.file_a = t.file_a AND m.file_b = t.file_b
-    )"""
-
-_RECALL_ROW = (
-    "SELECT '{name}' AS method, d.n_truth, h.n_method, h.hits, "
-    + round_sql("h.hits::DOUBLE / d.n_truth")
-    + " AS recall, CASE WHEN h.n_method = 0 THEN 0.0 ELSE "
-    + round_sql("h.hits::DOUBLE / h.n_method")
-    + " END AS prec FROM {m}_h h CROSS JOIN denom d"
-)
-
-
 @register(
     "q_dedup_image_phash_recall",
     oracle=f"""
@@ -295,11 +276,9 @@ _RECALL_ROW = (
         GROUP BY 1, 2
     ), truth AS (
         SELECT file_a, file_b FROM co WHERE dist <= {TRUTH_SUM}
-    ), denom AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth
-    ),{_RECALL_HITS.format(m="a")},{_RECALL_HITS.format(m="d")}
-    {_RECALL_ROW.format(name="ahash", m="a")}
-    UNION ALL {_RECALL_ROW.format(name="dhash", m="d")}
+    ), {recall_rollup_sql(
+        {'ahash': 'a_m', 'dhash': 'd_m'}, ('file_a', 'file_b'))}
+    SELECT * FROM rollup
     """,
 )
 def q_dedup_image_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,31 +326,13 @@ def q_dedup_image_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dist") <= TRUTH_SUM)
         .select("file_a", "file_b")
     )
-    denom = truth.agg(F.count("*").cast("long").alias("n_truth"))
-
-    def audit(method: DataFrame, name: str) -> DataFrame:
-        h = method.select("file_a", "file_b").join(
-            truth.withColumn("hit", F.lit(1)), ["file_a", "file_b"], "left"
-        ).agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("hits"),
-        )
-        prec = F.when(F.col("n_method") == 0, F.lit(0.0)).otherwise(
-            round_agg(F.col("hits").cast("double") / F.col("n_method"))
-        )
-        return h.crossJoin(F.broadcast(denom)).select(
-            F.lit(name).alias("method"),
-            F.col("n_truth"),
-            "n_method",
-            "hits",
-            round_agg(
-                F.col("hits").cast("double") / F.col("n_truth")
-            ).alias("recall"),
-            prec.alias("prec"),
-        )
-
-    return audit(q_dedup_image_phash(spark, sf_dir), "ahash").unionByName(
-        audit(q_dedup_image_dhash(spark, sf_dir), "dhash")
+    return recall_rollup(
+        spark,
+        truth,
+        {
+            "ahash": q_dedup_image_phash(spark, sf_dir),
+            "dhash": q_dedup_image_dhash(spark, sf_dir),
+        },
     )
 
 

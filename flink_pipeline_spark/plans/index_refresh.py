@@ -30,9 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import literal_frame, parallel_frames
+from ..caching import parallel_frames
 from ..catalog import load_table
-from ..functions.portable import round_agg, round_sql
 from ..operators.llm import topk_neighbors, topk_neighbors_ivf
 from .llm_ops import (
     IVF_SEED_CENTROIDS,
@@ -44,6 +43,7 @@ from .llm_ops import (
     _ivf_topk_select_duck,
 )
 from .profiling import EDRIFT_RAW_Q, _EDRIFT_T_SQL
+from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import ORACLES, register
 
 # the injected post-drift re-embedding: reverse the basis, shift every
@@ -282,30 +282,11 @@ def _refresh_oracle() -> str:
         {scan('rassigned', 'rprobes')}
     ), truth AS MATERIALIZED (
         SELECT query_id, neighbor_id FROM ({truth}) x
-    ), {gate}, m AS (
-        SELECT 'stale' AS method, query_id, neighbor_id FROM stale
-        UNION ALL
-        SELECT 'refreshed', query_id, neighbor_id FROM refreshed
-        UNION ALL
-        SELECT 'exact', query_id, neighbor_id FROM truth
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        FROM m LEFT JOIN truth t
-          ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest(['exact', 'stale', 'refreshed']) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall,
-           gate.t_q, gate.drifted_flag AS drifted
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt CROSS JOIN gate
+    ), {gate}, {recall_rollup_sql(
+        {'exact': 'truth', 'stale': 'stale', 'refreshed': 'refreshed'},
+        NEIGHBOR_KEYS)}
+    SELECT r.* EXCLUDE (prec), gate.t_q, gate.drifted_flag AS drifted
+    FROM rollup r CROSS JOIN gate
     """
 
 
@@ -368,44 +349,14 @@ def q_ann_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the projection gate between original (ref) and drifted (cur) —
     # the shared decision rule (drift_gate_frame)
     gate = drift_gate_frame(emb, dr)
-    m = (
-        stale.withColumn("method", F.lit("stale"))
-        .unionByName(refreshed.withColumn("method", F.lit("refreshed")))
-        .unionByName(truth.withColumn("method", F.lit("exact")))
-    )
-    hit = truth.withColumn("is_hit", F.lit(1))
-    counts = (
-        m.join(hit, ["query_id", "neighbor_id"], "left")
-        .groupBy("method")
-        .agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-            .cast("long")
-            .alias("hits"),
-        )
-    )
-    grid = literal_frame(spark,
-        [("exact",), ("stale",), ("refreshed",)], "method STRING"
-    )
-    tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
     return (
-        grid.join(counts, "method", "left")
-        .crossJoin(F.broadcast(tt))
-        .crossJoin(F.broadcast(gate))
-        .select(
-            "method",
-            "n_truth",
-            F.coalesce(F.col("n_method"), F.lit(0))
-            .cast("long")
-            .alias("n_method"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            round_agg(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.col("n_truth")
-            ).alias("recall"),
-            "t_q",
-            "drifted",
+        recall_rollup(
+            spark,
+            truth,
+            {"exact": truth, "stale": stale, "refreshed": refreshed},
         )
+        .drop("prec")
+        .crossJoin(F.broadcast(gate))
     )
 
 
@@ -565,29 +516,10 @@ def _pq_refresh_oracle() -> str:
     return f"""
     WITH {_DRIFTED_CTE}, {stale}, refreshed AS (
         SELECT query_id, neighbor_id FROM ({ref_sql}) r
-    ), {truth}, m AS (
-        SELECT 'stale' AS method, query_id, neighbor_id FROM stale
-        UNION ALL
-        SELECT 'refreshed', query_id, neighbor_id FROM refreshed
-        UNION ALL
-        SELECT 'exact', query_id, neighbor_id FROM truth
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        FROM m LEFT JOIN truth t
-          ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest(['exact', 'stale', 'refreshed']) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt
+    ), {truth}, {recall_rollup_sql(
+        {'exact': 'truth', 'stale': 'stale', 'refreshed': 'refreshed'},
+        NEIGHBOR_KEYS)}
+    SELECT * EXCLUDE (prec) FROM rollup
     """
 
 
@@ -679,39 +611,6 @@ def q_pq_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         ),
     )
-    m = (
-        stale.withColumn("method", F.lit("stale"))
-        .unionByName(refreshed.withColumn("method", F.lit("refreshed")))
-        .unionByName(truth.withColumn("method", F.lit("exact")))
-    )
-    hit = truth.withColumn("is_hit", F.lit(1))
-    counts = (
-        m.join(hit, ["query_id", "neighbor_id"], "left")
-        .groupBy("method")
-        .agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-            .cast("long")
-            .alias("hits"),
-        )
-    )
-    grid = literal_frame(spark,
-        [("exact",), ("stale",), ("refreshed",)], "method STRING"
-    )
-    tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    return (
-        grid.join(counts, "method", "left")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "method",
-            "n_truth",
-            F.coalesce(F.col("n_method"), F.lit(0))
-            .cast("long")
-            .alias("n_method"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            round_agg(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.col("n_truth")
-            ).alias("recall"),
-        )
-    )
+    return recall_rollup(
+        spark, truth, {"exact": truth, "stale": stale, "refreshed": refreshed}
+    ).drop("prec")

@@ -78,6 +78,7 @@ from ..operators.llm import (
 )
 from ..operators.multimodal import resize_payload, sample_frames, to_multimodal
 from ..operators.topk import rank_after_topk
+from .recall_rollup import recall_rollup, recall_rollup_sql
 from .registry import ORACLES, register
 
 # Fixture-calibrated shared knobs for the embedding family — hoisted so
@@ -429,39 +430,22 @@ def _register_dedup_recall() -> None:
         JOIN sz sb ON sb.doc_id = co.doc_b
         WHERE floor((i::DOUBLE / (sa.n + sb.n - i)) * 10000 + 0.5) / 10000
               >= {TEXT_RECALL_TAU}
-    ), denom AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)"""
-    hits = """
-    {m}_h AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_method,
-               CAST(coalesce(sum(CASE WHEN t.doc_a IS NOT NULL
-                                      THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits
-        FROM {m}_r p LEFT JOIN truth t
-          ON p.doc_a = t.doc_a AND p.doc_b = t.doc_b
     )"""
-    row = (
-        "SELECT '{m}' AS method, d.n_truth, h.n_method, h.hits, "
-        + round_sql("h.hits::DOUBLE / d.n_truth")
-        + " AS recall, CASE WHEN h.n_method = 0 THEN 0.0 ELSE "
-        + round_sql("h.hits::DOUBLE / h.n_method")
-        + " END AS prec FROM {m}_h h CROSS JOIN denom d"
-    )
     oracle = (
         f"WITH minhash_r AS ({ORACLES['q_dedup_minhash']}),\n"
         f" simhash_r AS ({ORACLES['q_dedup_simhash_pairs']}),\n"
         f" simhash_calib_r AS ({ORACLES['q_dedup_simhash_pairs_calib']}),\n"
         + truth_cte
-        + ","
-        + hits.format(m="minhash")
-        + ",\n"
-        + hits.format(m="simhash")
-        + ",\n"
-        + hits.format(m="simhash_calib")
-        + "\n"
-        + row.format(m="minhash")
-        + " UNION ALL "
-        + row.format(m="simhash")
-        + " UNION ALL "
-        + row.format(m="simhash_calib")
+        + ", "
+        + recall_rollup_sql(
+            {
+                "minhash": "minhash_r",
+                "simhash": "simhash_r",
+                "simhash_calib": "simhash_calib_r",
+            },
+            ("doc_a", "doc_b"),
+        )
+        + "\n    SELECT * FROM rollup"
     )
 
     @register("q_dedup_recall", oracle=oracle)
@@ -521,43 +505,6 @@ def _register_dedup_recall() -> None:
             .filter(round_agg(jacc) >= TEXT_RECALL_TAU)
             .select("doc_a", "doc_b")
         )
-        denom = truth.agg(F.count("*").cast("long").alias("n_truth"))
-
-        def audit(m: DataFrame, name: str) -> DataFrame:
-            # no explicit broadcast hint: the truth pair set is
-            # dup-graph-sized but DATA-DEPENDENT — on a heavily
-            # duplicated corpus an unconditional F.broadcast would blow
-            # the broadcast ceiling and fail the audit run (VERDICT r7
-            # wrong#1). AQE broadcasts it when it measures small and
-            # falls back to a shuffle join when it doesn't.
-            h = (
-                m.select("doc_a", "doc_b")
-                .join(
-                    truth.withColumn("hit", F.lit(1)),
-                    ["doc_a", "doc_b"],
-                    "left",
-                )
-                .agg(
-                    F.count("*").cast("long").alias("n_method"),
-                    F.coalesce(F.sum("hit"), F.lit(0))
-                    .cast("long")
-                    .alias("hits"),
-                )
-            )
-            prec = F.when(F.col("n_method") == 0, F.lit(0.0)).otherwise(
-                round_agg(F.col("hits").cast("double") / F.col("n_method"))
-            )
-            return h.crossJoin(F.broadcast(denom)).select(
-                F.lit(name).alias("method"),
-                F.col("n_truth"),
-                "n_method",
-                "hits",
-                round_agg(
-                    F.col("hits").cast("double") / F.col("n_truth")
-                ).alias("recall"),
-                prec.alias("prec"),
-            )
-
         mh = verified_near_dups(
             d, lsh_candidate_pairs(d, sets=sets), threshold=0.8, sets=sets
         )
@@ -567,17 +514,15 @@ def _register_dedup_recall() -> None:
         # materialize them from concurrent driver threads so the FIFO
         # scheduler back-fills each chain's stage tail instead of
         # running ~45 core-s of chains phase-by-phase; the final audit
-        # is then three tiny hit joins over cached pair lists.
+        # is then one tiny hit join over cached pair lists.
         truth, mh, sh, cal = parallel_frames(
             lambda: materialize(truth),
             lambda: materialize(mh),
             lambda: materialize(q_dedup_simhash_pairs(spark, sf_dir)),
             lambda: materialize(q_dedup_simhash_pairs_calib(spark, sf_dir)),
         )
-        return (
-            audit(mh, "minhash")
-            .unionByName(audit(sh, "simhash"))
-            .unionByName(audit(cal, "simhash_calib"))
+        return recall_rollup(
+            spark, truth, {"minhash": mh, "simhash": sh, "simhash_calib": cal}
         )
 
     q_dedup_recall.__doc__ = q_dedup_recall.__doc__.format(tau=TEXT_RECALL_TAU)
@@ -605,30 +550,12 @@ def _register_embed_dedup_recall() -> None:
         "ivf": "q_dedup_embed_ivf",
         "ivf_multiprobe": "q_dedup_embed_ivf_multiprobe",
     }
-    hits = """
-    {m}_h AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_method,
-               CAST(coalesce(sum(CASE WHEN t.vec_a IS NOT NULL
-                                      THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits
-        FROM {m}_r p LEFT JOIN truth t
-          ON p.vec_a = t.vec_a AND p.vec_b = t.vec_b
-    )"""
-    row = (
-        "SELECT '{m}' AS method, d.n_truth, h.n_method, h.hits, "
-        + round_sql("h.hits::DOUBLE / d.n_truth")
-        + " AS recall, CASE WHEN h.n_method = 0 THEN 0.0 ELSE "
-        + round_sql("h.hits::DOUBLE / h.n_method")
-        + " END AS prec FROM {m}_h h CROSS JOIN denom d"
-    )
     oracle = (
         "WITH "
         + ",\n".join(f"{m}_r AS ({ORACLES[q]})" for m, q in methods.items())
-        + """,
-    truth AS (SELECT vec_a, vec_b FROM cosine_r),
-    denom AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth),"""
-        + ",\n".join(hits.format(m=m) for m in methods)
-        + "\n"
-        + " UNION ALL ".join(row.format(m=m) for m in methods)
+        + ",\n    truth AS (SELECT vec_a, vec_b FROM cosine_r),\n    "
+        + recall_rollup_sql({m: f"{m}_r" for m in methods}, ("vec_a", "vec_b"))
+        + "\n    SELECT * FROM rollup"
     )
 
     @register("q_dedup_embed_recall", oracle=oracle)
@@ -657,52 +584,24 @@ def _register_embed_dedup_recall() -> None:
             q_dedup_embed_cosine(spark, sf_dir)
             .select("vec_a", "vec_b")
             # eager localCheckpoint, not persist (r10, the triangles
-            # ADVICE-r9 class): four consumers — the control row's
-            # method side, the denominator, and both hit joins — but
+            # ADVICE-r9 class): three consumers — the control row's
+            # method side, the hit join and the denominator — but
             # the returned rows are 1-row aggregates, so a persist
             # would leak past the return; the checkpoint pays the
             # O(n^2) truth exactly once and caches nothing
             .localCheckpoint(eager=True)
         )
-        denom = truth.agg(F.count("*").cast("long").alias("n_truth"))
-
-        def audit(m: DataFrame, name: str) -> DataFrame:
-            h = (
-                m.select("vec_a", "vec_b")
-                .join(truth.withColumn("hit", F.lit(1)), ["vec_a", "vec_b"], "left")
-                .agg(
-                    F.count("*").cast("long").alias("n_method"),
-                    F.coalesce(F.sum("hit"), F.lit(0))
-                    .cast("long")
-                    .alias("hits"),
-                )
-            )
-            prec = F.when(F.col("n_method") == 0, F.lit(0.0)).otherwise(
-                round_agg(F.col("hits").cast("double") / F.col("n_method"))
-            )
-            return h.crossJoin(F.broadcast(denom)).select(
-                F.lit(name).alias("method"),
-                F.col("n_truth"),
-                "n_method",
-                "hits",
-                round_agg(
-                    F.col("hits").cast("double") / F.col("n_truth")
-                ).alias("recall"),
-                prec.alias("prec"),
-            )
-
-        return (
-            # the exact method IS the truth set — audit the persisted
-            # frame instead of re-running the O(n^2) pair generation a
-            # second time (measured 17.8 s -> ~12 s at sf0.1)
-            audit(truth, "cosine")
-            .unionByName(audit(q_dedup_embed_ivf(spark, sf_dir), "ivf"))
-            .unionByName(
-                audit(
-                    q_dedup_embed_ivf_multiprobe(spark, sf_dir),
-                    "ivf_multiprobe",
-                )
-            )
+        # the exact method IS the truth set — audit the checkpointed
+        # frame instead of re-running the O(n^2) pair generation a
+        # second time (measured 17.8 s -> ~12 s at sf0.1)
+        return recall_rollup(
+            spark,
+            truth,
+            {
+                "cosine": truth,
+                "ivf": q_dedup_embed_ivf(spark, sf_dir),
+                "ivf_multiprobe": q_dedup_embed_ivf_multiprobe(spark, sf_dir),
+            },
         )
 
 
@@ -1027,22 +926,6 @@ def _register_embed_dedup_recall_sampled() -> None:
         WHERE p.vec_a IN (SELECT vec_id FROM anchors)
            OR p.vec_b IN (SELECT vec_id FROM anchors)
     )"""
-    hits = """
-    {m}_h AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_method,
-               CAST(coalesce(sum(CASE WHEN t.vec_a IS NOT NULL
-                                      THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits
-        FROM {m}_s p LEFT JOIN truth t
-          ON p.vec_a = t.vec_a AND p.vec_b = t.vec_b
-    )"""
-    row = (
-        "SELECT '{m}' AS method, na.n_anchors, d.n_truth, h.n_method, "
-        "h.hits, CASE WHEN d.n_truth = 0 THEN 0.0 ELSE "
-        + round_sql("h.hits::DOUBLE / d.n_truth")
-        + " END AS recall, CASE WHEN h.n_method = 0 THEN 0.0 ELSE "
-        + round_sql("h.hits::DOUBLE / h.n_method")
-        + " END AS prec FROM {m}_h h CROSS JOIN denom d CROSS JOIN na"
-    )
     oracle = (
         f"WITH ivf_r AS ({ivf_sql}),\n"
         f" mp_r AS ({mp_sql}),\n"
@@ -1059,18 +942,18 @@ def _register_embed_dedup_recall_sampled() -> None:
         JOIN embeddings a ON a.vec_id = an.vec_id
         JOIN embeddings b ON b.vec_id <> a.vec_id
         WHERE {cos_q} >= {EMBED_PAIR_TAU}
-    ), cos_s AS (SELECT vec_a, vec_b FROM truth
-    ), denom AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth
     ), na AS (SELECT CAST(count(*) AS BIGINT) AS n_anchors FROM anchors),"""
         + restrict.format(m="ivf")
         + ","
         + restrict.format(m="mp")
-        + ","
-        + ",".join(hits.format(m=m) for m in ("cos", "ivf", "mp"))
-        + "\n"
-        + " UNION ALL ".join(
-            row.format(m=m) for m in ("cos", "ivf", "mp")
+        + ", "
+        + recall_rollup_sql(
+            {"cos": "truth", "ivf": "ivf_s", "mp": "mp_s"}, ("vec_a", "vec_b")
         )
+        + """
+    SELECT r.method, na.n_anchors, r.n_truth, r.n_method, r.hits,
+           r.recall, r.prec
+    FROM rollup r CROSS JOIN na"""
     )
 
     @register("q_dedup_embed_recall_sampled", oracle=oracle)
@@ -1141,7 +1024,6 @@ def _register_embed_dedup_recall_sampled() -> None:
             # lineage at O(n*s) cost paid once
             .localCheckpoint(eager=True)
         )
-        denom = truth.agg(F.count("*").cast("long").alias("n_truth"))
         n_anch = anchors.agg(
             F.count("*").cast("long").alias("n_anchors")
         )
@@ -1163,52 +1045,17 @@ def _register_embed_dedup_recall_sampled() -> None:
                 .distinct()
             )
 
-        def audit(m: DataFrame, name: str) -> DataFrame:
-            h = (
-                m.select("vec_a", "vec_b")
-                .join(
-                    truth.withColumn("hit", F.lit(1)),
-                    ["vec_a", "vec_b"],
-                    "left",
-                )
-                .agg(
-                    F.count("*").cast("long").alias("n_method"),
-                    F.coalesce(F.sum("hit"), F.lit(0))
-                    .cast("long")
-                    .alias("hits"),
-                )
-            )
-            recall = F.when(F.col("n_truth") == 0, F.lit(0.0)).otherwise(
-                round_agg(F.col("hits").cast("double") / F.col("n_truth"))
-            )
-            prec = F.when(F.col("n_method") == 0, F.lit(0.0)).otherwise(
-                round_agg(F.col("hits").cast("double") / F.col("n_method"))
-            )
-            return (
-                h.crossJoin(F.broadcast(denom))
-                .crossJoin(F.broadcast(n_anch))
-                .select(
-                    F.lit(name).alias("method"),
-                    "n_anchors",
-                    "n_truth",
-                    "n_method",
-                    "hits",
-                    recall.alias("recall"),
-                    prec.alias("prec"),
-                )
-            )
-
-        return (
-            audit(truth, "cos")
-            .unionByName(
-                audit(restrict_m(q_dedup_embed_ivf(spark, sf_dir)), "ivf")
-            )
-            .unionByName(
-                audit(
-                    restrict_m(q_dedup_embed_ivf_multiprobe(spark, sf_dir)),
-                    "mp",
-                )
-            )
+        rollup = recall_rollup(
+            spark,
+            truth,
+            {
+                "cos": truth,
+                "ivf": restrict_m(q_dedup_embed_ivf(spark, sf_dir)),
+                "mp": restrict_m(q_dedup_embed_ivf_multiprobe(spark, sf_dir)),
+            },
+        )
+        return rollup.crossJoin(F.broadcast(n_anch)).select(
+            "method", "n_anchors", *rollup.columns[1:]
         )
 
     q_dedup_embed_recall_sampled.__doc__ = (
@@ -5065,17 +4912,6 @@ def _register_langid_ngram() -> None:
         (bucket, class) cells. Nothing shuffles wider than the
         per-doc-class score table, which any per-class scorer needs."""
         d = load_table(spark, sf_dir, "documents")
-        # r15 restructure (guide §1.2 per-task work): the md5 bucket
-        # hash is a pure function of the TRIGRAM, so hash each
-        # DISTINCT trigram once and broadcast-join the buckets back —
-        # 1.47M per-position md5+conv evaluations collapse to |trigram
-        # vocabulary| (377 at sf0.1; bounded by charset^3 — a
-        # type-table, the same convention as the vocab-sized LM
-        # tables). fan_out widens the one-file corpus scan so the
-        # position explode doesn't run single-task; materialize fills
-        # the cache once instead of letting the fit/score branches
-        # race it. Bucket values are bit-identical (same md5 text on
-        # the same string); the oracle still hashes per occurrence.
         # pre-aggregate per (doc, class, bucket) BEFORE caching (r15,
         # guide §2.3 "aggregate before you shuffle" + §5 cache sizing):
         # the raw per-position frame is ~len(text) rows per doc, and

@@ -36,9 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import literal_frame, parallel_frames
+from ..caching import parallel_frames
 from ..catalog import load_table
-from ..functions.portable import round_agg, round_sql
 from ..operators.llm import DOT_SQL, ivf_assign
 from .llm_ops import (
     IVF_SEED_CENTROIDS,
@@ -46,6 +45,7 @@ from .llm_ops import (
     _DOT_DUCK,
     _SEED_ASSIGN_DUCK,
 )
+from .recall_rollup import recall_rollup, recall_rollup_sql
 from .registry import register
 
 MAXSIM_TOKS = 4    # token vectors per synthetic doc
@@ -335,29 +335,10 @@ def _maxsim_recall_oracle() -> str:
                        ORDER BY maxsim_q DESC, cdoc) AS rank
             FROM scored_allc
         ) t WHERE rank <= 3
-    ), m AS (
-        SELECT 'twostage' AS method, qdoc, cdoc FROM twostage
-        UNION ALL
-        SELECT 'plaid', qdoc, cdoc FROM plaid
-        UNION ALL
-        SELECT 'exact', qdoc, cdoc FROM truth
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.cdoc IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        FROM m LEFT JOIN truth t
-          ON t.qdoc = m.qdoc AND t.cdoc = m.cdoc
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest(['exact', 'twostage', 'plaid']) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt
+    ), {recall_rollup_sql(
+        {'exact': 'truth', 'twostage': 'twostage', 'plaid': 'plaid'},
+        ('qdoc', 'cdoc'))}
+    SELECT * EXCLUDE (prec) FROM rollup
     """
 
 
@@ -412,42 +393,9 @@ def _maxsim_recall_frame(spark: SparkSession, emb: DataFrame) -> DataFrame:
             .localCheckpoint(eager=True)
         ),
     )
-    m = (
-        two.withColumn("method", F.lit("twostage"))
-        .unionByName(plaid.withColumn("method", F.lit("plaid")))
-        .unionByName(truth.withColumn("method", F.lit("exact")))
-    )
-    hit = truth.withColumn("is_hit", F.lit(1))
-    counts = (
-        m.join(hit, ["qdoc", "cdoc"], "left")
-        .groupBy("method")
-        .agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-            .cast("long")
-            .alias("hits"),
-        )
-    )
-    grid = literal_frame(spark,
-        [("exact",), ("twostage",), ("plaid",)], "method STRING"
-    )
-    tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    return (
-        grid.join(counts, "method", "left")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "method",
-            "n_truth",
-            F.coalesce(F.col("n_method"), F.lit(0))
-            .cast("long")
-            .alias("n_method"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            round_agg(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.col("n_truth")
-            ).alias("recall"),
-        )
-    )
+    return recall_rollup(
+        spark, truth, {"exact": truth, "twostage": two, "plaid": plaid}
+    ).drop("prec")
 
 
 q_sim_maxsim_recall.__doc__ = q_sim_maxsim_recall.__doc__.format(

@@ -23,9 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import literal_frame, parallel_frames
+from ..caching import parallel_frames
 from ..catalog import load_table
-from ..functions.portable import hash56_sql_duckdb, round_agg, round_sql
+from ..functions.portable import hash56_sql_duckdb
 from ..operators.llm import (
     NORM2_SQL,
     SQDIST_Q_PRE_SQL,
@@ -46,6 +46,7 @@ from .llm_ops import (
     _nsw_graph_sql_for,
     hnsw_store_for,
 )
+from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import register
 
 # the radius in BIGINT ten-thousandths quantized squared L2 — the
@@ -306,33 +307,10 @@ def _radius_recall_oracle() -> str:
     ), {_radius_probes_sql()}, ivf AS (
     {_RADIUS_IVF_SELECT}
     ), pqr AS ({_pq_radius_body()}
-    ), {_hnsw_radius_with()}, {truth}, m AS (
-        SELECT 'ivf' AS method, query_id, neighbor_id FROM ivf
-        UNION ALL
-        SELECT 'pq', query_id, neighbor_id FROM pqr
-        UNION ALL
-        SELECT 'graph', query_id, neighbor_id FROM gradius
-        UNION ALL
-        SELECT 'exact', query_id, neighbor_id FROM truth
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        FROM m LEFT JOIN truth t
-          ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest(['exact', 'ivf', 'pq', 'graph']) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall,
-           CASE WHEN coalesce(c.n_method, 0) = 0 THEN 0.0
-                ELSE {round_sql('c.hits::DOUBLE / c.n_method')} END AS prec
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt
+    ), {_hnsw_radius_with()}, {truth}, {recall_rollup_sql(
+        {'exact': 'truth', 'ivf': 'ivf', 'pq': 'pqr', 'graph': 'gradius'},
+        NEIGHBOR_KEYS)}
+    SELECT * FROM rollup
     """
     )
 
@@ -403,49 +381,8 @@ def q_sim_radius_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         ),
     )
-    m = (
-        ivf.withColumn("method", F.lit("ivf"))
-        .unionByName(pqr.withColumn("method", F.lit("pq")))
-        .unionByName(graph.withColumn("method", F.lit("graph")))
-        .unionByName(truth.withColumn("method", F.lit("exact")))
-    )
-    hit = truth.withColumn("is_hit", F.lit(1))
-    counts = (
-        m.join(hit, ["query_id", "neighbor_id"], "left")
-        .groupBy("method")
-        .agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-            .cast("long")
-            .alias("hits"),
-        )
-    )
-    grid = literal_frame(spark,
-        [("exact",), ("ivf",), ("pq",), ("graph",)], "method STRING"
-    )
-    tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    return (
-        grid.join(counts, "method", "left")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "method",
-            "n_truth",
-            F.coalesce(F.col("n_method"), F.lit(0))
-            .cast("long")
-            .alias("n_method"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            round_agg(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.col("n_truth")
-            ).alias("recall"),
-            F.when(
-                F.coalesce(F.col("n_method"), F.lit(0)) == 0, F.lit(0.0)
-            )
-            .otherwise(
-                round_agg(F.col("hits").cast("double") / F.col("n_method"))
-            )
-            .alias("prec"),
-        )
+    return recall_rollup(
+        spark, truth, {"exact": truth, "ivf": ivf, "pq": pqr, "graph": graph}
     )
 
 

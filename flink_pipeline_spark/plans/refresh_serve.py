@@ -62,9 +62,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import literal_frame
 from ..catalog import load_table
-from ..functions.portable import round_agg, round_sql
 from ..operators.llm import topk_neighbors_l2
 from .index_refresh import (
     _DRIFT_EXPR,
@@ -86,6 +84,7 @@ from .llm_ops import (
 )
 from .pq_serve import PQ_INDEX_CACHE, _pq_monitor, _pq_store_key
 from .profiling import EDRIFT_RAW_Q
+from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import ORACLES, register
 
 # the arrival slice the compressed refresh RE-CODES through the
@@ -225,8 +224,8 @@ def q_pq_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_refresh_recall_oracle() -> str:
     """(method, n_truth, n_method, hits, recall) for {exact, served}:
     served = the refreshed chain (the serve row's oracle), truth =
-    post-drift brute-force — the q_pq_drift_refresh rollup with the
-    store-served method in place of the in-query pair."""
+    post-drift brute-force, scored by the shared recall rollup
+    (plans/recall_rollup.py) like q_pq_drift_refresh's rows."""
     sql = ORACLES["q_sim_ivfpq_rerank"]
     assert "drifted" not in sql
     sql = sql.replace("embeddings", "drifted")
@@ -243,27 +242,9 @@ def _pq_refresh_recall_oracle() -> str:
             FROM drifted q JOIN drifted e ON e.vec_id <> q.vec_id
             WHERE q.vec_id < {PQ_QUERY_MAX}
         ) t WHERE rank <= 3
-    ), m AS (
-        SELECT 'served' AS method, query_id, neighbor_id FROM served
-        UNION ALL
-        SELECT 'exact', query_id, neighbor_id FROM truth
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        FROM m LEFT JOIN truth t
-          ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest(['exact', 'served']) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt
+    ), {recall_rollup_sql(
+        {'exact': 'truth', 'served': 'served'}, NEIGHBOR_KEYS)}
+    SELECT * EXCLUDE (prec) FROM rollup
     """
 
 
@@ -298,38 +279,9 @@ def q_pq_refresh_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)
     )
-    m = served.withColumn("method", F.lit("served")).unionByName(
-        truth.withColumn("method", F.lit("exact"))
-    )
-    hit = truth.withColumn("is_hit", F.lit(1))
-    counts = (
-        m.join(hit, ["query_id", "neighbor_id"], "left")
-        .groupBy("method")
-        .agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-            .cast("long")
-            .alias("hits"),
-        )
-    )
-    grid = literal_frame(spark, [("exact",), ("served",)], "method STRING")
-    tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    return (
-        grid.join(counts, "method", "left")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "method",
-            "n_truth",
-            F.coalesce(F.col("n_method"), F.lit(0))
-            .cast("long")
-            .alias("n_method"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            round_agg(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.col("n_truth")
-            ).alias("recall"),
-        )
-    )
+    return recall_rollup(
+        spark, truth, {"exact": truth, "served": served}
+    ).drop("prec")
 
 
 def ann_refresh_store_for(spark: SparkSession, sf_dir: str):

@@ -39,9 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import literal_frame, materialize, parallel_frames
+from ..caching import materialize, parallel_frames
 from ..catalog import load_table
-from ..functions.portable import round_agg, round_sql
 from ..operators.llm import (
     NORM2_SQL,
     SQDIST_Q_PRE_SQL,
@@ -66,6 +65,7 @@ from .llm_ops import (
     hnsw_store_for,
 )
 from .pq_serve import PQ_INDEX_CACHE, _pq_monitor, _pq_store_key, pq_store_for
+from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import ORACLES, register
 
 
@@ -329,33 +329,16 @@ def _unindex_recall_oracle() -> str:
             WHERE node <> query_id
               AND node NOT IN (SELECT vec_id FROM dels)
         ) t WHERE rank <= 3
-    ), m AS (
-        SELECT 'served' AS method, query_id, neighbor_id FROM served
-        UNION ALL
-        SELECT 'exact', query_id, neighbor_id FROM truth
-    ), counts AS (
-        SELECT m.method,
-               CAST(count(*) AS BIGINT) AS n_method,
-               CAST(sum(CASE WHEN t.neighbor_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-               CAST(sum(CASE WHEN d.vec_id IS NOT NULL
-                             THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_dropped_served
-        FROM m LEFT JOIN truth t
-          ON t.query_id = m.query_id AND t.neighbor_id = m.neighbor_id
-        LEFT JOIN dels d ON d.vec_id = m.neighbor_id
-        GROUP BY m.method
-    ), grid AS (
-        SELECT unnest(['exact', 'served']) AS method
-    ), tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
-    SELECT g.method, tt.n_truth,
-           CAST(coalesce(c.n_method, 0) AS BIGINT) AS n_method,
-           CAST(coalesce(c.hits, 0) AS BIGINT) AS hits,
-           {round_sql('coalesce(c.hits, 0)::DOUBLE / tt.n_truth')} AS recall,
-           CAST(coalesce(c.n_dropped_served, 0) AS BIGINT)
+    ), {recall_rollup_sql(
+        {'exact': 'truth', 'served': 'served'}, NEIGHBOR_KEYS)}, dropped AS (
+        SELECT method, CAST(count(*) AS BIGINT) AS n_dropped_served
+        FROM rollup_m m JOIN dels d ON d.vec_id = m.neighbor_id
+        GROUP BY method
+    )
+    SELECT r.* EXCLUDE (prec),
+           CAST(coalesce(d.n_dropped_served, 0) AS BIGINT)
                AS n_dropped_served
-    FROM grid g LEFT JOIN counts c ON c.method = g.method
-    CROSS JOIN tt
+    FROM rollup r LEFT JOIN dropped d ON d.method = r.method
     """
     )
 
@@ -429,47 +412,20 @@ def q_dedup_unindex_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the store-served search and the drop-set/exact-truth chain are
     # independent — overlap them on driver threads (guide §2.6)
     served, (drops, truth) = parallel_frames(_served_chain, _truth_chain)
-    m = served.withColumn("method", F.lit("served")).unionByName(
-        truth.withColumn("method", F.lit("exact"))
-    )
-    hit = truth.withColumn("is_hit", F.lit(1))
-    dropped = drops.select(
-        F.col("vec_id").alias("neighbor_id"), F.lit(1).alias("is_drop")
-    )
-    counts = (
-        m.join(hit, ["query_id", "neighbor_id"], "left")
-        .join(dropped, "neighbor_id", "left")
+    # the never-serve-dropped count rides next to the shared rollup
+    dropped = (
+        served.withColumn("method", F.lit("served"))
+        .unionByName(truth.withColumn("method", F.lit("exact")))
+        .join(drops.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
         .groupBy("method")
-        .agg(
-            F.count("*").cast("long").alias("n_method"),
-            F.sum(F.coalesce(F.col("is_hit"), F.lit(0)))
-            .cast("long")
-            .alias("hits"),
-            F.sum(F.coalesce(F.col("is_drop"), F.lit(0)))
-            .cast("long")
-            .alias("n_dropped_served"),
-        )
+        .agg(F.count("*").cast("long").alias("n_dropped_served"))
     )
-    grid = literal_frame(spark,
-        [("exact",), ("served",)], "method STRING"
-    )
-    tt = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    return (
-        grid.join(counts, "method", "left")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "method",
-            "n_truth",
-            F.coalesce(F.col("n_method"), F.lit(0))
-            .cast("long")
-            .alias("n_method"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            round_agg(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.col("n_truth")
-            ).alias("recall"),
-            F.coalesce(F.col("n_dropped_served"), F.lit(0))
-            .cast("long")
-            .alias("n_dropped_served"),
-        )
+    rollup = recall_rollup(
+        spark, truth, {"exact": truth, "served": served}
+    ).drop("prec")
+    return rollup.join(dropped, "method", "left").select(
+        *rollup.columns,
+        F.coalesce(F.col("n_dropped_served"), F.lit(0))
+        .cast("long")
+        .alias("n_dropped_served"),
     )

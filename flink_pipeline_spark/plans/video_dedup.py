@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.portable import round_agg, round_sql
 from ..operators.multimodal import VID_KEY_STRIDE, dhash_bands, video_keyframes
+from .recall_rollup import recall_rollup, recall_rollup_sql
 from .registry import register
 
 VIDEO_DIR = os.path.abspath(
@@ -304,22 +305,8 @@ q_dedup_video_fp.__doc__ = q_dedup_video_fp.__doc__.format(
         JOIN sizes sa ON sa.file = m.file_a
         JOIN sizes sb ON sb.file = m.file_b
         WHERE 2 * m.m_ab >= sa.nfp OR 2 * m.m_ba >= sb.nfp
-    ), denom AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth
-    ), hits AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_method,
-               CAST(coalesce(sum(CASE WHEN t.file_a IS NOT NULL
-                                      THEN 1 ELSE 0 END), 0) AS BIGINT)
-                 AS hits
-        FROM scored s LEFT JOIN truth t
-          ON s.file_a = t.file_a AND s.file_b = t.file_b
-    )
-    SELECT d.n_truth, h.n_method, h.hits,
-           {round_sql('h.hits::DOUBLE / d.n_truth')} AS recall,
-           CASE WHEN h.n_method = 0 THEN 0.0
-                ELSE {round_sql('h.hits::DOUBLE / h.n_method')}
-           END AS prec
-    FROM hits h CROSS JOIN denom d
+    ), {recall_rollup_sql({'fp': 'scored'}, ('file_a', 'file_b'))}
+    SELECT * EXCLUDE (method) FROM rollup
     """,
 )
 def q_dedup_video_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -409,25 +396,7 @@ def q_dedup_video_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("file_a", "file_b")
         .localCheckpoint(eager=True)
     )
-    denom = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    h = method.join(
-        truth.withColumn("hit", F.lit(1)), ["file_a", "file_b"], "left"
-    ).agg(
-        F.count("*").cast("long").alias("n_method"),
-        F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("hits"),
-    )
-    prec = F.when(F.col("n_method") == 0, F.lit(0.0)).otherwise(
-        round_agg(F.col("hits").cast("double") / F.col("n_method"))
-    )
-    return h.crossJoin(F.broadcast(denom)).select(
-        "n_truth",
-        "n_method",
-        "hits",
-        round_agg(F.col("hits").cast("double") / F.col("n_truth")).alias(
-            "recall"
-        ),
-        prec.alias("prec"),
-    )
+    return recall_rollup(spark, truth, {"fp": method}).drop("method")
 
 
 q_dedup_video_fp_recall.__doc__ = q_dedup_video_fp_recall.__doc__.format(

@@ -6,7 +6,7 @@ verification budget (r14's driver pytest run was TRUNCATED at ~80%
 with zero failures — a timeout, not a failure), so the ~20 slowest
 tests (store-lifecycle stream==batch/replay checks, the 300 s
 registry-wide plan sweep, the heaviest audit parities — ~37% of suite
-wall, ~2% of tests) form a SLOW TIER that is skipped by default and
+wall, ~2% of tests) carry the ``slow`` marker: skipped by default,
 run with ``SPARK_GRAFT_SLOW_TESTS=1``. Every skipped behavior keeps
 coverage elsewhere: the per-query plan gates in test_plans.py still
 run, the driver separately verifies a 50-query oracle sample each
@@ -22,33 +22,13 @@ import pytest
 
 from flink_pipeline_spark.session import EngineConf, get_session
 
-# Slowest-test tier (measured with --durations at the r15 tiering
-# commit; each entry >= 10 s). Run them with SPARK_GRAFT_SLOW_TESTS=1.
-SLOW_TIER = {
-    "test_plans.py::test_registry_wide_no_cartesian_no_row_python",  # 306s
-    "test_round11_ops.py::test_ann_index_stream_equals_batch",       # 35s
-    "test_round11_ops.py::test_ann_index_crash_replay_idempotent",   # 28s
-    "test_llm_ops.py::test_ann_recall_bounds_and_exact_selfcheck",   # 24s
-    "test_oracle_parity.py::test_oracle_parity[q_ann_recall]",       # 24s
-    "test_round12_ops.py::test_ann_index_delete_stream_equals_batch",  # 23s
-    "test_round13_ops.py::test_unindex_stream_equals_batch_and_replay",  # 22s
-    "test_round11_ops.py::test_ann_index_guards",                    # 19s
-    "test_round8_ops.py::test_binary_recall_row_between_zero_and_sq",  # 18s
-    "test_round14_ops.py::test_clustered_audits_measure_non_nulls",  # 17s
-    "test_round12_ops.py::test_ann_index_delete_crash_replay_idempotent",  # 16s
-    "test_bucketing.py::test_bucketed_join_has_no_shuffle",          # 14s setup
-    "test_oracle_parity.py::test_oracle_parity[q_hnsw_beam_clustered]",  # 13s
-    "test_oracle_parity.py::test_oracle_parity[q_dedup_unindex]",    # 12s
-    "test_round11_ops.py::test_hnsw_store_serves_without_rebuilding",  # 12s
-    "test_streaming.py::test_streaming_neardup_signature_store",     # 12s
-    "test_round13_ops.py::test_unindex_never_serves_dropped",        # 12s
-    "test_oracle_parity.py::test_oracle_parity[q_ann_hnsw_beam]",    # 12s
-    "test_round12_ops.py::test_filtered_search_contract_and_tombstone_composition",  # 12s
-    "test_streaming.py::test_heavy_hitter_stream_matches_batch_fold",  # 11s
-    "test_streaming.py::test_dedup_within_watermark_suppresses_and_evicts",  # 11s
-    "test_round13_ops.py::test_radius_and_maxsim_contracts",         # 11s
-    "test_oracle_parity.py::test_oracle_parity[q_ann_filtered_recall]",  # 10s
-}
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "slow: slow tier (>= 10 s each), skipped unless "
+        "SPARK_GRAFT_SLOW_TESTS=1",
+    )
 
 
 def pytest_collection_modifyitems(config, items):
@@ -58,9 +38,9 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tier (run with SPARK_GRAFT_SLOW_TESTS=1)"
     )
     for item in items:
-        name = item.nodeid.split("/")[-1]
-        if name in SLOW_TIER:
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)
+
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
 

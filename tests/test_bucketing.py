@@ -31,6 +31,7 @@ def bucketed_tables(spark, tmp_path_factory):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
+@pytest.mark.slow  # 14s setup
 def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
     bo, bl = bucketed_tables
     # force the shuffle-join path (orders is broadcast-sized at test SF,

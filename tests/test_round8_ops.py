@@ -516,6 +516,7 @@ def test_nation_trade_bilateral(spark):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow  # 18s
 def test_binary_recall_row_between_zero_and_sq(spark):
     """The 1-bit row must exist and (on this fixture) give up recall
     vs the 8-bit SQ row scored against the SAME exact-dot truth."""

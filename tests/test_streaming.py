@@ -100,6 +100,7 @@ def test_stream_dedup_equals_batch(spark, events_stream_dir):
     assert _rows(spark.table(name).distinct()) == _rows(batch)
 
 
+@pytest.mark.slow  # 11s
 def test_dedup_within_watermark_suppresses_and_evicts(spark, tmp_path):
     """ST11's bounded-state contract, both directions: a duplicate
     arriving WITHIN the watermark window is suppressed, and once the
@@ -329,6 +330,7 @@ def test_stop_all_queries(spark, events_stream_dir):
     assert all(not q2.isActive for q2 in [q])
 
 
+@pytest.mark.slow  # 12s
 def test_streaming_neardup_signature_store(spark, tmp_path):
     """foreachBatch near-dup ingestion against the persistent LSH
     signature store: batch 2's exact copy of a batch-1 doc is
@@ -808,6 +810,7 @@ def test_heavy_hitter_monitor_replay_idempotent(spark, tmp_path):
     assert first == second
 
 
+@pytest.mark.slow  # 11s
 def test_heavy_hitter_stream_matches_batch_fold(spark, tmp_path):
     """stream==batch: driving the monitor through a real file stream
     produces the same summary as folding the same frames through the
