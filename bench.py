@@ -59,16 +59,14 @@ HEADLINE = [
     "q_sim_topk",
     "q_text_tokens",
     "q_grouped_transform",
-    # training-data layer (round 2): decontamination is the join-heavy
-    # one, packing the window-heavy one, split the pure-map one
+    # training data: decontamination is the join-heavy one, packing
+    # the window-heavy one, split the pure-map one
     "q_train_split",
     "q_decontaminate",
     "q_pack_sequences",
-    # scale-path dedup (round 3): simhash pairing is the largest
-    # correctness workload, IVF the sub-quadratic ANN path. Round 6:
-    # the unsuffixed pairs name is now the 56-bit corpus-scale config
-    # (r5's q_dedup_simhash_pairs_wide); the former 16-bit holder of
-    # the name is benched as _calib for series continuity
+    # scale-path dedup: simhash pairing is the largest correctness
+    # workload (the unsuffixed name is the 56-bit corpus-scale config,
+    # _calib the 16-bit one), IVF the sub-quadratic ANN path
     "q_dedup_simhash_pairs",
     "q_dedup_embed_ivf",
     "q_dedup_embed_ivf_multiprobe",
@@ -81,16 +79,13 @@ HEADLINE = [
     "q_dedup_substring",
     "q_dedup_incremental",
     "q_dedup_embed_apply",
-    # round 6: semantic dedup (SemDeDup keeper rule over the capped IVF
-    # pair graph) and the unigram-LM surprisal scorer — the two new
-    # corpus-heavy ops; the audits/reports (recall, census, mixture,
-    # selection) ride the operators already benched here
+    # corpus-heavy scoring: semantic dedup (SemDeDup keeper rule over
+    # the capped IVF pair graph) and the unigram-LM surprisal scorer
     "q_dedup_semantic",
     "q_text_surprisal",
-    # round 7: the bigram-LM upgrade (bigram-type join instead of
-    # vocab join), the learned linear quality scorer (broadcast weight
-    # table), and the text-family recall audit (exact inverted-index
-    # truth + three pair generators — the heaviest new composition)
+    # the bigram-type join, the broadcast weight table, and the
+    # text-family recall audit (exact inverted-index truth + three
+    # pair generators — the heaviest composition)
     "q_text_surprisal_2g",
     "q_quality_linear",
     "q_dedup_recall",
@@ -98,55 +93,52 @@ HEADLINE = [
     # quantizer training (2 Lloyd iterations) — the recurring index-
     # build job of the ANN family
     "q_sim_kmeans",
-    # r8: trained PQ codebook (per-subspace Lloyd) + ADC search over it
+    # trained PQ codebook (per-subspace Lloyd) + ADC search over it
     "q_sim_pq_trained",
     # ANN search + classifier over embeddings, and the stream-static
-    # dimension join — the round-3 additions a data pipeline runs hot
+    # dimension join — what a data pipeline runs hot
     "q_sim_ivf_topk",
-    # PQ/ADC compressed search — the 100 TB keep-it-hot path (round 6)
+    # PQ/ADC compressed search — the 100 TB keep-it-hot path
     "q_sim_pq_topk",
-    # asymmetric SQ8 — the second compression path (round 7)
+    # asymmetric SQ8 — the second compression path
     "q_sim_sq_topk",
-    # token-budget data selection — two-phase bin-offset plan (round 6)
+    # token-budget data selection — two-phase bin-offset plan
     "q_token_budget_select",
-    # the end-to-end corpus -> training-shard manifest (round 7
-    # capstone: dedup keeper + quality gate + cluster split + shards)
+    # the end-to-end corpus -> training-shard manifest (dedup keeper +
+    # quality gate + cluster split + shards)
     "q_build_training_set",
-    # round 8: paragraph-level exact dedup (the CCNet/RefinedWeb line
-    # pass), the learned char-trigram langid, IVFADC (fused
-    # IVF-probe + PQ-residual search), and the mixture-weighted
-    # capstone manifest
+    # paragraph-level exact dedup (the CCNet/RefinedWeb line pass),
+    # the learned char-trigram langid, IVFADC (fused IVF-probe +
+    # PQ-residual search), and the mixture-weighted manifest
     "q_dedup_paragraph",
     "q_text_langid_ngram",
     "q_sim_ivfpq_topk",
-    # r8: exact re-rank of the ADC shortlist — the serving-path pair
+    # exact re-rank of the ADC shortlist — the serving-path pair
     "q_sim_ivfpq_rerank",
     "q_build_training_set_weighted",
-    # r8: two-level IVF routing (the corpus-scale-centroid regime)
+    # two-level IVF routing (the corpus-scale-centroid regime)
     "q_sim_ivf2_topk",
-    # r8: Bloom-filter decontamination — the packed-word filter build
-    # + k-probe corpus scan, with the exact-truth FP audit inline
+    # Bloom-filter decontamination — the packed-word filter build +
+    # k-probe corpus scan, with the exact-truth FP audit inline
     "q_decontaminate_bloom",
-    # r8: the Gopher rule scan (one-pass per-doc quality flags), BPE
-    # encoding (type-table merge application + per-source compression),
-    # the quality-binned curriculum handoff, and the SCD2 change-history
-    # build (lag->filter->lead on one exchange)
+    # one-pass per-doc quality flags, BPE type-table merges, the
+    # quality-binned curriculum handoff, and the SCD2 change history
+    # (lag->filter->lead on one exchange)
     "q_gopher_rules",
     "q_bpe_encode",
     "q_curriculum_order",
     "q_scd2_history",
-    # r8 continued: content-defined chunking dedup (the insertion-robust
-    # granularity), winnowing fingerprints (the MOSS local-guarantee
-    # pair generator), the MinHash estimator audit, the DoReMi-shape
-    # reweighter (composes both LMs), and the Q7 join shape
+    # content-defined chunking (the insertion-robust granularity),
+    # winnowing (the MOSS local-guarantee pair generator), the MinHash
+    # estimator audit, the DoReMi-shape reweighter (composes both LMs),
+    # and the Q7 join shape
     "q_dedup_cdc_chunks",
     "q_winnow_fingerprint",
     "q_dedup_minhash_estimate",
     "q_mixture_doremi",
     "q_nation_trade_volume",
-    # r8 session 2: binary (1-bit) codes + Hamming shortlist + exact
-    # re-rank, the Q21 semi+anti shape, Kneser-Ney bigram surprisal
-    # (type-table smoothing stats), and MMR diverse selection (the
+    # 1-bit codes + Hamming shortlist + exact re-rank, the Q21
+    # semi+anti shape, Kneser-Ney smoothing stats, and MMR (the
     # integer-greedy applyInPandas over relational shortlist+sims)
     "q_sim_binary_topk",
     "q_waiting_suppliers",
@@ -155,19 +147,18 @@ HEADLINE = [
     "q_select_mmr",
     "q_knn_classify",
     "q_stream_enrich",
-    # r8 session 3: the Q17/Q13/Q14 join shapes (correlated-avg
-    # de-correlation, outer-join-condition double agg, conditional-agg
-    # ratio) and the two-phase phi-heavy-hitter scan
+    # the Q17/Q13/Q14 join shapes (correlated-avg de-correlation,
+    # outer-join-condition double agg, conditional-agg ratio) and the
+    # two-phase phi-heavy-hitter scan
     "q_small_qty_revenue",
     "q_cust_order_dist",
     "q_promo_revenue",
     "q_heavy_hitters",
     "q_banded_revenue",
     "q_idle_rich_customers",
-    # r8 session 4: the Q8/Q9/Q4 shapes (double-role nation share,
-    # infix-LIKE profit grid, correlated-EXISTS priority check), the
-    # fixed-point PageRank (3 Pregel rounds over the trade graph),
-    # soft dedup (cluster census + weight join on top of the CC
+    # the Q8/Q9/Q4 shapes (double-role nation share, infix-LIKE profit
+    # grid, correlated-EXISTS check), fixed-point PageRank (3 Pregel
+    # rounds), soft dedup (cluster census + weight join on the CC
     # machinery), and the replicate-and-salt skew join
     "q_market_share",
     "q_product_profit",
@@ -175,65 +166,63 @@ HEADLINE = [
     "q_graph_pagerank",
     "q_dedup_soft",
     "q_join_skew_salted",
-    # r8 session 4 continued: the RFM quintile grid (three global
-    # ntile windows over the customer aggregate), farthest-point
-    # seeding (k narrow corpus passes), the PCA covariance fit
-    # (sample explode + self-join to the 2080-cell grid), rendezvous
-    # sharding, token entropy, and the Zipf diagnostic
+    # three global ntile windows, k narrow corpus passes, the PCA
+    # covariance self-join to the 2080-cell grid, rendezvous sharding,
+    # token entropy, and the Zipf diagnostic
     "q_rfm_segments",
     "q_sim_seed_farthest",
     "q_embed_pca_cov",
     "q_shard_rendezvous",
     "q_text_entropy",
     "q_text_zipf",
-    # r8 session 4, event-analytics closers: the robust MAD screen,
-    # the Markov transition grid, and the DAU/WAU stickiness report
+    # event analytics: the robust MAD screen, the Markov transition
+    # grid, the DAU/WAU stickiness report, degree census, p-chart
+    # monitor, and LTV grid
     "q_anomaly_mad",
     "q_events_markov",
     "q_active_users",
-    # r8 session 4 final: degree census, p-chart monitor, LTV grid
     "q_graph_degree_stats",
     "q_error_rate_control",
     "q_cohort_ltv",
-    # profiling layer (round 3): TF-IDF is the corpus-heaviest text op
-    # (explode + two aggs + join + per-doc top-k), the funnel and
-    # sessionizer exercise the stacked-window-one-exchange shape
+    # TF-IDF is the corpus-heaviest text op (explode + two aggs + join
+    # + per-doc top-k); the funnel and sessionizer exercise the
+    # stacked-window-one-exchange shape
     "q_text_tfidf",
     "q_event_funnel",
     "q_sessionize",
-    # r9: the CDC merge-apply round trip (two key joins over the
-    # snapshot pair), the image perceptual near-dup (codec + band
-    # blocking + verify), and the embedding-family recall audit (the
-    # exact triangle-blocked cosine truth is the heavy stage)
+    # the CDC merge-apply round trip (two key joins over the snapshot
+    # pair), the image perceptual near-dup (codec + band blocking +
+    # verify), and the embedding recall audit (the exact
+    # triangle-blocked cosine truth is the heavy stage)
     "q_cdc_apply",
     "q_dedup_image_phash",
     "q_dedup_embed_recall",
-    # r9 continued: the AS OF read, the PII pass (pure string scan),
-    # the dup-3gram screen (position-explode cost class), and the
-    # incremental image-probe form
+    # the AS OF read, the PII pass (pure string scan), the dup-3gram
+    # screen (position-explode cost class), and the incremental
+    # image-probe form
     "q_time_travel",
     "q_pii_scrub",
     "q_text_dup_ngram_fraction",
     "q_dedup_image_phash_incremental",
-    # r9 continued: the KMV cardinality sketch and the dataset-card
-    # capstone (composes dedup-apply + PII + KMV + Gopher per source)
+    # the KMV cardinality sketch and the dataset card (composes
+    # dedup-apply + PII + KMV + Gopher per source)
     "q_distinct_kmv",
     "q_dataset_card",
-    # r9 final: the EWMA chart (grid-pandas sequential scan), the
-    # mixture interleave order (global training-order materialization),
-    # the triangle census (composed pair graph), and the stratified
-    # split (per-stratum window)
+    # the EWMA chart (grid-pandas sequential scan), the mixture
+    # interleave order (global training-order materialization), the
+    # triangle census (composed pair graph), and the stratified split
+    # (per-stratum window)
     "q_error_rate_ewma",
     "q_interleave_order",
     "q_graph_triangles",
     "q_split_stratified",
-    # r9 final: image dedup shipped end-to-end (pairs -> CC -> keeper)
+    # image dedup shipped end-to-end (pairs -> CC -> keeper)
     "q_dedup_image_apply",
-    # r10: NSW graph-index ANN (build + beam), the sampled-truth
-    # embedding recall audit (the linear-cost 100 TB face of the
-    # O(n^2) full audit), the mergeable bottom-k quantile sketch,
-    # the dHash gradient image method, the unigram-LM EM round, the
-    # NN-descent refinement round, and the two-layer HNSW hierarchy
+    # NSW graph-index ANN (build + beam), the sampled-truth embedding
+    # recall audit (the linear-cost 100 TB face of the O(n^2) full
+    # audit), the mergeable bottom-k quantile sketch, the dHash
+    # gradient image method, the unigram-LM EM round, the NN-descent
+    # refinement round, and the two-layer HNSW hierarchy
     "q_sim_nsw_topk",
     "q_dedup_embed_recall_sampled",
     "q_quantile_sketch",
@@ -241,17 +230,17 @@ HEADLINE = [
     "q_unigram_em",
     "q_sim_nsw_descent",
     "q_sim_hnsw_topk",
-    # r11: the ANN serving split — q_sim_hnsw_topk prices BUILD (both
-    # layer graphs per run); q_sim_hnsw_search prices SERVING (beam
-    # probes over the persisted store: the warm-up sweep publishes the
-    # store once, the timed repeats never rebuild); q_sim_nsw_insert
-    # prices the per-batch incremental fold between them
+    # the ANN serving split — q_sim_hnsw_topk prices BUILD (both layer
+    # graphs per run); q_sim_hnsw_search prices SERVING (beam probes
+    # over the persisted store: the warm-up sweep publishes the store
+    # once, the timed repeats never rebuild); q_sim_nsw_insert prices
+    # the per-batch incremental fold between them
     "q_sim_hnsw_search",
     "q_sim_nsw_insert",
-    # r11 continued: the audio fingerprint near-dup pair query (the
-    # third modality's dedup), the two-sample KS drift decision, the
-    # unigram prune+encode trainer rounds, the Count-Min frequency
-    # sketch, and the filtered-ANN search + its pre/post recall audit
+    # the audio fingerprint near-dup pairs (third modality), the
+    # two-sample KS drift decision, the unigram prune+encode trainer
+    # rounds, the Count-Min sketch, and filtered-ANN search + its
+    # pre/post recall audit
     "q_dedup_audio_fp",
     "q_drift_ks",
     "q_unigram_prune",
@@ -261,12 +250,11 @@ HEADLINE = [
     "q_sim_filtered_topk",
     "q_ann_filtered_recall",
     "q_drift_embed",
-    # r12: the ANN delete lifecycle (batch compaction, its
-    # rebuild-equivalence audit, and the store-served two-layer form),
-    # filtered search over the persisted graph index, the compressed
-    # (IVFADC) serving split vs the build-per-run rerank, the
-    # multivariate drift projection gate, and the video frame-fp
-    # near-dup family (fourth modality)
+    # the ANN delete lifecycle (batch compaction, its rebuild-
+    # equivalence audit, the store-served two-layer form), filtered
+    # search over the persisted graph, the compressed serving split vs
+    # the build-per-run rerank, the multivariate drift projection gate,
+    # and the video frame-fp near-dup family (fourth modality)
     "q_sim_nsw_delete",
     "q_ann_delete_recall",
     "q_sim_hnsw_delete",
@@ -275,14 +263,11 @@ HEADLINE = [
     "q_drift_projection",
     "q_dedup_video_fp",
     "q_dedup_video_fp_recall",
-    # r13: the masked post-delete compressed serve (kept out of the
-    # r12 artifact only to match SCALING 12d; promoted per the r12
-    # verdict) NEXT TO its offline-rewrite twin — the pair prices the
-    # deferred-mask cost and what the compaction buys back; the
-    # dedup→unindex composition on both index families plus its
-    # keeper-recall audit; the MaxSim late-interaction retrieval pair;
-    # radius search on both families; and the drift-triggered index
-    # refresh
+    # the masked post-delete compressed serve next to its offline-
+    # rewrite twin (the pair prices the deferred-mask cost and what
+    # compaction buys back); dedup->unindex on both index families
+    # plus its keeper-recall audit; MaxSim late interaction; radius
+    # search on both families; and the drift-triggered index refresh
     "q_sim_ivfpq_delete",
     "q_sim_ivfpq_rewrite",
     "q_dedup_unindex",
@@ -295,10 +280,8 @@ HEADLINE = [
     "q_sim_hnsw_radius",
     "q_sim_radius_recall",
     "q_ann_drift_refresh",
-    # r14: the two r13 post-artifact rows promoted per the
-    # promote-next-round convention (the compressed drift refresh and
-    # the PLAID centroid prune), then the round's serving additions —
-    # drift→refresh→SERVE on both persisted families, the MaxSim
+    # the compressed drift refresh, the PLAID centroid prune,
+    # drift->refresh->SERVE on both persisted families, the MaxSim
     # store-served pair (vs their build-per-run twins above), the
     # high-density masked/rewritten pair the rewrite trigger prices
     # (vs the ~zero delta of the 1/8-density pair above), and the

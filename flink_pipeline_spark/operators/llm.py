@@ -2225,6 +2225,19 @@ def kmeans_refine(
 # Navigable-small-world (NSW) graph index — batch build + beam search
 # ---------------------------------------------------------------------------
 
+NSW_DEG = 4   # out-links kept per node at build (2*deg after symmetrize)
+NSW_BEAM = 8  # beam width during search
+NSW_HOPS = 3  # expansion rounds (fixed unroll — the kmeans/BPE discipline)
+HNSW_L1_MOD = 8  # layer-1 keeps vec_ids with hash56 % 8 == 0 (~1/8)
+
+
+def hnsw_layer1(df: DataFrame) -> DataFrame:
+    """The rows of ``df`` on HNSW layer 1: the deterministic ~1/8
+    hash sample (``hash56(vec_id) % HNSW_L1_MOD == 0``) standing in
+    for HNSW's geometric level assignment, cut at one level. Every
+    layer-1 build, insert and search entry takes its members here."""
+    return df.filter(hash56(F.col("vec_id")) % HNSW_L1_MOD == 0)
+
 
 def nsw_graph(
     emb: DataFrame,
@@ -2343,11 +2356,19 @@ def _nsw_shrink(sym: DataFrame, deg: int, keep_dist: bool = False) -> DataFrame:
             F.col("dst").alias("src"), F.col("src").alias("dst"), "dist_q"
         )
     ).distinct()
-    cols = ["src", "dst", "dist_q"] if keep_dist else ["src", "dst"]
+    out = _reprune(und, deg)
+    return out if keep_dist else out.select("src", "dst")
+
+
+def _reprune(edges: DataFrame, deg: int) -> DataFrame:
+    """(src, dst, dist_q): every node's edge list cut back to its
+    2*deg nearest (dist_q, then dst) — the HNSW shrink that keeps the
+    per-node degree bound after a build, an insert or a delete."""
+    wk = Window.partitionBy("src").orderBy("dist_q", "dst")
     return (
-        und.withColumn("rn", F.row_number().over(wk))
+        edges.withColumn("rn", F.row_number().over(wk))
         .filter(F.col("rn") <= 2 * deg)
-        .select(*cols)
+        .select("src", "dst", "dist_q")
     )
 
 
@@ -2356,8 +2377,6 @@ def nsw_insert(
     adj_scored: DataFrame,
     arrivals: DataFrame,
     deg: int,
-    beam: int = 8,
-    hops: int = 3,
 ) -> DataFrame:
     """(src, dst, dist_q): the SCORED adjacency after inserting
     ``arrivals`` (vec_id, embedding) into an existing NSW graph — the
@@ -2368,16 +2387,17 @@ def nsw_insert(
     graphs).
 
     Each arrival beam-searches the CURRENT graph exactly like a query
-    (nsw_beam: entry at the indexed corpus' min vec_id, ``hops``
-    monotone rounds, exact BIGINT-quantized L2), links to its final
-    beam's ``deg`` nearest nodes, and hands each linked node the
-    reverse edge (the bidirectional-link rule). Touched nodes' merged
-    edge lists are then re-pruned to their 2*deg nearest — nsw_graph's
-    shrink, applied to the union — so the per-node degree bound that
-    keeps the index linear-size holds across any number of insert
-    batches. Reverse edges reuse the arrival beam's dist_q (scored
-    once per undirected pair, so the distance is symmetric by
-    construction — the NN-descent ADVICE-r10 rule).
+    (nsw_beam: entry at the indexed corpus' min vec_id, NSW_HOPS
+    monotone rounds of width NSW_BEAM, exact BIGINT-quantized L2),
+    links to its final beam's ``deg`` nearest nodes, and hands each
+    linked node the reverse edge (the bidirectional-link rule).
+    Touched nodes' merged edge lists are then re-pruned to their 2*deg
+    nearest — nsw_graph's shrink, applied to the union — so the
+    per-node degree bound that keeps the index linear-size holds
+    across any number of insert batches. Reverse edges reuse the
+    arrival beam's dist_q (scored once per undirected pair, so the
+    distance is symmetric by construction — the NN-descent ADVICE-r10
+    rule).
 
     Arrivals deliberately do NOT link to each other within a batch
     (the incremental-store convention shared with streaming image
@@ -2391,12 +2411,7 @@ def nsw_insert(
     all-pairs anywhere."""
     q = arrivals.select("vec_id", "embedding")
     final_beam = nsw_beam(
-        emb_idx,
-        q,
-        adj_scored.select("src", "dst"),
-        beam=beam,
-        hops=hops,
-        entry_from=emb_idx,
+        emb_idx, q, adj_scored.select("src", "dst"), entry_from=emb_idx
     )
     wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
     links = (
@@ -2414,12 +2429,7 @@ def nsw_insert(
     merged = adj_scored.select("src", "dst", "dist_q").unionByName(
         links
     ).unionByName(rev)
-    wk = Window.partitionBy("src").orderBy("dist_q", "dst")
-    return (
-        merged.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= 2 * deg)
-        .select("src", "dst", "dist_q")
-    )
+    return _reprune(merged, deg)
 
 
 def nsw_delete(
@@ -2495,12 +2505,7 @@ def nsw_delete(
         )
     )
     merged = kept.select("src", "dst", "dist_q").unionByName(bridge).distinct()
-    wk = Window.partitionBy("src").orderBy("dist_q", "dst")
-    return (
-        merged.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= 2 * deg)
-        .select("src", "dst", "dist_q")
-    )
+    return _reprune(merged, deg)
 
 
 def nsw_descent(emb: DataFrame, adj: DataFrame, deg: int) -> DataFrame:
@@ -2582,13 +2587,12 @@ def nsw_beam(
     emb: DataFrame,
     queries: DataFrame,
     adj: DataFrame,
-    beam: int = 8,
-    hops: int = 3,
+    beam: int = NSW_BEAM,
     entries: DataFrame | None = None,
     entry_from: DataFrame | None = None,
     keep_visited: bool = False,
 ) -> DataFrame:
-    """(query_id, node, dist_q): the final beam after ``hops``
+    """(query_id, node, dist_q): the final beam after NSW_HOPS
     monotone expansion rounds over ``adj`` — the search primitive
     nsw_search ranks and the HNSW hierarchy chains (layer k's best
     beam node seeds layer k-1). Seeding: ``entries`` is an explicit
@@ -2625,7 +2629,7 @@ def nsw_beam(
         # join broadcasts a single |cand|-row relation instead of
         # collecting two separate broadcast children per hop — at
         # sf0.1 each broadcast collect costs 150-350 ms of fixed
-        # stage latency, and a beam pays score() hops+1 times
+        # stage latency, and a beam pays score() NSW_HOPS+1 times
         # (measured r14: ~0.5 s/hop -> ~0.35 s/hop).
         cq = cand.join(F.broadcast(q), "query_id")
         return emb.join(
@@ -2653,7 +2657,7 @@ def nsw_beam(
     # outside exchange reuse). Measured r12: the un-checkpointed form
     # OOM'ed a default-heap driver sweeping the full registry at the
     # ANN cluster. The checkpointed frames are tiny (|queries| x beam
-    # rows), so the cost is hops small materializations.
+    # rows), so the cost is NSW_HOPS small materializations.
     #
     # Candidate sets are NOT distinct-ed per hop (r14): a duplicate
     # candidate (a node reachable from several beam nodes, or already
@@ -2666,7 +2670,7 @@ def nsw_beam(
     # the same reason.
     cur = score(seed).localCheckpoint(eager=True)
     vis = seed.select("query_id", "node")
-    for _ in range(hops):
+    for _ in range(NSW_HOPS):
         nbrs = adj.join(
             F.broadcast(cur.select("query_id", "node")),
             F.col("src") == F.col("node"),
@@ -2692,106 +2696,35 @@ def nsw_beam(
     return score(vis.distinct()) if keep_visited else cur
 
 
-def hnsw_search(
+def hnsw_entries(
     emb: DataFrame,
     queries: DataFrame,
-    adj0: DataFrame,
     adj1: DataFrame,
     l1_members: DataFrame,
-    k: int = 3,
-    beam: int = 8,
-    hops: int = 3,
-    exclude: DataFrame | None = None,
+    beam: int = NSW_BEAM,
 ) -> DataFrame:
-    """(query_id, neighbor_id, rank, dist_q): two-layer HNSW search
-    (Malkov & Yashunin 2018) — layer-1 beam from the sparse layer's
-    min-vec_id entry, per-query hand-off of the best layer-1 node
-    found, base-layer beam seeded there, final top-k. ONE
-    implementation shared by the build-per-run audit query
-    (q_sim_hnsw_topk) and the persisted-index serving path
-    (streaming/ann_index.py), so the search rule cannot fork between
-    the benchmarked form and the deployed form.
-
-    Scale: both beams touch O(beam * 2*deg * hops) nodes per query
-    independent of corpus size; the hand-off is a 1-row-per-query
-    frame — the hierarchy adds one tiny broadcast join to the
-    serving path.
-
-    ``exclude`` (a vec_id frame) is the tombstone mask: excluded ids
-    are dropped from the final beam BEFORE ranking, so a search
-    served from a store with pending tombstones can never return a
-    deleted vector (see nsw_search)."""
-    beam1 = nsw_beam(
-        emb, queries, adj1, beam=beam, hops=hops, entry_from=l1_members
-    )
+    """(query_id, node): the HNSW descent hand-off — a layer-1 beam
+    over ``adj1`` from the min vec_id of ``l1_members``, reduced to
+    each query's best node (dist_q, then node), which seeds that
+    query's base-layer beam (nsw_beam ``entries``). The one layer-1
+    descent every two-layer search runs."""
+    beam1 = nsw_beam(emb, queries, adj1, beam=beam, entry_from=l1_members)
     wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    entries0 = (
+    return (
         beam1.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") == 1)
         .select("query_id", "node")
     )
-    return nsw_search(
-        emb,
-        queries,
-        adj0,
-        k=k,
-        beam=beam,
-        hops=hops,
-        entries=entries0,
-        exclude=exclude,
-    )
 
 
-def hnsw_filtered_search(
-    emb: DataFrame,
-    queries: DataFrame,
-    adj0: DataFrame,
-    adj1: DataFrame,
-    l1_members: DataFrame,
-    filt_ids: DataFrame,
-    k: int = 3,
-    beam: int = 8,
-    hops: int = 3,
-    exclude: DataFrame | None = None,
+def _rank_nodes(
+    cand: DataFrame, k: int, exclude: DataFrame | None
 ) -> DataFrame:
-    """(query_id, neighbor_id, rank, dist_q): two-layer HNSW search
-    under a metadata predicate — the filtered-HNSW answer to the
-    problem q_ann_filtered_recall's 'post' row prices (a selective
-    filter starves a truncated top-k): the hierarchy descends and the
-    base-layer beam expands EXACTLY as in hnsw_search — traversal
-    runs through non-matching nodes, because they are the graph's
-    bridges — but the result ranks the predicate's matches
-    (``filt_ids``, a vec_id frame) over the search's FULL VISITED SET
-    (nsw_beam keep_visited), not over the width-``beam`` final list.
-    Over-expansion is bounded by the footprint the unfiltered search
-    already pays — O(beam * 2*deg * hops) scored nodes per query —
-    so the filter costs zero extra traversal; widening ``beam`` is
-    the recall knob when selectivity bites (the q_ann_hnsw_beam
-    audit's serving knob).
-
-    ``exclude`` composes the tombstone mask (delete lifecycle), so a
-    store serves filtered searches with pending deletes correctly."""
-    beam1 = nsw_beam(
-        emb, queries, adj1, beam=beam, hops=hops, entry_from=l1_members
-    )
-    wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    entries0 = (
-        beam1.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "node")
-    )
-    vis = nsw_beam(
-        emb,
-        queries,
-        adj0,
-        beam=beam,
-        hops=hops,
-        entries=entries0,
-        keep_visited=True,
-    )
-    cand = vis.join(
-        filt_ids.select(F.col("vec_id").alias("node")), "node", "left_semi"
-    )
+    """(query_id, neighbor_id, rank, dist_q): the final rank of a
+    scored (query_id, node, dist_q) frame — tombstoned ids
+    (``exclude``, a vec_id frame) and self-matches dropped BEFORE
+    ranking, so ranks stay gapless over the survivors, then the
+    top-``k`` by (dist_q, node)."""
     if exclude is not None:
         cand = cand.join(
             exclude.select(F.col("vec_id").alias("node")), "node", "left_anti"
@@ -2807,18 +2740,83 @@ def hnsw_filtered_search(
     )
 
 
+def hnsw_search(
+    emb: DataFrame,
+    queries: DataFrame,
+    adj0: DataFrame,
+    adj1: DataFrame,
+    l1_members: DataFrame,
+    k: int = 3,
+    beam: int = NSW_BEAM,
+    exclude: DataFrame | None = None,
+) -> DataFrame:
+    """(query_id, neighbor_id, rank, dist_q): two-layer HNSW search
+    (Malkov & Yashunin 2018) — the layer-1 descent (hnsw_entries),
+    base-layer beam seeded at each query's hand-off node, final
+    top-k. ONE implementation shared by the build-per-run audit
+    query (q_sim_hnsw_topk) and the persisted-index serving path
+    (streaming/ann_index.py), so the search rule cannot fork between
+    the benchmarked form and the deployed form.
+
+    Scale: both beams touch O(beam * 2*deg * hops) nodes per query
+    independent of corpus size; the hand-off is a 1-row-per-query
+    frame — the hierarchy adds one tiny broadcast join to the
+    serving path.
+
+    ``exclude`` (a vec_id frame) is the tombstone mask: excluded ids
+    are dropped from the final beam BEFORE ranking, so a search
+    served from a store with pending tombstones can never return a
+    deleted vector (see nsw_search)."""
+    entries0 = hnsw_entries(emb, queries, adj1, l1_members, beam=beam)
+    cur = nsw_beam(emb, queries, adj0, beam=beam, entries=entries0)
+    return _rank_nodes(cur, k, exclude)
+
+
+def hnsw_filtered_search(
+    emb: DataFrame,
+    queries: DataFrame,
+    adj0: DataFrame,
+    adj1: DataFrame,
+    l1_members: DataFrame,
+    filt_ids: DataFrame,
+    k: int = 3,
+    exclude: DataFrame | None = None,
+) -> DataFrame:
+    """(query_id, neighbor_id, rank, dist_q): two-layer HNSW search
+    under a metadata predicate — the filtered-HNSW answer to the
+    problem q_ann_filtered_recall's 'post' row prices (a selective
+    filter starves a truncated top-k): the hierarchy descends and the
+    base-layer beam expands EXACTLY as in hnsw_search — traversal
+    runs through non-matching nodes, because they are the graph's
+    bridges — but the result ranks the predicate's matches
+    (``filt_ids``, a vec_id frame) over the search's FULL VISITED SET
+    (nsw_beam keep_visited), not over the width-NSW_BEAM final list.
+    Over-expansion is bounded by the footprint the unfiltered search
+    already pays — O(beam * 2*deg * hops) scored nodes per query —
+    so the filter costs zero extra traversal; widening the beam is
+    the recall knob when selectivity bites (the q_ann_hnsw_beam
+    audit's serving knob).
+
+    ``exclude`` composes the tombstone mask (delete lifecycle), so a
+    store serves filtered searches with pending deletes correctly."""
+    entries0 = hnsw_entries(emb, queries, adj1, l1_members)
+    vis = nsw_beam(emb, queries, adj0, entries=entries0, keep_visited=True)
+    cand = vis.join(
+        filt_ids.select(F.col("vec_id").alias("node")), "node", "left_semi"
+    )
+    return _rank_nodes(cand, k, exclude)
+
+
 def nsw_search(
     emb: DataFrame,
     queries: DataFrame,
     adj: DataFrame,
     k: int = 3,
-    beam: int = 8,
-    hops: int = 3,
-    entries: DataFrame | None = None,
     exclude: DataFrame | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, rank, dist_q): greedy beam search over
-    an nsw_graph adjacency — nsw_beam ranked to the final top-``k``
+    an nsw_graph adjacency — nsw_beam (width NSW_BEAM, every query
+    entering at the corpus' min vec_id) ranked to the final top-``k``
     (self-matches excluded). See nsw_beam for the seeding, monotone-
     beam, and scale properties.
 
@@ -2829,19 +2827,4 @@ def nsw_search(
     tombstoned id can never be RETURNED, and ranks stay gapless over
     the survivors. A compacted adjacency contains no deleted nodes,
     so there the mask is a no-op enforcing the contract."""
-    cur = nsw_beam(
-        emb, queries, adj, beam=beam, hops=hops, entries=entries
-    )
-    if exclude is not None:
-        cur = cur.join(
-            exclude.select(F.col("vec_id").alias("node")), "node", "left_anti"
-        )
-    wr = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    return (
-        cur.filter(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("node").alias("neighbor_id"), "rank", "dist_q"
-        )
-    )
+    return _rank_nodes(nsw_beam(emb, queries, adj), k, exclude)

@@ -32,33 +32,29 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..caching import parallel_frames
 from ..catalog import load_table
 from ..functions.portable import hash56, hash56_sql_duckdb
 from ..operators.llm import (
-    NORM2_SQL,
-    SQDIST_Q_PRE_SQL,
-    SQDIST_Q_SQL,
-    nsw_delete,
-    nsw_graph,
-    nsw_search,
-)
-from .llm_ops import (
-    EMBED_MULTI_MAX_CELL,
-    EMBED_PAIR_NPROBE,
-    HNSW_L1_MOD,
-    IVF_SEED_CENTROIDS,
-    NSW_BEAM,
     NSW_DEG,
     NSW_HOPS,
+    nsw_delete,
+    nsw_search,
+    topk_neighbors_l2,
+)
+from .llm_ops import (
+    IVF_SEED_CENTROIDS,
     PQ_QUERY_MAX,
     _DISTQ_DUCK,
     _NSW_DISTQM,
     _NSW_QS_ENTRY_SQL,
+    _hnsw_descent_sql,
+    _hnsw_layers_sql,
     _nsw_beam_sql,
+    _nsw_final_sql,
     _nsw_graph_sql_for,
+    build_graph,
 )
 from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import register
@@ -135,16 +131,7 @@ def _final_survivor_sql(b_last: str) -> str:
     BEFORE ranking (operators/llm.nsw_search's ``exclude`` contract),
     so ranks stay gapless over survivors. On a compacted adjacency
     the mask is a no-op enforcing the contract."""
-    return f"""
-    SELECT query_id, neighbor_id, rank, dist_q FROM (
-        SELECT query_id, node AS neighbor_id, dist_q,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY dist_q, node) AS rank
-        FROM {b_last}
-        WHERE node <> query_id
-          AND node NOT IN (SELECT vec_id FROM dels)
-    ) t WHERE rank <= 3
-    """
+    return _nsw_final_sql(b_last, " AND node NOT IN (SELECT vec_id FROM dels)")
 
 
 def _register_nsw_delete():
@@ -190,14 +177,11 @@ def _register_nsw_delete():
         is_del = (
             hash56(F.col("vec_id")) % NSW_DELETE_MOD == NSW_DELETE_REM
         )
-        adj0 = nsw_graph(
+        adj0 = build_graph(
             emb,
             emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS),
-            deg=NSW_DEG,
-            max_cell=EMBED_MULTI_MAX_CELL,
-            nprobe=EMBED_PAIR_NPROBE,
             keep_dist=True,
-        ).localCheckpoint(eager=True)
+        )
         dels = emb.filter(is_del).select("vec_id")
         dadj = nsw_delete(emb, adj0, dels, NSW_DEG).localCheckpoint(
             eager=True
@@ -208,8 +192,6 @@ def _register_nsw_delete():
             emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
             dadj.select("src", "dst"),
             k=3,
-            beam=NSW_BEAM,
-            hops=NSW_HOPS,
             exclude=dels,
         )
 
@@ -252,24 +234,9 @@ def _register_delete_recall():
         + ", "
         + _nsw_beam_sql("radj", "g", b0=_SENTRY_B0)
         + f""", cm AS (
-        SELECT query_id, node AS neighbor_id FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rank
-            FROM cb{NSW_HOPS}
-            WHERE node <> query_id
-              AND node NOT IN (SELECT vec_id FROM dels)
-        ) t WHERE rank <= 3
+        SELECT query_id, neighbor_id FROM ({_final_survivor_sql(f'cb{NSW_HOPS}')}) x
     ), rm AS (
-        SELECT query_id, node AS neighbor_id FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rank
-            FROM gb{NSW_HOPS}
-            WHERE node <> query_id
-        ) t WHERE rank <= 3
+        SELECT query_id, neighbor_id FROM ({_nsw_final_sql(f'gb{NSW_HOPS}')}) x
     ), {recall_rollup_sql(
         {'exact': 'truth', 'compacted': 'cm', 'rebuilt': 'rm'}, NEIGHBOR_KEYS)}
     SELECT * FROM rollup
@@ -310,58 +277,25 @@ def _register_delete_recall():
         queries = emb.filter(F.col("vec_id") < PQ_QUERY_MAX)
         dels = emb.filter(is_del).select("vec_id")
         surv = emb.filter(~is_del)
-        kw = dict(
-            deg=NSW_DEG,
-            max_cell=EMBED_MULTI_MAX_CELL,
-            nprobe=EMBED_PAIR_NPROBE,
-        )
-        qd = queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("eq"),
-            F.expr(NORM2_SQL.format(a="embedding")).alias("nq2"),
-        )
-        wt = Window.partitionBy("query_id").orderBy("dist_q", "neighbor_id")
         # three INDEPENDENT eager chains — the original build + its
         # delete-compaction, the survivor rebuild, and the exact truth
         # — overlap on driver threads (guide §2.6) instead of running
         # their checkpoint jobs back-to-back
         dadj, radj, truth = parallel_frames(
             lambda: nsw_delete(
-                emb,
-                nsw_graph(emb, seeds, keep_dist=True, **kw).localCheckpoint(
-                    eager=True
-                ),
-                dels,
-                NSW_DEG,
+                emb, build_graph(emb, seeds, keep_dist=True), dels, NSW_DEG
             ).localCheckpoint(eager=True),
-            lambda: nsw_graph(surv, seeds, **kw).localCheckpoint(eager=True),
+            lambda: build_graph(surv, seeds),
             lambda: (
-                surv.withColumn(
-                    "nb2", F.expr(NORM2_SQL.format(a="embedding"))
-                )
-                .join(
-                    F.broadcast(qd), F.col("vec_id") != F.col("query_id")
-                )
-                .select(
-                    "query_id",
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.expr(
-                        SQDIST_Q_PRE_SQL.format(
-                            a="eq", b="embedding", na2="nq2", nb2="nb2"
-                        )
-                    ).alias("dist_q"),
-                )
-                .withColumn("rank", F.row_number().over(wt))
-                .filter(F.col("rank") <= 3)
+                topk_neighbors_l2(surv, queries, k=3)
                 .select("query_id", "neighbor_id")
                 .localCheckpoint(eager=True)
             ),
         )
-        skw = dict(k=3, beam=NSW_BEAM, hops=NSW_HOPS)
         comp = nsw_search(
-            surv, queries, dadj.select("src", "dst"), exclude=dels, **skw
+            surv, queries, dadj.select("src", "dst"), k=3, exclude=dels
         ).select("query_id", "neighbor_id")
-        reb = nsw_search(surv, queries, radj, **skw).select(
+        reb = nsw_search(surv, queries, radj, k=3).select(
             "query_id", "neighbor_id"
         )
         return recall_rollup(
@@ -429,42 +363,20 @@ def _hnsw_delete_ctes(dels_sql: str) -> str:
     """The WITH-body of the two-layer post-delete unroll: both layer
     graphs (scored), the ``dels`` tombstone CTE (parameterized —
     q_sim_hnsw_delete passes the hash slice, the dedup→unindex row
-    passes the dedup drop set), per-layer delete consolidation, the
-    layer-1 beam from the minimum SURVIVING layer-1 member, the
-    per-query hand-off, and the base-layer beam over the compacted
-    base graph (final CTE ``bb{hops}``). Factored out of the full
-    oracle (r13) so the unindex recall audit can compose the same
-    beams with its own truth/rollup tail."""
-    l1 = f"""l1v AS (
-        SELECT vec_id, embedding FROM embeddings
-        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
-    )"""
+    passes the dedup drop set), per-layer delete consolidation, and
+    the shared two-layer descent over the compacted graphs from the
+    minimum SURVIVING layer-1 member (final CTE ``bb{NSW_HOPS}``).
+    Factored out of the full oracle (r13) so the unindex recall audit
+    can compose the same beams with its own truth/rollup tail."""
     uentry = """uentry AS (
         SELECT min(vec_id) AS node FROM l1v
         WHERE vec_id NOT IN (SELECT vec_id FROM dels)
     )"""
-    hand_off = f"""e0 AS (
-        SELECT query_id, node FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rn
-            FROM ab{NSW_HOPS}
-        ) t WHERE rn = 1
-    )"""
-    b0_l1 = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node"""
-    b0_base = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q JOIN e0 e ON e.query_id = q.query_id
-        JOIN embeddings m ON m.vec_id = e.node"""
     return (
-        f"""{l1}, {_nsw_graph_sql_for("l1v", "u", keep_dist=True)},
-    {_nsw_graph_sql_for("embeddings", "z", keep_dist=True)}, {dels_sql},
+        f"""{_hnsw_layers_sql(keep_dist=True)}, {dels_sql},
     {_nsw_delete_sql("uadj", "du")}, {_nsw_delete_sql("zadj", "dz")},
     {_NSW_QS_ENTRY_SQL}, {uentry}, """
-        + _nsw_beam_sql("dudadj", "a", b0=b0_l1)
-        + f", {hand_off}, "
-        + _nsw_beam_sql("dzdadj", "b", b0=b0_base)
+        + _hnsw_descent_sql("qs", "dudadj", "dzdadj", "a", "b")
     )
 
 

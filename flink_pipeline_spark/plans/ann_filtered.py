@@ -22,20 +22,19 @@ from pyspark.sql import functions as F
 
 from ..caching import parallel_frames
 from ..catalog import load_table
-from ..functions.portable import hash56_sql_duckdb
-from ..operators.llm import topk_neighbors, topk_neighbors_ivf
+from ..operators.llm import NSW_HOPS, topk_neighbors, topk_neighbors_ivf
 from .llm_ops import (
     FILT_LABEL,
-    HNSW_L1_MOD,
     IVF_SEED_CENTROIDS,
-    NSW_HOPS,
     _COS_DUCK,
     _IVF_PROBES_DUCK,
     _NSW_DISTQM,
     _SEED_ASSIGN_DUCK,
+    _UENTRY_SQL,
+    _hnsw_descent_sql,
+    _hnsw_layers_sql,
     _ivf_topk_select_duck,
-    _nsw_beam_sql,
-    _nsw_graph_sql_for,
+    _nsw_final_sql,
     hnsw_store_for,
     q_sim_filtered_topk,
 )
@@ -71,49 +70,18 @@ def _visited_sql(p: str, qs: str) -> str:
 
 
 def _hnsw_filtered_with() -> str:
-    """WITH-fragment (no leading WITH): both layer graphs, the
-    layer-1 descent from the sparse layer's min entry, the per-query
-    hand-off, the base-layer beam with visited collection, and the
-    predicate-masked final ranking ``gfinal`` — all composed from the
-    shared builders, parameterized on the filtered query set."""
-    l1 = f"""l1v AS (
-        SELECT vec_id, embedding FROM embeddings
-        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
-    )"""
-    hand_off = f"""e0 AS (
-        SELECT query_id, node FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rn
-            FROM ub{NSW_HOPS}
-        ) t WHERE rn = 1
-    )"""
-    b0_l1 = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM fqs q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node"""
-    b0_base = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM fqs q JOIN e0 e ON e.query_id = q.query_id
-        JOIN embeddings m ON m.vec_id = e.node"""
+    """WITH-fragment (no leading WITH): both layer graphs, the shared
+    two-layer descent over the filtered query set, the base beam's
+    visited set, and the predicate-masked final ranking ``gfinal``."""
+    label_mask = (
+        " AND node IN (SELECT vec_id FROM embeddings"
+        f" WHERE label = {FILT_LABEL})"
+    )
     return (
-        f"""{l1}, {_nsw_graph_sql_for("l1v", "u")},
-    {_nsw_graph_sql_for("embeddings", "z")}, {_FQS_SQL}, uentry AS (
-        SELECT min(vec_id) AS node FROM l1v
-    ), """
-        + _nsw_beam_sql("uadj", "u", b0=b0_l1, qs="fqs")
-        + f", {hand_off}, "
-        + _nsw_beam_sql("zadj", "z", b0=b0_base, qs="fqs")
-        + f""", {_visited_sql("z", "fqs")}, gfinal AS (
-        SELECT query_id, node AS neighbor_id, rank, dist_q FROM (
-            SELECT query_id, node, dist_q,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rank
-            FROM zvis
-            WHERE node <> query_id
-              AND node IN (SELECT vec_id FROM embeddings
-                           WHERE label = {FILT_LABEL})
-        ) t WHERE rank <= 3
-    )"""
+        f"{_hnsw_layers_sql()}, {_FQS_SQL}, {_UENTRY_SQL}, "
+        + _hnsw_descent_sql("fqs", "uadj", "zadj", "u", "z")
+        + f", {_visited_sql('z', 'fqs')}, "
+        + f"gfinal AS ({_nsw_final_sql('zvis', label_mask)})"
     )
 
 

@@ -30,7 +30,7 @@ probe-miss mechanism needs boundary-heavy query placement):
   p ∈ [3, 5], seeds 4–7 at 3.2/3.6/4.4/4.8, and the two FIXED search
   entry points placed inside the query zone: vec_id 0 (the min-id
   layer-0/NSW entry) is query 0, and vec_id 21 — the smallest id
-  with hash56 % {l1_mod} == 0, i.e. the layer-1 entry the registered
+  with hash56 % HNSW_L1_MOD == 0, i.e. the layer-1 entry the registered
   HNSW rows derive — is pinned at p = 4.005. Truth is reachable
   within the fixed hop budget, so graph quality (not entry
   distance) is what the rows measure (→ q_nsw_descent_clustered,
@@ -62,20 +62,15 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.portable import HASH56_HEX_DIGITS, round_agg, round_sql
 from ..operators.llm import (
+    NSW_DEG,
+    NSW_HOPS,
     ivfpq_topk,
     nsw_descent,
-    nsw_graph,
     nsw_search,
     topk_neighbors_l2,
 )
 from .llm_ops import (
-    EMBED_MULTI_MAX_CELL,
-    EMBED_PAIR_NPROBE,
-    HNSW_L1_MOD,
     IVF_SEED_CENTROIDS,
-    NSW_BEAM,
-    NSW_DEG,
-    NSW_HOPS,
     PQ_QUERY_MAX,
     RERANK_SHORTLIST,
     _DISTQ_DUCK,
@@ -84,6 +79,7 @@ from .llm_ops import (
     _NSW_QS_ENTRY_SQL,
     _nsw_beam_sql,
     _nsw_final_sql,
+    build_graph,
     exact_rerank,
     graph_expand_topk,
     hnsw_beam_audit,
@@ -445,16 +441,10 @@ def q_nsw_descent_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = nav_corpus(emb).localCheckpoint(eager=True)
     queries = cl.filter(F.col("vec_id") < PQ_QUERY_MAX)
     audit = cl.filter(F.col("vec_id") < DESCENT_AUDIT_NODES)
-    adj0 = nsw_graph(
-        cl,
-        cl.filter(F.col("vec_id") < IVF_SEED_CENTROIDS),
-        deg=NSW_DEG,
-        max_cell=EMBED_MULTI_MAX_CELL,
-        nprobe=EMBED_PAIR_NPROBE,
-    ).localCheckpoint(eager=True)
+    adj0 = build_graph(cl, cl.filter(F.col("vec_id") < IVF_SEED_CENTROIDS))
     adj1 = nsw_descent(cl, adj0, NSW_DEG).localCheckpoint(eager=True)
-    s0 = nsw_search(cl, queries, adj0, k=3, beam=NSW_BEAM, hops=NSW_HOPS)
-    s1 = nsw_search(cl, queries, adj1, k=3, beam=NSW_BEAM, hops=NSW_HOPS)
+    s0 = nsw_search(cl, queries, adj0, k=3)
+    s1 = nsw_search(cl, queries, adj1, k=3)
     struth = (
         topk_neighbors_l2(cl, queries, k=3)
         .select("query_id", "neighbor_id")

@@ -59,8 +59,12 @@ from ..operators.llm import (
     knn_classify,
     label_centroids_long,
     kmeans_refine,
+    HNSW_L1_MOD,
+    NSW_BEAM,
+    NSW_DEG,
+    NSW_HOPS,
+    hnsw_layer1,
     hnsw_search,
-    nsw_beam,
     nsw_descent,
     nsw_graph,
     nsw_insert,
@@ -2267,9 +2271,36 @@ def q_sim_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NSW graph-index ANN — build a navigable proximity graph, beam-search it
 # ---------------------------------------------------------------------------
 
-NSW_DEG = 4   # out-links kept per node at build (2*deg after symmetrize)
-NSW_BEAM = 8  # beam width during search
-NSW_HOPS = 3  # expansion rounds (fixed unroll — the kmeans/BPE discipline)
+# the registry's nsw_graph keywords — every graph the registry builds
+# and the persisted store's init use exactly these
+NSW_GRAPH_KW = dict(
+    deg=NSW_DEG, max_cell=EMBED_MULTI_MAX_CELL, nprobe=EMBED_PAIR_NPROBE
+)
+
+
+def build_graph(
+    emb: DataFrame, seeds: DataFrame, keep_dist: bool = False
+) -> DataFrame:
+    """nsw_graph over ``emb`` with the registry keywords, checkpointed
+    eagerly: the adjacency feeds every search round, so the IVF build
+    runs once and no cache entry outlives the query (lineage cut —
+    the triangles convention)."""
+    return nsw_graph(
+        emb, seeds, keep_dist=keep_dist, **NSW_GRAPH_KW
+    ).localCheckpoint(eager=True)
+
+
+def hnsw_layers(emb: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(adj0, adj1, l1): both HNSW layer graphs over ``emb`` plus the
+    layer-1 member frame. The two builds are independent eager chains,
+    so they overlap on driver threads (guide §2.6) instead of paying
+    both build walls back-to-back."""
+    seeds = emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
+    l1 = hnsw_layer1(emb).select("vec_id", "embedding")
+    adj1, adj0 = parallel_frames(
+        lambda: build_graph(l1, seeds), lambda: build_graph(emb, seeds)
+    )
+    return adj0, adj1, l1
 
 
 def _nsw_shrink_sql(cand: str, p: str, keep_dist: bool = False) -> str:
@@ -2408,13 +2439,18 @@ def _nsw_graph_sql_for(vtab: str, p: str, keep_dist: bool = False) -> str:
 _NSW_GRAPH_SQL = _nsw_graph_sql_for("embeddings", "")
 
 
-def _nsw_final_sql(b_last: str) -> str:
+def _nsw_final_sql(b_last: str, mask: str = "") -> str:
+    """The final rank of a scored (query_id, node, dist_q) CTE — the
+    DuckDB twin of operators/llm._rank_nodes: self-matches and the
+    rows failing ``mask`` (an extra ``AND ...`` predicate on ``node``:
+    a tombstone or metadata filter) drop BEFORE ranking, then the
+    top-3 by (dist_q, node)."""
     return f"""
     SELECT query_id, neighbor_id, rank, dist_q FROM (
         SELECT query_id, node AS neighbor_id, dist_q,
                row_number() OVER (
                    PARTITION BY query_id ORDER BY dist_q, node) AS rank
-        FROM {b_last} WHERE node <> query_id
+        FROM {b_last} WHERE node <> query_id{mask}
     ) t WHERE rank <= 3
     """
 
@@ -2467,23 +2503,11 @@ def _register_nsw():
         this index family is the engine-level capability it cannot
         express."""
         emb = load_table(spark, sf_dir, "embeddings")
-        # the adjacency feeds every search round — checkpoint it once
-        # (eager, lineage cut: the IVF build never re-executes and no
-        # cache entry outlives the query; the triangles convention)
-        adj = nsw_graph(
-            emb,
-            emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS),
-            deg=NSW_DEG,
-            max_cell=EMBED_MULTI_MAX_CELL,
-            nprobe=EMBED_PAIR_NPROBE,
-        ).localCheckpoint(eager=True)
+        adj = build_graph(
+            emb, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
+        )
         return nsw_search(
-            emb,
-            emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
-            adj,
-            k=3,
-            beam=NSW_BEAM,
-            hops=NSW_HOPS,
+            emb, emb.filter(F.col("vec_id") < PQ_QUERY_MAX), adj, k=3
         )
 
     return q_sim_nsw_topk
@@ -2557,21 +2581,12 @@ def _register_nsw_descent():
         equi-joins against the vector table; nothing quadratic
         appears in either round."""
         emb = load_table(spark, sf_dir, "embeddings")
-        adj0 = nsw_graph(
-            emb,
-            emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS),
-            deg=NSW_DEG,
-            max_cell=EMBED_MULTI_MAX_CELL,
-            nprobe=EMBED_PAIR_NPROBE,
-        ).localCheckpoint(eager=True)
+        adj0 = build_graph(
+            emb, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
+        )
         adj1 = nsw_descent(emb, adj0, NSW_DEG).localCheckpoint(eager=True)
         return nsw_search(
-            emb,
-            emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
-            adj1,
-            k=3,
-            beam=NSW_BEAM,
-            hops=NSW_HOPS,
+            emb, emb.filter(F.col("vec_id") < PQ_QUERY_MAX), adj1, k=3
         )
 
     return q_sim_nsw_descent
@@ -2580,7 +2595,61 @@ def _register_nsw_descent():
 q_sim_nsw_descent = _register_nsw_descent()
 
 
-HNSW_L1_MOD = 8  # layer-1 keeps vec_ids with hash56 % 8 == 0 (~1/8)
+# the layer-1 member CTE (HNSW_L1_MOD's hash sample) and its min-vec_id
+# entry — shared by every two-layer oracle; the delete forms pass their
+# own survivor-only ``uentry``
+_L1V_SQL = f"""l1v AS (
+        SELECT vec_id, embedding FROM embeddings
+        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
+    )"""
+
+_UENTRY_SQL = """uentry AS (
+        SELECT min(vec_id) AS node FROM l1v
+    )"""
+
+
+def _hnsw_layers_sql(keep_dist: bool = False) -> str:
+    """l1v plus both layer graphs: layer 1 (adjacency ``uadj``) over
+    l1v and the base layer (``zadj``) over the whole corpus."""
+    return (
+        f"{_L1V_SQL}, {_nsw_graph_sql_for('l1v', 'u', keep_dist=keep_dist)}, "
+        f"{_nsw_graph_sql_for('embeddings', 'z', keep_dist=keep_dist)}"
+    )
+
+
+def _hnsw_descent_sql(
+    qs: str,
+    uadj: str,
+    zadj: str,
+    up: str,
+    zp: str,
+    beam: int = NSW_BEAM,
+) -> str:
+    """The two-layer descent CTE text (the DuckDB twin of
+    operators/llm.hnsw_entries + the base nsw_beam): the layer-1
+    unroll (prefix ``up``) over ``uadj`` from the ``uentry`` CTE, the
+    per-query ``rn = 1`` hand-off ``{zp}e0``, and the base-layer
+    unroll (prefix ``zp``, final CTE ``{zp}b{NSW_HOPS}``) over ``zadj``
+    seeded there. ``qs`` names the (query_id, eq) query-set CTE."""
+    b0_u = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
+        FROM {qs} q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node"""
+    hand_off = f"""{zp}e0 AS (
+        SELECT query_id, node FROM (
+            SELECT query_id, node,
+                   row_number() OVER (
+                       PARTITION BY query_id
+                       ORDER BY dist_q, node) AS rn
+            FROM {up}b{NSW_HOPS}
+        ) t WHERE rn = 1
+    )"""
+    b0_z = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
+        FROM {qs} q JOIN {zp}e0 e ON e.query_id = q.query_id
+        JOIN embeddings m ON m.vec_id = e.node"""
+    return (
+        _nsw_beam_sql(uadj, up, b0=b0_u, qs=qs, beam=beam)
+        + f", {hand_off}, "
+        + _nsw_beam_sql(zadj, zp, b0=b0_z, qs=qs, beam=beam)
+    )
 
 
 def _hnsw_oracle_sql() -> str:
@@ -2592,35 +2661,9 @@ def _hnsw_oracle_sql() -> str:
     deterministic build's output persisted, so the served answer must
     equal the built-fresh answer — sharing the text makes that
     contract literal."""
-    l1 = f"""l1v AS (
-        SELECT vec_id, embedding FROM embeddings
-        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
-    )"""
-    hand_off = f"""e0 AS (
-        SELECT query_id, node FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rn
-            FROM ub{NSW_HOPS}
-        ) t WHERE rn = 1
-    )"""
-    b0_base = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q JOIN e0 e ON e.query_id = q.query_id
-        JOIN embeddings m ON m.vec_id = e.node"""
     return (
-        f"""
-    WITH {l1}, {_nsw_graph_sql_for("l1v", "u")}, {_nsw_graph_sql_for("embeddings", "z")}, {_NSW_QS_ENTRY_SQL}, uentry AS (
-        SELECT min(vec_id) AS node FROM l1v
-    ), """
-        + _nsw_beam_sql(
-            "uadj",
-            "u",
-            b0=f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node""",
-        )
-        + f", {hand_off}, "
-        + _nsw_beam_sql("zadj", "z", b0=b0_base)
+        f"\n    WITH {_hnsw_layers_sql()}, {_NSW_QS_ENTRY_SQL}, {_UENTRY_SQL}, "
+        + _hnsw_descent_sql("qs", "uadj", "zadj", "u", "z")
         + _nsw_final_sql(f"zb{NSW_HOPS}")
     )
 
@@ -2658,39 +2701,14 @@ def _register_hnsw():
         broadcast join to the serving path. Everything else inherits
         the base machinery's shapes."""
         emb = load_table(spark, sf_dir, "embeddings")
-        seeds = emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
-        queries = emb.filter(F.col("vec_id") < PQ_QUERY_MAX)
-        sub = emb.filter(
-            hash56(F.col("vec_id")) % HNSW_L1_MOD == 0
-        ).select("vec_id", "embedding")
-        # the two layer builds are independent eager chains — overlap
-        # them on driver threads (guide §2.6) instead of paying both
-        # build walls back-to-back
-        adj1, adj0 = parallel_frames(
-            lambda: nsw_graph(
-                sub,
-                seeds,
-                deg=NSW_DEG,
-                max_cell=EMBED_MULTI_MAX_CELL,
-                nprobe=EMBED_PAIR_NPROBE,
-            ).localCheckpoint(eager=True),
-            lambda: nsw_graph(
-                emb,
-                seeds,
-                deg=NSW_DEG,
-                max_cell=EMBED_MULTI_MAX_CELL,
-                nprobe=EMBED_PAIR_NPROBE,
-            ).localCheckpoint(eager=True),
-        )
+        adj0, adj1, l1 = hnsw_layers(emb)
         return hnsw_search(
             emb,
-            queries,
+            emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
             adj0,
             adj1,
-            l1_members=sub,
+            l1_members=l1,
             k=3,
-            beam=NSW_BEAM,
-            hops=NSW_HOPS,
         )
 
     q_sim_hnsw_topk.__doc__ = q_sim_hnsw_topk.__doc__.format(
@@ -2790,24 +2808,19 @@ def _register_nsw_insert():
         )
         base = emb.filter(~is_arr).select("vec_id", "embedding")
         arrivals = emb.filter(is_arr).select("vec_id", "embedding")
-        adj0 = nsw_graph(
+        adj0 = build_graph(
             base,
             emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS),
-            deg=NSW_DEG,
-            max_cell=EMBED_MULTI_MAX_CELL,
-            nprobe=EMBED_PAIR_NPROBE,
             keep_dist=True,
-        ).localCheckpoint(eager=True)
-        adj1 = nsw_insert(
-            base, adj0, arrivals, deg=NSW_DEG, beam=NSW_BEAM, hops=NSW_HOPS
-        ).localCheckpoint(eager=True)
+        )
+        adj1 = nsw_insert(base, adj0, arrivals, deg=NSW_DEG).localCheckpoint(
+            eager=True
+        )
         return nsw_search(
             emb,
             emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
             adj1.select("src", "dst"),
             k=3,
-            beam=NSW_BEAM,
-            hops=NSW_HOPS,
         )
 
     q_sim_nsw_insert.__doc__ = q_sim_nsw_insert.__doc__.format(deg=NSW_DEG)
@@ -2854,15 +2867,7 @@ def _hnsw_store_key(sf_dir: str) -> str:
 def _hnsw_monitor(store_dir: str):
     from ..streaming.ann_index import ANNIndexMonitor
 
-    return ANNIndexMonitor(
-        store_dir,
-        deg=NSW_DEG,
-        beam=NSW_BEAM,
-        hops=NSW_HOPS,
-        l1_mod=HNSW_L1_MOD,
-        max_cell=EMBED_MULTI_MAX_CELL,
-        nprobe=EMBED_PAIR_NPROBE,
-    )
+    return ANNIndexMonitor(store_dir)
 
 
 def corpus_file_identity(sf_dir: str, table: str = "embeddings") -> str:
@@ -3433,18 +3438,8 @@ def hnsw_beam_audit(spark: SparkSession, emb: DataFrame) -> DataFrame:
     recall@3 vs exact truth per width — factored out so the
     registered isotropic row and the planted-cluster audit
     (plans/clustered_audit.py) run ONE sweep rule."""
-    seeds = emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
     queries = emb.filter(F.col("vec_id") < PQ_QUERY_MAX)
-    sub = emb.filter(
-        hash56(F.col("vec_id")) % HNSW_L1_MOD == 0
-    ).select("vec_id", "embedding")
-    gkw = dict(
-        deg=NSW_DEG,
-        max_cell=EMBED_MULTI_MAX_CELL,
-        nprobe=EMBED_PAIR_NPROBE,
-    )
-    adj1 = nsw_graph(sub, seeds, **gkw).localCheckpoint(eager=True)
-    adj0 = nsw_graph(emb, seeds, **gkw).localCheckpoint(eager=True)
+    adj0, adj1, l1 = hnsw_layers(emb)
     truth = topk_neighbors_l2(emb, queries, k=3).localCheckpoint(
         eager=True
     )
@@ -3458,14 +3453,7 @@ def hnsw_beam_audit(spark: SparkSession, emb: DataFrame) -> DataFrame:
     out = None
     for b in HNSW_BEAMS:
         res = hnsw_search(
-            emb,
-            queries,
-            adj0,
-            adj1,
-            l1_members=sub,
-            k=3,
-            beam=b,
-            hops=NSW_HOPS,
+            emb, queries, adj0, adj1, l1_members=l1, k=3, beam=b
         )
         h = res.join(
             F.broadcast(pairs), ["query_id", "neighbor_id"], "left"
@@ -3488,17 +3476,10 @@ def _register_hnsw_beam_audit() -> None:
     """HNSW beam-width sensitivity audit (r10 verdict ask #6): the
     recall-vs-cost curve of the SERVING knob, measured the way the
     per-method rows priced the hash families. Graphs are built once;
-    only the two beam widths vary per row."""
-    l1 = f"""l1v AS (
-        SELECT vec_id, embedding FROM embeddings
-        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
-    )"""
+    only the beam width varies per row."""
     head = (
-        f"\n    WITH {l1}, {_nsw_graph_sql_for('l1v', 'u')}, "
-        f"{_nsw_graph_sql_for('embeddings', 'z')}, {_NSW_QS_ENTRY_SQL}, "
-        """uentry AS (
-        SELECT min(vec_id) AS node FROM l1v
-    ), exact_l2 AS MATERIALIZED ("""
+        f"\n    WITH {_hnsw_layers_sql()}, {_NSW_QS_ENTRY_SQL}, {_UENTRY_SQL}, "
+        """exact_l2 AS MATERIALIZED ("""
         + _EXACT_L2_TRUTH_SQL
         + """
     ), td AS MATERIALIZED (
@@ -3509,30 +3490,12 @@ def _register_hnsw_beam_audit() -> None:
     parts = [head]
     rows = []
     for b in HNSW_BEAMS:
-        up, zp = f"u{b}", f"z{b}"
-        b0_u = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node"""
-        parts.append(_nsw_beam_sql("uadj", up, b0=b0_u, beam=b))
-        parts.append(f"""e{b} AS (
-        SELECT query_id, node FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rn
-            FROM {up}b{NSW_HOPS}
-        ) t WHERE rn = 1
-    )""")
-        b0_z = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q JOIN e{b} e ON e.query_id = q.query_id
-        JOIN embeddings m ON m.vec_id = e.node"""
-        parts.append(_nsw_beam_sql("zadj", zp, b0=b0_z, beam=b))
+        zp = f"z{b}"
+        parts.append(
+            _hnsw_descent_sql("qs", "uadj", "zadj", f"u{b}", zp, beam=b)
+        )
         parts.append(f"""res{b} AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, node AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY query_id ORDER BY dist_q, node) AS rank
-            FROM {zp}b{NSW_HOPS} WHERE node <> query_id
-        ) t WHERE rank <= 3
+        SELECT query_id, neighbor_id FROM ({_nsw_final_sql(f'{zp}b{NSW_HOPS}')}) x
     )""")
         parts.append(f"""h{b} AS (
         SELECT CAST(coalesce(sum(

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from ..caching import parallel_frames
 from ..catalog import load_table
-from ..functions.portable import hash56_sql_duckdb
 from ..operators.llm import (
     NORM2_SQL,
     SQDIST_Q_PRE_SQL,
@@ -34,16 +33,14 @@ from ..operators.llm import (
 )
 from .ann_filtered import _visited_sql
 from .llm_ops import (
-    HNSW_L1_MOD,
     IVF_SEED_CENTROIDS,
-    NSW_HOPS,
     PQ_QUERY_MAX,
     _DISTQ_DUCK,
-    _NSW_DISTQM,
     _NSW_QS_ENTRY_SQL,
     _SEED_ASSIGN_DUCK,
-    _nsw_beam_sql,
-    _nsw_graph_sql_for,
+    _UENTRY_SQL,
+    _hnsw_descent_sql,
+    _hnsw_layers_sql,
     hnsw_store_for,
 )
 from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
@@ -131,32 +128,9 @@ def _hnsw_radius_with() -> str:
     """WITH-fragment: the standard two-layer descent (the
     _hnsw_oracle_sql shape at the PQ_QUERY_MAX query set), the base
     beam's scored visited set, and the thresholded result ``gradius``."""
-    l1 = f"""l1v AS (
-        SELECT vec_id, embedding FROM embeddings
-        WHERE {hash56_sql_duckdb('vec_id')} % {HNSW_L1_MOD} = 0
-    )"""
-    hand_off = f"""e0 AS (
-        SELECT query_id, node FROM (
-            SELECT query_id, node,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY dist_q, node) AS rn
-            FROM ub{NSW_HOPS}
-        ) t WHERE rn = 1
-    )"""
-    b0_l1 = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q CROSS JOIN uentry e JOIN embeddings m ON m.vec_id = e.node"""
-    b0_base = f"""SELECT q.query_id, e.node, {_NSW_DISTQM} AS dist_q
-        FROM qs q JOIN e0 e ON e.query_id = q.query_id
-        JOIN embeddings m ON m.vec_id = e.node"""
     return (
-        f"""{l1}, {_nsw_graph_sql_for("l1v", "u")},
-    {_nsw_graph_sql_for("embeddings", "z")}, {_NSW_QS_ENTRY_SQL}, uentry AS (
-        SELECT min(vec_id) AS node FROM l1v
-    ), """
-        + _nsw_beam_sql("uadj", "u", b0=b0_l1)
-        + f", {hand_off}, "
-        + _nsw_beam_sql("zadj", "z", b0=b0_base)
+        f"{_hnsw_layers_sql()}, {_NSW_QS_ENTRY_SQL}, {_UENTRY_SQL}, "
+        + _hnsw_descent_sql("qs", "uadj", "zadj", "u", "z")
         + f""", {_visited_sql("z", "qs")}, gradius AS (
         SELECT query_id, node AS neighbor_id, dist_q
         FROM zvis

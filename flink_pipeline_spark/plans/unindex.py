@@ -37,23 +37,20 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..caching import materialize, parallel_frames
 from ..catalog import load_table
 from ..operators.llm import (
-    NORM2_SQL,
-    SQDIST_Q_PRE_SQL,
-    SQDIST_Q_SQL,
+    NSW_HOPS,
     connected_components,
     doc_shingles,
     lsh_candidate_pairs,
+    topk_neighbors_l2,
     verified_near_dups,
 )
 from ..streaming.heavy import publish_store
 from .ann_delete import _final_survivor_sql, _hnsw_delete_ctes
 from .llm_ops import (
-    NSW_HOPS,
     PQ_QUERY_MAX,
     RERANK_SHORTLIST,
     _DISTQ_DUCK,
@@ -321,14 +318,7 @@ def _unindex_recall_oracle() -> str:
         "\n    WITH "
         + _hnsw_delete_ctes(_dedup_dels_ctes())
         + f""", {truth}, served AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, node AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY query_id ORDER BY dist_q, node) AS rank
-            FROM bb{NSW_HOPS}
-            WHERE node <> query_id
-              AND node NOT IN (SELECT vec_id FROM dels)
-        ) t WHERE rank <= 3
+        SELECT query_id, neighbor_id FROM ({_final_survivor_sql(f'bb{NSW_HOPS}')}) x
     ), {recall_rollup_sql(
         {'exact': 'truth', 'served': 'served'}, NEIGHBOR_KEYS)}, dropped AS (
         SELECT method, CAST(count(*) AS BIGINT) AS n_dropped_served
@@ -365,12 +355,6 @@ def q_dedup_unindex_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dozen rows."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < PQ_QUERY_MAX)
-    qd = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("eq"),
-        F.expr(NORM2_SQL.format(a="embedding")).alias("nq2"),
-    )
-    wt = Window.partitionBy("query_id").orderBy("dist_q", "neighbor_id")
 
     def _served_chain() -> DataFrame:
         mon = hnsw_unindex_store_for(spark, sf_dir)
@@ -389,21 +373,7 @@ def q_dedup_unindex_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         surv = emb.join(drops, "vec_id", "left_anti")
         truth = (
-            surv.withColumn(
-                "nb2", F.expr(NORM2_SQL.format(a="embedding"))
-            )
-            .join(F.broadcast(qd), F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.expr(
-                    SQDIST_Q_PRE_SQL.format(
-                        a="eq", b="embedding", na2="nq2", nb2="nb2"
-                    )
-                ).alias("dist_q"),
-            )
-            .withColumn("rank", F.row_number().over(wt))
-            .filter(F.col("rank") <= 3)
+            topk_neighbors_l2(surv, queries, k=3)
             .select("query_id", "neighbor_id")
             .localCheckpoint(eager=True)
         )

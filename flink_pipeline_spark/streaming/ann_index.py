@@ -12,8 +12,9 @@ image_dedup.py append-log conventions, one store each):
 * ``adj/batch_id=N`` — the FULL scored adjacency snapshot after batch
   N, columns (layer, src, dst, dist_q): layer 0 = base graph over
   every indexed vector, layer 1 = the sparse upper layer (the
-  deterministic hash56 % l1_mod == 0 sample — HNSW's geometric level
-  assignment, one level deep). Snapshot semantics because an insert
+  deterministic hash56 % HNSW_L1_MOD == 0 sample of
+  operators/llm.hnsw_layer1 — HNSW's geometric level assignment, one
+  level deep). Snapshot semantics because an insert
   REWRITES touched nodes' edge lists (the 2*deg re-prune); the
   copy-on-write trade is the CDC-merge one: at 100 TB the adjacency
   would be bucketed by src and only dirty buckets rewritten —
@@ -39,7 +40,7 @@ pruned-past store raises loudly (the r9-ADVICE contract).
 Insert rule per micro-batch (operators/llm.nsw_insert — the SAME
 operator the batch query q_sim_nsw_insert registers and the DuckDB
 oracle replays): every arrival beam-searches the current layer-0
-graph, links to its beam's ``deg`` nearest, hands back reverse edges,
+graph, links to its beam's NSW_DEG nearest, hands back reverse edges,
 touched lists re-prune to 2*deg; arrivals passing the hash rule
 additionally insert into layer 1 the same way. Per-trigger work is
 O(|batch| * beam * deg * hops) beam probes plus one per-src window
@@ -58,6 +59,10 @@ unchanged). Searches exclude tombstoned ids from the final beam
 (operators/llm.nsw_search's mask — on a compacted adjacency a
 no-op enforcing the contract) and read vectors through the
 tombstone mask, so a deleted vector can never be served.
+
+The build and search constants are the registry's (NSW_DEG, NSW_BEAM,
+NSW_HOPS, HNSW_L1_MOD and plans/llm_ops.NSW_GRAPH_KW), so a store built
+here serves exactly the graph the batch queries build.
 """
 
 from __future__ import annotations
@@ -67,15 +72,24 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.portable import hash56
 from ..operators.llm import (
+    NSW_DEG,
+    hnsw_entries,
     hnsw_filtered_search,
+    hnsw_layer1,
     hnsw_search,
+    nsw_beam,
     nsw_delete,
     nsw_graph,
     nsw_insert,
 )
-from .heavy import partition_ids, prune_partitions, split_ops
+from ..plans.llm_ops import NSW_GRAPH_KW  # one source of truth
+from .heavy import (
+    partition_ids,
+    partitions_before,
+    prune_partitions,
+    split_ops,
+)
 
 _ADJ_SCHEMA = "layer INT, src BIGINT, dst BIGINT, dist_q BIGINT"
 
@@ -84,29 +98,11 @@ class ANNIndexMonitor:
     """foreachBatch sink: maintain the persisted two-layer HNSW index
     under ``store_dir``; serve searches from any committed snapshot."""
 
-    def __init__(
-        self,
-        store_dir: str,
-        deg: int = 4,
-        beam: int = 8,
-        hops: int = 3,
-        l1_mod: int = 8,
-        max_cell: int = 32,
-        nprobe: int = 2,
-    ) -> None:
+    def __init__(self, store_dir: str) -> None:
         self.store_dir = store_dir
-        self.deg = deg
-        self.beam = beam
-        self.hops = hops
-        self.l1_mod = l1_mod
-        self.max_cell = max_cell
-        self.nprobe = nprobe
 
     def _path(self, kind: str) -> str:
         return os.path.join(self.store_dir, kind)
-
-    def _is_l1(self):
-        return hash56(F.col("vec_id")) % self.l1_mod == 0
 
     # -- store I/O ---------------------------------------------------
 
@@ -117,15 +113,11 @@ class ANNIndexMonitor:
         quantizer seed set driving build-time candidate generation —
         a corpus property; inserts never need it (they probe the
         graph itself), so it is not persisted."""
-        kw = dict(
-            deg=self.deg,
-            max_cell=self.max_cell,
-            nprobe=self.nprobe,
-            keep_dist=True,
-        )
         vecs = emb.select("vec_id", "embedding")
-        l0 = nsw_graph(vecs, centroids, **kw)
-        l1 = nsw_graph(vecs.filter(self._is_l1()), centroids, **kw)
+        l0 = nsw_graph(vecs, centroids, keep_dist=True, **NSW_GRAPH_KW)
+        l1 = nsw_graph(
+            hnsw_layer1(vecs), centroids, keep_dist=True, **NSW_GRAPH_KW
+        )
         adj = l0.select(F.lit(0).alias("layer"), "src", "dst", "dist_q")
         adj = adj.unionByName(
             l1.select(F.lit(1).alias("layer"), "src", "dst", "dist_q")
@@ -156,16 +148,13 @@ class ANNIndexMonitor:
         """Every indexed vector from partitions strictly BEFORE
         ``batch_id`` — the append-only log read that keeps a replayed
         batch from seeing its own or later arrivals."""
-        bids = partition_ids(spark, self._path("vecs"))
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
+        parts = partitions_before(spark, self._path("vecs"), batch_id)
+        if not parts:
+            bids = partition_ids(spark, self._path("vecs"))
             raise ValueError(
                 f"ann index: no vector partitions before batch "
                 f"{batch_id} (have {sorted(bids)}; call init first)"
             )
-        parts = [
-            os.path.join(self._path("vecs"), f"batch_id={b}") for b in prior
-        ]
         return spark.read.parquet(*parts).select("vec_id", "embedding")
 
     def _read_tombs(self, spark, batch_id: int) -> DataFrame:
@@ -173,24 +162,31 @@ class ANNIndexMonitor:
         ``batch_id``. Unlike adj/vecs, an absent tombstone log is a
         VALID state (no delete has ever run), not an error — it reads
         as the empty mask."""
-        bids = partition_ids(spark, self._path("tombs"))
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
+        parts = partitions_before(spark, self._path("tombs"), batch_id)
+        if not parts:
             return spark.createDataFrame([], "vec_id BIGINT")
-        parts = [
-            os.path.join(self._path("tombs"), f"batch_id={b}") for b in prior
-        ]
         return spark.read.schema("vec_id BIGINT").parquet(*parts)
 
-    # -- the foreachBatch fold ----------------------------------------
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+    def _state(self, spark, batch_id: int):
+        """(vecs, adj0, adj1, tombs) strictly BEFORE ``batch_id``: the
+        indexed vectors read through the tombstone mask, the scored
+        (src, dst, dist_q) adjacency of layer 0 and layer 1, and the
+        tombstoned ids — the one store read every fold and every
+        search starts from."""
         adj = self._read_adj(spark, batch_id)
         tombs = self._read_tombs(spark, batch_id)
         vecs = self._read_vecs(spark, batch_id).join(
             tombs, "vec_id", "left_anti"
         )
+        adj0 = adj.filter(F.col("layer") == 0).drop("layer")
+        adj1 = adj.filter(F.col("layer") == 1).drop("layer")
+        return vecs, adj0, adj1, tombs
+
+    # -- the foreachBatch fold ----------------------------------------
+
+    def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        vecs, adj0, adj1, tombs = self._state(spark, batch_id)
         dels, arrivals = split_ops(batch)
         # re-inserting a previously tombstoned vec_id is UNSUPPORTED
         # (the id is dead forever — _read_tombs masks it on every
@@ -212,20 +208,14 @@ class ANNIndexMonitor:
                 "vec_id(s) — unsupported (tombstoned ids are dead "
                 "forever; index under a fresh vec_id instead)"
             )
-        adj0 = adj.filter(F.col("layer") == 0).drop("layer")
-        adj1 = adj.filter(F.col("layer") == 1).drop("layer")
         # deletes FIRST: compact both layers, then arrivals beam over
         # the compacted graphs and the surviving corpus
-        adj0 = nsw_delete(vecs, adj0, dels, deg=self.deg)
-        adj1 = nsw_delete(vecs, adj1, dels, deg=self.deg)
+        adj0 = nsw_delete(vecs, adj0, dels, deg=NSW_DEG)
+        adj1 = nsw_delete(vecs, adj1, dels, deg=NSW_DEG)
         live = vecs.join(dels, "vec_id", "left_anti")
-        kw = dict(deg=self.deg, beam=self.beam, hops=self.hops)
-        new0 = nsw_insert(live, adj0, arrivals, **kw)
+        new0 = nsw_insert(live, adj0, arrivals, deg=NSW_DEG)
         new1 = nsw_insert(
-            live.filter(self._is_l1()),
-            adj1,
-            arrivals.filter(self._is_l1()),
-            **kw,
+            hnsw_layer1(live), adj1, hnsw_layer1(arrivals), deg=NSW_DEG
         )
         nadj = new0.select(
             F.lit(0).alias("layer"), "src", "dst", "dist_q"
@@ -261,20 +251,14 @@ class ANNIndexMonitor:
         Vectors are read through the tombstone mask and tombstoned
         ids are excluded from the final beam, so a deleted vector is
         never served."""
-        adj = self._read_adj(spark, after_batch_id + 1)
-        tombs = self._read_tombs(spark, after_batch_id + 1)
-        vecs = self._read_vecs(spark, after_batch_id + 1).join(
-            tombs, "vec_id", "left_anti"
-        )
+        vecs, adj0, adj1, tombs = self._state(spark, after_batch_id + 1)
         return hnsw_search(
             vecs,
             queries,
-            adj.filter(F.col("layer") == 0).select("src", "dst"),
-            adj.filter(F.col("layer") == 1).select("src", "dst"),
-            l1_members=vecs.filter(self._is_l1()),
+            adj0,
+            adj1,
+            l1_members=hnsw_layer1(vecs),
             k=k,
-            beam=self.beam,
-            hops=self.hops,
             exclude=tombs,
         )
 
@@ -295,39 +279,10 @@ class ANNIndexMonitor:
         score — the hnsw_filtered_search insight) is thresholded.
         Recall is bounded by what the beam visits (widen the beam to
         raise it); tombstoned ids are excluded as in ``search``."""
-        from ..operators.llm import nsw_beam
-
-        adj = self._read_adj(spark, after_batch_id + 1)
-        tombs = self._read_tombs(spark, after_batch_id + 1)
-        vecs = self._read_vecs(spark, after_batch_id + 1).join(
-            tombs, "vec_id", "left_anti"
-        )
-        adj0 = adj.filter(F.col("layer") == 0).select("src", "dst")
-        adj1 = adj.filter(F.col("layer") == 1).select("src", "dst")
-        beam1 = nsw_beam(
-            vecs,
-            queries,
-            adj1,
-            beam=self.beam,
-            hops=self.hops,
-            entry_from=vecs.filter(self._is_l1()),
-        )
-        from pyspark.sql.window import Window
-
-        wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
-        entries0 = (
-            beam1.withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") == 1)
-            .select("query_id", "node")
-        )
+        vecs, adj0, adj1, tombs = self._state(spark, after_batch_id + 1)
+        entries0 = hnsw_entries(vecs, queries, adj1, hnsw_layer1(vecs))
         vis = nsw_beam(
-            vecs,
-            queries,
-            adj0,
-            beam=self.beam,
-            hops=self.hops,
-            entries=entries0,
-            keep_visited=True,
+            vecs, queries, adj0, entries=entries0, keep_visited=True
         )
         return (
             vis.filter(F.col("node") != F.col("query_id"))
@@ -359,21 +314,15 @@ class ANNIndexMonitor:
         store itself holds only vectors, so the predicate arrives as
         an id set, the vector-store filter-pushdown convention).
         Tombstones are excluded as in ``search``."""
-        adj = self._read_adj(spark, after_batch_id + 1)
-        tombs = self._read_tombs(spark, after_batch_id + 1)
-        vecs = self._read_vecs(spark, after_batch_id + 1).join(
-            tombs, "vec_id", "left_anti"
-        )
+        vecs, adj0, adj1, tombs = self._state(spark, after_batch_id + 1)
         return hnsw_filtered_search(
             vecs,
             queries,
-            adj.filter(F.col("layer") == 0).select("src", "dst"),
-            adj.filter(F.col("layer") == 1).select("src", "dst"),
-            l1_members=vecs.filter(self._is_l1()),
+            adj0,
+            adj1,
+            l1_members=hnsw_layer1(vecs),
             filt_ids=filt_ids,
             k=k,
-            beam=self.beam,
-            hops=self.hops,
             exclude=tombs,
         )
 

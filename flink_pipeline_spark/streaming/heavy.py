@@ -66,6 +66,18 @@ def partition_ids(spark, path: str) -> list[int]:
     return out
 
 
+def partitions_before(spark, path: str, batch_id: int) -> list[str]:
+    """Paths of the ``batch_id=B`` partitions under ``path`` with
+    B < ``batch_id`` — the append-log read rule that keeps a replayed
+    batch from seeing its own or later rows. [] when there are none;
+    each caller decides whether that is an error."""
+    return [
+        os.path.join(path, f"batch_id={b}")
+        for b in partition_ids(spark, path)
+        if b < batch_id
+    ]
+
+
 def prune_partitions(spark, path: str, keep_from: int) -> None:
     """Delete ``batch_id=B`` partitions under ``path`` with
     B < ``keep_from`` via the Hadoop FS API (local and HDFS alike).

@@ -49,7 +49,7 @@ from ..operators.llm import (
     ivfpq_scan,
     pq_code_batch,
 )
-from .heavy import partition_ids, split_ops
+from .heavy import partition_ids, partitions_before, split_ops
 
 _CODE_SCHEMA = "vec_id BIGINT, sub INT, code INT, cell BIGINT"
 
@@ -106,16 +106,13 @@ class PQIndexMonitor:
         )
 
     def _read_codes(self, spark, batch_id: int) -> DataFrame:
-        bids = partition_ids(spark, self._path("codes"))
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
+        parts = partitions_before(spark, self._path("codes"), batch_id)
+        if not parts:
+            bids = partition_ids(spark, self._path("codes"))
             raise ValueError(
                 f"pq index: no code partitions before batch {batch_id} "
                 f"(have {sorted(bids)}; call init first)"
             )
-        parts = [
-            os.path.join(self._path("codes"), f"batch_id={b}") for b in prior
-        ]
         return spark.read.schema(_CODE_SCHEMA).parquet(*parts)
 
     def _read_tombs(self, spark, batch_id: int) -> DataFrame:
@@ -123,13 +120,9 @@ class PQIndexMonitor:
         ``batch_id`` — the streaming/ann_index.py contract: an absent
         tombstone log is a valid state (no delete has ever run), read
         as the empty mask."""
-        bids = partition_ids(spark, self._path("tombs"))
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
+        parts = partitions_before(spark, self._path("tombs"), batch_id)
+        if not parts:
             return spark.createDataFrame([], "vec_id BIGINT")
-        parts = [
-            os.path.join(self._path("tombs"), f"batch_id={b}") for b in prior
-        ]
         return spark.read.schema("vec_id BIGINT").parquet(*parts)
 
     # -- the foreachBatch fold ----------------------------------------

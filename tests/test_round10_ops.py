@@ -109,8 +109,6 @@ def test_nsw_beam_trajectory_matches_python_reimplementation(spark):
             emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
             adj_df,
             k=3,
-            beam=NSW_BEAM,
-            hops=NSW_HOPS,
         ).collect()
     )
     assert got == sorted(expect)

@@ -123,7 +123,7 @@ def test_nsw_insert_matches_python_reimplementation(spark):
     got = sorted(
         (r.src, r.dst, r.dist_q)
         for r in nsw_insert(
-            base, adj0, arrivals, deg=NSW_DEG, beam=NSW_BEAM, hops=NSW_HOPS
+            base, adj0, arrivals, deg=NSW_DEG
         ).collect()
     )
     assert got == expect
@@ -137,15 +137,7 @@ def test_nsw_insert_matches_python_reimplementation(spark):
 
 
 def _mon(tmp_path, name="store"):
-    return ANNIndexMonitor(
-        str(tmp_path / name),
-        deg=NSW_DEG,
-        beam=NSW_BEAM,
-        hops=NSW_HOPS,
-        l1_mod=HNSW_L1_MOD,
-        max_cell=EMBED_MULTI_MAX_CELL,
-        nprobe=EMBED_PAIR_NPROBE,
-    )
+    return ANNIndexMonitor(str(tmp_path / name))
 
 
 def _adj_rows(mon, spark, after):
@@ -184,7 +176,7 @@ def test_ann_index_stream_equals_batch(spark, tmp_path):
     def l1(df):
         return df.filter(hash56(F.col("vec_id")) % HNSW_L1_MOD == 0)
 
-    kw = dict(deg=NSW_DEG, beam=NSW_BEAM, hops=NSW_HOPS)
+    kw = dict(deg=NSW_DEG)
     gkw = dict(
         deg=NSW_DEG,
         max_cell=EMBED_MULTI_MAX_CELL,
@@ -218,7 +210,6 @@ def test_ann_index_stream_equals_batch(spark, tmp_path):
             l1_members=l1(idx),
             k=3,
             beam=NSW_BEAM,
-            hops=NSW_HOPS,
         ).collect()
     )
     got_search = _search_rows(mon, spark, queries, 2)

@@ -155,7 +155,7 @@ def test_ann_index_delete_stream_equals_batch(spark, tmp_path):
         EMBED_PAIR_NPROBE,
     )
 
-    kw = dict(deg=NSW_DEG, beam=NSW_BEAM, hops=NSW_HOPS)
+    kw = dict(deg=NSW_DEG)
     a0 = _base_adj(spark, base, emb)
     a1 = nsw_graph(
         l1(base),
@@ -193,7 +193,6 @@ def test_ann_index_delete_stream_equals_batch(spark, tmp_path):
             l1_members=l1(live),
             k=3,
             beam=NSW_BEAM,
-            hops=NSW_HOPS,
             exclude=dels,
         ).collect()
     )
@@ -308,9 +307,12 @@ def test_filtered_search_contract_and_tombstone_composition(spark, tmp_path):
     """search_filtered returns ONLY predicate matches, and composes
     with the delete lifecycle: after a delete batch that tombstones
     part of the match set, served results contain no deleted id and
-    still only matches — the filter and the mask ride the same path."""
+    still only matches — the filter and the mask ride the same path.
+    search_radius serves through the same mask: no deleted id, and
+    every returned distance within the radius."""
     from flink_pipeline_spark.catalog import load_table
     from flink_pipeline_spark.plans.llm_ops import FILT_LABEL
+    from flink_pipeline_spark.plans.radius import RADIUS_Q
 
     emb = load_table(spark, SMALL_SF, "embeddings")
     seeds = emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
@@ -341,6 +343,9 @@ def test_filtered_search_contract_and_tombstone_composition(spark, tmp_path):
     ).collect()
     got = {r.neighbor_id for r in r2}
     assert r2 and got <= filt_set and not got & dead
+    r3 = mon.search_radius(spark, queries, 0, radius_q=RADIUS_Q).collect()
+    assert r3 and not {r.neighbor_id for r in r3} & dead
+    assert all(r.dist_q <= RADIUS_Q for r in r3)
 
 
 def test_hnsw_delete_store_serves_without_rebuilding(spark):

@@ -203,7 +203,6 @@ def test_unindex_stream_equals_batch_and_replay(spark, tmp_path):
             l1_members=l1(live),
             k=3,
             beam=NSW_BEAM,
-            hops=NSW_HOPS,
             exclude=dels,
         ).collect()
     )
