@@ -25,8 +25,13 @@ similarity search, text analysis — the Spark faces.
 
 from __future__ import annotations
 
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..caching import eager_checkpoint, materialize
@@ -2229,6 +2234,12 @@ NSW_DEG = 4   # out-links kept per node at build (2*deg after symmetrize)
 NSW_BEAM = 8  # beam width during search
 NSW_HOPS = 3  # expansion rounds (fixed unroll — the kmeans/BPE discipline)
 HNSW_L1_MOD = 8  # layer-1 keeps vec_ids with hash56 % 8 == 0 (~1/8)
+# Local beam gate: at most this many vector rows (and 2*NSW_DEG edges
+# per row) and query rows are collected to the driver, and the corpus'
+# float64 matrix may take at most what this many 64-d rows take
+# (~10 MB, Spark's default autoBroadcastJoinThreshold), so wider vectors
+# fit fewer rows.
+NSW_LOCAL_MAX = 20_000
 
 
 def hnsw_layer1(df: DataFrame) -> DataFrame:
@@ -2606,10 +2617,15 @@ def nsw_beam(
     (BIGINT distances, vec_id tiebreaks) — the property that lets the
     DuckDB oracle unroll identical rounds.
 
-    Scale: per query the search touches O(beam * 2*deg * hops) nodes
-    — independent of corpus size. Frontier frames are tiny and
-    BROADCAST onto the adjacency and corpus scans; the corpus never
-    shuffles.
+    Two executions, one answer. When the vectors and the queries fit
+    NSW_LOCAL_MAX rows and its byte budget (and the adjacency
+    2*NSW_DEG edges per row), the bounded collects that test the gate
+    are also the payload: every hop of every query runs in numpy on
+    the driver (_beam_local) — no job per hop — and the beam comes
+    back as a local frame. Above the gate the DataFrame loop below
+    runs: per query the search touches O(beam * 2*deg * hops) nodes —
+    independent of corpus size; frontier frames are tiny and BROADCAST
+    onto the adjacency and corpus scans; the corpus never shuffles.
 
     ``keep_visited=True`` returns EVERY node the search ever scored
     (the union of the seed and all expansion candidate sets, scored
@@ -2622,6 +2638,13 @@ def nsw_beam(
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("eq")
     )
+    held = _beam_payload(emb, adj)
+    if held is not None:
+        local = _beam_local(q, held, beam, entries, entry_from, keep_visited)
+        if local is not None:
+            return local
+    if entry_from is None:
+        entry_from = emb
 
     def score(cand: DataFrame) -> DataFrame:
         # ONE broadcast per scoring pass: the query vectors are
@@ -2643,21 +2666,21 @@ def nsw_beam(
         )
 
     if entries is None:
-        src = emb if entry_from is None else entry_from
-        entry = src.agg(F.min("vec_id").alias("node"))
+        entry = entry_from.agg(F.min("vec_id").alias("node"))
         seed = q.select("query_id").crossJoin(F.broadcast(entry))
     else:
         seed = entries.select("query_id", "node")
     wb = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    # Each round's beam is localCheckpoint'ed (eager): the monotone
-    # recursion cand = cur ∪ expand(cur) references ``cur`` TWICE, so
-    # an unchecked lineage doubles per hop — 2^hops copies of the seed
-    # subtree in the plan, ~2.5 MiB task binaries per stage, and
-    # exponential recomputation (Spark dedupes no common subplans
-    # outside exchange reuse). Measured r12: the un-checkpointed form
-    # OOM'ed a default-heap driver sweeping the full registry at the
-    # ANN cluster. The checkpointed frames are tiny (|queries| x beam
-    # rows), so the cost is NSW_HOPS small materializations.
+    # Above the gate each round's beam is localCheckpoint'ed (eager):
+    # the monotone recursion cand = cur ∪ expand(cur) references
+    # ``cur`` TWICE, so an unchecked lineage doubles per hop — 2^hops
+    # copies of the seed subtree in the plan, ~2.5 MiB task binaries
+    # per stage, and exponential recomputation (Spark dedupes no
+    # common subplans outside exchange reuse). Measured r12: the
+    # un-checkpointed form OOM'ed a default-heap driver sweeping the
+    # full registry at the ANN cluster. The checkpointed frames are
+    # |queries| x beam rows, so the cost is NSW_HOPS materializations
+    # — the jobs the local path exists to avoid.
     #
     # Candidate sets are NOT distinct-ed per hop (r14): a duplicate
     # candidate (a node reachable from several beam nodes, or already
@@ -2694,6 +2717,233 @@ def nsw_beam(
             .localCheckpoint(eager=True)
         )
     return score(vis.distinct()) if keep_visited else cur
+
+
+def _beam_payload(emb: DataFrame, adj: DataFrame) -> tuple | None:
+    """(ids, vt, bb, indptr, nbr): the corpus and adjacency as numpy
+    arrays for the local beam, or None when either bounded collect
+    overflows the NSW_LOCAL_MAX gate, the matrix outgrows its byte
+    budget, the corpus is empty (it has no dim), or the rows are not
+    the plain integer-id, equal-length float vectors the kernel
+    assumes; the DataFrame loop then answers. ``ids`` is sorted;
+    ``vt`` is the (dim, n) transposed float64 matrix and ``bb`` each
+    vector's self-dot; the adjacency is CSR over ``ids`` positions
+    (``nbr`` keeps raw dst ids — a dst absent from the corpus drops
+    when scored, as the loop's inner join drops it; edges out of such
+    a node are never expanded, since only scored nodes expand)."""
+    vrows = (
+        emb.select("vec_id", "embedding").limit(NSW_LOCAL_MAX + 1).toArrow()
+    )
+    if not 0 < vrows.num_rows <= NSW_LOCAL_MAX:
+        return None
+    emax = 2 * NSW_DEG * NSW_LOCAL_MAX
+    erows = adj.select("src", "dst").limit(emax + 1).toArrow()
+    if erows.num_rows > emax:
+        return None
+    vids = vrows.column("vec_id")
+    if (
+        not pa.types.is_integer(vids.type)
+        or vids.null_count
+        or not pa.types.is_integer(erows.schema.field("src").type)
+        or not pa.types.is_integer(erows.schema.field("dst").type)
+    ):
+        return None
+    V = _dense(vrows.column("embedding").combine_chunks())
+    if V is None or V.nbytes > NSW_LOCAL_MAX * 64 * 8:
+        return None
+    ids = vids.to_numpy().astype(np.int64)
+    order = np.argsort(ids, kind="stable")
+    ids, V = ids[order], V[order]
+    if (ids[1:] == ids[:-1]).any():
+        return None
+    vt = np.ascontiguousarray(V.T)
+    erows = erows.drop_null()
+    src = erows.column("src").to_numpy().astype(np.int64)
+    dst = erows.column("dst").to_numpy().astype(np.int64)
+    pos, ok = _positions(ids, src)
+    pos, dst = pos[ok], dst[ok]
+    order = np.argsort(pos, kind="stable")
+    indptr = np.zeros(len(ids) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(pos, minlength=len(ids)), out=indptr[1:])
+    return ids, vt, _fold(vt, vt), indptr, dst[order]
+
+
+def _dense(col: pa.ListArray) -> np.ndarray | None:
+    """(n, dim) float64 matrix of a list<float|double> column, or None
+    when a vector or element is null or the lengths differ."""
+    if not pa.types.is_floating(col.type.value_type) or col.null_count:
+        return None
+    vals = pc.list_flatten(col)
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if vals.null_count or (len(lens) and (lens != lens[0]).any()):
+        return None
+    dim = int(lens[0]) if len(lens) else 0
+    return (
+        vals.to_numpy(zero_copy_only=False)
+        .astype(np.float64)
+        .reshape(len(lens), dim)
+    )
+
+
+def _positions(ids: np.ndarray, nodes: np.ndarray):
+    """(pos, ok): each node's index in the sorted ``ids`` and whether
+    it is there at all (``ids`` is not empty)."""
+    pos = np.minimum(np.searchsorted(ids, nodes), len(ids) - 1)
+    return pos, ids[pos] == nodes
+
+
+def _fold(at: np.ndarray, bt: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two (dim, n) matrices as DOT_SQL's
+    per-dimension sequential fold, so every double matches Spark's and
+    DuckDB's bit-for-bit (np.dot's pairwise/SIMD summation reorders
+    the adds and can flip a quantized distance)."""
+    s = np.zeros(at.shape[1])
+    for i in range(at.shape[0]):
+        s = s + at[i] * bt[i]
+    return s
+
+
+def _beam_local(
+    q: DataFrame,
+    held: tuple,
+    beam: int,
+    entries: DataFrame | None,
+    entry_from: DataFrame | None,
+    keep_visited: bool,
+) -> DataFrame | None:
+    """nsw_beam's under-gate execution: the queries (bounded like the
+    corpus) and their seeds are collected, _beam_rows runs every hop
+    on the driver, and the rows come back as a local frame. None when
+    the queries overflow the gate or are not the corpus' plain vectors.
+    No Python worker runs: a session that has run one pays up to ~1 s
+    more at stop (PySpark's accumulator server polls its JVM socket
+    once a second), which would land on every caller's session."""
+    qt = q.schema["query_id"].dataType
+    qrows = (
+        q.select(F.col("query_id").cast("bigint"), "eq")
+        .limit(NSW_LOCAL_MAX + 1)
+        .toArrow()
+    )
+    if qrows.num_rows > NSW_LOCAL_MAX or qrows.column(0).null_count:
+        return None
+    Q = _dense(qrows.column(1).combine_chunks())
+    if Q is None or (len(Q) and Q.shape[1] != held[1].shape[0]):
+        return None
+    qid = qrows.column(0).to_numpy()
+    if entries is None:
+        if entry_from is None:  # the corpus: its sorted ids are at hand
+            entry = int(held[0][0])
+        else:  # a top-1 scan is one job; a global min is two under AQE
+            row = (
+                entry_from.filter(F.col("vec_id").isNotNull())
+                .orderBy("vec_id")
+                .select(F.col("vec_id").cast("bigint"))
+                .head()
+            )
+            entry = row[0] if row else None
+        # an empty entry frame seeds nothing, as the loop's null entry
+        qi = np.arange(len(qid) if entry is not None else 0)
+        node = np.full(len(qi), entry or 0, np.int64)
+    else:
+        e = (
+            entries.select(
+                F.col("query_id").cast("bigint"), F.col("node").cast("bigint")
+            )
+            .toArrow()
+            .drop_null()
+        )
+        eid = e.column(0).to_numpy()
+        o = np.argsort(eid, kind="stable")
+        eid, enode = eid[o], e.column(1).to_numpy()[o]
+        # every seed of a query row's id reaches that row's one beam
+        lo = np.searchsorted(eid, qid, "left")
+        cnt = np.searchsorted(eid, qid, "right") - lo
+        qi = np.repeat(np.arange(len(qid)), cnt)
+        node = enode[np.repeat(lo, cnt) + _runs(cnt)]
+    schema = StructType(
+        [
+            StructField("query_id", qt),
+            StructField("node", LongType()),
+            StructField("dist_q", LongType()),
+        ]
+    )
+    # one partition: the per-query windows downstream (the hand-off,
+    # the final rank) then need no shuffle
+    return q.sparkSession.createDataFrame(
+        _beam_rows(qid, Q, qi, node, held, beam, keep_visited), schema
+    ).coalesce(1)
+
+
+def _runs(cnt: np.ndarray) -> np.ndarray:
+    """0..c-1 for every count c, concatenated."""
+    return np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+
+
+def _beam_rows(
+    qid: np.ndarray,
+    Q: np.ndarray,
+    qi: np.ndarray,
+    node: np.ndarray,
+    held: tuple,
+    beam: int,
+    keep_visited: bool,
+) -> pa.Table:
+    """The loop's rounds for every query at once: query row ``qi``
+    starts from seed ``node``; candidates dedup by (query, node) before
+    the (dist_q, node) cut, nodes absent from the corpus drop when
+    scored, and distances are SQDIST_Q_SQL's — per-dimension
+    sequential folds of the self- and cross-dots, ((aa - 2*ab) + bb)
+    quantized."""
+    ids, vt, bb, indptr, nbr = held
+    qt = np.ascontiguousarray(Q.T)
+    aa = _fold(qt, qt)
+
+    def score(qi, node):
+        pos, ok = _positions(ids, node)
+        qi, node, pos = qi[ok], node[ok], pos[ok]
+        ab = _fold(qt[:, qi], vt[:, pos])
+        dist = np.floor(((aa[qi] - 2 * ab) + bb[pos]) * 10000 + 0.5)
+        return qi, node, pos, dist.astype(np.int64)
+
+    qi, node = _dedup(qi, node)
+    visited = [(qi, node)]
+    qi, node, pos, dist = score(qi, node)
+    for _ in range(NSW_HOPS):
+        # every beam node's CSR edge run, flattened
+        lo = indptr[pos]
+        cnt = indptr[pos + 1] - lo
+        owner = np.repeat(np.arange(len(pos)), cnt)
+        qi, node = _dedup(
+            np.concatenate([qi, qi[owner]]),
+            np.concatenate([node, nbr[lo[owner] + _runs(cnt)]]),
+        )
+        if keep_visited:
+            visited.append((qi, node))
+        qi, node, pos, dist = score(qi, node)
+        o = np.lexsort((node, dist, qi))
+        qi, node, pos, dist = qi[o], node[o], pos[o], dist[o]
+        keep = np.arange(len(qi)) - np.searchsorted(qi, qi) < beam
+        qi, node, pos, dist = qi[keep], node[keep], pos[keep], dist[keep]
+    if keep_visited:
+        qi, node, pos, dist = score(
+            *_dedup(*(np.concatenate(c) for c in zip(*visited)))
+        )
+    return pa.table(
+        {
+            "query_id": pa.array(qid[qi], pa.int64()),
+            "node": pa.array(node, pa.int64()),
+            "dist_q": pa.array(dist, pa.int64()),
+        }
+    )
+
+
+def _dedup(qi: np.ndarray, node: np.ndarray):
+    """Distinct (query, node) pairs."""
+    o = np.lexsort((node, qi))
+    qi, node = qi[o], node[o]
+    keep = np.ones(len(qi), bool)
+    keep[1:] = (qi[1:] != qi[:-1]) | (node[1:] != node[:-1])
+    return qi[keep], node[keep]
 
 
 def hnsw_entries(
@@ -2772,6 +3022,22 @@ def hnsw_search(
     return _rank_nodes(cur, k, exclude)
 
 
+def hnsw_visited(
+    emb: DataFrame,
+    queries: DataFrame,
+    adj0: DataFrame,
+    adj1: DataFrame,
+    l1_members: DataFrame,
+) -> DataFrame:
+    """(query_id, node, dist_q): every node the two-layer search
+    scores — the layer-1 descent (hnsw_entries), then the base-layer
+    beam's full visited set (nsw_beam keep_visited). The one
+    visited-set search: hnsw_filtered_search ranks a predicate's
+    matches over it, and the store's radius search thresholds it."""
+    entries0 = hnsw_entries(emb, queries, adj1, l1_members)
+    return nsw_beam(emb, queries, adj0, entries=entries0, keep_visited=True)
+
+
 def hnsw_filtered_search(
     emb: DataFrame,
     queries: DataFrame,
@@ -2799,8 +3065,7 @@ def hnsw_filtered_search(
 
     ``exclude`` composes the tombstone mask (delete lifecycle), so a
     store serves filtered searches with pending deletes correctly."""
-    entries0 = hnsw_entries(emb, queries, adj1, l1_members)
-    vis = nsw_beam(emb, queries, adj0, entries=entries0, keep_visited=True)
+    vis = hnsw_visited(emb, queries, adj0, adj1, l1_members)
     cand = vis.join(
         filt_ids.select(F.col("vec_id").alias("node")), "node", "left_semi"
     )

@@ -22,7 +22,7 @@ the only floats are one final division and a portable round.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -131,6 +131,10 @@ _register_dedup_soft()
 PR_SCALE = 10**12  # rank mass in fixed-point trillionths
 PR_ITERS = 3
 PR_TOP = 20
+# Broadcast gate for the per-iteration rank/incoming joins: both are
+# nodes-sized (id, value) BIGINT pairs, so 500k nodes is ~10 MB, Spark's
+# default autoBroadcastJoinThreshold.
+PR_BROADCAST_MAX_NODES = 500_000
 
 
 def _pr_oracle() -> str:
@@ -245,13 +249,13 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # connected_components finding, operators/llm.py) — truncating the
     # edge build once keeps iteration i from re-planning the whole
     # build i times. Same for the (small) node list, which every
-    # iteration's left join touches. The outw join's own exchange
-    # leaves edges hash-partitioned by src — the partitioning every
-    # propagation join reuses, so no explicit repartition is needed.
+    # iteration's left join touches.
     edges = raw.join(outw, "src").localCheckpoint(eager=True)
+    counted = Observation("pagerank_nodes")
     nodes = (
         edges.select(F.col("src").alias("id"))
         .distinct()
+        .observe(counted, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
     base = nodes.agg(
@@ -273,10 +277,24 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixed-point, so join strategy cannot change any value. At true
     # scale the rank vector is #nodes rows — broadcastability is the
     # standard Pregel-alternative trade and the hint keeps the decision
-    # deliberate rather than estimate-driven.
+    # deliberate rather than estimate-driven. The gate reads the node
+    # count the checkpoint job observed (no extra pass): above
+    # PR_BROADCAST_MAX_NODES the edges are co-partitioned by src ONCE
+    # (cached: a checkpoint forgets its partitioning) and both joins
+    # sort-merge, so each iteration shuffles only the nodes-sized rank
+    # and contribution frames.
+    if counted.get["n"] <= PR_BROADCAST_MAX_NODES:
+        side = F.broadcast
+    else:
+        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        edges = materialize(edges.repartition(n_parts, "src"))
+
+        def side(df: DataFrame) -> DataFrame:
+            return df.hint("merge")
+
     for _ in range(PR_ITERS):
         inc = (
-            edges.join(F.broadcast(rank), edges.src == rank.id)
+            edges.join(side(rank), edges.src == rank.id)
             .select(
                 F.col("dst").alias("inc_id"),
                 F.expr("(r * w) div ow").alias("contrib"),
@@ -286,7 +304,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rank = (
             nodes.crossJoin(F.broadcast(base))
-            .join(F.broadcast(inc), nodes.id == inc.inc_id, "left")
+            .join(side(inc), nodes.id == inc.inc_id, "left")
             .select(
                 "id",
                 F.expr(

@@ -74,11 +74,10 @@ from pyspark.sql import functions as F
 
 from ..operators.llm import (
     NSW_DEG,
-    hnsw_entries,
     hnsw_filtered_search,
     hnsw_layer1,
     hnsw_search,
-    nsw_beam,
+    hnsw_visited,
     nsw_delete,
     nsw_graph,
     nsw_insert,
@@ -280,10 +279,7 @@ class ANNIndexMonitor:
         Recall is bounded by what the beam visits (widen the beam to
         raise it); tombstoned ids are excluded as in ``search``."""
         vecs, adj0, adj1, tombs = self._state(spark, after_batch_id + 1)
-        entries0 = hnsw_entries(vecs, queries, adj1, hnsw_layer1(vecs))
-        vis = nsw_beam(
-            vecs, queries, adj0, entries=entries0, keep_visited=True
-        )
+        vis = hnsw_visited(vecs, queries, adj0, adj1, hnsw_layer1(vecs))
         return (
             vis.filter(F.col("node") != F.col("query_id"))
             .join(

@@ -585,7 +585,7 @@ def test_pq_topk_semantics(spark):
         assert [r.rank for r in ordered] == [1, 2, 3]
 
 
-@pytest.mark.slow  # 24s
+@pytest.mark.slow  # 73s
 def test_ann_recall_bounds_and_exact_selfcheck(spark):
     from flink_pipeline_spark.plans import query_fns
 

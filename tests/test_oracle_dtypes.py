@@ -30,6 +30,10 @@ from .conftest import SF_DIR, TABLES
 # integer dtype (int128 has no numpy dtype, so fetchdf emits float64).
 _BANNED_TYPE_IDS = {"hugeint", "uhugeint"}
 
+# Built once per module: each registry call re-derives the evidence
+# order (source fingerprints of every query), 0.6-1.2 s apiece.
+ORACLES = oracle_sqls(SF_DIR)
+
 
 @pytest.fixture(scope="module")
 def lint_con():
@@ -53,9 +57,9 @@ def _offending_columns(con, sql: str) -> list[tuple[str, str]]:
     ]
 
 
-@pytest.mark.parametrize("name", sorted(oracle_sqls()))
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_emits_no_hugeint(lint_con, name):
-    sql = oracle_sqls(SF_DIR)[name]
+    sql = ORACLES[name]
     bad = _offending_columns(lint_con, sql)
     assert not bad, (
         f"{name}: oracle emits int128 column(s) {bad} — pandas fetchdf "

@@ -11,14 +11,18 @@ from flink_pipeline_spark.plans import oracle_sqls, query_fns
 from .conftest import SF_DIR
 from .parity import assert_parity
 
-ALL = sorted(query_fns())
-WITH_ORACLE = sorted(oracle_sqls())
+# Built once per module: each registry call re-derives the evidence
+# order (source fingerprints of every query), 0.6-1.2 s apiece.
+QUERIES = query_fns()
+ORACLES = oracle_sqls(SF_DIR)
+ALL = sorted(QUERIES)
+WITH_ORACLE = sorted(ORACLES)
 # the slow-tier oracle ids (each >= 10 s at sf0.01)
 SLOW_ORACLES = {
-    "q_ann_recall",  # 24s
-    "q_hnsw_beam_clustered",  # 13s
-    "q_dedup_unindex",  # 12s
-    "q_ann_hnsw_beam",  # 12s
+    "q_ann_recall",  # 83s
+    "q_hnsw_beam_clustered",  # 17s
+    "q_dedup_unindex",  # 35s
+    "q_ann_hnsw_beam",  # 15s
     "q_ann_filtered_recall",  # 10s
 }
 
@@ -37,8 +41,8 @@ def test_every_query_has_an_oracle():
     ],
 )
 def test_oracle_parity(spark, oracle, name):
-    df = query_fns()[name](spark, SF_DIR)
-    assert_parity(df, oracle, oracle_sqls(SF_DIR)[name], name=name)
+    df = QUERIES[name](spark, SF_DIR)
+    assert_parity(df, oracle, ORACLES[name], name=name)
 
 
 def test_entry_smoke(spark):

@@ -13,9 +13,11 @@ from flink_pipeline_spark.plans import query_fns
 
 from .conftest import SF_DIR
 
+QUERIES = query_fns()  # one registry build: each call re-fingerprints
+
 
 def _plan(spark, name: str) -> str:
-    df = query_fns()[name](spark, SF_DIR)
+    df = QUERIES[name](spark, SF_DIR)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -100,7 +102,7 @@ def test_decontaminate_hits_not_broadcast(spark):
     contaminated-ids set is corpus-derived (its size scales with the
     corpus), so a forced broadcast there is an OOM cliff at 100 TB —
     the join-back must be left to AQE."""
-    df = query_fns()["q_decontaminate"](spark, SF_DIR)
+    df = QUERIES["q_decontaminate"](spark, SF_DIR)
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("ResolvedHint") == 1, analyzed
 

@@ -8,6 +8,7 @@ import math
 
 from pyspark.sql import functions as F
 
+from flink_pipeline_spark.operators import llm
 from flink_pipeline_spark.operators.llm import nsw_graph, nsw_search
 from flink_pipeline_spark.plans.llm_ops import (
     EMBED_MULTI_MAX_CELL,
@@ -72,11 +73,37 @@ def _dist_q(a, b):
     )
 
 
+def _loop_path(monkeypatch):
+    """Force nsw_beam's DataFrame loop: no corpus fits a zero gate."""
+    monkeypatch.setattr(llm, "NSW_LOCAL_MAX", 0)
+
+
+def _local(df) -> bool:
+    """Whether nsw_beam answered on the driver: the rows are a local
+    table, with no file or checkpoint scan left in the plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan and not (
+        "FileScan" in plan or "ExistingRDD" in plan
+    )
+
+
 def test_nsw_beam_trajectory_matches_python_reimplementation(spark):
     """Collect the adjacency and vectors once, then replay the ENTIRE
     beam search — entry point, every expansion round, every (dist,
     node) tie-break, the final top-3 — in plain Python and require the
-    engine's output to match row-for-row."""
+    engine's output to match row-for-row (the local kernel)."""
+    _nsw_replay(spark)
+
+
+def test_nsw_beam_loop_trajectory_matches_python_reimplementation(
+    spark, monkeypatch
+):
+    """The same replay over the above-gate DataFrame loop."""
+    _loop_path(monkeypatch)
+    _nsw_replay(spark)
+
+
+def _nsw_replay(spark):
     emb = load_table(spark, SMALL_SF, "embeddings")
     vecs = {r.vec_id: list(r.embedding) for r in emb.collect()}
     adj_df = _adj(spark).localCheckpoint(eager=True)
@@ -102,16 +129,90 @@ def test_nsw_beam_trajectory_matches_python_reimplementation(spark):
             (qid, n, rank + 1, d) for rank, (d, n) in enumerate(final)
         )
 
+    res = nsw_search(
+        emb, emb.filter(F.col("vec_id") < PQ_QUERY_MAX), adj_df, k=3
+    )
+    assert _local(res) == (llm.NSW_LOCAL_MAX > 0)
     got = sorted(
-        (r.query_id, r.neighbor_id, r.rank, r.dist_q)
-        for r in nsw_search(
-            emb,
-            emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
-            adj_df,
-            k=3,
-        ).collect()
+        (r.query_id, r.neighbor_id, r.rank, r.dist_q) for r in res.collect()
     )
     assert got == sorted(expect)
+
+
+def test_nsw_beam_paths_agree_on_visited_sets_and_dangling_edges(
+    spark, monkeypatch
+):
+    """Both nsw_beam executions return identical rows — the final beam
+    and the keep_visited set — when some queries carry several seeds
+    (one beam per query), one seed and some edges name a vec_id absent
+    from the vector frame (dropped when scored, never expanded), and
+    the corpus misses one graph node, or the entry frame is empty (a
+    store with no layer-1 vector). An empty corpus (every vector
+    deleted) has no dim to ship: the loop answers it, empty."""
+    emb = load_table(spark, SMALL_SF, "embeddings")
+    gone = 7  # a graph node missing from the vector frame
+    vecs = emb.filter(F.col("vec_id") != gone)
+    ghost = 10**9  # an id no frame holds
+    adj = _adj(spark).localCheckpoint(eager=True)
+    adj = adj.unionByName(
+        spark.createDataFrame(
+            [(0, ghost), (3, ghost), (ghost, 1), (gone, 2)], "src long, dst long"
+        )
+    )
+    queries = emb.filter(F.col("vec_id") < PQ_QUERY_MAX)
+    entries = spark.createDataFrame(
+        [(0, 3), (0, 40), (1, 9), (1, gone), (2, ghost), (2, 5), (3, 11)],
+        "query_id long, node long",
+    )
+
+    def run(**kw):
+        res = llm.nsw_beam(vecs, queries, adj, **kw)
+        return _local(res), sorted(tuple(r) for r in res.collect())
+
+    cases = [
+        dict(entries=entries, keep_visited=True),
+        dict(entries=entries),
+        dict(keep_visited=True),
+        dict(beam=4),
+        dict(entry_from=vecs.limit(0)),
+    ]
+    fast = [run(**kw) for kw in cases]
+    none = llm.nsw_beam(vecs.limit(0), queries, adj, keep_visited=True)
+    assert not none.collect()
+    _loop_path(monkeypatch)
+    slow = [run(**kw) for kw in cases]
+    for (f_in, f_rows), (s_in, s_rows), kw in zip(fast, slow, cases):
+        assert f_in and not s_in, kw
+        assert f_rows == s_rows, kw
+        assert not {r[1] for r in f_rows} & {gone, ghost}, kw
+    assert all(rows for _, rows in fast[:-1]) and not fast[-1][1]
+    # keep_visited is a superset of the final beam's nodes
+    assert set(fast[1][1]) <= set(fast[0][1])
+
+
+def test_nsw_beam_gate_bounds_matrix_bytes(spark, monkeypatch):
+    """The local gate bounds the collected matrix's bytes, not only its
+    rows: with the row gate at the corpus size, the 64-d corpus runs on
+    the driver, while the same vectors doubled to 128-d outgrow the byte
+    budget and take the loop, which returns the rows the kernel does
+    under the default gate. Queries beyond the row gate take the loop
+    too."""
+    emb = load_table(spark, SMALL_SF, "embeddings")
+    queries = emb.filter(F.col("vec_id") < PQ_QUERY_MAX)
+    adj = _adj(spark).localCheckpoint(eager=True)
+
+    def wide(df):
+        return df.withColumn("embedding", F.concat("embedding", "embedding"))
+
+    fast = llm.nsw_beam(wide(emb), wide(queries), adj)
+    assert _local(fast)
+    monkeypatch.setattr(llm, "NSW_LOCAL_MAX", emb.count())
+    assert _local(llm.nsw_beam(emb, queries, adj))
+    # more queries than the gate: the loop answers
+    assert not _local(llm.nsw_beam(emb, emb.unionByName(queries), adj))
+    slow = llm.nsw_beam(wide(emb), wide(queries), adj)
+    assert not _local(slow)
+    assert sorted(slow.collect()) == sorted(fast.collect())
 
 
 def test_sampled_recall_tracks_full_audit(spark):
@@ -556,7 +657,19 @@ def test_hnsw_trajectory_matches_python_reimplementation(spark):
     self allowed), base-layer beam from the hand-off, final top-3.
     Also pins the hierarchy's point: the hand-off entry is never
     FARTHER from the query than the layer-1 entry it descended from
-    (monotone beam)."""
+    (monotone beam). Runs the local kernel."""
+    _hnsw_replay(spark)
+
+
+def test_hnsw_loop_trajectory_matches_python_reimplementation(
+    spark, monkeypatch
+):
+    """The same two-layer replay over the above-gate DataFrame loop."""
+    _loop_path(monkeypatch)
+    _hnsw_replay(spark)
+
+
+def _hnsw_replay(spark):
     from flink_pipeline_spark.operators.llm import nsw_graph
     from flink_pipeline_spark.plans.llm_ops import HNSW_L1_MOD
 
@@ -614,8 +727,9 @@ def test_hnsw_trajectory_matches_python_reimplementation(spark):
             (qid, n, rank + 1, d) for rank, (d, n) in enumerate(final)
         )
 
+    res = QUERIES_R10["q_sim_hnsw_topk"](spark, SMALL_SF)
+    assert _local(res) == (llm.NSW_LOCAL_MAX > 0)
     got = sorted(
-        (r.query_id, r.neighbor_id, r.rank, r.dist_q)
-        for r in QUERIES_R10["q_sim_hnsw_topk"](spark, SMALL_SF).collect()
+        (r.query_id, r.neighbor_id, r.rank, r.dist_q) for r in res.collect()
     )
     assert got == sorted(expect)

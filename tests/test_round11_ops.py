@@ -154,7 +154,6 @@ def _search_rows(mon, spark, queries, after):
     )
 
 
-@pytest.mark.slow  # 35s
 def test_ann_index_stream_equals_batch(spark, tmp_path):
     """Feeding the arrival slice through the foreachBatch insert sink
     in three micro-batches (split by vec_id mod 3) yields the same
@@ -216,7 +215,6 @@ def test_ann_index_stream_equals_batch(spark, tmp_path):
     assert got_search == want_search and got_search
 
 
-@pytest.mark.slow  # 28s
 def test_ann_index_crash_replay_idempotent(spark, tmp_path):
     """A replayed micro-batch re-reads strictly-before state and
     re-derives the identical adjacency snapshot and vector log
@@ -235,7 +233,7 @@ def test_ann_index_crash_replay_idempotent(spark, tmp_path):
     assert _search_rows(mon, spark, queries, 1) == search_after
 
 
-@pytest.mark.slow  # 19s
+@pytest.mark.slow  # 39s
 def test_ann_index_guards(spark, tmp_path):
     """Uninitialized store raises on insert AND search; reading
     pruned adjacency history raises; the vector log is never pruned."""
@@ -260,7 +258,7 @@ def test_ann_index_guards(spark, tmp_path):
     assert sorted(partition_ids(spark, mon._path("vecs"))) == [-1, 0, 1, 2]
 
 
-@pytest.mark.slow  # 12s
+@pytest.mark.slow  # 18s
 def test_hnsw_store_serves_without_rebuilding(spark):
     """Second call of the serving query must READ the published
     store, not rebuild it: the store's adjacency file mtimes are

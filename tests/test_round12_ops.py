@@ -120,7 +120,6 @@ def test_nsw_delete_matches_python_reimplementation(spark):
     assert had_live_edge <= {s for s, _, _ in got}
 
 
-@pytest.mark.slow  # 23s
 def test_ann_index_delete_stream_equals_batch(spark, tmp_path):
     """An insert batch followed by a MIXED delete+insert batch through
     the foreachBatch sink yields the same adjacency — layer by layer
@@ -203,7 +202,6 @@ def test_ann_index_delete_stream_equals_batch(spark, tmp_path):
     assert not {n for _, n, _, _ in got_search} & dead
 
 
-@pytest.mark.slow  # 16s
 def test_ann_index_delete_crash_replay_idempotent(spark, tmp_path):
     """A replayed DELETE batch re-reads strictly-before state and
     re-derives the identical compacted snapshot, tombstone partition,
@@ -302,7 +300,7 @@ def test_drift_projection_catches_thin_shift_per_dim_misses(spark, tmp_path):
     assert len(null) == 1 and not null[0].drifted, null
 
 
-@pytest.mark.slow  # 12s
+@pytest.mark.slow  # 24s
 def test_filtered_search_contract_and_tombstone_composition(spark, tmp_path):
     """search_filtered returns ONLY predicate matches, and composes
     with the delete lifecycle: after a delete batch that tombstones

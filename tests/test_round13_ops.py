@@ -29,7 +29,6 @@ def _drop_ids(spark):
     }
 
 
-@pytest.mark.slow  # 12s
 def test_unindex_never_serves_dropped(spark):
     """The composed loop's contract, end to end on BOTH families: the
     dedup pipeline's drop set never appears in any served neighbor
@@ -137,7 +136,6 @@ def test_drift_refresh_gate_trips_and_refresh_recovers(spark):
     assert rows["refreshed"].recall >= 0.9
 
 
-@pytest.mark.slow  # 22s
 def test_unindex_stream_equals_batch_and_replay(spark, tmp_path):
     """Stream==batch for the DEDUP drop batch specifically: folding
     dedup_drop_batch through the foreachBatch sink yields the same
@@ -225,7 +223,7 @@ def test_pq_drift_refresh_contrast(spark):
     assert rows["stale"].recall < rows["refreshed"].recall
 
 
-@pytest.mark.slow  # 11s
+@pytest.mark.slow  # 15s
 def test_radius_and_maxsim_contracts(spark):
     """Radius results are exactly the thresholded subset semantics
     (every returned pair verified within RADIUS_Q; precision 1 by

@@ -262,7 +262,7 @@ def test_maxsim_serve_reads_store_and_equals_built_fresh(spark):
     assert n_tokens == n_corpus
 
 
-@pytest.mark.slow  # 17s
+@pytest.mark.slow  # 47s
 def test_clustered_audits_measure_non_nulls(spark):
     """The r13 verdict's #2 ask, pinned: each of the four structure
     audits that read deliberate nulls on the isotropic fixtures must

@@ -16,6 +16,8 @@ from flink_pipeline_spark.plans import query_fns
 
 from .conftest import SF_DIR
 
+QUERIES = query_fns()  # one registry build: each call re-fingerprints
+
 
 # ---------------------------------------------------------------------------
 # Content-defined chunking: re-synchronization after insertion
@@ -185,7 +187,7 @@ def test_winnowing_guarantee_on_shared_run(spark):
 def test_winnow_pairs_registered_query(spark):
     """The registered query at sf finds its calibrated candidate set
     and every pair's overlap is in (0, 1]."""
-    out = query_fns()["q_winnow_fingerprint"](spark, SF_DIR).collect()
+    out = QUERIES["q_winnow_fingerprint"](spark, SF_DIR).collect()
     assert len(out) > 0
     for r in out:
         assert r["doc_a"] < r["doc_b"]
@@ -199,7 +201,7 @@ def test_winnow_pairs_registered_query(spark):
 
 
 def test_zorder_boxes_tighter_than_insertion_order(spark):
-    rows = query_fns()["q_zorder_layout"](spark, SF_DIR).collect()
+    rows = QUERIES["q_zorder_layout"](spark, SF_DIR).collect()
     z = [r for r in rows if r["layout"] == "zorder"]
     o = [r for r in rows if r["layout"] == "orderkey"]
     assert z and o
@@ -217,7 +219,7 @@ def test_zorder_boxes_tighter_than_insertion_order(spark):
 
 
 def test_scd2_intervals_partition_timeline(spark):
-    out = query_fns()["q_scd2_history"](spark, SF_DIR)
+    out = QUERIES["q_scd2_history"](spark, SF_DIR)
     rows = sorted(
         out.collect(), key=lambda r: (r["user_id"], r["valid_from"])
     )
@@ -240,7 +242,7 @@ def test_scd2_intervals_partition_timeline(spark):
 
 
 def test_curriculum_positions_permutation_and_monotone(spark):
-    rows = query_fns()["q_curriculum_order"](spark, SF_DIR).collect()
+    rows = QUERIES["q_curriculum_order"](spark, SF_DIR).collect()
     poss = sorted(r["pos"] for r in rows)
     assert poss == list(range(1, len(rows) + 1))
     by_pos = sorted(rows, key=lambda r: r["pos"])
@@ -249,8 +251,8 @@ def test_curriculum_positions_permutation_and_monotone(spark):
 
 
 def test_curriculum_deterministic(spark):
-    a = {(r["doc_id"], r["pos"]) for r in query_fns()["q_curriculum_order"](spark, SF_DIR).collect()}
-    b = {(r["doc_id"], r["pos"]) for r in query_fns()["q_curriculum_order"](spark, SF_DIR).collect()}
+    a = {(r["doc_id"], r["pos"]) for r in QUERIES["q_curriculum_order"](spark, SF_DIR).collect()}
+    b = {(r["doc_id"], r["pos"]) for r in QUERIES["q_curriculum_order"](spark, SF_DIR).collect()}
     assert a == b
 
 
@@ -260,7 +262,7 @@ def test_curriculum_deterministic(spark):
 
 
 def test_ngram_novelty_bounds(spark):
-    rows = query_fns()["q_ngram_novelty"](spark, SF_DIR).collect()
+    rows = QUERIES["q_ngram_novelty"](spark, SF_DIR).collect()
     assert rows
     for r in rows:
         assert r["split"] in ("val", "test")
@@ -274,7 +276,7 @@ def test_ngram_novelty_bounds(spark):
 
 
 def test_gopher_rules_conjunction_and_mix(spark):
-    rows = query_fns()["q_gopher_rules"](spark, SF_DIR).collect()
+    rows = QUERIES["q_gopher_rules"](spark, SF_DIR).collect()
     flags = ("r_words", "r_word_len", "r_stopword", "r_repetition", "r_distinct")
     for r in rows:
         assert r["passes"] == all(r[f] for f in flags)
@@ -289,7 +291,7 @@ def test_gopher_rules_conjunction_and_mix(spark):
 
 
 def test_bpe_encode_compresses(spark):
-    rows = query_fns()["q_bpe_encode"](spark, SF_DIR).collect()
+    rows = QUERIES["q_bpe_encode"](spark, SF_DIR).collect()
     assert rows
     for r in rows:
         # tokens never exceed characters (each symbol >= 1 char) and the
@@ -306,7 +308,7 @@ def test_bpe_encode_compresses(spark):
 
 
 def test_truncate_recall_bounds(spark):
-    rows = query_fns()["q_embed_truncate_recall"](spark, SF_DIR).collect()
+    rows = QUERIES["q_embed_truncate_recall"](spark, SF_DIR).collect()
     assert len(rows) == 4
     for r in rows:
         assert 0 <= r["hits"] <= 3
@@ -314,7 +316,7 @@ def test_truncate_recall_bounds(spark):
 
 
 def test_mixture_domain_normalized(spark):
-    rows = query_fns()["q_mixture_domain"](spark, SF_DIR).collect()
+    rows = QUERIES["q_mixture_domain"](spark, SF_DIR).collect()
     assert rows
     assert abs(sum(r["temp_share"] for r in rows) - 1.0) < 1e-3
     assert abs(sum(r["raw_share"] for r in rows) - 1.0) < 1e-3
@@ -334,7 +336,7 @@ def test_weighted_sample_prefers_heavy_rows(spark):
     documents: the mean length of the selected rows should exceed the
     corpus mean (the fixture's length spread is ~10x, so this holds
     with huge margin for any reasonable hash draw)."""
-    rows = query_fns()["q_sample_weighted"](spark, SF_DIR).collect()
+    rows = QUERIES["q_sample_weighted"](spark, SF_DIR).collect()
     assert len(rows) == 16
     sel_mean = sum(r["n_chars"] for r in rows) / len(rows)
     corpus = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -353,7 +355,7 @@ def test_weighted_sample_prefers_heavy_rows(spark):
 
 def test_equidepth_buckets_balanced_and_ordered(spark):
     rows = sorted(
-        query_fns()["q_histogram_equidepth"](spark, SF_DIR).collect(),
+        QUERIES["q_histogram_equidepth"](spark, SF_DIR).collect(),
         key=lambda r: r["bucket"],
     )
     assert [r["bucket"] for r in rows] == list(range(len(rows)))
@@ -377,7 +379,7 @@ def test_equidepth_buckets_balanced_and_ordered(spark):
 
 
 def test_attribution_shares_and_channels(spark):
-    rows = query_fns()["q_attribution"](spark, SF_DIR).collect()
+    rows = QUERIES["q_attribution"](spark, SF_DIR).collect()
     assert rows
     assert abs(sum(r["share"] for r in rows) - 1.0) < 1e-3
     types = {
@@ -399,7 +401,7 @@ def test_attribution_shares_and_channels(spark):
 
 def test_pmi_threshold_and_ordering(spark):
     rows = sorted(
-        query_fns()["q_text_pmi_collocations"](spark, SF_DIR).collect(),
+        QUERIES["q_text_pmi_collocations"](spark, SF_DIR).collect(),
         key=lambda r: r["rank"],
     )
     assert rows and rows[0]["rank"] == 1
@@ -415,7 +417,7 @@ def test_pmi_threshold_and_ordering(spark):
 
 
 def test_snapshot_diff_reconciles(spark):
-    rows = query_fns()["q_snapshot_diff"](spark, SF_DIR).collect()
+    rows = QUERIES["q_snapshot_diff"](spark, SF_DIR).collect()
     by = {}
     for r in rows:
         by[r["status"]] = by.get(r["status"], 0) + r["n"]
@@ -434,7 +436,7 @@ def test_snapshot_diff_reconciles(spark):
 
 
 def test_ndcg_bounds(spark):
-    (r,) = query_fns()["q_search_ndcg"](spark, SF_DIR).collect()
+    (r,) = QUERIES["q_search_ndcg"](spark, SF_DIR).collect()
     assert r["k"] == 10
     assert 0 < r["dcg_q"] <= r["idcg_q"]
     assert 0.0 < r["ndcg"] <= 1.0
@@ -448,7 +450,7 @@ def test_ndcg_bounds(spark):
 
 
 def test_doremi_weights_normalized_and_monotone(spark):
-    rows = query_fns()["q_mixture_doremi"](spark, SF_DIR).collect()
+    rows = QUERIES["q_mixture_doremi"](spark, SF_DIR).collect()
     assert len(rows) == 20
     assert abs(sum(r["weight"] for r in rows) - 1.0) < 1e-3
     # sources sorted by gain must have non-decreasing boost (the
@@ -466,7 +468,7 @@ def test_doremi_weights_normalized_and_monotone(spark):
 
 
 def test_retention_offset_zero_is_full_cohort(spark):
-    rows = query_fns()["q_events_retention"](spark, SF_DIR).collect()
+    rows = QUERIES["q_events_retention"](spark, SF_DIR).collect()
     assert rows
     for r in rows:
         assert 0 < r["retention"] <= 1.0
@@ -485,7 +487,7 @@ def test_retention_offset_zero_is_full_cohort(spark):
 def test_weighted_cap_respects_cap_and_lifts(spark):
     from flink_pipeline_spark.plans.training import SOURCE_CAP
 
-    rows = query_fns()["q_source_cap_weighted"](spark, SF_DIR).collect()
+    rows = QUERIES["q_source_cap_weighted"](spark, SF_DIR).collect()
     assert rows
     lifted = 0
     for r in rows:
@@ -502,7 +504,7 @@ def test_weighted_cap_respects_cap_and_lifts(spark):
 
 
 def test_nation_trade_bilateral(spark):
-    rows = query_fns()["q_nation_trade_volume"](spark, SF_DIR).collect()
+    rows = QUERIES["q_nation_trade_volume"](spark, SF_DIR).collect()
     pairs = {(r["supp_nation"], r["cust_nation"]) for r in rows}
     assert ("NATION_1", "NATION_2") in pairs
     assert ("NATION_2", "NATION_1") in pairs
@@ -522,7 +524,7 @@ def test_binary_recall_row_between_zero_and_sq(spark):
     vs the 8-bit SQ row scored against the SAME exact-dot truth."""
     rows = {
         r["method"]: r["recall"]
-        for r in query_fns()["q_ann_recall"](spark, SF_DIR).collect()
+        for r in QUERIES["q_ann_recall"](spark, SF_DIR).collect()
     }
     assert "bin" in rows and "sq" in rows
     assert 0.0 <= rows["bin"] <= 1.0
@@ -531,7 +533,7 @@ def test_binary_recall_row_between_zero_and_sq(spark):
 
 def test_binary_codes_pack_32_bits_per_half(spark):
     """Hamming distances are bounded by the 64 packed bits."""
-    df = query_fns()["q_sim_binary_topk"](spark, SF_DIR)
+    df = QUERIES["q_sim_binary_topk"](spark, SF_DIR)
     rows = df.collect()
     assert rows and all(0 <= r["hamming"] <= 64 for r in rows)
 
@@ -569,13 +571,13 @@ def test_waiting_suppliers_sole_blocker(spark):
         .count()
     )
     got = (
-        query_fns()["q_waiting_suppliers"](spark, SF_DIR)
+        QUERIES["q_waiting_suppliers"](spark, SF_DIR)
         .agg(F.sum("numwait"))
         .first()[0]
     )
     # top-10 supplier cut can drop rows only if > 10 suppliers qualify
     assert got <= expected
-    n_supp = query_fns()["q_waiting_suppliers"](spark, SF_DIR).count()
+    n_supp = QUERIES["q_waiting_suppliers"](spark, SF_DIR).count()
     if n_supp < 10:
         assert got == expected
 
@@ -584,11 +586,11 @@ def test_kn_surprisal_matches_2g_token_accounting(spark):
     """KN and JM score the same per-doc token streams — n_tokens must
     agree exactly; only the probabilities (hence surprisal) differ."""
     kn = (
-        query_fns()["q_text_surprisal_kn"](spark, SF_DIR)
+        QUERIES["q_text_surprisal_kn"](spark, SF_DIR)
         .select("doc_id", F.col("n_tokens").alias("nk"))
     )
     jm = (
-        query_fns()["q_text_surprisal_2g"](spark, SF_DIR)
+        QUERIES["q_text_surprisal_2g"](spark, SF_DIR)
         .select("doc_id", F.col("n_tokens").alias("nj"))
     )
     bad = kn.join(jm, "doc_id").filter(F.col("nk") != F.col("nj")).count()
@@ -600,7 +602,7 @@ def test_kn_surprisal_matches_2g_token_accounting(spark):
 
 
 def test_kn_surprisal_positive_and_finite(spark):
-    rows = query_fns()["q_text_surprisal_kn"](spark, SF_DIR).collect()
+    rows = QUERIES["q_text_surprisal_kn"](spark, SF_DIR).collect()
     assert rows
     for r in rows:
         assert r["surprisal_q"] > 0
@@ -616,7 +618,7 @@ def test_mmr_first_pick_is_top_relevance_and_sets_diversify(spark):
     from flink_pipeline_spark.functions.portable import round_agg
     from flink_pipeline_spark.plans.llm_ops import PQ_QUERY_MAX
 
-    mmr = query_fns()["q_select_mmr"](spark, SF_DIR).collect()
+    mmr = QUERIES["q_select_mmr"](spark, SF_DIR).collect()
     by_q = {}
     for r in mmr:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -668,7 +670,7 @@ def test_heavy_hitters_matches_bruteforce_and_prunes_nothing_false(spark):
         tf.update(r.text.split(" "))
     total = sum(tf.values())
     truth = {t: n for t, n in tf.items() if n * HH_K > total}
-    got = {r.tok: r for r in query_fns()["q_heavy_hitters"](spark, SF_DIR).collect()}
+    got = {r.tok: r for r in QUERIES["q_heavy_hitters"](spark, SF_DIR).collect()}
     assert set(got) == set(truth)
     for t, n in truth.items():
         assert got[t].cnt == n
@@ -684,7 +686,7 @@ def test_cust_order_dist_conserves_customers_and_orders(spark):
     post-filter)."""
     from flink_pipeline_spark.catalog import load_table
 
-    rows = query_fns()["q_cust_order_dist"](spark, SF_DIR).collect()
+    rows = QUERIES["q_cust_order_dist"](spark, SF_DIR).collect()
     n_cust = load_table(spark, SF_DIR, "customer").count()
     custkeys = {
         r.c_custkey for r in load_table(spark, SF_DIR, "customer").collect()
@@ -736,7 +738,7 @@ def test_small_qty_revenue_matches_bruteforce(spark):
         if q100 * 5 * c < s:
             n_items += 1
             cents += math.floor(r.l_extendedprice * 100 + 0.5)
-    [got] = query_fns()["q_small_qty_revenue"](spark, SF_DIR).collect()
+    [got] = QUERIES["q_small_qty_revenue"](spark, SF_DIR).collect()
     assert got.n_items == n_items
     assert got.avg_yearly == cents / 700.0
 
@@ -745,7 +747,7 @@ def test_promo_revenue_share_in_range_and_consistent(spark):
     """The conditional-agg ratio must be consistent with its own
     emitted numerator: share == promo/total within the rounding
     quantum, and 0 <= share <= 100."""
-    [r] = query_fns()["q_promo_revenue"](spark, SF_DIR).collect()
+    [r] = QUERIES["q_promo_revenue"](spark, SF_DIR).collect()
     assert r.n_items > 0
     assert 0.0 <= r.promo_share_pct <= 100.0
     assert r.promo_revenue >= 0
@@ -777,7 +779,7 @@ def test_banded_revenue_matches_bruteforce(spark):
                     r.l_extendedprice * (1 - r.l_discount) * 100 + 0.5
                 )
                 break
-    [got] = query_fns()["q_banded_revenue"](spark, SF_DIR).collect()
+    [got] = QUERIES["q_banded_revenue"](spark, SF_DIR).collect()
     assert got.n_items == n_items
     assert got.revenue == cents / 100.0
 
@@ -811,6 +813,6 @@ def test_idle_rich_customers_threshold_and_antijoin(spark):
             truth[nations[nk]] = (n + 1, t + b)
     got = {
         r.n_name: (r.numcust, r.totacctbal)
-        for r in query_fns()["q_idle_rich_customers"](spark, SF_DIR).collect()
+        for r in QUERIES["q_idle_rich_customers"](spark, SF_DIR).collect()
     }
     assert got == {k: (n, t / 100.0) for k, (n, t) in truth.items()}

@@ -5,6 +5,8 @@ the published query's / algorithm's."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 
 from flink_pipeline_spark.catalog import load_table
@@ -15,8 +17,11 @@ from flink_pipeline_spark.plans.joins import SALT_BUCKETS
 from .conftest import SF_DIR
 
 
+QUERIES = query_fns()  # one registry build: each call re-fingerprints
+
+
 def _q(spark, name):
-    return query_fns()[name](spark, SF_DIR)
+    return QUERIES[name](spark, SF_DIR)
 
 
 # ---------------------------------------------------------------------------
@@ -309,6 +314,33 @@ def test_pagerank_bit_identical_across_runs(spark):
     a = [(r["id"], r["rank_q"]) for r in _q(spark, "q_graph_pagerank").collect()]
     b = [(r["id"], r["rank_q"]) for r in _q(spark, "q_graph_pagerank").collect()]
     assert a == b
+
+
+def test_pagerank_broadcast_gate_falls_back_to_copartitioned_edges(
+    spark, monkeypatch
+):
+    """Under the node gate both per-iteration joins broadcast; above it
+    neither does (the edges are co-partitioned once and the rank /
+    incoming joins sort-merge) and the ranks are the same integers."""
+    from flink_pipeline_spark.plans import corpus_ops
+
+    def run():
+        df = _q(spark, "q_graph_pagerank")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan, [tuple(r) for r in df.collect()]
+
+    plan, rows = run()
+    assert plan.count("BroadcastHashJoin") == 2 * PR_ITERS, plan
+    monkeypatch.setattr(corpus_ops, "PR_BROADCAST_MAX_NODES", 0)
+    fplan, frows = run()
+    assert "BroadcastHashJoin" not in fplan, fplan
+    assert fplan.count("SortMergeJoin") == 2 * PR_ITERS, fplan
+    # the edges shuffle once (into the cache), never per iteration
+    assert "REPARTITION_BY_NUM" in fplan, fplan
+    assert not re.search(
+        r"hashpartitioning\(src, \d+\), ENSURE_REQUIREMENTS", fplan
+    ), fplan
+    assert frows == rows
 
 
 # ---------------------------------------------------------------------------
