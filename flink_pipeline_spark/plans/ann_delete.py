@@ -43,6 +43,7 @@ from ..operators.llm import (
     nsw_search,
     topk_neighbors_l2,
 )
+from ..streaming.heavy import build_once
 from .llm_ops import (
     IVF_SEED_CENTROIDS,
     PQ_QUERY_MAX,
@@ -51,10 +52,13 @@ from .llm_ops import (
     _NSW_QS_ENTRY_SQL,
     _hnsw_descent_sql,
     _hnsw_layers_sql,
+    _hnsw_monitor,
+    _hnsw_store,
     _nsw_beam_sql,
     _nsw_final_sql,
     _nsw_graph_sql_for,
     build_graph,
+    hnsw_store_for,
 )
 from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import register
@@ -308,55 +312,32 @@ def _register_delete_recall():
 q_ann_delete_recall = _register_delete_recall()
 
 
-def _hnsw_del_store_dir(sf_dir: str) -> str:
-    """Store path for the POST-DELETE snapshot of sf_dir's persisted
-    index: the base store's content key (corpus file identity + build
-    constants + the operator/store MODULE sources — _hnsw_store_key
-    already folds whole modules in, so the delete fold and the
-    monitor's tombstone paths are covered) extended with the delete
-    constants."""
-    import hashlib
-    import os
-
-    from .llm_ops import _hnsw_store_dir
-
-    base = _hnsw_store_dir(sf_dir)
-    key = hashlib.md5(
-        f"{base}\x00{NSW_DELETE_MOD}|{NSW_DELETE_REM}".encode()
-    ).hexdigest()[:16]
-    return os.path.join(os.path.dirname(base), f"del-{key}")
+def hash_slice_deletes(emb: DataFrame, mod: int, rem: int) -> DataFrame:
+    """(vec_id, embedding, op='delete'): the vectors whose hash56
+    residue mod ``mod`` is ``rem``, as a delete batch for the
+    index-store monitors — the one deterministic delete slice every
+    post-delete store folds (the base ~1/8 slice and the ~1/2 one)."""
+    return emb.filter(hash56(F.col("vec_id")) % mod == rem).select(
+        "vec_id", "embedding", F.lit("delete").alias("op")
+    )
 
 
 def hnsw_delete_store_for(spark: SparkSession, sf_dir: str):
     """The persisted post-delete HNSW index monitor for ``sf_dir``:
-    ensure the BASE store (built once, shared with q_sim_hnsw_search),
-    copy its sentinel snapshot, fold ONE delete batch (the hash-slice
-    tombstones) through the monitor's own foreachBatch path as batch
-    0, and publish atomically (the hnsw_store_for race convention:
-    one rename wins, the loser discards)."""
-    import os
-    import shutil
+    the BASE store's snapshot (built once, shared with
+    q_sim_hnsw_search) with ONE delete batch (the hash-slice
+    tombstones) folded through the monitor's own foreachBatch path as
+    batch 0, keyed on the base key plus the delete constants and
+    published by heavy.build_once."""
 
-    from ..streaming.heavy import publish_store
-    from .llm_ops import _hnsw_monitor, hnsw_store_for
-
-    store = _hnsw_del_store_dir(sf_dir)
-    if not os.path.isdir(os.path.join(store, "adj", "batch_id=0")):
-        base_mon = hnsw_store_for(spark, sf_dir)
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        for kind in ("adj", "vecs"):
-            shutil.copytree(
-                os.path.join(base_mon.store_dir, kind, "batch_id=-1"),
-                os.path.join(tmp, kind, "batch_id=-1"),
-            )
+    def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        batch = emb.filter(
-            hash56(F.col("vec_id")) % NSW_DELETE_MOD == NSW_DELETE_REM
-        ).select("vec_id", "embedding", F.lit("delete").alias("op"))
-        _hnsw_monitor(tmp)(batch, 0)
-        publish_store(tmp, store)
-    return _hnsw_monitor(store)
+        hnsw_store_for(spark, sf_dir).copy_base(tmp)(
+            hash_slice_deletes(emb, NSW_DELETE_MOD, NSW_DELETE_REM), 0
+        )
+
+    store = _hnsw_store("del", sf_dir, NSW_DELETE_MOD, NSW_DELETE_REM)
+    return build_once(store, build, _hnsw_monitor)
 
 
 def _hnsw_delete_ctes(dels_sql: str) -> str:

@@ -2831,37 +2831,9 @@ q_sim_nsw_insert = _register_nsw_insert()
 
 
 # persisted-index cache root for the serving-form query: one built
-# index per (corpus dir, build constants, build-operator source) key
+# index per heavy.store_key key (corpus identity, build constants,
+# operator and store module sources)
 HNSW_INDEX_CACHE = "/tmp/fps_hnsw_index"
-
-
-def _hnsw_store_key(sf_dir: str) -> str:
-    """Cache key covering everything that determines the built index:
-    the corpus dir, every build/search constant, and the FULL MODULE
-    SOURCE of the operator and store layers — so editing ANY build
-    rule (including helpers and constants the per-function hashing of
-    r11 silently missed — SQDIST_Q_SQL, ivf_assign, a moved constant;
-    the r11 verdict's advisory #4) invalidates the cache automatically
-    instead of serving a stale graph (the probe-marker-versioning
-    hazard, r8). Module-level granularity over-invalidates — an
-    unrelated edit to operators/llm.py costs one spurious rebuild —
-    which is the safe direction for a cache; a content-changed rule
-    can never serve stale. md5 here keys a cache path; it is not part
-    of any query's math."""
-    import hashlib
-    import inspect
-
-    from ..operators import llm as _ollm
-    from ..streaming import ann_index as _ann
-
-    srcs = inspect.getsource(_ollm) + inspect.getsource(_ann)
-    const = (
-        f"{NSW_DEG}|{NSW_BEAM}|{NSW_HOPS}|{HNSW_L1_MOD}"
-        f"|{IVF_SEED_CENTROIDS}|{EMBED_MULTI_MAX_CELL}|{EMBED_PAIR_NPROBE}"
-    )
-    return hashlib.md5(
-        f"{sf_dir}\x00{const}\x00{srcs}".encode()
-    ).hexdigest()[:16]
 
 
 def _hnsw_monitor(store_dir: str):
@@ -2893,38 +2865,46 @@ def corpus_file_identity(sf_dir: str, table: str = "embeddings") -> str:
     return "|".join(parts)
 
 
-def _hnsw_store_dir(sf_dir: str) -> str:
-    """Resolved store path for ``sf_dir``'s persisted index, keyed on
-    the corpus file identity (corpus_file_identity) plus the build
-    constants and operator sources (_hnsw_store_key)."""
+def _hnsw_key(sf_dir: str) -> str:
+    """The base HNSW store's key: the corpus identity and every
+    build/search constant (heavy.store_key adds the sources)."""
+    from ..streaming import ann_index
+    from ..streaming.heavy import store_key
+
+    return store_key(
+        ann_index, sf_dir, corpus_file_identity(sf_dir), NSW_DEG,
+        NSW_BEAM, NSW_HOPS, HNSW_L1_MOD, IVF_SEED_CENTROIDS,
+        EMBED_MULTI_MAX_CELL, EMBED_PAIR_NPROBE,
+    )
+
+
+def _hnsw_store(name: str, sf_dir: str, *material) -> str:
+    """Path of the HNSW store derived from ``sf_dir``'s base store
+    under ``name``: keyed on the base key plus ``material``."""
     import os
 
-    key = _hnsw_store_key(
-        sf_dir + "\x00" + corpus_file_identity(sf_dir)
-    )
-    return os.path.join(HNSW_INDEX_CACHE, key)
+    from ..streaming import ann_index
+    from ..streaming.heavy import store_key
+
+    key = store_key(ann_index, _hnsw_key(sf_dir), *material)
+    return os.path.join(HNSW_INDEX_CACHE, f"{name}-{key}")
 
 
 def hnsw_store_for(spark: SparkSession, sf_dir: str):
-    """The persisted HNSW index monitor for ``sf_dir``, building and
-    atomically publishing the store on first use (two concurrent
-    builders race benignly: one rename wins, the loser discards its
-    private build dir)."""
+    """The persisted HNSW index monitor for ``sf_dir``, built once and
+    published by heavy.build_once."""
     import os
-    import shutil
 
-    from ..streaming.heavy import publish_store
+    from ..streaming.heavy import build_once
 
-    store = _hnsw_store_dir(sf_dir)
-    if not os.path.isdir(os.path.join(store, "adj", "batch_id=-1")):
+    def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
         _hnsw_monitor(tmp).init(
             emb, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
         )
-        publish_store(tmp, store)
-    return _hnsw_monitor(store)
+
+    store = os.path.join(HNSW_INDEX_CACHE, _hnsw_key(sf_dir))
+    return build_once(store, build, _hnsw_monitor)
 
 
 @register("q_sim_hnsw_search", oracle=_hnsw_oracle_sql())

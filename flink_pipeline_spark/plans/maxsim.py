@@ -525,50 +525,30 @@ q_sim_maxsim_plaid.__doc__ = q_sim_maxsim_plaid.__doc__.format(
 MAXSIM_INDEX_CACHE = "/tmp/fps_maxsim_index"
 
 
-def _maxsim_store_key(identity: str) -> str:
-    """Cache key: corpus identity, the multi-vector constants, and the
-    FULL MODULE SOURCE of the operator and store layers (the
-    _pq_store_key discipline — editing any assignment or scoring rule
-    invalidates the cache instead of serving stale postings). md5 keys
-    a cache path; it is not part of any query's math."""
-    import hashlib
-    import inspect
-
-    from ..operators import llm as _ollm
-    from ..streaming import maxsim_index as _mx
-
-    srcs = inspect.getsource(_ollm) + inspect.getsource(_mx)
-    const = (
-        f"{MAXSIM_TOKS}|{MAXSIM_QDOCS}|{MAXSIM_NPROBE}"
-        f"|{PLAID_CANDIDATES}|{IVF_SEED_CENTROIDS}"
-    )
-    return hashlib.md5(
-        f"{identity}\x00{const}\x00{srcs}".encode()
-    ).hexdigest()[:16]
-
-
 def maxsim_store_for(spark: SparkSession, sf_dir: str):
-    """The persisted multi-vector store monitor for ``sf_dir``,
-    freezing centroids and writing the full token assignment log on
-    first use (atomic publish, the store_for race convention)."""
+    """The persisted multi-vector store monitor for ``sf_dir``:
+    centroids frozen and the full token assignment log written once,
+    keyed on the corpus identity and the multi-vector constants and
+    published by heavy.build_once."""
     import os
-    import shutil
 
-    from ..streaming.heavy import publish_store
+    from ..streaming import maxsim_index
+    from ..streaming.heavy import build_once, store_key
     from ..streaming.maxsim_index import MaxSimIndexMonitor
     from .llm_ops import corpus_file_identity
 
-    key = _maxsim_store_key(sf_dir + "\x00" + corpus_file_identity(sf_dir))
-    store = os.path.join(MAXSIM_INDEX_CACHE, key)
-    if not os.path.isdir(os.path.join(store, "tokens", "batch_id=-1")):
+    def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
         MaxSimIndexMonitor(tmp).init(
             emb, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
         )
-        publish_store(tmp, store)
-    return MaxSimIndexMonitor(store)
+
+    key = store_key(
+        maxsim_index, sf_dir, corpus_file_identity(sf_dir), MAXSIM_TOKS,
+        MAXSIM_QDOCS, MAXSIM_NPROBE, PLAID_CANDIDATES, IVF_SEED_CENTROIDS,
+    )
+    store = os.path.join(MAXSIM_INDEX_CACHE, key)
+    return build_once(store, build, MaxSimIndexMonitor)
 
 
 from .registry import ORACLES as _ORACLES  # noqa: E402

@@ -17,11 +17,15 @@ answer.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.portable import round_agg, round_sql
+from ..streaming.heavy import build_once, store_key
+from .ann_delete import NSW_DELETE_MOD, NSW_DELETE_REM, hash_slice_deletes
 from .llm_ops import (
     IVF_SEED_CENTROIDS,
     PQ_QUERY_MAX,
@@ -32,36 +36,30 @@ from .llm_ops import (
 from .registry import ORACLES, register
 
 # persisted-index cache root for the compressed serving query: one
-# trained store per (corpus identity, build constants, build-operator
-# source) key — the HNSW_INDEX_CACHE discipline
+# trained store per heavy.store_key key
 PQ_INDEX_CACHE = "/tmp/fps_pq_index"
 PQ_SERVE_NPROBE = 2
 PQ_SERVE_NCODES = 16
 
 
-def _pq_store_key(identity: str) -> str:
-    """Cache key covering everything that determines the built store:
-    corpus identity, build/serve constants, and the FULL MODULE SOURCE
-    of the operator and store layers (the _hnsw_store_key discipline,
-    module-granular per the r11 advisory — editing ANY coding or scan
-    rule, helper, or constant invalidates the cache instead of serving
-    stale codes; an unrelated edit costs one spurious rebuild, the
-    safe direction). md5 keys a cache path; it is not part of any
-    query's math."""
-    import hashlib
-    import inspect
+def _pq_key(sf_dir: str) -> str:
+    """The base compressed store's key: the corpus identity and the
+    build/serve constants (heavy.store_key adds the sources)."""
+    from ..streaming import pq_index
 
-    from ..operators import llm as _ollm
-    from ..streaming import pq_index as _pq
-
-    srcs = inspect.getsource(_ollm) + inspect.getsource(_pq)
-    const = (
-        f"{PQ_SERVE_NCODES}|{PQ_SERVE_NPROBE}|{RERANK_SHORTLIST}"
-        f"|{IVF_SEED_CENTROIDS}"
+    return store_key(
+        pq_index, sf_dir, corpus_file_identity(sf_dir), PQ_SERVE_NCODES,
+        PQ_SERVE_NPROBE, RERANK_SHORTLIST, IVF_SEED_CENTROIDS,
     )
-    return hashlib.md5(
-        f"{identity}\x00{const}\x00{srcs}".encode()
-    ).hexdigest()[:16]
+
+
+def _pq_store(name: str, sf_dir: str, *material) -> str:
+    """Path of the compressed store derived from ``sf_dir``'s base
+    store under ``name``: keyed on the base key plus ``material``."""
+    from ..streaming import pq_index
+
+    key = store_key(pq_index, _pq_key(sf_dir), *material)
+    return os.path.join(PQ_INDEX_CACHE, f"{name}-{key}")
 
 
 def _pq_monitor(store_dir: str):
@@ -73,25 +71,17 @@ def _pq_monitor(store_dir: str):
 
 
 def pq_store_for(spark: SparkSession, sf_dir: str):
-    """The persisted IVFADC store monitor for ``sf_dir``, training and
-    atomically publishing on first use (the hnsw_store_for race
-    convention: one rename wins, the loser discards)."""
-    import os
-    import shutil
+    """The persisted IVFADC store monitor for ``sf_dir``, trained once
+    and published by heavy.build_once."""
 
-    from ..streaming.heavy import publish_store
-
-    key = _pq_store_key(sf_dir + "\x00" + corpus_file_identity(sf_dir))
-    store = os.path.join(PQ_INDEX_CACHE, key)
-    if not os.path.isdir(os.path.join(store, "codes", "batch_id=-1")):
+    def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
         _pq_monitor(tmp).init(
             emb, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
         )
-        publish_store(tmp, store)
-    return _pq_monitor(store)
+
+    store = os.path.join(PQ_INDEX_CACHE, _pq_key(sf_dir))
+    return build_once(store, build, _pq_monitor)
 
 
 @register("q_sim_ivfpq_serve", oracle=ORACLES["q_sim_ivfpq_rerank"])
@@ -144,73 +134,68 @@ q_sim_ivfpq_serve.__doc__ = q_sim_ivfpq_serve.__doc__.format(
 )
 
 
-def _pq_del_store_for(spark: SparkSession, sf_dir: str):
-    """The post-delete compressed store: the base pq store's code log
-    copied, the hash-slice tombstones folded through the monitor's own
-    foreachBatch path as batch 0 (codes untouched — the mask does the
-    work), published atomically under the base key + delete constants
-    (the hnsw delete-store convention)."""
-    import os
-    import shutil
+def pq_delete_store_for(
+    spark: SparkSession, sf_dir: str, mod: int, rem: int
+):
+    """The post-delete compressed store for the hash slice (``mod``,
+    ``rem``): the base store's snapshot with the slice's tombstones
+    folded through the monitor's own foreachBatch path as batch 0
+    (codes untouched — the mask does the work), keyed on the base key
+    plus the slice and published by heavy.build_once."""
 
-    from ..streaming.heavy import publish_store
-    from .ann_delete import NSW_DELETE_MOD, NSW_DELETE_REM
-    from ..functions.portable import hash56
-
-    base_key = _pq_store_key(sf_dir + "\x00" + corpus_file_identity(sf_dir))
-    import hashlib
-
-    key = hashlib.md5(
-        f"{base_key}\x00{NSW_DELETE_MOD}|{NSW_DELETE_REM}".encode()
-    ).hexdigest()[:16]
-    store = os.path.join(PQ_INDEX_CACHE, f"del-{key}")
-    if not os.path.isdir(os.path.join(store, "tombs", "batch_id=0")):
-        base = pq_store_for(spark, sf_dir)
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        for kind in ("cb.parquet", "cents.parquet"):
-            shutil.copytree(
-                os.path.join(base.store_dir, kind),
-                os.path.join(tmp, kind),
-            )
-        shutil.copytree(
-            os.path.join(base.store_dir, "codes", "batch_id=-1"),
-            os.path.join(tmp, "codes", "batch_id=-1"),
-        )
+    def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        batch = emb.filter(
-            hash56(F.col("vec_id")) % NSW_DELETE_MOD == NSW_DELETE_REM
-        ).select("vec_id", "embedding", F.lit("delete").alias("op"))
-        _pq_monitor(tmp)(batch, 0)
-        publish_store(tmp, store)
-    return _pq_monitor(store)
+        pq_store_for(spark, sf_dir).copy_base(tmp)(
+            hash_slice_deletes(emb, mod, rem), 0
+        )
+
+    return build_once(_pq_store("del", sf_dir, mod, rem), build, _pq_monitor)
 
 
-def _ivfpq_delete_oracle() -> str:
-    """The rerank oracle with the tombstone mask injected at the ADC
-    code scan (assert-unique anchors — the _register_ivfpq_rerank
-    surgery convention): masking the deleted vectors' code rows is
+def pq_rewrite_store_for(
+    spark: SparkSession, sf_dir: str, mod: int, rem: int
+):
+    """The REWRITTEN (compacted) compressed store: the (``mod``,
+    ``rem``) post-delete store's code log rewritten through its
+    tombstone mask (PQIndexMonitor.rewrite), keyed on the base key
+    plus the slice and a rewrite marker — the same material the delete
+    store's key derives from."""
+
+    def build(tmp: str) -> None:
+        pq_delete_store_for(spark, sf_dir, mod, rem).rewrite(
+            spark, tmp, after_batch_id=0
+        )
+
+    store = _pq_store("rw", sf_dir, mod, rem, "rewrite")
+    return build_once(store, build, _pq_monitor)
+
+
+def _pq_masked_oracle(mod: int, rem: int) -> str:
+    """The registered rerank oracle with a hash-slice tombstone mask
+    injected at the ADC code scan (assert-unique anchor — the
+    _register_ivfpq_rerank surgery convention), parameterized over the
+    slice so the base-density and high-density delete rows share ONE
+    mask-injection rule. Masking the deleted vectors' code rows is
     EXACTLY what serving does, and because coding is per-vector under
     FROZEN artifacts, the masked scan equals an index that never held
-    them. The exact re-rank stage only ever sees the survivor
+    them; the exact re-rank stage only ever sees the survivor
     shortlist, so it needs no mask of its own."""
     from ..functions.portable import hash56_sql_duckdb
-    from .ann_delete import NSW_DELETE_MOD, NSW_DELETE_REM
-    from .registry import ORACLES
 
     sql = ORACLES["q_sim_ivfpq_rerank"]
     anchor = "WHERE x.vec_id <> l.query_id"
     assert sql.count(anchor) == 1, "ivfpq rerank oracle shape changed"
     h = hash56_sql_duckdb("x.vec_id")
-    sql = sql.replace(
+    return sql.replace(
         anchor,
-        anchor
-        + f"\n          AND {h} % {NSW_DELETE_MOD} <> {NSW_DELETE_REM}",
+        anchor + f"\n          AND {h} % {mod} <> {rem}",
     )
-    return sql
 
 
-@register("q_sim_ivfpq_delete", oracle=_ivfpq_delete_oracle())
+@register(
+    "q_sim_ivfpq_delete",
+    oracle=_pq_masked_oracle(NSW_DELETE_MOD, NSW_DELETE_REM),
+)
 def q_sim_ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed retrieval SERVED AFTER A DELETE BATCH — the delete
     lifecycle completed on the SECOND index family (q_sim_hnsw_delete
@@ -236,7 +221,9 @@ def q_sim_ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat serving profile; the delete fold writes |D| tombstone rows
     and touches nothing else."""
     emb = load_table(spark, sf_dir, "embeddings")
-    mon = _pq_del_store_for(spark, sf_dir)
+    mon = pq_delete_store_for(
+        spark, sf_dir, NSW_DELETE_MOD, NSW_DELETE_REM
+    )
     short = mon.adc_topk(
         spark,
         emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
@@ -246,35 +233,10 @@ def q_sim_ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_rerank(emb, short, k=3)
 
 
-def _pq_rewrite_store_for(spark: SparkSession, sf_dir: str):
-    """The REWRITTEN (compacted) compressed store: the post-delete
-    store's code log rewritten through its tombstone mask
-    (PQIndexMonitor.rewrite) and published under the delete store's
-    key + a rewrite marker — deleting the delete store would not
-    invalidate this one's key material, so the key derives from the
-    same constants the delete store's does."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..streaming.heavy import publish_store
-    from .ann_delete import NSW_DELETE_MOD, NSW_DELETE_REM
-
-    base_key = _pq_store_key(sf_dir + "\x00" + corpus_file_identity(sf_dir))
-    key = hashlib.md5(
-        f"{base_key}\x00{NSW_DELETE_MOD}|{NSW_DELETE_REM}\x00rewrite".encode()
-    ).hexdigest()[:16]
-    store = os.path.join(PQ_INDEX_CACHE, f"rw-{key}")
-    if not os.path.isdir(os.path.join(store, "codes", "batch_id=-1")):
-        del_mon = _pq_del_store_for(spark, sf_dir)
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        del_mon.rewrite(spark, tmp, after_batch_id=0)
-        publish_store(tmp, store)
-    return _pq_monitor(store)
-
-
-@register("q_sim_ivfpq_rewrite", oracle=_ivfpq_delete_oracle())
+@register(
+    "q_sim_ivfpq_rewrite",
+    oracle=_pq_masked_oracle(NSW_DELETE_MOD, NSW_DELETE_REM),
+)
 def q_sim_ivfpq_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed retrieval served from the REWRITTEN (compacted)
     code log — the offline reclamation q_sim_ivfpq_delete's masking
@@ -304,7 +266,9 @@ def q_sim_ivfpq_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving afterward is q_sim_ivfpq_serve's flat profile with the
     mask cost removed."""
     emb = load_table(spark, sf_dir, "embeddings")
-    mon = _pq_rewrite_store_for(spark, sf_dir)
+    mon = pq_rewrite_store_for(
+        spark, sf_dir, NSW_DELETE_MOD, NSW_DELETE_REM
+    )
     short = mon.adc_topk(
         spark,
         emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
@@ -334,91 +298,8 @@ REWRITE_TOMB_NUM = 1
 REWRITE_TOMB_DEN = 4
 
 
-def _pq_masked_oracle(mod: int, rem: int) -> str:
-    """The registered rerank oracle with a hash-slice tombstone mask
-    injected at the ADC code scan (assert-unique anchor — the
-    _register_ivfpq_rerank surgery convention), parameterized over the
-    slice so the base-density and high-density delete rows share ONE
-    mask-injection rule."""
-    from ..functions.portable import hash56_sql_duckdb
-
-    sql = ORACLES["q_sim_ivfpq_rerank"]
-    anchor = "WHERE x.vec_id <> l.query_id"
-    assert sql.count(anchor) == 1, "ivfpq rerank oracle shape changed"
-    h = hash56_sql_duckdb("x.vec_id")
-    return sql.replace(
-        anchor,
-        anchor + f"\n          AND {h} % {mod} <> {rem}",
-    )
-
-
-def _pq_hd_del_store_for(spark: SparkSession, sf_dir: str):
-    """The HIGH-density post-delete compressed store: the base pq
-    store's code log copied, the ~1/2 hash-slice tombstones folded
-    through the monitor's own foreachBatch path as batch 0 — the
-    _pq_del_store_for lifecycle at the density where the mask hurts."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..functions.portable import hash56
-    from ..streaming.heavy import publish_store
-
-    base_key = _pq_store_key(sf_dir + "\x00" + corpus_file_identity(sf_dir))
-    key = hashlib.md5(
-        f"{base_key}\x00{HD_DELETE_MOD}|{HD_DELETE_REM}".encode()
-    ).hexdigest()[:16]
-    store = os.path.join(PQ_INDEX_CACHE, f"hddel-{key}")
-    if not os.path.isdir(os.path.join(store, "tombs", "batch_id=0")):
-        base = pq_store_for(spark, sf_dir)
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        for kind in ("cb.parquet", "cents.parquet"):
-            shutil.copytree(
-                os.path.join(base.store_dir, kind),
-                os.path.join(tmp, kind),
-            )
-        shutil.copytree(
-            os.path.join(base.store_dir, "codes", "batch_id=-1"),
-            os.path.join(tmp, "codes", "batch_id=-1"),
-        )
-        emb = load_table(spark, sf_dir, "embeddings")
-        batch = emb.filter(
-            hash56(F.col("vec_id")) % HD_DELETE_MOD == HD_DELETE_REM
-        ).select("vec_id", "embedding", F.lit("delete").alias("op"))
-        _pq_monitor(tmp)(batch, 0)
-        publish_store(tmp, store)
-    return _pq_monitor(store)
-
-
-def _pq_hd_rewrite_store_for(spark: SparkSession, sf_dir: str):
-    """The high-density store COMPACTED: the ~1/2-tombstoned code log
-    rewritten through its mask (PQIndexMonitor.rewrite) — the action
-    the trigger row decides to take."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..streaming.heavy import publish_store
-
-    base_key = _pq_store_key(sf_dir + "\x00" + corpus_file_identity(sf_dir))
-    key = hashlib.md5(
-        f"{base_key}\x00{HD_DELETE_MOD}|{HD_DELETE_REM}\x00rewrite".encode()
-    ).hexdigest()[:16]
-    store = os.path.join(PQ_INDEX_CACHE, f"hdrw-{key}")
-    if not os.path.isdir(os.path.join(store, "codes", "batch_id=-1")):
-        del_mon = _pq_hd_del_store_for(spark, sf_dir)
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        del_mon.rewrite(spark, tmp, after_batch_id=0)
-        publish_store(tmp, store)
-    return _pq_monitor(store)
-
-
 def _rewrite_trigger_oracle() -> str:
     from ..functions.portable import hash56_sql_duckdb
-
-    from .ann_delete import NSW_DELETE_MOD, NSW_DELETE_REM
 
     h = hash56_sql_duckdb("vec_id")
     share = round_sql("n_tombs::DOUBLE / n_indexed")
@@ -472,10 +353,11 @@ def q_pq_rewrite_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     column — the cheapest possible monitoring row; in production the
     trigger runs on the store's partition statistics alone."""
     rows = []
-    for label, mon in (
-        ("base", _pq_del_store_for(spark, sf_dir)),
-        ("high", _pq_hd_del_store_for(spark, sf_dir)),
+    for label, mod, rem in (
+        ("base", NSW_DELETE_MOD, NSW_DELETE_REM),
+        ("high", HD_DELETE_MOD, HD_DELETE_REM),
     ):
+        mon = pq_delete_store_for(spark, sf_dir, mod, rem)
         codes = mon._read_codes(spark, 1)
         tombs = mon._read_tombs(spark, 1)
         rows.append(
@@ -523,7 +405,7 @@ def q_sim_ivfpq_delete_hd(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision. The oracle is the shared mask-injection rule at the HD
     slice — a leaking mask is a driver hash mismatch."""
     emb = load_table(spark, sf_dir, "embeddings")
-    mon = _pq_hd_del_store_for(spark, sf_dir)
+    mon = pq_delete_store_for(spark, sf_dir, HD_DELETE_MOD, HD_DELETE_REM)
     short = mon.adc_topk(
         spark,
         emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
@@ -548,7 +430,7 @@ def q_sim_ivfpq_rewrite_hd(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer to "what does the mask cost at the density where the
     trigger fires, and does the rewrite buy it back"."""
     emb = load_table(spark, sf_dir, "embeddings")
-    mon = _pq_hd_rewrite_store_for(spark, sf_dir)
+    mon = pq_rewrite_store_for(spark, sf_dir, HD_DELETE_MOD, HD_DELETE_REM)
     short = mon.adc_topk(
         spark,
         emb.filter(F.col("vec_id") < PQ_QUERY_MAX),

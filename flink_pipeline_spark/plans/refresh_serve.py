@@ -55,15 +55,14 @@ serving work is unchanged from the pre-drift rows (flat probes).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.llm import topk_neighbors_l2
+from ..streaming.heavy import build_once
 from .index_refresh import (
     _DRIFT_EXPR,
     _DRIFTED_CTE,
@@ -72,17 +71,15 @@ from .index_refresh import (
     drifted_corpus,
 )
 from .llm_ops import (
-    HNSW_INDEX_CACHE,
     IVF_SEED_CENTROIDS,
     PQ_QUERY_MAX,
     RERANK_SHORTLIST,
     _DISTQ_DUCK,
     _hnsw_monitor,
-    _hnsw_store_key,
-    corpus_file_identity,
+    _hnsw_store,
     exact_rerank,
 )
-from .pq_serve import PQ_INDEX_CACHE, _pq_monitor, _pq_store_key
+from .pq_serve import _pq_monitor, _pq_store
 from .profiling import EDRIFT_RAW_Q
 from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import ORACLES, register
@@ -101,20 +98,17 @@ REFRESH_FOLD_REM = 3
 REFRESH_FOLD_MIN = 16
 
 
-def _decision_key(base_key: str) -> str:
-    """The refreshed store's content key: the base store's full key
-    material (corpus identity + build constants + operator sources)
-    plus the DRIFT DECISION'S defining constants — the injected
-    re-embedding expression, the shift calibration, and the gate
-    threshold. Editing any of them rotates the key, so a serving node
-    can never read a refresh decided under different rules. md5 keys
-    a cache path; it is not part of any query's math."""
-    decision = (
-        f"drift-refresh|shift={DRIFT_SHIFT}|gate>{EDRIFT_RAW_Q}"
-        f"|{_DRIFT_EXPR}"
-        f"|fold={REFRESH_FOLD_MOD},{REFRESH_FOLD_REM},{REFRESH_FOLD_MIN}"
-    )
-    return hashlib.md5(f"{base_key}\x00{decision}".encode()).hexdigest()[:16]
+# the refreshed stores' own key material, hashed onto the base
+# store's key: the DRIFT DECISION'S defining constants — the injected
+# re-embedding expression, the shift calibration, the gate threshold
+# and the re-code fold slice. Editing any of them rotates the key, so
+# a serving node can never read a refresh decided under different
+# rules.
+_DECISION = (
+    f"drift-refresh|shift={DRIFT_SHIFT}|gate>{EDRIFT_RAW_Q}"
+    f"|{_DRIFT_EXPR}"
+    f"|fold={REFRESH_FOLD_MOD},{REFRESH_FOLD_REM},{REFRESH_FOLD_MIN}"
+)
 
 
 def _assert_gate_fired(emb: DataFrame, dr: DataFrame, store_tmp: str) -> None:
@@ -138,19 +132,16 @@ def pq_refresh_store_for(spark: SparkSession, sf_dir: str):
     re-train quantizer + codebook on the post-drift corpus via the
     monitor's own ``init`` (minus the held-out arrival slice), RE-CODE
     the slice through the monitor's own foreachBatch fold as batch 0,
-    and publish atomically under the decision-carrying key. Every
-    subsequent run is serve-only."""
-    base_key = _pq_store_key(sf_dir + "\x00" + corpus_file_identity(sf_dir))
-    store = os.path.join(PQ_INDEX_CACHE, f"refresh-{_decision_key(base_key)}")
-    if not os.path.isdir(os.path.join(store, "codes", "batch_id=0")):
+    and publish it (heavy.build_once) under the decision-carrying key.
+    Every subsequent run is serve-only."""
+
+    def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         dr = drifted_corpus(emb).localCheckpoint(eager=True)
         is_fold = (
             (F.col("vec_id") >= REFRESH_FOLD_MIN)
             & (F.col("vec_id") % REFRESH_FOLD_MOD == REFRESH_FOLD_REM)
         )
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
         _assert_gate_fired(emb, dr, tmp)
         mon = _pq_monitor(tmp)
         mon.init(
@@ -160,10 +151,9 @@ def pq_refresh_store_for(spark: SparkSession, sf_dir: str):
         # the re-code fold: the held-out slice arrives through the
         # store's own __call__ (no op column — all arrivals)
         mon(dr.filter(is_fold).select("vec_id", "embedding"), 0)
-        from ..streaming.heavy import publish_store
 
-        publish_store(tmp, store)
-    return _pq_monitor(store)
+    store = _pq_store("refresh", sf_dir, _DECISION)
+    return build_once(store, build, _pq_monitor)
 
 
 def _pq_refresh_serve_oracle() -> str:
@@ -290,25 +280,19 @@ def ann_refresh_store_for(spark: SparkSession, sf_dir: str):
     and its refresh IS the rebuild. On first use, fire the drift gate
     (refusing if it does not trip), rebuild both layer graphs on the
     post-drift corpus via ANNIndexMonitor.init (the identical
-    deterministic build), publish atomically under the
+    deterministic build), and publish it (heavy.build_once) under the
     decision-carrying key."""
-    base_key = _hnsw_store_key(sf_dir + "\x00" + corpus_file_identity(sf_dir))
-    store = os.path.join(
-        HNSW_INDEX_CACHE, f"refresh-{_decision_key(base_key)}"
-    )
-    if not os.path.isdir(os.path.join(store, "adj", "batch_id=-1")):
+
+    def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         dr = drifted_corpus(emb).localCheckpoint(eager=True)
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
         _assert_gate_fired(emb, dr, tmp)
         _hnsw_monitor(tmp).init(
             dr, dr.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
         )
-        from ..streaming.heavy import publish_store
 
-        publish_store(tmp, store)
-    return _hnsw_monitor(store)
+    store = _hnsw_store("refresh", sf_dir, _DECISION)
+    return build_once(store, build, _hnsw_monitor)
 
 
 def _ann_refresh_serve_oracle() -> str:

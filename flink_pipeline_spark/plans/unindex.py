@@ -31,10 +31,6 @@ capability the reference delegates to external services.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,7 +44,7 @@ from ..operators.llm import (
     topk_neighbors_l2,
     verified_near_dups,
 )
-from ..streaming.heavy import publish_store
+from ..streaming.heavy import build_once
 from .ann_delete import _final_survivor_sql, _hnsw_delete_ctes
 from .llm_ops import (
     PQ_QUERY_MAX,
@@ -56,12 +52,12 @@ from .llm_ops import (
     _DISTQ_DUCK,
     _MINHASH_ORACLE,
     _hnsw_monitor,
-    _hnsw_store_dir,
+    _hnsw_store,
     corpus_file_identity,
     exact_rerank,
     hnsw_store_for,
 )
-from .pq_serve import PQ_INDEX_CACHE, _pq_monitor, _pq_store_key, pq_store_for
+from .pq_serve import _pq_monitor, _pq_store, pq_store_for
 from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import ORACLES, register
 
@@ -150,57 +146,33 @@ def _unindex_material(sf_dir: str) -> str:
 
 def hnsw_unindex_store_for(spark: SparkSession, sf_dir: str):
     """The persisted post-UNINDEX HNSW store: the shared base store's
-    sentinel snapshot copied, the dedup drop batch folded through the
-    monitor's own foreachBatch path as batch 0 (both layers compact
-    via nsw_delete, tombstones append), published atomically under
-    the base key + the drop-rule material."""
-    base_dir = _hnsw_store_dir(sf_dir)
-    key = hashlib.md5(
-        f"{base_dir}\x00{_unindex_material(sf_dir)}".encode()
-    ).hexdigest()[:16]
-    store = os.path.join(os.path.dirname(base_dir), f"unx-{key}")
-    if not os.path.isdir(os.path.join(store, "adj", "batch_id=0")):
-        base_mon = hnsw_store_for(spark, sf_dir)
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        for kind in ("adj", "vecs"):
-            shutil.copytree(
-                os.path.join(base_mon.store_dir, kind, "batch_id=-1"),
-                os.path.join(tmp, kind, "batch_id=-1"),
-            )
-        _hnsw_monitor(tmp)(dedup_drop_batch(spark, sf_dir), 0)
-        publish_store(tmp, store)
-    return _hnsw_monitor(store)
+    snapshot with the dedup drop batch folded through the monitor's
+    own foreachBatch path as batch 0 (both layers compact via
+    nsw_delete, tombstones append), keyed on the base key plus the
+    drop-rule material and published by heavy.build_once."""
+
+    def build(tmp: str) -> None:
+        hnsw_store_for(spark, sf_dir).copy_base(tmp)(
+            dedup_drop_batch(spark, sf_dir), 0
+        )
+
+    store = _hnsw_store("unx", sf_dir, _unindex_material(sf_dir))
+    return build_once(store, build, _hnsw_monitor)
 
 
 def pq_unindex_store_for(spark: SparkSession, sf_dir: str):
-    """The post-UNINDEX compressed store: the base pq store copied,
-    the SAME dedup drop batch folded as batch 0 (codes untouched —
-    tombstones mask at scan), published under the base key + the
-    drop-rule material."""
-    base_key = _pq_store_key(
-        sf_dir + "\x00" + corpus_file_identity(sf_dir)
-    )
-    key = hashlib.md5(
-        f"{base_key}\x00{_unindex_material(sf_dir)}".encode()
-    ).hexdigest()[:16]
-    store = os.path.join(PQ_INDEX_CACHE, f"unx-{key}")
-    if not os.path.isdir(os.path.join(store, "tombs", "batch_id=0")):
-        base = pq_store_for(spark, sf_dir)
-        tmp = f"{store}.build.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        for kind in ("cb.parquet", "cents.parquet"):
-            shutil.copytree(
-                os.path.join(base.store_dir, kind),
-                os.path.join(tmp, kind),
-            )
-        shutil.copytree(
-            os.path.join(base.store_dir, "codes", "batch_id=-1"),
-            os.path.join(tmp, "codes", "batch_id=-1"),
+    """The post-UNINDEX compressed store: the base pq store's snapshot
+    with the SAME dedup drop batch folded as batch 0 (codes untouched —
+    tombstones mask at scan), keyed on the base key plus the drop-rule
+    material."""
+
+    def build(tmp: str) -> None:
+        pq_store_for(spark, sf_dir).copy_base(tmp)(
+            dedup_drop_batch(spark, sf_dir), 0
         )
-        _pq_monitor(tmp)(dedup_drop_batch(spark, sf_dir), 0)
-        publish_store(tmp, store)
-    return _pq_monitor(store)
+
+    store = _pq_store("unx", sf_dir, _unindex_material(sf_dir))
+    return build_once(store, build, _pq_monitor)
 
 
 def _unindex_oracle() -> str:
@@ -249,8 +221,8 @@ def q_dedup_unindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _unindex_pq_oracle() -> str:
     """The registered rerank oracle with the dedup drop mask injected
-    at the ADC code scan (the _ivfpq_delete_oracle surgery, dedup
-    dels edition): masking the dropped docs' code rows is exactly
+    at the ADC code scan (the pq_serve._pq_masked_oracle surgery,
+    dedup dels edition): masking the dropped docs' code rows is exactly
     what serving does, and coding is per-vector under frozen
     artifacts, so the masked scan equals an index that never held
     them."""

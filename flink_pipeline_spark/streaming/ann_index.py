@@ -68,6 +68,7 @@ here serves exactly the graph the batch queries build.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -127,6 +128,18 @@ class ANNIndexMonitor:
         vecs.write.mode("overwrite").parquet(
             os.path.join(self._path("vecs"), "batch_id=-1")
         )
+
+    def copy_base(self, dst: str) -> "ANNIndexMonitor":
+        """Copy the ``init`` snapshot (both layers' adjacency and the
+        vector log at ``batch_id=-1``) into a fresh store at ``dst``
+        and return its monitor — the start of a store derived from
+        this one by folding batches in."""
+        for kind in ("adj", "vecs"):
+            shutil.copytree(
+                os.path.join(self._path(kind), "batch_id=-1"),
+                os.path.join(dst, kind, "batch_id=-1"),
+            )
+        return ANNIndexMonitor(dst)
 
     def _read_adj(self, spark, batch_id: int) -> DataFrame:
         """Latest adjacency snapshot strictly BEFORE ``batch_id``.

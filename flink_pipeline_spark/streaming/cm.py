@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.profiling import CM_D, CM_W  # noqa: F401  (one source of truth)
-from .heavy import partition_ids, prune_partitions
+from .heavy import prune_partitions, read_latest
 
 
 class CMMonitor:
@@ -40,28 +40,9 @@ class CMMonitor:
         return os.path.join(self.store_dir, "grid")
 
     def _read_latest(self, spark, batch_id: int) -> DataFrame:
-        """Latest grid partition strictly BEFORE ``batch_id``.
-        Missing/empty store -> empty; a store whose surviving
-        partitions are all >= ``batch_id`` raises — the requested
-        history was pruned, and an empty grid would silently
-        undercount (the streaming/heavy.py contract)."""
-        bids = partition_ids(spark, self._path())
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
-            if bids:
-                # batch-0 nuance: see streaming/heavy.py _read_latest
-                hint = (
-                    "store already populated at batch 0 — a new "
-                    "stream must start from a fresh store dir"
-                    if batch_id == 0
-                    else f"no snapshot before batch {batch_id} "
-                    "survives pruning"
-                )
-                raise ValueError(f"cm grid: {hint} (have {sorted(bids)})")
-            return spark.createDataFrame([], "d INT, bucket BIGINT, cnt BIGINT")
-        part = os.path.join(self._path(), f"batch_id={max(prior)}")
-        return spark.read.schema("d INT, bucket BIGINT, cnt BIGINT").parquet(
-            part
+        return read_latest(
+            spark, self._path(), "d INT, bucket BIGINT, cnt BIGINT", batch_id,
+            "cm grid",
         )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
@@ -81,10 +62,7 @@ class CMMonitor:
         )
         part = os.path.join(self._path(), f"batch_id={batch_id}")
         merged.write.mode("overwrite").parquet(part)
-        self._prune_before(spark, batch_id - 1)
-
-    def _prune_before(self, spark, keep_from: int) -> None:
-        prune_partitions(spark, self._path(), keep_from)
+        prune_partitions(spark, self._path(), batch_id - 1)
 
     def estimates(self, spark, after_batch_id: int, toks: DataFrame) -> DataFrame:
         """(tok, cm_estimate) for the probe tokens in ``toks`` (one

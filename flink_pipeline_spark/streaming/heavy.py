@@ -78,47 +78,119 @@ def partitions_before(spark, path: str, batch_id: int) -> list[str]:
     ]
 
 
+def read_latest(
+    spark, path: str, schema: str, batch_id: int, label: str
+) -> DataFrame:
+    """The newest ``batch_id=B`` partition under ``path`` with
+    B < ``batch_id`` — the one snapshot-read rule of the summary
+    monitors (heavy hitters, Count-Min, KMV, quantile sketch): the
+    summary is a snapshot, not an append-only log. A missing or empty
+    store maps to an empty ``schema`` frame; a store whose surviving
+    partitions are ALL >= ``batch_id`` raises — pruning keeps only the
+    latest and one prior snapshot, so the requested history no longer
+    exists, and an empty frame would silently misreport it as
+    "nothing seen yet". Batch 0 nuance: a replayed batch 0
+    legitimately has no prior snapshot, and a non-empty store would
+    trip the raise — safe because Structured Streaming never replays
+    batch 0 after batch 1 commits (the checkpoint advances only on
+    commit), so surviving partitions at batch 0 can only mean the
+    store dir is being REUSED by a new stream, which gets its own
+    distinct error. ``label`` names the store in both errors. The
+    partition is selected by a driver-side FS listing (no historical-
+    partition scan) and read directly, so a monitor never races its
+    own prune; EXTERNAL concurrent readers listing the store root
+    must tolerate pruned partitions (set
+    spark.sql.files.ignoreMissingFiles for monitor reads)."""
+    bids = partition_ids(spark, path)
+    prior = [b for b in bids if b < batch_id]
+    if not prior:
+        if bids:
+            hint = (
+                "store already populated at batch 0 — a new "
+                "stream must start from a fresh store dir"
+                if batch_id == 0
+                else f"no snapshot before batch {batch_id} "
+                "survives pruning"
+            )
+            raise ValueError(f"{label}: {hint} (have {sorted(bids)})")
+        return spark.createDataFrame([], schema)
+    part = os.path.join(path, f"batch_id={max(prior)}")
+    return spark.read.schema(schema).parquet(part)
+
+
 def prune_partitions(spark, path: str, keep_from: int) -> None:
     """Delete ``batch_id=B`` partitions under ``path`` with
-    B < ``keep_from`` via the Hadoop FS API (local and HDFS alike).
-    The one snapshot-prune rule every monitor shares (ADVICE r10:
-    previously triplicated verbatim across heavy/merge/quantile/kmv,
-    where a future fix to prune semantics could silently fork):
-    pruning to ``batch_id - 1`` after a successful write keeps the
-    latest snapshot plus one prior, which preserves crash-replay — a
+    B < ``keep_from`` via the Hadoop FS API (local and HDFS alike) —
+    the one snapshot-prune rule every monitor shares: pruning to
+    ``batch_id - 1`` after a successful write keeps the latest
+    snapshot plus one prior, which preserves crash-replay — a
     replayed batch N still reads latest-strictly-before-N."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith("batch_id="):
-            continue
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    for b in partition_ids(spark, path):
+        if b < keep_from:
+            fs.delete(hpath(os.path.join(path, f"batch_id={b}")), True)
+
+
+def store_key(module, *material) -> str:
+    """The cache key of a persisted index store: ``material`` (a base
+    store passes its corpus identity and build/serve constants; a
+    derived store passes its base store's key and its own material)
+    plus the FULL MODULE SOURCE of operators/llm and of the store
+    ``module`` — so editing ANY build rule, helper or constant
+    invalidates the cache instead of serving a stale index. Module
+    granularity over-invalidates (an unrelated edit costs one spurious
+    rebuild), the safe direction for a cache. The key never holds a
+    path of the cache root, so redirecting the root keeps every key.
+    md5 keys a cache path; it is not part of any query's math."""
+    import hashlib
+    import inspect
+
+    from ..operators import llm
+
+    text = "\x00".join(
+        [*map(str, material), inspect.getsource(llm), inspect.getsource(module)]
+    )
+    return hashlib.md5(text.encode()).hexdigest()[:16]
+
+
+def build_once(store: str, build, monitor):
+    """``monitor(store)`` over the persisted store at ``store``, built
+    on first use — the one build-once-and-publish rule every persisted
+    index store shares. ``build(tmp)`` writes the whole store into a
+    private ``<store>.build.<pid>`` dir (wiped first: a crashed build
+    of this pid leaves one behind), and publish_store renames it into
+    place. Because the rename is atomic, "published" is "``store``
+    exists": a half-written build is never at ``store``, so it is never
+    served, and a build that raises publishes nothing (its private dir
+    is removed) and the next call builds again."""
+    import shutil
+
+    if not os.path.isdir(store):
+        tmp = f"{store}.build.{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)
         try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid < keep_from:
-            fs.delete(st.getPath(), True)
+            build(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        publish_store(tmp, store)
+    return monitor(store)
 
 
 def publish_store(tmp: str, store: str) -> None:
-    """Atomically publish a built store dir ``tmp`` at ``store`` — the
-    one publish rule every persisted-index builder shares. Concurrent
-    builders race benignly: one rename wins, the loser's rename fails
-    (target exists) and its private build dir is discarded. A rename
-    that fails for a NON-race reason (EXDEV, permissions) used to be
-    silently treated as a lost race, returning a monitor over a
-    nonexistent store that failed later with a confusing
-    missing-partition error (ADVICE r12) — so after the
-    rename/cleanup, the published dir must actually exist. The tmp
-    dir is deleted ONLY when the rename lost a benign race (the
-    winner's store exists afterward) — on a non-race failure (EXDEV,
-    permissions) the expensive build is left in place and its path
-    named in the error, so recovery is a manual move instead of a
-    full rebuild (ADVICE r13)."""
+    """Atomically publish a built store dir ``tmp`` at ``store`` (the
+    publish step of build_once). Concurrent builders race benignly:
+    one rename wins, the loser's rename fails (target exists) and its
+    private build dir is discarded. A rename that fails for a NON-race
+    reason (EXDEV, permissions) must not pass for a lost race — that
+    returned a monitor over a nonexistent store that failed later with
+    a confusing missing-partition error — so after the rename/cleanup,
+    the published dir must actually exist. The tmp dir is deleted ONLY
+    when the rename lost a benign race (the winner's store exists
+    afterward) — on a non-race failure (EXDEV, permissions) the
+    expensive build is left in place and its path named in the error,
+    so recovery is a manual move instead of a full rebuild."""
     import shutil
 
     os.makedirs(os.path.dirname(store), exist_ok=True)
@@ -181,39 +253,7 @@ class HeavyHitterMonitor:
     def _read_latest(
         self, spark, kind: str, schema: str, batch_id: int
     ) -> DataFrame:
-        """The newest partition strictly BEFORE ``batch_id`` (the
-        summary is a snapshot, not an append-only log). A missing or
-        empty store maps to empty; a store whose surviving partitions
-        are ALL >= ``batch_id`` raises — pruning keeps only the latest
-        and one prior snapshot, so the requested history no longer
-        exists, and an empty frame would silently misreport it as
-        "nothing seen yet" (ADVICE r9). Batch 0 nuance (ADVICE r10):
-        a replayed batch 0 legitimately has no prior snapshot, and a
-        non-empty store would trip the raise — safe because Structured
-        Streaming never replays batch 0 after batch 1 commits (the
-        checkpoint advances only on commit), so surviving partitions
-        at batch 0 can only mean the store dir is being REUSED by a
-        new stream, which gets its own distinct error. The partition
-        is selected by a driver-side FS listing (no historical-
-        partition scan) and read directly, so this method never races
-        its own prune; EXTERNAL concurrent readers listing the store
-        root must tolerate pruned partitions (set
-        spark.sql.files.ignoreMissingFiles for monitor reads)."""
-        bids = partition_ids(spark, self._path(kind))
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
-            if bids:
-                hint = (
-                    "store already populated at batch 0 — a new "
-                    "stream must start from a fresh store dir"
-                    if batch_id == 0
-                    else f"no snapshot before batch {batch_id} "
-                    "survives pruning"
-                )
-                raise ValueError(f"{kind}: {hint} (have {sorted(bids)})")
-            return spark.createDataFrame([], schema)
-        part = os.path.join(self._path(kind), f"batch_id={max(prior)}")
-        return spark.read.schema(schema).parquet(part)
+        return read_latest(spark, self._path(kind), schema, batch_id, kind)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -274,17 +314,14 @@ class HeavyHitterMonitor:
         n_total.write.mode("overwrite").parquet(part("meta"))
         merged.unpersist()
         # prune snapshots older than the one prior partition after a
-        # successful write: _read_latest re-lists ALL historical
+        # successful write: read_latest re-lists ALL historical
         # partitions, so an unpruned store costs linearly more per
         # trigger (quadratic cumulative) for a summary that only ever
         # needs the latest snapshot (ADVICE r8). Keeping batch N-1
         # preserves crash-replay: a replayed batch N still reads
         # latest-strictly-before-N.
-        self._prune_before(spark, "summary", batch_id - 1)
-        self._prune_before(spark, "meta", batch_id - 1)
-
-    def _prune_before(self, spark, kind: str, keep_from: int) -> None:
-        prune_partitions(spark, self._path(kind), keep_from)
+        prune_partitions(spark, self._path("summary"), batch_id - 1)
+        prune_partitions(spark, self._path("meta"), batch_id - 1)
 
     def summary(self, spark, after_batch_id: int) -> DataFrame:
         """The summary as of AFTER ``after_batch_id`` (key, est)."""

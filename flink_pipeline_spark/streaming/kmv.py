@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .heavy import partition_ids, prune_partitions
+from .heavy import prune_partitions, read_latest
 
 KMV_K = 64  # must match plans/profiling.KMV_K (asserted in tests)
 _2_56 = 72057594037927936.0
@@ -44,29 +44,10 @@ class KMVMonitor:
         return os.path.join(self.store_dir, "sketch")
 
     def _read_latest(self, spark, batch_id: int) -> DataFrame:
-        """Latest sketch partition strictly BEFORE ``batch_id``.
-        Missing/empty store -> empty; a store whose surviving
-        partitions are all >= ``batch_id`` raises — the requested
-        history was pruned, and an empty sketch would silently
-        misreport it (ADVICE r9, streaming/heavy.py contract).
-        External concurrent readers of the store root must tolerate
-        pruned partitions (spark.sql.files.ignoreMissingFiles)."""
-        bids = partition_ids(spark, self._path())
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
-            if bids:
-                # batch-0 nuance: see streaming/heavy.py _read_latest
-                hint = (
-                    "store already populated at batch 0 — a new "
-                    "stream must start from a fresh store dir"
-                    if batch_id == 0
-                    else f"no snapshot before batch {batch_id} "
-                    "survives pruning"
-                )
-                raise ValueError(f"kmv sketch: {hint} (have {sorted(bids)})")
-            return spark.createDataFrame([], "source STRING, h BIGINT")
-        part = os.path.join(self._path(), f"batch_id={max(prior)}")
-        return spark.read.schema("source STRING, h BIGINT").parquet(part)
+        return read_latest(
+            spark, self._path(), "source STRING, h BIGINT", batch_id,
+            "kmv sketch",
+        )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         from ..plans.profiling import gram3_hashes
@@ -83,10 +64,7 @@ class KMVMonitor:
         )
         part = os.path.join(self._path(), f"batch_id={batch_id}")
         sketch.write.mode("overwrite").parquet(part)
-        self._prune_before(spark, batch_id - 1)
-
-    def _prune_before(self, spark, keep_from: int) -> None:
-        prune_partitions(spark, self._path(), keep_from)
+        prune_partitions(spark, self._path(), batch_id - 1)
 
     def estimates(self, spark, after_batch_id: int) -> DataFrame:
         """(source, n_sketch, kmv_estimate) as of AFTER

@@ -109,10 +109,7 @@ class CDCApplyMonitor:
         merged = merge_into(base, compacted, self.keys, op_col=self.op_col)
         part = os.path.join(self._path(), f"batch_id={batch_id}")
         merged.write.mode("overwrite").parquet(part)
-        self._prune_before(spark, batch_id - 1)
-
-    def _prune_before(self, spark, keep_from: int) -> None:
-        prune_partitions(spark, self._path(), keep_from)
+        prune_partitions(spark, self._path(), batch_id - 1)
 
     def table(self, spark, after_batch_id: int) -> DataFrame:
         """The merged base as of AFTER ``after_batch_id`` (lazy)."""

@@ -39,6 +39,7 @@ oracle text verbatim.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -93,6 +94,26 @@ class PQIndexMonitor:
         codes.select("vec_id", "sub", "code", "cell").write.mode(
             "overwrite"
         ).parquet(os.path.join(self._path("codes"), "batch_id=-1"))
+
+    def copy_base(self, dst: str) -> "PQIndexMonitor":
+        """Copy the ``init`` snapshot (codebook, centroids and the
+        ``batch_id=-1`` code partition) into a fresh store at ``dst``
+        and return its monitor, with this one's settings — the start
+        of a store derived from this one by folding batches in."""
+        for kind in ("cb.parquet", "cents.parquet", "codes/batch_id=-1"):
+            shutil.copytree(
+                os.path.join(self.store_dir, kind), os.path.join(dst, kind)
+            )
+        return self._at(dst)
+
+    def _at(self, store_dir: str) -> "PQIndexMonitor":
+        return PQIndexMonitor(
+            store_dir,
+            n_codes=self.n_codes,
+            nprobe=self.nprobe,
+            m=self.m,
+            d_sub=self.d_sub,
+        )
 
     def _read_artifacts(self, spark):
         cb_path = self._path("cb.parquet")
@@ -198,8 +219,8 @@ class PQIndexMonitor:
         bytes) with an anti-join against the tombstone set, written
         back partitioned — the classic offline compaction job; run it
         when the tombstone fraction makes the mask cost visible.
-        Returns a monitor over ``out_dir`` (callers publish atomically
-        via publish_store — the store_for convention)."""
+        Returns a monitor over ``out_dir`` (callers build it as a
+        private dir that heavy.build_once publishes)."""
         cb, cents = self._read_artifacts(spark)
         tombs = self._read_tombs(spark, after_batch_id + 1)
         codes = self._read_codes(spark, after_batch_id + 1).join(
@@ -212,13 +233,7 @@ class PQIndexMonitor:
         codes.select("vec_id", "sub", "code", "cell").write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, "codes", "batch_id=-1"))
-        return PQIndexMonitor(
-            out_dir,
-            n_codes=self.n_codes,
-            nprobe=self.nprobe,
-            m=self.m,
-            d_sub=self.d_sub,
-        )
+        return self._at(out_dir)
 
     # -- the serving path ----------------------------------------------
 

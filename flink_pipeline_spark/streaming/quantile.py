@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .heavy import partition_ids, prune_partitions
+from .heavy import prune_partitions, read_latest
 
 QSK_K = 256  # must match plans/profiling.QSK_K (asserted in tests)
 
@@ -45,24 +45,10 @@ class QuantileMonitor:
         return os.path.join(self.store_dir, "sketch")
 
     def _read_latest(self, spark, batch_id: int) -> DataFrame:
-        bids = partition_ids(spark, self._path())
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
-            if bids:
-                # batch-0 nuance: see streaming/heavy.py _read_latest
-                hint = (
-                    "store already populated at batch 0 — a new "
-                    "stream must start from a fresh store dir"
-                    if batch_id == 0
-                    else f"no snapshot before batch {batch_id} "
-                    "survives pruning"
-                )
-                raise ValueError(
-                    f"quantile sketch: {hint} (have {sorted(bids)})"
-                )
-            return spark.createDataFrame([], "val DOUBLE, h BIGINT")
-        part = os.path.join(self._path(), f"batch_id={max(prior)}")
-        return spark.read.schema("val DOUBLE, h BIGINT").parquet(part)
+        return read_latest(
+            spark, self._path(), "val DOUBLE, h BIGINT", batch_id,
+            "quantile sketch",
+        )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         from ..plans.profiling import price_tags
@@ -75,10 +61,7 @@ class QuantileMonitor:
         )
         part = os.path.join(self._path(), f"batch_id={batch_id}")
         sketch.write.mode("overwrite").parquet(part)
-        self._prune_before(spark, batch_id - 1)
-
-    def _prune_before(self, spark, keep_from: int) -> None:
-        prune_partitions(spark, self._path(), keep_from)
+        prune_partitions(spark, self._path(), batch_id - 1)
 
     def sketch(self, spark, after_batch_id: int) -> DataFrame:
         """The (val, h) sketch as of AFTER ``after_batch_id``."""

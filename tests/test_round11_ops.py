@@ -258,14 +258,13 @@ def test_ann_index_guards(spark, tmp_path):
     assert sorted(partition_ids(spark, mon._path("vecs"))) == [-1, 0, 1, 2]
 
 
-@pytest.mark.slow  # 18s
 def test_hnsw_store_serves_without_rebuilding(spark):
     """Second call of the serving query must READ the published
     store, not rebuild it: the store's adjacency file mtimes are
     unchanged across calls, and the served rows equal the
     build-per-run audit query's."""
     from flink_pipeline_spark.plans.llm_ops import (
-        _hnsw_store_dir,
+        hnsw_store_for,
         q_sim_hnsw_search,
         q_sim_hnsw_topk,
     )
@@ -273,7 +272,7 @@ def test_hnsw_store_serves_without_rebuilding(spark):
     first = sorted(
         map(tuple, q_sim_hnsw_search(spark, SMALL_SF).collect())
     )
-    store = _hnsw_store_dir(SMALL_SF)
+    store = hnsw_store_for(spark, SMALL_SF).store_dir
     stamp = {
         p: os.path.getmtime(os.path.join(r, p))
         for r, _, fs in os.walk(os.path.join(store, "adj"))

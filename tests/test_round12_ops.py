@@ -351,12 +351,12 @@ def test_hnsw_delete_store_serves_without_rebuilding(spark):
     published store: adjacency mtimes unchanged across calls, rows
     identical."""
     from flink_pipeline_spark.plans.ann_delete import (
-        _hnsw_del_store_dir,
+        hnsw_delete_store_for,
         q_sim_hnsw_delete,
     )
 
     first = sorted(map(tuple, q_sim_hnsw_delete(spark, SMALL_SF).collect()))
-    store = _hnsw_del_store_dir(SMALL_SF)
+    store = hnsw_delete_store_for(spark, SMALL_SF).store_dir
 
     def stamp():
         return {
@@ -469,15 +469,12 @@ def test_pq_serve_matches_rerank_and_reads_store(spark):
     the published store (code-log mtimes unchanged)."""
     from flink_pipeline_spark.plans.llm_ops import q_sim_ivfpq_rerank
     from flink_pipeline_spark.plans.pq_serve import (
-        PQ_INDEX_CACHE,
-        _pq_store_key,
+        pq_store_for,
         q_sim_ivfpq_serve,
     )
-    from flink_pipeline_spark.plans.llm_ops import corpus_file_identity
 
     first = sorted(map(tuple, q_sim_ivfpq_serve(spark, SMALL_SF).collect()))
-    key = _pq_store_key(SMALL_SF + "\x00" + corpus_file_identity(SMALL_SF))
-    store = os.path.join(PQ_INDEX_CACHE, key, "codes")
+    store = os.path.join(pq_store_for(spark, SMALL_SF).store_dir, "codes")
 
     def stamp():
         return {

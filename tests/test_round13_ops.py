@@ -55,23 +55,35 @@ def test_unindex_never_serves_dropped(spark):
 
 def test_unindex_stores_are_serve_only_after_first_build(spark):
     """Build-once/serve-only: the second call returns a monitor over
-    the SAME published store (no rebuild), and the drop batch's ids
-    are exactly the store's batch-0 tombstones."""
+    the SAME published store with every file's mtime unchanged (equal
+    dirs alone would pass after a rebuild too), and the drop batch's
+    ids are exactly the store's batch-0 tombstones."""
     from flink_pipeline_spark.plans.unindex import (
         hnsw_unindex_store_for,
         pq_unindex_store_for,
     )
 
+    def stamp(store_dir):
+        return {
+            os.path.join(r, p): os.path.getmtime(os.path.join(r, p))
+            for r, _, fs in os.walk(store_dir)
+            for p in fs
+        }
+
     m1 = hnsw_unindex_store_for(spark, SMALL_SF)
+    s1 = stamp(m1.store_dir)
     m2 = hnsw_unindex_store_for(spark, SMALL_SF)
     assert m1.store_dir == m2.store_dir
+    assert s1 and stamp(m2.store_dir) == s1, "unindex store rebuilt"
     tombs = {
         r.vec_id for r in m1._read_tombs(spark, 1).collect()
     }
     assert tombs == _drop_ids(spark)
     p1 = pq_unindex_store_for(spark, SMALL_SF)
+    ps1 = stamp(p1.store_dir)
     p2 = pq_unindex_store_for(spark, SMALL_SF)
     assert p1.store_dir == p2.store_dir
+    assert ps1 and stamp(p2.store_dir) == ps1, "pq unindex store rebuilt"
     ptombs = {r.vec_id for r in p1._read_tombs(spark, 1).collect()}
     assert ptombs == _drop_ids(spark)
 
@@ -82,15 +94,23 @@ def test_pq_rewrite_equals_masked_serve(spark):
     store, holds exactly the survivor code rows, and carries no
     tombstone log at all."""
     from flink_pipeline_spark.plans.llm_ops import RERANK_SHORTLIST
+    from flink_pipeline_spark.plans.ann_delete import (
+        NSW_DELETE_MOD,
+        NSW_DELETE_REM,
+    )
     from flink_pipeline_spark.plans.pq_serve import (
-        _pq_del_store_for,
-        _pq_rewrite_store_for,
+        pq_delete_store_for,
+        pq_rewrite_store_for,
     )
 
     emb = load_table(spark, SMALL_SF, "embeddings")
     queries = emb.filter(F.col("vec_id") < PQ_QUERY_MAX)
-    masked = _pq_del_store_for(spark, SMALL_SF)
-    rewritten = _pq_rewrite_store_for(spark, SMALL_SF)
+    masked = pq_delete_store_for(
+        spark, SMALL_SF, NSW_DELETE_MOD, NSW_DELETE_REM
+    )
+    rewritten = pq_rewrite_store_for(
+        spark, SMALL_SF, NSW_DELETE_MOD, NSW_DELETE_REM
+    )
     got_m = sorted(
         map(
             tuple,

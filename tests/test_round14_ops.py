@@ -152,8 +152,10 @@ def test_rewrite_trigger_decisions_and_hd_compaction(spark):
     log and roughly half the code rows gone."""
     from flink_pipeline_spark.plans.llm_ops import RERANK_SHORTLIST
     from flink_pipeline_spark.plans.pq_serve import (
-        _pq_hd_del_store_for,
-        _pq_hd_rewrite_store_for,
+        HD_DELETE_MOD,
+        HD_DELETE_REM,
+        pq_delete_store_for,
+        pq_rewrite_store_for,
         q_pq_rewrite_trigger,
     )
 
@@ -165,8 +167,10 @@ def test_rewrite_trigger_decisions_and_hd_compaction(spark):
 
     emb = load_table(spark, SMALL_SF, "embeddings")
     queries = emb.filter(F.col("vec_id") < 4)
-    masked = _pq_hd_del_store_for(spark, SMALL_SF)
-    rewritten = _pq_hd_rewrite_store_for(spark, SMALL_SF)
+    masked = pq_delete_store_for(spark, SMALL_SF, HD_DELETE_MOD, HD_DELETE_REM)
+    rewritten = pq_rewrite_store_for(
+        spark, SMALL_SF, HD_DELETE_MOD, HD_DELETE_REM
+    )
     got_m = sorted(
         map(
             tuple,
