@@ -327,7 +327,7 @@ def hnsw_delete_store_for(spark: SparkSession, sf_dir: str):
     the BASE store's snapshot (built once, shared with
     q_sim_hnsw_search) with ONE delete batch (the hash-slice
     tombstones) folded through the monitor's own foreachBatch path as
-    batch 0, keyed on the base key plus the delete constants and
+    batch 0, keyed on the corpus identity under the name "del" and
     published by heavy.build_once."""
 
     def build(tmp: str) -> None:
@@ -336,7 +336,7 @@ def hnsw_delete_store_for(spark: SparkSession, sf_dir: str):
             hash_slice_deletes(emb, NSW_DELETE_MOD, NSW_DELETE_REM), 0
         )
 
-    store = _hnsw_store("del", sf_dir, NSW_DELETE_MOD, NSW_DELETE_REM)
+    store = _hnsw_store("del", sf_dir)
     return build_once(store, build, _hnsw_monitor)
 
 
@@ -389,10 +389,10 @@ def q_sim_hnsw_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     search-only from the post-delete snapshot, with the tombstone
     mask excluding deleted ids from the final beam (a no-op on the
     compacted graph, kept to make the never-serve-deleted contract
-    literal). The post-delete store is cache-keyed on the base
-    store's content key PLUS the delete constants and the delete
-    fold's source text, so an edited compaction rule can never serve
-    a stale snapshot.
+    literal). The post-delete store is cache-keyed on the corpus
+    identity and the package's code identity (heavy.store_key), so an
+    edited compaction rule or delete constant can never serve a stale
+    snapshot.
 
     Correctness contract: the stored post-delete snapshot is the
     deterministic compaction of the deterministic build, so the

@@ -2831,8 +2831,7 @@ q_sim_nsw_insert = _register_nsw_insert()
 
 
 # persisted-index cache root for the serving-form query: one built
-# index per heavy.store_key key (corpus identity, build constants,
-# operator and store module sources)
+# index per heavy.store_key key (corpus identity, package code)
 HNSW_INDEX_CACHE = "/tmp/fps_hnsw_index"
 
 
@@ -2865,36 +2864,21 @@ def corpus_file_identity(sf_dir: str, table: str = "embeddings") -> str:
     return "|".join(parts)
 
 
-def _hnsw_key(sf_dir: str) -> str:
-    """The base HNSW store's key: the corpus identity and every
-    build/search constant (heavy.store_key adds the sources)."""
-    from ..streaming import ann_index
-    from ..streaming.heavy import store_key
-
-    return store_key(
-        ann_index, sf_dir, corpus_file_identity(sf_dir), NSW_DEG,
-        NSW_BEAM, NSW_HOPS, HNSW_L1_MOD, IVF_SEED_CENTROIDS,
-        EMBED_MULTI_MAX_CELL, EMBED_PAIR_NPROBE,
-    )
-
-
 def _hnsw_store(name: str, sf_dir: str, *material) -> str:
-    """Path of the HNSW store derived from ``sf_dir``'s base store
-    under ``name``: keyed on the base key plus ``material``."""
+    """Path of the HNSW store for ``sf_dir`` — the base store when
+    ``name`` is empty, else the store derived from it under ``name``
+    and ``material`` (heavy.store_key adds the code identity)."""
     import os
 
-    from ..streaming import ann_index
     from ..streaming.heavy import store_key
 
-    key = store_key(ann_index, _hnsw_key(sf_dir), *material)
-    return os.path.join(HNSW_INDEX_CACHE, f"{name}-{key}")
+    key = store_key("hnsw", sf_dir, corpus_file_identity(sf_dir), *material)
+    return os.path.join(HNSW_INDEX_CACHE, f"{name}-{key}" if name else key)
 
 
 def hnsw_store_for(spark: SparkSession, sf_dir: str):
     """The persisted HNSW index monitor for ``sf_dir``, built once and
     published by heavy.build_once."""
-    import os
-
     from ..streaming.heavy import build_once
 
     def build(tmp: str) -> None:
@@ -2903,8 +2887,7 @@ def hnsw_store_for(spark: SparkSession, sf_dir: str):
             emb, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
         )
 
-    store = os.path.join(HNSW_INDEX_CACHE, _hnsw_key(sf_dir))
-    return build_once(store, build, _hnsw_monitor)
+    return build_once(_hnsw_store("", sf_dir), build, _hnsw_monitor)
 
 
 @register("q_sim_hnsw_search", oracle=_hnsw_oracle_sql())
@@ -2917,8 +2900,8 @@ def q_sim_hnsw_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and persists"). First use builds the store once
     (streaming/ann_index.ANNIndexMonitor.init — the identical
     deterministic build) and publishes it atomically under a cache
-    key derived from the corpus dir, the build constants, AND the
-    build operators' source text (editing the build rule invalidates
+    key derived from the corpus identity AND the package's code
+    identity (heavy.store_key — editing the build rule invalidates
     the cache automatically); every subsequent run is SEARCH-ONLY:
     read the scored adjacency snapshot + vector log, run the shared
     hnsw_search. The bench entry for this query therefore prices

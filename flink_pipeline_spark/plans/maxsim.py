@@ -528,11 +528,10 @@ MAXSIM_INDEX_CACHE = "/tmp/fps_maxsim_index"
 def maxsim_store_for(spark: SparkSession, sf_dir: str):
     """The persisted multi-vector store monitor for ``sf_dir``:
     centroids frozen and the full token assignment log written once,
-    keyed on the corpus identity and the multi-vector constants and
-    published by heavy.build_once."""
+    keyed on the corpus identity (heavy.store_key adds the code
+    identity) and published by heavy.build_once."""
     import os
 
-    from ..streaming import maxsim_index
     from ..streaming.heavy import build_once, store_key
     from ..streaming.maxsim_index import MaxSimIndexMonitor
     from .llm_ops import corpus_file_identity
@@ -543,10 +542,7 @@ def maxsim_store_for(spark: SparkSession, sf_dir: str):
             emb, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
         )
 
-    key = store_key(
-        maxsim_index, sf_dir, corpus_file_identity(sf_dir), MAXSIM_TOKS,
-        MAXSIM_QDOCS, MAXSIM_NPROBE, PLAID_CANDIDATES, IVF_SEED_CENTROIDS,
-    )
+    key = store_key("maxsim", sf_dir, corpus_file_identity(sf_dir))
     store = os.path.join(MAXSIM_INDEX_CACHE, key)
     return build_once(store, build, MaxSimIndexMonitor)
 
@@ -562,8 +558,8 @@ def q_sim_maxsim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid set and writes the full token assignment log
     (streaming/maxsim_index.MaxSimIndexMonitor.init — the identical
     deterministic assignment), publishing atomically under a key
-    derived from the corpus identity, the multi-vector constants, and
-    the operator/store sources; arriving docs' token vectors fold in
+    derived from the corpus identity and the package's code identity
+    (heavy.store_key); arriving docs' token vectors fold in
     append-only per micro-batch (assignment is stateless under the
     frozen centroids — stream==batch + crash-replay pinned in
     tests/test_round14_ops.py). Every subsequent run is SERVE-ONLY:

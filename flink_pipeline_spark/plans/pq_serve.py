@@ -36,30 +36,19 @@ from .llm_ops import (
 from .registry import ORACLES, register
 
 # persisted-index cache root for the compressed serving query: one
-# trained store per heavy.store_key key
+# trained store per heavy.store_key key (corpus identity, package code)
 PQ_INDEX_CACHE = "/tmp/fps_pq_index"
 PQ_SERVE_NPROBE = 2
 PQ_SERVE_NCODES = 16
 
 
-def _pq_key(sf_dir: str) -> str:
-    """The base compressed store's key: the corpus identity and the
-    build/serve constants (heavy.store_key adds the sources)."""
-    from ..streaming import pq_index
-
-    return store_key(
-        pq_index, sf_dir, corpus_file_identity(sf_dir), PQ_SERVE_NCODES,
-        PQ_SERVE_NPROBE, RERANK_SHORTLIST, IVF_SEED_CENTROIDS,
-    )
-
-
 def _pq_store(name: str, sf_dir: str, *material) -> str:
-    """Path of the compressed store derived from ``sf_dir``'s base
-    store under ``name``: keyed on the base key plus ``material``."""
-    from ..streaming import pq_index
-
-    key = store_key(pq_index, _pq_key(sf_dir), *material)
-    return os.path.join(PQ_INDEX_CACHE, f"{name}-{key}")
+    """Path of the compressed store for ``sf_dir`` — the base store
+    when ``name`` is empty, else the store derived from it under
+    ``name`` and ``material`` (heavy.store_key adds the code
+    identity)."""
+    key = store_key("pq", sf_dir, corpus_file_identity(sf_dir), *material)
+    return os.path.join(PQ_INDEX_CACHE, f"{name}-{key}" if name else key)
 
 
 def _pq_monitor(store_dir: str):
@@ -80,8 +69,7 @@ def pq_store_for(spark: SparkSession, sf_dir: str):
             emb, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
         )
 
-    store = os.path.join(PQ_INDEX_CACHE, _pq_key(sf_dir))
-    return build_once(store, build, _pq_monitor)
+    return build_once(_pq_store("", sf_dir), build, _pq_monitor)
 
 
 @register("q_sim_ivfpq_serve", oracle=ORACLES["q_sim_ivfpq_rerank"])
@@ -91,8 +79,8 @@ def q_sim_ivfpq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual codebook and codes the corpus once (streaming/
     pq_index.PQIndexMonitor.init — the identical deterministic
     build), publishing atomically under a cache key derived from the
-    corpus identity, the build constants, AND the build/serve
-    operators' source text; every subsequent run is SERVE-ONLY —
+    corpus identity AND the package's code identity (heavy.store_key);
+    every subsequent run is SERVE-ONLY —
     probe the stored centroids, LUT against the stored codebook, ADC
     over the stored code log (operators/llm.ivfpq_scan, the same
     stage the batch query runs) to a top-{short} shortlist, then
@@ -140,8 +128,8 @@ def pq_delete_store_for(
     """The post-delete compressed store for the hash slice (``mod``,
     ``rem``): the base store's snapshot with the slice's tombstones
     folded through the monitor's own foreachBatch path as batch 0
-    (codes untouched — the mask does the work), keyed on the base key
-    plus the slice and published by heavy.build_once."""
+    (codes untouched — the mask does the work), keyed on the corpus
+    identity plus the slice and published by heavy.build_once."""
 
     def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -157,16 +145,16 @@ def pq_rewrite_store_for(
 ):
     """The REWRITTEN (compacted) compressed store: the (``mod``,
     ``rem``) post-delete store's code log rewritten through its
-    tombstone mask (PQIndexMonitor.rewrite), keyed on the base key
-    plus the slice and a rewrite marker — the same material the delete
-    store's key derives from."""
+    tombstone mask (PQIndexMonitor.rewrite), keyed on the corpus
+    identity plus the slice — the delete store's material, under its
+    own name."""
 
     def build(tmp: str) -> None:
         pq_delete_store_for(spark, sf_dir, mod, rem).rewrite(
             spark, tmp, after_batch_id=0
         )
 
-    store = _pq_store("rw", sf_dir, mod, rem, "rewrite")
+    store = _pq_store("rw", sf_dir, mod, rem)
     return build_once(store, build, _pq_monitor)
 
 
@@ -358,8 +346,8 @@ def q_pq_rewrite_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("high", HD_DELETE_MOD, HD_DELETE_REM),
     ):
         mon = pq_delete_store_for(spark, sf_dir, mod, rem)
-        codes = mon._read_codes(spark, 1)
-        tombs = mon._read_tombs(spark, 1)
+        codes = mon.codes(spark, 0)
+        tombs = mon.tombs(spark, 0)
         rows.append(
             codes.agg(
                 F.countDistinct("vec_id").cast("long").alias("n_indexed")

@@ -8,8 +8,9 @@ compressed family (the re-trained coarse quantizer + residual
 codebook, the two things that store freezes), streaming/
 ann_index.ANNIndexMonitor for the graph family (the rebuilt
 adjacency — a graph index has no quantizer; its refresh IS the
-rebuild) — under a NEW content key that carries the drift decision,
-then serves the standard search rows from the REFRESHED stores.
+rebuild) — under a store key of their own (heavy.store_key: the
+drift decision's rules are package code, so editing them rotates the
+key), then serves the standard search rows from the REFRESHED stores.
 
 The production loop is monitor → decide → refresh → SERVE refreshed:
 
@@ -19,7 +20,8 @@ The production loop is monitor → decide → refresh → SERVE refreshed:
   the in-query monitoring rows) and REFUSES to refresh when the gate
   does not trip: an un-drifted corpus must keep its cheap frozen
   artifacts. The tripped decision is persisted in the store
-  (``gate.parquet``) and its defining constants ride the cache key.
+  (``gate.parquet``); its defining constants are package code, so
+  they ride the cache key's code identity.
 * REFRESH — the compressed store re-trains centroids + codebook on
   the post-drift corpus via the monitor's OWN ``init`` (the
   identical deterministic build the pre-drift store ran), then
@@ -63,13 +65,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.llm import topk_neighbors_l2
 from ..streaming.heavy import build_once
-from .index_refresh import (
-    _DRIFT_EXPR,
-    _DRIFTED_CTE,
-    DRIFT_SHIFT,
-    drift_gate_frame,
-    drifted_corpus,
-)
+from .index_refresh import _DRIFTED_CTE, drift_gate_frame, drifted_corpus
 from .llm_ops import (
     IVF_SEED_CENTROIDS,
     PQ_QUERY_MAX,
@@ -80,7 +76,6 @@ from .llm_ops import (
     exact_rerank,
 )
 from .pq_serve import _pq_monitor, _pq_store
-from .profiling import EDRIFT_RAW_Q
 from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
 from .registry import ORACLES, register
 
@@ -96,19 +91,6 @@ from .registry import ORACLES, register
 REFRESH_FOLD_MOD = 4
 REFRESH_FOLD_REM = 3
 REFRESH_FOLD_MIN = 16
-
-
-# the refreshed stores' own key material, hashed onto the base
-# store's key: the DRIFT DECISION'S defining constants — the injected
-# re-embedding expression, the shift calibration, the gate threshold
-# and the re-code fold slice. Editing any of them rotates the key, so
-# a serving node can never read a refresh decided under different
-# rules.
-_DECISION = (
-    f"drift-refresh|shift={DRIFT_SHIFT}|gate>{EDRIFT_RAW_Q}"
-    f"|{_DRIFT_EXPR}"
-    f"|fold={REFRESH_FOLD_MOD},{REFRESH_FOLD_REM},{REFRESH_FOLD_MIN}"
-)
 
 
 def _assert_gate_fired(emb: DataFrame, dr: DataFrame, store_tmp: str) -> None:
@@ -132,7 +114,7 @@ def pq_refresh_store_for(spark: SparkSession, sf_dir: str):
     re-train quantizer + codebook on the post-drift corpus via the
     monitor's own ``init`` (minus the held-out arrival slice), RE-CODE
     the slice through the monitor's own foreachBatch fold as batch 0,
-    and publish it (heavy.build_once) under the decision-carrying key.
+    and publish it (heavy.build_once) under the "refresh" key.
     Every subsequent run is serve-only."""
 
     def build(tmp: str) -> None:
@@ -152,7 +134,7 @@ def pq_refresh_store_for(spark: SparkSession, sf_dir: str):
         # store's own __call__ (no op column — all arrivals)
         mon(dr.filter(is_fold).select("vec_id", "embedding"), 0)
 
-    store = _pq_store("refresh", sf_dir, _DECISION)
+    store = _pq_store("refresh", sf_dir)
     return build_once(store, build, _pq_monitor)
 
 
@@ -182,10 +164,10 @@ def q_pq_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     held-out arrival slice through the monitor's own fold (the
     re-code cost every refresh pays; stream==batch + crash-replay
     pinned in tests/test_round14_ops.py), and publishes atomically
-    under a content key carrying the drift decision's defining
-    constants. Every subsequent run is SERVE-ONLY: ADC shortlist
-    from the refreshed code log, exact re-rank against the drifted
-    full-vector tier.
+    under the "refresh" store key, which rotates with any edit of
+    the decision's rules (heavy.store_key). Every subsequent run is
+    SERVE-ONLY: ADC shortlist from the refreshed code log, exact
+    re-rank against the drifted full-vector tier.
 
     Correctness contract — the cutover gate: this query registers
     the refreshed in-query chain's oracle text verbatim (the
@@ -281,7 +263,7 @@ def ann_refresh_store_for(spark: SparkSession, sf_dir: str):
     (refusing if it does not trip), rebuild both layer graphs on the
     post-drift corpus via ANNIndexMonitor.init (the identical
     deterministic build), and publish it (heavy.build_once) under the
-    decision-carrying key."""
+    "refresh" key."""
 
     def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -291,7 +273,7 @@ def ann_refresh_store_for(spark: SparkSession, sf_dir: str):
             dr, dr.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
         )
 
-    store = _hnsw_store("refresh", sf_dir, _DECISION)
+    store = _hnsw_store("refresh", sf_dir)
     return build_once(store, build, _hnsw_monitor)
 
 

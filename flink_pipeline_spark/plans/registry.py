@@ -11,6 +11,7 @@ drift is a correctness failure.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from pathlib import Path
 
@@ -37,11 +38,20 @@ def _evidence_order(d: dict) -> dict:
     code changed since their last CORRECTNESS row (stale evidence),
     then everything else stalest-round-first so old rows refresh
     round-robin. See evidence.py for the fingerprint ledger."""
+    rank = _evidence_rank()
+    return dict(sorted(d.items(), key=lambda kv: rank.get(kv[0], len(rank))))
+
+
+@functools.cache
+def _evidence_rank() -> dict[str, int]:
+    """Query name -> position in evidence.verification_order, computed
+    once per process: fingerprinting all queries takes ~1 s, and
+    neither the source it hashes nor the ledger changes within a
+    process (the ledger is synced only at round start)."""
     from .evidence import verification_order
 
     order = verification_order(QUERIES, ORACLES)
-    rank = {name: i for i, name in enumerate(order)}
-    return dict(sorted(d.items(), key=lambda kv: rank.get(kv[0], len(rank))))
+    return {name: i for i, name in enumerate(order)}
 
 
 try:  # py4j is absent under Spark Connect — treat as no extra types

@@ -130,48 +130,38 @@ def dedup_drop_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unindex_material(sf_dir: str) -> str:
-    """What determines the drop set beyond the base store: the
-    REGISTERED dedup-apply oracle text (the pinned semantics of the
-    drop rule — if the Spark pipeline drifted from it, the driver's
-    hash gate on q_dedup_apply is already red, so this key can only
-    be stale in a state where the surface is already failing) plus
-    the document corpus file identity."""
-    return (
-        ORACLES["q_dedup_apply"]
-        + "\x00"
-        + corpus_file_identity(sf_dir, "documents")
-    )
-
-
 def hnsw_unindex_store_for(spark: SparkSession, sf_dir: str):
     """The persisted post-UNINDEX HNSW store: the shared base store's
     snapshot with the dedup drop batch folded through the monitor's
     own foreachBatch path as batch 0 (both layers compact via
-    nsw_delete, tombstones append), keyed on the base key plus the
-    drop-rule material and published by heavy.build_once."""
+    nsw_delete, tombstones append), keyed on the embedding AND
+    document corpus identities (the drop set comes from the documents)
+    and published by heavy.build_once."""
 
     def build(tmp: str) -> None:
         hnsw_store_for(spark, sf_dir).copy_base(tmp)(
             dedup_drop_batch(spark, sf_dir), 0
         )
 
-    store = _hnsw_store("unx", sf_dir, _unindex_material(sf_dir))
+    store = _hnsw_store(
+        "unx", sf_dir, corpus_file_identity(sf_dir, "documents")
+    )
     return build_once(store, build, _hnsw_monitor)
 
 
 def pq_unindex_store_for(spark: SparkSession, sf_dir: str):
     """The post-UNINDEX compressed store: the base pq store's snapshot
     with the SAME dedup drop batch folded as batch 0 (codes untouched —
-    tombstones mask at scan), keyed on the base key plus the drop-rule
-    material."""
+    tombstones mask at scan), keyed like hnsw_unindex_store_for."""
 
     def build(tmp: str) -> None:
         pq_store_for(spark, sf_dir).copy_base(tmp)(
             dedup_drop_batch(spark, sf_dir), 0
         )
 
-    store = _pq_store("unx", sf_dir, _unindex_material(sf_dir))
+    store = _pq_store(
+        "unx", sf_dir, corpus_file_identity(sf_dir, "documents")
+    )
     return build_once(store, build, _pq_monitor)
 
 

@@ -32,10 +32,12 @@ image_dedup.py append-log conventions, one store each):
 
 Replay idempotence follows streaming/merge.py exactly: the seed
 snapshot from ``init`` lives at the sentinel ``batch_id=-1``; every
-batch reads the adjacency snapshot and the vector partitions STRICTLY
-BEFORE its own id and overwrites its own partitions, so a crashed
-batch re-derives byte-identical state. Reading an uninitialized or
-pruned-past store raises loudly (the r9-ADVICE contract).
+batch reads STRICTLY BEFORE its own id — the adjacency through
+heavy.read_latest, the vector and tombstone logs through heavy.read_log
+— and overwrites its own partitions, so a crashed batch re-derives
+byte-identical state. Reading an uninitialized or pruned-past store
+raises loudly (the r9-ADVICE contract); only the tombstone log may be
+absent (no delete has run yet).
 
 Insert rule per micro-batch (operators/llm.nsw_insert — the SAME
 operator the batch query q_sim_nsw_insert registers and the DuckDB
@@ -84,12 +86,7 @@ from ..operators.llm import (
     nsw_insert,
 )
 from ..plans.llm_ops import NSW_GRAPH_KW  # one source of truth
-from .heavy import (
-    partition_ids,
-    partitions_before,
-    prune_partitions,
-    split_ops,
-)
+from .heavy import prune_partitions, read_latest, read_log, split_ops
 
 _ADJ_SCHEMA = "layer INT, src BIGINT, dst BIGINT, dist_q BIGINT"
 
@@ -141,43 +138,24 @@ class ANNIndexMonitor:
             )
         return ANNIndexMonitor(dst)
 
-    def _read_adj(self, spark, batch_id: int) -> DataFrame:
-        """Latest adjacency snapshot strictly BEFORE ``batch_id``.
-        Uninitialized or pruned-past stores raise (streaming/merge.py
-        contract: probing a missing graph would silently index
-        nothing)."""
-        bids = partition_ids(spark, self._path("adj"))
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
-            raise ValueError(
-                f"ann index: no adjacency snapshot before batch "
-                f"{batch_id} (have {sorted(bids)}; call init first)"
-            )
-        part = os.path.join(self._path("adj"), f"batch_id={max(prior)}")
-        return spark.read.schema(_ADJ_SCHEMA).parquet(part)
+    def adjacency(self, spark, after_batch_id: int) -> DataFrame:
+        """(layer, src, dst, dist_q): the adjacency snapshot as of
+        after ``after_batch_id``. Uninitialized or pruned-past stores
+        raise (streaming/merge.py contract: probing a missing graph
+        would silently index nothing)."""
+        return read_latest(
+            spark, self._path("adj"), _ADJ_SCHEMA, after_batch_id + 1,
+            "adjacency snapshot of the ann index", required=True,
+        )
 
-    def _read_vecs(self, spark, batch_id: int) -> DataFrame:
-        """Every indexed vector from partitions strictly BEFORE
-        ``batch_id`` — the append-only log read that keeps a replayed
-        batch from seeing its own or later arrivals."""
-        parts = partitions_before(spark, self._path("vecs"), batch_id)
-        if not parts:
-            bids = partition_ids(spark, self._path("vecs"))
-            raise ValueError(
-                f"ann index: no vector partitions before batch "
-                f"{batch_id} (have {sorted(bids)}; call init first)"
-            )
-        return spark.read.parquet(*parts).select("vec_id", "embedding")
-
-    def _read_tombs(self, spark, batch_id: int) -> DataFrame:
-        """Every tombstoned vec_id from partitions strictly BEFORE
-        ``batch_id``. Unlike adj/vecs, an absent tombstone log is a
-        VALID state (no delete has ever run), not an error — it reads
-        as the empty mask."""
-        parts = partitions_before(spark, self._path("tombs"), batch_id)
-        if not parts:
-            return spark.createDataFrame([], "vec_id BIGINT")
-        return spark.read.schema("vec_id BIGINT").parquet(*parts)
+    def tombs(self, spark, after_batch_id: int) -> DataFrame:
+        """(vec_id): every id tombstoned as of after ``after_batch_id``.
+        Unlike adj/vecs, an absent tombstone log is a VALID state (no
+        delete has ever run) — it reads as the empty mask."""
+        return read_log(
+            spark, self._path("tombs"), "vec_id BIGINT", after_batch_id + 1,
+            "ann index tombstones",
+        )
 
     def _state(self, spark, batch_id: int):
         """(vecs, adj0, adj1, tombs) strictly BEFORE ``batch_id``: the
@@ -185,11 +163,12 @@ class ANNIndexMonitor:
         (src, dst, dist_q) adjacency of layer 0 and layer 1, and the
         tombstoned ids — the one store read every fold and every
         search starts from."""
-        adj = self._read_adj(spark, batch_id)
-        tombs = self._read_tombs(spark, batch_id)
-        vecs = self._read_vecs(spark, batch_id).join(
-            tombs, "vec_id", "left_anti"
-        )
+        adj = self.adjacency(spark, batch_id - 1)
+        tombs = self.tombs(spark, batch_id - 1)
+        vecs = read_log(
+            spark, self._path("vecs"), None, batch_id,
+            "vector partitions of the ann index", required=True,
+        ).select("vec_id", "embedding").join(tombs, "vec_id", "left_anti")
         adj0 = adj.filter(F.col("layer") == 0).drop("layer")
         adj1 = adj.filter(F.col("layer") == 1).drop("layer")
         return vecs, adj0, adj1, tombs
@@ -201,7 +180,7 @@ class ANNIndexMonitor:
         vecs, adj0, adj1, tombs = self._state(spark, batch_id)
         dels, arrivals = split_ops(batch)
         # re-inserting a previously tombstoned vec_id is UNSUPPORTED
-        # (the id is dead forever — _read_tombs masks it on every
+        # (the id is dead forever — tombs() masks it on every
         # read): folding such an arrival in would create dangling
         # adjacency edges to a vector that can never be served, so the
         # unsupported state is refused loudly instead of silently

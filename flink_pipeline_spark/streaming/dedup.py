@@ -21,11 +21,13 @@ Two streaming dedup regimes exist and they are different tools:
 
 Replay idempotence: every write (decisions and the three store
 tables) lands in a ``batch_id=N`` partition directory with OVERWRITE
-semantics, and every store read EXCLUDES the current batch's own
-partition — so a batch re-run after a crash probes the store exactly
-as it stood before the batch and re-derives byte-identical decisions
-instead of matching its own half-written rows (the classic
-foreachBatch at-least-once pitfall).
+semantics, and every store read is heavy.read_log — the union of the
+partitions STRICTLY BEFORE the current batch — so a batch re-run
+after a crash probes the store exactly as it stood before the batch
+and re-derives byte-identical decisions instead of matching its own
+half-written rows (the classic foreachBatch at-least-once pitfall).
+Only a store with no earlier partition reads as empty; a corrupt
+partition fails the batch (ADVICE r7).
 
 Per-batch cost: the signature store is left-semi-joined down to the
 buckets the batch actually touches BEFORE the bucket aggregation
@@ -46,7 +48,6 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from ..operators.llm import (
     MAX_LSH_BUCKET,
@@ -55,6 +56,7 @@ from ..operators.llm import (
     lsh_band_signatures,
     neardup_probe,
 )
+from .heavy import read_log
 
 
 class NearDupIngest:
@@ -84,45 +86,22 @@ class NearDupIngest:
     def _store(self, kind: str) -> str:
         return os.path.join(self.store_dir, kind)
 
-    def _read_store(
-        self, spark, kind: str, schema: str, batch_id: int
-    ) -> DataFrame:
-        """The store as it stood BEFORE ``batch_id``: partition
-        discovery over the per-batch dirs, minus the current batch's
-        own partition (crash-replay idempotence).
-
-        Only a MISSING store path maps to the empty frame (the first
-        trigger's legitimate state). Every other read failure —
-        corrupt parquet, transient I/O, permissions — re-raises so a
-        degraded store fails the batch; swallowing it would silently
-        classify standing duplicates as 'keep', commit the wrong
-        decisions, AND index the dups permanently (ADVICE r7)."""
-        path = self._store(kind)
-        try:
-            df = spark.read.parquet(path)
-        except AnalysisException as e:
-            cond = (
-                e.getCondition() if hasattr(e, "getCondition")
-                else getattr(e, "getErrorClass", lambda: None)()
-            )
-            if cond == "PATH_NOT_FOUND" or "Path does not exist" in str(e):
-                return spark.createDataFrame([], schema)
-            raise
-        return df.filter(F.col("batch_id") != batch_id).drop("batch_id")
-
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         docs = batch.select("doc_id", "text").persist()
 
-        digests = self._read_store(
-            spark, "digests", "doc_id BIGINT, dg STRING", batch_id
-        )
-        sig_store = self._read_store(
-            spark, "sigs", "doc_id BIGINT, band INT, sig STRING", batch_id
-        )
-        set_store = self._read_store(
-            spark, "sets", "doc_id BIGINT, s ARRAY<STRING>", batch_id
-        )
+        # the store as it stood BEFORE this batch (heavy.read_log):
+        # only a store with no earlier partition reads as empty — a
+        # corrupt partition fails the batch instead of classifying
+        # standing duplicates as 'keep' (ADVICE r7)
+        def store(kind: str, schema: str) -> DataFrame:
+            return read_log(
+                spark, self._store(kind), schema, batch_id, f"{kind} store"
+            )
+
+        digests = store("digests", "doc_id BIGINT, dg STRING")
+        sig_store = store("sigs", "doc_id BIGINT, band INT, sig STRING")
+        set_store = store("sets", "doc_id BIGINT, s ARRAY<STRING>")
 
         bdig = docs.select("doc_id", F.md5("text").alias("dg"))
         drop_exact = bdig.join(

@@ -38,6 +38,9 @@ cross-batch state, not per-key evolving state.
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
 
 from pyspark.sql import DataFrame
@@ -66,56 +69,103 @@ def partition_ids(spark, path: str) -> list[int]:
     return out
 
 
-def partitions_before(spark, path: str, batch_id: int) -> list[str]:
-    """Paths of the ``batch_id=B`` partitions under ``path`` with
-    B < ``batch_id`` — the append-log read rule that keeps a replayed
-    batch from seeing its own or later rows. [] when there are none;
-    each caller decides whether that is an error."""
-    return [
-        os.path.join(path, f"batch_id={b}")
-        for b in partition_ids(spark, path)
-        if b < batch_id
-    ]
-
-
 def read_latest(
-    spark, path: str, schema: str, batch_id: int, label: str
+    spark,
+    path: str,
+    schema: str | None,
+    before: int,
+    label: str,
+    required: bool = False,
 ) -> DataFrame:
     """The newest ``batch_id=B`` partition under ``path`` with
-    B < ``batch_id`` — the one snapshot-read rule of the summary
-    monitors (heavy hitters, Count-Min, KMV, quantile sketch): the
-    summary is a snapshot, not an append-only log. A missing or empty
-    store maps to an empty ``schema`` frame; a store whose surviving
-    partitions are ALL >= ``batch_id`` raises — pruning keeps only the
-    latest and one prior snapshot, so the requested history no longer
-    exists, and an empty frame would silently misreport it as
-    "nothing seen yet". Batch 0 nuance: a replayed batch 0
-    legitimately has no prior snapshot, and a non-empty store would
-    trip the raise — safe because Structured Streaming never replays
-    batch 0 after batch 1 commits (the checkpoint advances only on
-    commit), so surviving partitions at batch 0 can only mean the
-    store dir is being REUSED by a new stream, which gets its own
-    distinct error. ``label`` names the store in both errors. The
-    partition is selected by a driver-side FS listing (no historical-
-    partition scan) and read directly, so a monitor never races its
-    own prune; EXTERNAL concurrent readers listing the store root
-    must tolerate pruned partitions (set
-    spark.sql.files.ignoreMissingFiles for monitor reads)."""
+    B < ``before`` — the one snapshot-read rule: a snapshot store (the
+    summary monitors, the CDC base, the ANN adjacency) holds whole
+    versions, so a batch reads the last version strictly before its
+    own and a replayed batch re-derives byte-identical state.
+
+    Empty-store policy: a missing or empty store reads as an empty
+    ``schema`` frame, or raises ("call init first") when ``required``
+    — a store seeded by ``init`` that reads as empty would silently
+    merge into or probe nothing. A store whose surviving partitions
+    are ALL >= ``before`` always raises: pruning keeps only the latest
+    and one prior snapshot, so the requested history no longer exists,
+    and an empty frame would silently misreport it as "nothing seen
+    yet". Batch 0 nuance: in a store that ``init`` does not seed, a
+    non-empty store with nothing before batch 0 means the store dir is
+    being REUSED by a new stream (Structured Streaming never replays
+    batch 0 after batch 1 commits — the checkpoint advances only on
+    commit), which gets its own error.
+    ``label`` names what is read in every error. The partition is
+    selected by a driver-side FS listing (no historical-partition
+    scan) and read directly, so a monitor never races its own prune;
+    EXTERNAL concurrent readers listing the store root must tolerate
+    pruned partitions (set spark.sql.files.ignoreMissingFiles)."""
     bids = partition_ids(spark, path)
-    prior = [b for b in bids if b < batch_id]
+    prior = [b for b in bids if b < before]
     if not prior:
-        if bids:
-            hint = (
-                "store already populated at batch 0 — a new "
-                "stream must start from a fresh store dir"
-                if batch_id == 0
-                else f"no snapshot before batch {batch_id} "
-                "survives pruning"
+        if bids and before == 0 and not required:
+            raise ValueError(
+                f"no {label} before batch 0: store already populated "
+                "— a new stream must start from a fresh store dir "
+                f"(have {sorted(bids)})"
             )
-            raise ValueError(f"{label}: {hint} (have {sorted(bids)})")
-        return spark.createDataFrame([], schema)
-    part = os.path.join(path, f"batch_id={max(prior)}")
-    return spark.read.schema(schema).parquet(part)
+        if bids:
+            raise ValueError(
+                f"no {label} before batch {before} survives pruning "
+                f"(have {sorted(bids)})"
+            )
+        return _empty(spark, schema, bids, before, label, required)
+    return _read(spark, schema, [_part(path, max(prior))])
+
+
+def read_log(
+    spark,
+    path: str,
+    schema: str | None,
+    before: int,
+    label: str,
+    required: bool = False,
+) -> DataFrame:
+    """The union of every ``batch_id=B`` partition under ``path`` with
+    B < ``before`` — the one append-log read rule (index vectors,
+    codes, tokens, tombstones, dedup digests/signatures): batch N's
+    rows land in their own partition, so a batch reading strictly
+    before its own id never sees its own half-written or later rows,
+    and a crashed batch re-derives byte-identical state. The partitions
+    are listed on the driver and read directly — no partition
+    discovery, so no ``batch_id`` column and no AnalysisException to
+    sniff.
+
+    Empty-store policy: when no partition precedes ``before`` the read
+    is an empty ``schema`` frame, or raises ("call init first") when
+    ``required`` (a log ``init`` seeds at ``batch_id=-1``). Only that
+    case is empty: a corrupt or unreadable partition fails the job
+    that reads it, never reads as "nothing stored" — a degraded dedup
+    store must fail the batch rather than classify standing duplicates
+    as 'keep' and index them permanently."""
+    bids = partition_ids(spark, path)
+    parts = [_part(path, b) for b in sorted(bids) if b < before]
+    if not parts:
+        return _empty(spark, schema, bids, before, label, required)
+    return _read(spark, schema, parts)
+
+
+def _part(path: str, batch_id: int) -> str:
+    return os.path.join(path, f"batch_id={batch_id}")
+
+
+def _read(spark, schema: str | None, parts: list[str]) -> DataFrame:
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*parts)
+
+
+def _empty(spark, schema, bids, before, label, required) -> DataFrame:
+    if required:
+        raise ValueError(
+            f"no {label} before batch {before} "
+            f"(have {sorted(bids)}; call init first)"
+        )
+    return spark.createDataFrame([], schema)
 
 
 def prune_partitions(spark, path: str, keep_from: int) -> None:
@@ -132,25 +182,44 @@ def prune_partitions(spark, path: str, keep_from: int) -> None:
             fs.delete(hpath(os.path.join(path, f"batch_id={b}")), True)
 
 
-def store_key(module, *material) -> str:
-    """The cache key of a persisted index store: ``material`` (a base
-    store passes its corpus identity and build/serve constants; a
-    derived store passes its base store's key and its own material)
-    plus the FULL MODULE SOURCE of operators/llm and of the store
-    ``module`` — so editing ANY build rule, helper or constant
-    invalidates the cache instead of serving a stale index. Module
-    granularity over-invalidates (an unrelated edit costs one spurious
-    rebuild), the safe direction for a cache. The key never holds a
-    path of the cache root, so redirecting the root keeps every key.
-    md5 keys a cache path; it is not part of any query's math."""
-    import hashlib
-    import inspect
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-    from ..operators import llm
 
-    text = "\x00".join(
-        [*map(str, material), inspect.getsource(llm), inspect.getsource(module)]
-    )
+@functools.cache
+def package_digest(root: str = PACKAGE_ROOT) -> str:
+    """md5 over every ``*.py`` file under ``root`` (the package by
+    default), sorted by relative path, each hashed with its path —
+    computed once per process (~6 ms for the whole package). It is the
+    code identity of every persisted store: whatever a builder reaches
+    (plan helpers, operators, oracle text, constants), directly or
+    through attributes, lives in one of these files. The path is
+    relative, so a copy of the package digests the same."""
+    h = hashlib.md5()
+    for path in sorted(
+        glob.glob(os.path.join(root, "**", "*.py"), recursive=True),
+        key=lambda p: os.path.relpath(p, root),
+    ):
+        h.update(os.path.relpath(path, root).encode() + b"\x00")
+        with open(path, "rb") as f:
+            h.update(f.read() + b"\x00")
+    return h.hexdigest()
+
+
+def store_key(*material) -> str:
+    """The cache key of a persisted index store: ``material`` (the
+    corpus identity plus the store's own distinguishing arguments —
+    a kind, a name, a (mod, rem) slice) hashed with package_digest, so
+    editing ANY source file of the package invalidates every store
+    instead of serving a stale one (state identity follows code
+    identity, as Structured Streaming reuses a checkpoint only for a
+    compatible query). Package granularity over-invalidates — any edit
+    costs one rebuild per store — the safe direction for a cache.
+    Constants patched at runtime are NOT part of the key: a caller
+    that patches a build constant must patch the cache root too. The
+    key never holds a path of the cache root, so redirecting the root
+    keeps every key. md5 keys a cache path; it is not part of any
+    query's math."""
+    text = "\x00".join([*map(str, material), package_digest()])
     return hashlib.md5(text.encode()).hexdigest()[:16]
 
 

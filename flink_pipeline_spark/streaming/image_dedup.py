@@ -24,20 +24,21 @@ Batch-internal duplicates are deliberately NOT detected (the
 incremental convention: a batch self-dedups with the batch pair query
 first). Replay idempotence follows streaming/dedup.py exactly: every
 write lands in a ``batch_id=N`` partition with overwrite semantics
-and every store read excludes the current batch's own partition, so
-a crashed batch re-derives byte-identical decisions.
+and every store read is heavy.read_log (the partitions strictly
+before the current batch), so a crashed batch re-derives
+byte-identical decisions.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.multimodal import ahash_bands
+from .heavy import read_log
 
 MAX_HAMMING = 3  # the q_dedup_image_phash lossless-blocking threshold
 
@@ -57,35 +58,20 @@ class ImageDedupIngest:
     def _store(self, kind: str) -> str:
         return os.path.join(self.store_dir, kind)
 
-    def _read_store(
-        self, spark, kind: str, schema: str, batch_id: int
-    ) -> DataFrame:
-        """The store as it stood BEFORE ``batch_id``. Only a missing
-        path maps to empty — any other read failure re-raises (the
-        streaming/dedup.py ADVICE-r7 contract: a degraded store must
-        fail the batch, not silently classify dups as keep)."""
-        try:
-            df = spark.read.parquet(self._store(kind))
-        except AnalysisException as e:
-            cond = (
-                e.getCondition()
-                if hasattr(e, "getCondition")
-                else getattr(e, "getErrorClass", lambda: None)()
-            )
-            if cond == "PATH_NOT_FOUND" or "Path does not exist" in str(e):
-                return spark.createDataFrame([], schema)
-            raise
-        return df.filter(F.col("batch_id") != batch_id).drop("batch_id")
-
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         imgs = batch.select("file", "content").persist()
 
-        digests = self._read_store(
-            spark, "digests", "file STRING, dg STRING", batch_id
+        # the store as it stood BEFORE this batch (heavy.read_log, the
+        # streaming/dedup.py ADVICE-r7 contract: a corrupt partition
+        # fails the batch, only an empty store reads as empty)
+        digests = read_log(
+            spark, self._store("digests"), "file STRING, dg STRING",
+            batch_id, "digests store",
         )
-        band_store = self._read_store(
-            spark, "bands", "file STRING, blk BIGINT, key BIGINT", batch_id
+        band_store = read_log(
+            spark, self._store("bands"), "file STRING, blk BIGINT, key BIGINT",
+            batch_id, "bands store",
         )
 
         bdig = imgs.select("file", F.md5("content").alias("dg"))

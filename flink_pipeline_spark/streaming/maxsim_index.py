@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.llm import ivf_assign
-from .heavy import partition_ids, split_ops
+from .heavy import read_log, split_ops
 
 _TOKEN_SCHEMA = "vec_id BIGINT, cell BIGINT"
 
@@ -79,18 +79,10 @@ class MaxSimIndexMonitor:
         """(vec_id, cell): the token assignment log as of after
         ``after_batch_id`` — the posting/nomination table both serving
         disciplines scan."""
-        bids = partition_ids(spark, self._path("tokens"))
-        prior = [b for b in bids if b <= after_batch_id]
-        if not prior:
-            raise ValueError(
-                f"maxsim index: no token partitions at or before batch "
-                f"{after_batch_id} (have {sorted(bids)}; call init first)"
-            )
-        parts = [
-            os.path.join(self._path("tokens"), f"batch_id={b}")
-            for b in prior
-        ]
-        return spark.read.schema(_TOKEN_SCHEMA).parquet(*parts)
+        return read_log(
+            spark, self._path("tokens"), _TOKEN_SCHEMA, after_batch_id + 1,
+            "token partitions of the maxsim index", required=True,
+        )
 
     # -- the foreachBatch fold ----------------------------------------
 

@@ -17,12 +17,13 @@ delete). Malformed ops fail loudly inside merge_into (ADVICE r9).
 
 Store layout and replay idempotence follow streaming/heavy.py: each
 batch writes the FULL merged snapshot into a ``batch_id=N`` partition
-with overwrite semantics, reads take the latest partition strictly
-BEFORE the current batch (a replayed batch re-derives a byte-identical
-snapshot instead of double-applying), the initial base seeds the
-sentinel ``batch_id=-1`` partition, and partitions older than N-1 are
-pruned after a successful write. Reads of pruned history raise (the
-r9-ADVICE contract, via heavy.partition_ids).
+with overwrite semantics, the initial base seeds the sentinel
+``batch_id=-1`` partition, and partitions older than N-1 are pruned
+after a successful write. Every read is heavy.read_latest (the latest
+partition strictly BEFORE the current batch, so a replayed batch
+re-derives a byte-identical snapshot instead of double-applying) with
+the required-store policy: an uninitialized store and a read of pruned
+history both raise (the r9-ADVICE contract).
 
 Scale: the merge itself is ONE full-outer key join per trigger — the
 change side is a micro-batch (tiny; AQE broadcasts it), the base side
@@ -45,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.merge import merge_into
-from .heavy import partition_ids, prune_partitions
+from .heavy import prune_partitions, read_latest
 
 
 class CDCApplyMonitor:
@@ -75,23 +76,9 @@ class CDCApplyMonitor:
         part = os.path.join(self._path(), "batch_id=-1")
         base.write.mode("overwrite").parquet(part)
 
-    def _read_latest(self, spark, batch_id: int) -> DataFrame:
-        """Latest snapshot strictly BEFORE ``batch_id``. An uninit'd
-        store raises (merging into nothing would silently drop the
-        base contract); so does a read of pruned history."""
-        bids = partition_ids(spark, self._path())
-        prior = [b for b in bids if b < batch_id]
-        if not prior:
-            raise ValueError(
-                f"cdc base: no snapshot before batch {batch_id} "
-                f"(have {sorted(bids)}; call init(base) first)"
-            )
-        part = os.path.join(self._path(), f"batch_id={max(prior)}")
-        return spark.read.parquet(part)
-
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        base = self._read_latest(spark, batch_id)
+        base = self._read(spark, batch_id)
         payload = [c for c in base.columns if c not in self.keys]
         # last image per key wins: rank by seq desc with a full
         # deterministic tiebreak so a replayed/re-partitioned batch
@@ -113,7 +100,15 @@ class CDCApplyMonitor:
 
     def table(self, spark, after_batch_id: int) -> DataFrame:
         """The merged base as of AFTER ``after_batch_id`` (lazy)."""
-        return self._read_latest(spark, after_batch_id + 1)
+        return self._read(spark, after_batch_id + 1)
+
+    def _read(self, spark, before: int) -> DataFrame:
+        # an uninit'd store raises: merging into nothing would
+        # silently drop the base contract
+        return read_latest(
+            spark, self._path(), None, before, "snapshot of the cdc base",
+            required=True,
+        )
 
 
 def start_cdc_apply_stream(

@@ -50,7 +50,7 @@ from ..operators.llm import (
     ivfpq_scan,
     pq_code_batch,
 )
-from .heavy import partition_ids, partitions_before, split_ops
+from .heavy import read_log, split_ops
 
 _CODE_SCHEMA = "vec_id BIGINT, sub INT, code INT, cell BIGINT"
 
@@ -126,25 +126,31 @@ class PQIndexMonitor:
             spark.read.parquet(self._path("cents.parquet")),
         )
 
-    def _read_codes(self, spark, batch_id: int) -> DataFrame:
-        parts = partitions_before(spark, self._path("codes"), batch_id)
-        if not parts:
-            bids = partition_ids(spark, self._path("codes"))
-            raise ValueError(
-                f"pq index: no code partitions before batch {batch_id} "
-                f"(have {sorted(bids)}; call init first)"
-            )
-        return spark.read.schema(_CODE_SCHEMA).parquet(*parts)
+    def codes(self, spark, after_batch_id: int) -> DataFrame:
+        """(vec_id, sub, code, cell): every code row as of after
+        ``after_batch_id``, tombstoned rows included."""
+        return read_log(
+            spark, self._path("codes"), _CODE_SCHEMA, after_batch_id + 1,
+            "code partitions of the pq index", required=True,
+        )
 
-    def _read_tombs(self, spark, batch_id: int) -> DataFrame:
-        """Every tombstoned vec_id from partitions strictly BEFORE
-        ``batch_id`` — the streaming/ann_index.py contract: an absent
-        tombstone log is a valid state (no delete has ever run), read
-        as the empty mask."""
-        parts = partitions_before(spark, self._path("tombs"), batch_id)
-        if not parts:
-            return spark.createDataFrame([], "vec_id BIGINT")
-        return spark.read.schema("vec_id BIGINT").parquet(*parts)
+    def tombs(self, spark, after_batch_id: int) -> DataFrame:
+        """(vec_id): every id tombstoned as of after ``after_batch_id``
+        — the streaming/ann_index.py contract: an absent tombstone log
+        is a valid state (no delete has ever run), read as the empty
+        mask."""
+        return read_log(
+            spark, self._path("tombs"), "vec_id BIGINT", after_batch_id + 1,
+            "pq index tombstones",
+        )
+
+    def live_codes(self, spark, after_batch_id: int) -> DataFrame:
+        """codes() read through the tombstone mask (one anti-join on
+        the hot tier) — what every scan and the offline rewrite read,
+        so a deleted vector can never be shortlisted."""
+        return self.codes(spark, after_batch_id).join(
+            self.tombs(spark, after_batch_id), "vec_id", "left_anti"
+        )
 
     # -- the foreachBatch fold ----------------------------------------
 
@@ -168,7 +174,7 @@ class PQIndexMonitor:
         # graph store, the probe unions this batch's own dels with the
         # prior tombstone log so a same-batch delete+insert of one
         # vec_id is refused too (ADVICE r13).
-        tombs = self._read_tombs(spark, batch_id)
+        tombs = self.tombs(spark, batch_id - 1)
         if not arrivals.join(
             tombs.unionByName(dels), "vec_id", "semi"
         ).isEmpty():
@@ -222,10 +228,7 @@ class PQIndexMonitor:
         Returns a monitor over ``out_dir`` (callers build it as a
         private dir that heavy.build_once publishes)."""
         cb, cents = self._read_artifacts(spark)
-        tombs = self._read_tombs(spark, after_batch_id + 1)
-        codes = self._read_codes(spark, after_batch_id + 1).join(
-            tombs, "vec_id", "left_anti"
-        )
+        codes = self.live_codes(spark, after_batch_id)
         cb.write.mode("overwrite").parquet(os.path.join(out_dir, "cb.parquet"))
         cents.write.mode("overwrite").parquet(
             os.path.join(out_dir, "cents.parquet")
@@ -253,10 +256,7 @@ class PQIndexMonitor:
         shortlisted — the never-serve-deleted contract on the
         compressed family."""
         cb, cents = self._read_artifacts(spark)
-        tombs = self._read_tombs(spark, after_batch_id + 1)
-        codes = self._read_codes(spark, after_batch_id + 1).join(
-            tombs, "vec_id", "left_anti"
-        )
+        codes = self.live_codes(spark, after_batch_id)
         return ivfpq_scan(
             codes,
             cb,
@@ -278,10 +278,7 @@ class PQIndexMonitor:
         exact-verify survivors against the cold full-vector tier
         (the q_sim_pq_radius two-stage radius discipline)."""
         cb, cents = self._read_artifacts(spark)
-        tombs = self._read_tombs(spark, after_batch_id + 1)
-        codes = self._read_codes(spark, after_batch_id + 1).join(
-            tombs, "vec_id", "left_anti"
-        )
+        codes = self.live_codes(spark, after_batch_id)
         return ivfpq_radius_scan(
             codes,
             cb,

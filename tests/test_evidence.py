@@ -134,3 +134,24 @@ def test_row_passed_requires_affirmative_flag():
     assert evidence._row_passed(
         {"rows_match": True, "schema_match": None, "hash_match": None, "err": None}
     )
+
+
+def test_registry_fingerprints_once_per_process(monkeypatch):
+    """query_fns()/oracle_sqls() order by evidence on every call, but
+    the order is computed once per process: fingerprinting every query
+    takes ~1 s, so a second call must add no fingerprint."""
+    calls = []
+    real = evidence.fingerprint
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(evidence, "fingerprint", counting)
+    registry._evidence_rank.cache_clear()
+    first = registry.query_fns()
+    n_first = len(calls)
+    assert n_first > 0
+    assert registry.query_fns() == first
+    registry.oracle_sqls()
+    assert len(calls) == n_first

@@ -13,7 +13,7 @@ from flink_pipeline_spark.plans import query_fns
 
 from .conftest import SF_DIR
 
-QUERIES = query_fns()  # one registry build: each call re-fingerprints
+QUERIES = query_fns()  # one registry build
 
 
 def _plan(spark, name: str) -> str:

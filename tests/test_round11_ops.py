@@ -143,7 +143,7 @@ def _mon(tmp_path, name="store"):
 def _adj_rows(mon, spark, after):
     return sorted(
         (r.layer, r.src, r.dst, r.dist_q)
-        for r in mon._read_adj(spark, after + 1).collect()
+        for r in mon.adjacency(spark, after).collect()
     )
 
 
@@ -233,7 +233,6 @@ def test_ann_index_crash_replay_idempotent(spark, tmp_path):
     assert _search_rows(mon, spark, queries, 1) == search_after
 
 
-@pytest.mark.slow  # 39s
 def test_ann_index_guards(spark, tmp_path):
     """Uninitialized store raises on insert AND search; reading
     pruned adjacency history raises; the vector log is never pruned."""
@@ -251,7 +250,7 @@ def test_ann_index_guards(spark, tmp_path):
     mon(empty, 2)
     # batch_id=-1 and 0 adjacency snapshots are pruned now
     with pytest.raises(ValueError, match="no adjacency snapshot"):
-        mon._read_adj(spark, 0)
+        mon.adjacency(spark, -1)
     # the vector log keeps every partition (it IS the index's storage)
     from flink_pipeline_spark.streaming.heavy import partition_ids
 

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from flink_pipeline_spark.catalog import load_table
@@ -224,14 +223,14 @@ def test_ann_index_delete_crash_replay_idempotent(spark, tmp_path):
     mon(del_batch, 1)
     adj_after = _adj_rows(mon, spark, 1)
     tombs_after = sorted(
-        r.vec_id for r in mon._read_tombs(spark, 2).collect()
+        r.vec_id for r in mon.tombs(spark, 1).collect()
     )
     search_after = _search_rows(mon, spark, queries, 1)
     assert tombs_after, "delete batch wrote no tombstones"
     mon(del_batch, 1)  # crash replay
     assert _adj_rows(mon, spark, 1) == adj_after
     assert sorted(
-        r.vec_id for r in mon._read_tombs(spark, 2).collect()
+        r.vec_id for r in mon.tombs(spark, 1).collect()
     ) == tombs_after
     assert _search_rows(mon, spark, queries, 1) == search_after
     assert sorted(partition_ids(spark, mon._path("tombs"))) == [0, 1]
@@ -300,7 +299,6 @@ def test_drift_projection_catches_thin_shift_per_dim_misses(spark, tmp_path):
     assert len(null) == 1 and not null[0].drifted, null
 
 
-@pytest.mark.slow  # 24s
 def test_filtered_search_contract_and_tombstone_composition(spark, tmp_path):
     """search_filtered returns ONLY predicate matches, and composes
     with the delete lifecycle: after a delete batch that tombstones
@@ -418,7 +416,7 @@ def test_pq_index_stream_equals_batch(spark, tmp_path):
             pq_code_batch(grp.select("vec_id", "embedding"), cb, seeds)
         )
     want_rows = sorted(map(tuple, want_codes.collect()))
-    got_rows = sorted(map(tuple, mon._read_codes(spark, 2).collect()))
+    got_rows = sorted(map(tuple, mon.codes(spark, 1).collect()))
     assert got_rows == want_rows and got_rows
 
     want_search = sorted(
@@ -453,10 +451,10 @@ def test_pq_index_crash_replay_and_guards(spark, tmp_path):
         mon.adc_topk(spark, queries, -1, k=3)
     mon.init(base, seeds)
     mon(arrivals, 0)
-    after = sorted(map(tuple, mon._read_codes(spark, 1).collect()))
+    after = sorted(map(tuple, mon.codes(spark, 0).collect()))
     served = sorted(map(tuple, mon.adc_topk(spark, queries, 0, k=3).collect()))
     mon(arrivals, 0)  # crash replay
-    assert sorted(map(tuple, mon._read_codes(spark, 1).collect())) == after
+    assert sorted(map(tuple, mon.codes(spark, 0).collect())) == after
     assert (
         sorted(map(tuple, mon.adc_topk(spark, queries, 0, k=3).collect()))
         == served
@@ -508,7 +506,7 @@ def test_pq_index_delete_mask_and_replay(spark, tmp_path):
     mon = _pq_mon(tmp_path, "pqdel")
     mon.init(base, seeds)
     # the init partition (everything strictly before batch 0)
-    before = sorted(map(tuple, mon._read_codes(spark, 0).collect()))
+    before = sorted(map(tuple, mon.codes(spark, -1).collect()))
     mixed = dels.join(emb, "vec_id").select(
         "vec_id", "embedding", F.lit("delete").alias("op")
     ).unionByName(
@@ -517,18 +515,18 @@ def test_pq_index_delete_mask_and_replay(spark, tmp_path):
     mon(mixed, 0)
     # append-only: the init partition is untouched by the delete (the
     # mask does the work); batch 0 only ADDED the arrival codes
-    assert sorted(map(tuple, mon._read_codes(spark, 0).collect())) == before
+    assert sorted(map(tuple, mon.codes(spark, -1).collect())) == before
     n_arr = arrivals.count()
     from flink_pipeline_spark.streaming.pq_index import PQIndexMonitor  # noqa: F401
 
-    assert mon._read_codes(spark, 1).count() == len(before) + n_arr * mon.m
+    assert mon.codes(spark, 0).count() == len(before) + n_arr * mon.m
     served = mon.adc_topk(spark, queries, 0, k=5).collect()
     assert served and not {r.neighbor_id for r in served} & dead
-    tombs = sorted(r.vec_id for r in mon._read_tombs(spark, 1).collect())
+    tombs = sorted(r.vec_id for r in mon.tombs(spark, 0).collect())
     assert set(tombs) == dead
     mon(mixed, 0)  # crash replay
     assert sorted(
-        r.vec_id for r in mon._read_tombs(spark, 1).collect()
+        r.vec_id for r in mon.tombs(spark, 0).collect()
     ) == tombs
     assert sorted(
         map(tuple, mon.adc_topk(spark, queries, 0, k=5).collect())

@@ -76,7 +76,7 @@ def test_unindex_stores_are_serve_only_after_first_build(spark):
     assert m1.store_dir == m2.store_dir
     assert s1 and stamp(m2.store_dir) == s1, "unindex store rebuilt"
     tombs = {
-        r.vec_id for r in m1._read_tombs(spark, 1).collect()
+        r.vec_id for r in m1.tombs(spark, 0).collect()
     }
     assert tombs == _drop_ids(spark)
     p1 = pq_unindex_store_for(spark, SMALL_SF)
@@ -84,7 +84,7 @@ def test_unindex_stores_are_serve_only_after_first_build(spark):
     p2 = pq_unindex_store_for(spark, SMALL_SF)
     assert p1.store_dir == p2.store_dir
     assert ps1 and stamp(p2.store_dir) == ps1, "pq unindex store rebuilt"
-    ptombs = {r.vec_id for r in p1._read_tombs(spark, 1).collect()}
+    ptombs = {r.vec_id for r in p1.tombs(spark, 0).collect()}
     assert ptombs == _drop_ids(spark)
 
 
@@ -131,13 +131,13 @@ def test_pq_rewrite_equals_masked_serve(spark):
     # no tombstone log in the rewritten store — the bytes are gone
     assert not os.path.isdir(os.path.join(rewritten.store_dir, "tombs"))
     # survivor row-count invariant: rewritten codes == masked codes
-    n_rewritten = rewritten._read_codes(spark, 0).count()
+    n_rewritten = rewritten.codes(spark, -1).count()
     n_masked = (
-        masked._read_codes(spark, 1)
-        .join(masked._read_tombs(spark, 1), "vec_id", "left_anti")
+        masked.codes(spark, 0)
+        .join(masked.tombs(spark, 0), "vec_id", "left_anti")
         .count()
     )
-    n_unmasked = masked._read_codes(spark, 1).count()
+    n_unmasked = masked.codes(spark, 0).count()
     assert n_rewritten == n_masked < n_unmasked
 
 

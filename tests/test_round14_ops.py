@@ -75,15 +75,15 @@ def test_pq_refresh_fold_stream_equals_batch_and_replay(spark, tmp_path):
     split.init(dr.filter(~is_fold), seeds)
     fold = dr.filter(is_fold).select("vec_id", "embedding")
     split(fold, 0)
-    got = sorted(map(tuple, split._read_codes(spark, 1).collect()))
+    got = sorted(map(tuple, split.codes(spark, 0).collect()))
 
     full = _pq_monitor(str(tmp_path / "full"))
     full.init(dr, seeds)
-    want = sorted(map(tuple, full._read_codes(spark, 0).collect()))
+    want = sorted(map(tuple, full.codes(spark, -1).collect()))
     assert got == want and got
 
     split(fold, 0)  # crash replay: re-derives its own partition
-    assert sorted(map(tuple, split._read_codes(spark, 1).collect())) == want
+    assert sorted(map(tuple, split.codes(spark, 0).collect())) == want
 
 
 def test_refresh_refuses_undrifted_corpus(spark, tmp_path):
@@ -189,8 +189,8 @@ def test_rewrite_trigger_decisions_and_hd_compaction(spark):
     )
     assert got_m == got_r and got_m
     assert not os.path.isdir(os.path.join(rewritten.store_dir, "tombs"))
-    n_rewritten = rewritten._read_codes(spark, 0).count()
-    n_unmasked = masked._read_codes(spark, 1).count()
+    n_rewritten = rewritten.codes(spark, -1).count()
+    n_unmasked = masked.codes(spark, 0).count()
     # the HD slice tombstones ~half the corpus: the compacted log
     # must have lost a large fraction, not a sliver
     assert n_rewritten < 0.7 * n_unmasked
