@@ -15,7 +15,7 @@ import pytest
 from flink_pipeline_spark.streaming import heavy
 from flink_pipeline_spark.streaming.heavy import PACKAGE_ROOT, package_digest
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
+from .conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
