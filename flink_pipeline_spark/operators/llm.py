@@ -466,6 +466,94 @@ def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def topk_cut(
+    df: DataFrame, key, score: str, item: str, k: int, desc: bool = False
+) -> DataFrame:
+    """The one per-key top-k cut of every vector search: ``df``'s rows
+    numbered within each ``key`` (a column name or a list of them) by
+    ``score`` ascending (descending with ``desc``), ties to the smaller
+    ``item``, keeping ``rank <= k``. The ``rank`` column stays for the
+    caller's select. This is the global step of REPOSE's shape: the
+    candidates are already local to the key (a broadcast probe or
+    shortlist), and the window keeps only the per-key winners. The tie
+    rule is the oracles' ``ORDER BY score, item``, so both engines keep
+    the same rows."""
+    order = F.col(score).desc() if desc else F.col(score)
+    w = Window.partitionBy(key).orderBy(order, F.col(item))
+    return df.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _query_side(queries: DataFrame) -> DataFrame:
+    """(query_id, eq, nq): the broadcast query side of a cosine search."""
+    return with_norm(queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("eq"),
+        F.col("norm").alias("nq"),
+    )
+
+
+def _cells(centroids: DataFrame) -> DataFrame:
+    """(cell, ec, nc): the centroid side of every IVF quantizer step."""
+    return with_norm(centroids).select(
+        F.col("vec_id").alias("cell"),
+        F.col("embedding").alias("ec"),
+        F.col("norm").alias("nc"),
+    )
+
+
+def _cell_cos(vec: str, norm: str):
+    """Cosine of the ``vec`` column (its norm in ``norm``) against a
+    ``_cells`` row — ranked only after round_agg (round-before-rank:
+    sub-ulp evaluation-order differences between engines must not
+    flip a cell)."""
+    return F.expr(DOT_SQL.format(a=vec, b="ec")) / (F.col(norm) * F.col("nc"))
+
+
+def ivf_probe(
+    rows: DataFrame,
+    centroids: DataFrame,
+    n: int,
+    key: str = "query_id",
+    vec: str = "eq",
+    norm: str = "nq",
+    on: str | None = None,
+) -> DataFrame:
+    """``rows`` joined to each row's ``n`` best IVF cells — the one
+    centroid probe. Cells rank by the round_agg'd cosine descending,
+    ties to the smaller cell, per ``key``; the result is (``key``,
+    ``cell``, the other ``rows`` columns, the centroid vector ``ec``).
+    The centroid side broadcasts; ``on`` narrows the candidate cells to
+    those a row already names (two-level routing), otherwise every
+    cell is ranked. The DuckDB twin is ``_assign_duck(..., rn)`` with
+    ``rn <= n``."""
+    cands = rows.join(F.broadcast(_cells(centroids)), on)
+    rest = [c for c in cands.columns if c not in (key, "cell", "nc")]
+    scored = cands.select(
+        key, "cell", *rest, round_agg(_cell_cos(vec, norm)).alias("qcos")
+    )
+    return topk_cut(scored, key, "qcos", "cell", n, desc=True).drop(
+        "qcos", "rank"
+    )
+
+
+def _pinned_width(a: DataFrame, b: DataFrame, keys, floor: int = 0):
+    """Both sides of a pair-scoring join repartitioned on the join
+    ``keys`` to max(defaultParallelism, ``floor``) partitions. AQE
+    coalesces post-shuffle partitions by BYTES, and the replicated sides
+    of an O(n^2) interpreted-fold stage (the one compute-bound stage of
+    the embed family, 8->32-core scaling ratio 2.1) are only a few MB at
+    calibration scale, so AQE packed that stage onto 2-3 tasks while
+    the other cores idled. A numbered repartition is the per-stage fix
+    (a global AQE floor regressed the iterative tail): the join reuses
+    the exchange (same key, same width, no extra shuffle), and AQE never
+    coalesces a user-numbered repartition. The width follows the
+    cluster's core count, not a local[32] constant."""
+    n = max(a.sparkSession.sparkContext.defaultParallelism, floor)
+    return a.repartition(n, *keys), b.repartition(n, *keys)
+
+
 def cosine_pairs(emb: DataFrame, threshold: float, n_blocks: int = 16) -> DataFrame:
     """(vec_a, vec_b, cos): ALL unordered pairs with cosine >= threshold
     — exact, no recall loss.
@@ -517,21 +605,8 @@ def cosine_pairs(emb: DataFrame, threshold: float, n_blocks: int = 16) -> DataFr
         .drop("blk")
     )
     cos = F.expr(DOT_SQL.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    # Pin the pair-scoring stage's width (r14 VERDICT item 1, guide
-    # §2.2/§2.5): AQE coalesces post-shuffle partitions by BYTES, and
-    # the replicated sides are only a few MB at calibration scale, so
-    # the O(n^2) interpreted-fold stage — the one genuinely
-    # compute-bound stage in the embed family (8->32-core scaling
-    # ratio 2.1) — was coalesced onto 2-3 tasks while 29 cores idled.
-    # An explicit numbered repartition on the join key is the per-stage
-    # fix the r14 A/B adjudicated for (the global AQE floor regressed
-    # the iterative tail): the join reuses the exchange (same key, same
-    # width — no extra shuffle), and AQE never coalesces a
-    # user-numbered repartition. Width = defaultParallelism, i.e. the
-    # cluster's core count — scale-adaptive, not a local[32] constant.
-    n_part = max(emb.sparkSession.sparkContext.defaultParallelism, n_blocks)
-    a = a.repartition(n_part, "bi", "bj")
-    b = b.repartition(n_part, "bi", "bj")
+    # the triangle stage is never narrower than its block count
+    a, b = _pinned_width(a, b, ["bi", "bj"], floor=n_blocks)
     # Cross-block pairs (bi < bj) appear exactly once with arbitrary id
     # order (fixed by least/greatest); same-block pairs appear twice and
     # are halved by the ida < idb filter.
@@ -550,26 +625,19 @@ def cosine_pairs(emb: DataFrame, threshold: float, n_blocks: int = 16) -> DataFr
 def topk_neighbors(emb: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
     """(query_id, neighbor_id, rank, cos): brute-force top-k cosine.
     The query side is broadcast — the corpus never shuffles."""
-    e = with_norm(emb)
-    q = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("eq"),
-        F.col("norm").alias("nq"),
-    )
     cos = F.expr(DOT_SQL.format(a="eq", b="embedding")) / (F.col("nq") * F.col("norm"))
+    q = _query_side(queries)
     scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+        with_norm(emb)
+        .join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             round_agg(cos).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    return topk_cut(scored, "query_id", "cos", "neighbor_id", k, desc=True).select(
+        "query_id", "neighbor_id", "rank", "cos"
     )
 
 
@@ -601,11 +669,8 @@ def topk_neighbors_l2(emb: DataFrame, queries: DataFrame, k: int = 3) -> DataFra
             F.expr(dist).alias("sqdist_q"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("sqdist_q", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sqdist_q")
+    return topk_cut(scored, "query_id", "sqdist_q", "neighbor_id", k).select(
+        "query_id", "neighbor_id", "rank", "sqdist_q"
     )
 
 
@@ -613,22 +678,13 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, cell): assign each vector to its max-cosine centroid —
     the IVF coarse quantizer. At scale, search then touches only the
     probe-cell's vectors instead of the whole corpus."""
-    e = with_norm(emb)
-    c = with_norm(centroids).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("ec"),
-        F.col("norm").alias("nc"),
-    )
-    cos = F.expr(DOT_SQL.format(a="embedding", b="ec")) / (F.col("norm") * F.col("nc"))
-    # round-before-rank: the argmax must be taken on the portably
-    # rounded cosine or sub-ulp evaluation-order differences between
-    # engines can flip the assigned cell
-    scored = e.join(F.broadcast(c)).select(
-        "vec_id", "cell", round_agg(cos).alias("cos")
+    scored = with_norm(emb).join(F.broadcast(_cells(centroids))).select(
+        "vec_id", "cell", round_agg(_cell_cos("embedding", "norm")).alias("cos")
     )
     # argmax as max_by over a single BIGINT key — identical semantics
-    # to the former row_number window (max cos, ties to the smallest
-    # cell) but a plain aggregate: map-side partials, no per-vec sort,
+    # to ivf_probe at n=1 (max cos, ties to the smallest cell; a test
+    # pins the two against each other and the oracle) but a plain
+    # aggregate: map-side partials, no per-vec sort,
     # and the shuffle carries one (vec_id, best) pair per map task
     # instead of every scored row. The key packs the fixed-point cosine
     # with the cell tiebreak: cos is already round_agg'd so
@@ -665,21 +721,9 @@ def ivf_assign_multi(
     level, then multi-assign only among that super-cell's children —
     the standard two-level IVF), composing this function with a
     pruned centroid set."""
-    e = with_norm(emb)
-    c = with_norm(centroids).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("ec"),
-        F.col("norm").alias("nc"),
-    )
-    cos = F.expr(DOT_SQL.format(a="embedding", b="ec")) / (F.col("norm") * F.col("nc"))
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("cell"))
-    return (
-        e.join(F.broadcast(c))
-        .select("vec_id", "cell", round_agg(cos).alias("cos"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= nprobe)
-        .select("vec_id", "cell")
-    )
+    return ivf_probe(
+        with_norm(emb), centroids, nprobe, "vec_id", "embedding", "norm"
+    ).select("vec_id", "cell")
 
 
 # Per-cell membership cap for cosine_pairs_ivf: a cell larger than this
@@ -769,15 +813,7 @@ def cosine_pairs_ivf(
         F.col("norm").alias("nb"),
     )
     cos = F.expr(DOT_SQL.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    # Pin the within-cell pair-scoring width exactly as cosine_pairs
-    # does for the triangle join (guide §2.2/§2.5): the (cell, sub)
-    # shuffle is small in BYTES, so AQE coalesced the quadratic
-    # per-cell fold onto a couple of tasks; a numbered repartition on
-    # the join key keeps the stage at cluster width with no extra
-    # exchange (the join reuses the partitioning).
-    n_part = emb.sparkSession.sparkContext.defaultParallelism
-    a = a.repartition(n_part, "cell", "sub")
-    b = b.repartition(n_part, "cell", "sub")
+    a, b = _pinned_width(a, b, ["cell", "sub"])
     out = (
         a.join(b, ["cell", "sub"])
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -813,27 +849,19 @@ def topk_neighbors_ivf(
     top-k window, whose input is already cell-pruned. Probe ranking is
     on the round_agg'd cosine (round-before-rank) so the probed cell
     set replays identically in the DuckDB oracle."""
-    assigned = ivf_assign(emb, centroids)
-    q = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("eq"),
-        F.col("norm").alias("nq"),
+    probes = ivf_probe(_query_side(queries), centroids, nprobe).select(
+        "query_id", "cell", "eq", "nq"
     )
-    c = with_norm(centroids).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("ec"),
-        F.col("norm").alias("nc"),
-    )
-    qcos = F.expr(DOT_SQL.format(a="eq", b="ec")) / (F.col("nq") * F.col("nc"))
-    pw = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), F.col("cell"))
-    probes = (
-        q.join(F.broadcast(c))
-        .select("query_id", "cell", "eq", "nq", round_agg(qcos).alias("qcos"))
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "cell", "eq", "nq")
-    )
-    e = with_norm(emb).join(assigned, "vec_id")
+    return _probed_topk(emb, centroids, probes, k)
+
+
+def _probed_topk(
+    emb: DataFrame, centroids: DataFrame, probes: DataFrame, k: int
+) -> DataFrame:
+    """The scan + cut after an IVF probe: the probe table broadcasts
+    onto the cell-assigned corpus, and each query keeps its top-k
+    probed members by rounded cosine."""
+    e = with_norm(emb).join(ivf_assign(emb, centroids), "vec_id")
     cos = F.expr(DOT_SQL.format(a="embedding", b="eq")) / (F.col("norm") * F.col("nq"))
     scored = (
         e.join(F.broadcast(probes), "cell")
@@ -844,11 +872,8 @@ def topk_neighbors_ivf(
             round_agg(cos).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    return topk_cut(scored, "query_id", "cos", "neighbor_id", k, desc=True).select(
+        "query_id", "neighbor_id", "rank", "cos"
     )
 
 
@@ -878,26 +903,8 @@ def radius_neighbors_ivf(
     Result size is data-dependent (the radius contract), so callers
     own the downstream cap."""
     assigned = ivf_assign(emb, centroids)
-    q = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("eq"),
-        F.col("norm").alias("nq"),
-    )
-    c = with_norm(centroids).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("ec"),
-        F.col("norm").alias("nc"),
-    )
-    qcos = F.expr(DOT_SQL.format(a="eq", b="ec")) / (F.col("nq") * F.col("nc"))
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("cell")
-    )
-    probes = (
-        q.join(F.broadcast(c))
-        .select("query_id", "cell", "eq", round_agg(qcos).alias("qcos"))
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "cell", "eq")
+    probes = ivf_probe(_query_side(queries), centroids, nprobe).select(
+        "query_id", "cell", "eq"
     )
     return (
         emb.join(assigned, "vec_id")
@@ -943,54 +950,18 @@ def topk_neighbors_ivf2(
     c2s = ivf_assign(centroids, supers).select(
         F.col("vec_id").alias("cell"), F.col("cell").alias("sup")
     )
-    assigned = ivf_assign(emb, centroids)
     qsup = ivf_assign(
         queries.select("vec_id", "embedding"), supers
     ).select(F.col("vec_id").alias("query_id"), F.col("cell").alias("sup"))
-    q = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("eq"),
-        F.col("norm").alias("nq"),
-    )
-    c = with_norm(centroids).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("ec"),
-        F.col("norm").alias("nc"),
-    )
-    qcos = F.expr(DOT_SQL.format(a="eq", b="ec")) / (F.col("nq") * F.col("nc"))
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("cell")
-    )
-    probes = (
-        q.join(F.broadcast(qsup), "query_id")
-        .join(F.broadcast(c2s), "sup")  # only the winning super's children
-        .join(F.broadcast(c), "cell")
-        .select("query_id", "cell", "eq", "nq", round_agg(qcos).alias("qcos"))
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "cell", "eq", "nq")
-    )
-    e = with_norm(emb).join(assigned, "vec_id")
-    cos = F.expr(DOT_SQL.format(a="embedding", b="eq")) / (
-        F.col("norm") * F.col("nq")
-    )
-    scored = (
-        e.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            round_agg(cos).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    probes = ivf_probe(
+        _query_side(queries)
+        .join(F.broadcast(qsup), "query_id")
+        .join(F.broadcast(c2s), "sup"),  # only the winning super's children
+        centroids,
+        nprobe,
+        on="cell",
+    ).select("query_id", "cell", "eq", "nq")
+    return _probed_topk(emb, centroids, probes, k)
 
 
 def knn_classify(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
@@ -1920,11 +1891,8 @@ def pq_topk(
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("pdist_q").alias("adist_q"))
     )
-    w = Window.partitionBy("query_id").orderBy("adist_q", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist_q")
+    return topk_cut(scored, "query_id", "adist_q", "neighbor_id", k).select(
+        "query_id", "neighbor_id", "rank", "adist_q"
     )
 
 
@@ -2010,28 +1978,11 @@ def ivfpq_artifacts(
     persists (the DiskANN memory-bounded layout: codes hot, full
     vectors cold in the corpus parquet)."""
     assigned = ivf_assign(emb, centroids).transform(materialize)
-    cents = centroids.select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("cvec")
-    )
-    resid = (
-        emb.join(assigned, "vec_id")
-        .join(F.broadcast(cents), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.expr(RESID_SQL.format(a="embedding", b="cvec")).alias("rv"),
-        )
-    )
-    rseed = resid.filter(F.col("vec_id") < n_codes).select(
-        "vec_id", F.col("rv").alias("embedding")
-    )
+    rseed = _residuals(emb.filter(F.col("vec_id") < n_codes), assigned, centroids)
     cb = _subvectors(rseed, m, d_sub, "vec_id", "embedding").select(
         "sub", F.col("vec_id").cast("int").alias("code"), F.col("sv").alias("cv")
     )
-    codes = pq_codes(
-        resid.select("vec_id", F.col("rv").alias("embedding")), cb, m, d_sub
-    ).join(assigned, "vec_id")
-    return cb, codes
+    return cb, _residual_codes(emb, assigned, centroids, cb, m, d_sub)
 
 
 def pq_code_batch(
@@ -2045,27 +1996,41 @@ def pq_code_batch(
     frozen codebook + centroid set — the incremental fold of the
     compressed index (coding is per-vector and stateless given the
     training artifacts, so the fold is append-only: no stored row is
-    ever touched). Exactly ivfpq_artifacts' assignment + residual +
-    pq_codes composition, restricted to the batch."""
+    ever touched). The same residual-coding step as ivfpq_artifacts,
+    restricted to the batch."""
     assigned = ivf_assign(arrivals, centroids)
+    return _residual_codes(arrivals, assigned, centroids, codebook, m, d_sub)
+
+
+def _residuals(emb: DataFrame, assigned: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, embedding): each vector minus its assigned cell's
+    centroid (RESID_SQL)."""
     cents = centroids.select(
         F.col("vec_id").alias("cell"), F.col("embedding").alias("cvec")
     )
-    resid = (
-        arrivals.join(assigned, "vec_id")
+    return (
+        emb.join(assigned, "vec_id")
         .join(F.broadcast(cents), "cell")
         .select(
             "vec_id",
-            "cell",
-            F.expr(RESID_SQL.format(a="embedding", b="cvec")).alias("rv"),
+            F.expr(RESID_SQL.format(a="embedding", b="cvec")).alias("embedding"),
         )
     )
-    return pq_codes(
-        resid.select("vec_id", F.col("rv").alias("embedding")),
-        codebook,
-        m,
-        d_sub,
-    ).join(assigned, "vec_id")
+
+
+def _residual_codes(
+    emb: DataFrame,
+    assigned: DataFrame,
+    centroids: DataFrame,
+    codebook: DataFrame,
+    m: int,
+    d_sub: int,
+) -> DataFrame:
+    """(vec_id, sub, code, cell): the one residual-coding step — pq_codes
+    of each vector's residual, tagged with its assigned cell."""
+    return pq_codes(_residuals(emb, assigned, centroids), codebook, m, d_sub).join(
+        assigned, "vec_id"
+    )
 
 
 def ivfpq_scan(
@@ -2083,30 +2048,10 @@ def ivfpq_scan(
     this is, verbatim) for the algorithm and scale shape. ``k=None``
     skips the final top-k window and returns the scored
     (query_id, neighbor_id, adist_q) frame (the radius-scan hook)."""
-    q = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("eq"),
-        F.col("norm").alias("nq"),
-    )
-    c = with_norm(centroids).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("ec"),
-        F.col("norm").alias("nc"),
-    )
-    qcos = F.expr(DOT_SQL.format(a="eq", b="ec")) / (F.col("nq") * F.col("nc"))
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("qcos").desc(), F.col("cell")
-    )
-    probes = (
-        q.join(F.broadcast(c))
-        .select("query_id", "cell", "eq", "ec", round_agg(qcos).alias("qcos"))
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "query_id",
-            "cell",
-            F.expr(RESID_SQL.format(a="eq", b="ec")).alias("qrv"),
-        )
+    probes = ivf_probe(_query_side(queries), centroids, nprobe).select(
+        "query_id",
+        "cell",
+        F.expr(RESID_SQL.format(a="eq", b="ec")).alias("qrv"),
     )
     d = m * d_sub
     start = (
@@ -2139,11 +2084,8 @@ def ivfpq_scan(
         # radius mode (ivfpq_radius_scan): the caller thresholds the
         # scored frame instead of ranking it — no per-query window
         return scored
-    w = Window.partitionBy("query_id").orderBy("adist_q", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist_q")
+    return topk_cut(scored, "query_id", "adist_q", "neighbor_id", k).select(
+        "query_id", "neighbor_id", "rank", "adist_q"
     )
 
 

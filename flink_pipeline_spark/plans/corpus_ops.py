@@ -269,7 +269,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # list), but their size ESTIMATES come from an aggregation over the
     # checkpointed edge frame, so the planner sort-merge-joined every
     # iteration — two full exchanges + sorts of the EDGE list per
-    # superstep (plans/r15/q_graph_pagerank_before.txt). Explicit
+    # superstep (`scripts/plan_shape.py q_graph_pagerank` counts the
+    # joins of the plan that runs). Explicit
     # broadcast hints pin both per-iteration joins to BroadcastHashJoin:
     # edges never re-shuffle after the build, and the only per-iteration
     # exchange left is the map-side-partially-aggregated contribution

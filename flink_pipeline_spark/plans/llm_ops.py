@@ -73,6 +73,7 @@ from ..operators.llm import (
     pq_codebook_from,
     pq_codebook_refine,
     pq_topk,
+    topk_cut,
     topk_neighbors,
     topk_neighbors_ivf,
     topk_neighbors_ivf2,
@@ -1618,11 +1619,8 @@ def exact_rerank(emb: DataFrame, short: DataFrame, k: int = 3) -> DataFrame:
             F.expr(SQDIST_Q_SQL.format(a="eq", b="embedding")).alias("dist_q"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("dist_q", "neighbor_id")
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dist_q")
+    return topk_cut(rescored, "query_id", "dist_q", "neighbor_id", k).select(
+        "query_id", "neighbor_id", "rank", "dist_q"
     )
 
 
@@ -1719,11 +1717,8 @@ def graph_expand_topk(spark: SparkSession, emb: DataFrame) -> DataFrame:
             F.col("vec_b").alias("src"), F.col("vec_a").alias("dst"), "cos"
         )
     )
-    wk = Window.partitionBy("src").orderBy(F.col("cos").desc(), "dst")
-    knn = (
-        sym.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= GRAPH_EXPAND_DEG)
-        .select("src", "dst")
+    knn = topk_cut(sym, "src", "cos", "dst", GRAPH_EXPAND_DEG, desc=True).select(
+        "src", "dst"
     )
     hop = short.join(
         knn, short.neighbor_id == knn.src
@@ -1749,11 +1744,8 @@ def graph_expand_topk(spark: SparkSession, emb: DataFrame) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("dist_q", "neighbor_id")
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "rank", "dist_q")
+    return topk_cut(rescored, "query_id", "dist_q", "neighbor_id", 3).select(
+        "query_id", "neighbor_id", "rank", "dist_q"
     )
 
 
@@ -2104,13 +2096,8 @@ def q_sim_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         F.expr(_INTDOT_SPARK.format(a="qw", b="codes")).alias("dot_q"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "rank", "dot_q")
+    return topk_cut(scored, "query_id", "dot_q", "neighbor_id", 3, desc=True).select(
+        "query_id", "neighbor_id", "rank", "dot_q"
     )
 
 
@@ -2236,12 +2223,9 @@ def q_sim_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("bit_count(h1 ^ q1) + bit_count(h2 ^ q2)").cast("long")
         ).alias("hamming"),
     )
-    wh = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    short = (
-        ham.withColumn("rn", F.row_number().over(wh))
-        .filter(F.col("rn") <= BINARY_SHORTLIST)
-        .select("query_id", "neighbor_id", "hamming")
-    )
+    short = topk_cut(
+        ham, "query_id", "hamming", "neighbor_id", BINARY_SHORTLIST
+    ).select("query_id", "neighbor_id", "hamming")
     q = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("eq")
     )
@@ -2257,14 +2241,9 @@ def q_sim_binary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("dotv").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "rank", "hamming", "dotv")
-    )
+    return topk_cut(
+        rescored, "query_id", "dotv", "neighbor_id", 3, desc=True
+    ).select("query_id", "neighbor_id", "rank", "hamming", "dotv")
 
 
 # ---------------------------------------------------------------------------
@@ -3040,18 +3019,13 @@ def q_select_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("eq")
     )
     relv = round_agg(F.expr(DOT_SQL.format(a="eq", b="embedding")))
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("rel").desc(), F.col("neighbor_id")
+    rel = emb.join(F.broadcast(qd), F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        relv.alias("rel"),
     )
     cand = (
-        emb.join(F.broadcast(qd), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            relv.alias("rel"),
-        )
-        .withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= MMR_SHORTLIST)
+        topk_cut(rel, "query_id", "rel", "neighbor_id", MMR_SHORTLIST, desc=True)
         .select(
             "query_id",
             "neighbor_id",
@@ -3294,18 +3268,13 @@ def _register_ann_recall() -> None:
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("eq")
         )
         dotv = round_agg(F.expr(DOT_SQL.format(a="eq", b="embedding")))
-        wdot = Window.partitionBy("query_id").orderBy(
-            F.col("dotv").desc(), F.col("neighbor_id")
+        dots = emb.join(
+            F.broadcast(qd), F.col("vec_id") != F.col("query_id")
+        ).select(
+            "query_id", F.col("vec_id").alias("neighbor_id"), dotv.alias("dotv")
         )
         exact_dot = (
-            emb.join(F.broadcast(qd), F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                dotv.alias("dotv"),
-            )
-            .withColumn("rank", F.row_number().over(wdot))
-            .filter(F.col("rank") <= 3)
+            topk_cut(dots, "query_id", "dotv", "neighbor_id", 3, desc=True)
             .select("query_id", "neighbor_id", "rank")
             .transform(materialize)
         )
@@ -8093,11 +8062,8 @@ def q_mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") == F.col("qlabel")).alias("same"),
         round_agg(cos).alias("cos"),
     )
-    w = Window.partitionBy("query_id", "same").orderBy(
-        F.col("cos").desc(), "neighbor_id"
-    )
-    ranked = scored.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") == 1
+    ranked = topk_cut(
+        scored, ["query_id", "same"], "cos", "neighbor_id", 1, desc=True
     )
     pos = ranked.filter(F.col("same")).select(
         "query_id",

@@ -34,11 +34,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..caching import parallel_frames
 from ..catalog import load_table
-from ..operators.llm import DOT_SQL, ivf_assign
+from ..operators.llm import DOT_SQL, ivf_assign, ivf_probe, topk_cut, with_norm
 from .llm_ops import (
     IVF_SEED_CENTROIDS,
     _COS_DUCK,
@@ -130,38 +129,15 @@ def _maxsim_candidates(
     store (q_sim_maxsim_search); by default it is computed in-query —
     assignment is deterministic under the frozen centroids, so the
     two sources must agree (the store-serve verbatim-oracle gate)."""
-    from ..functions.portable import round_agg as _ra
-    from ..operators.llm import with_norm
-
     cents = emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
     qt = emb.filter(F.col("vec_id") < _QTOK_MAX).select(
         F.col("vec_id").alias("qtok"),
         F.expr(f"vec_id div {MAXSIM_TOKS}").alias("qdoc"),
         F.col("embedding").alias("eq"),
     )
-    q = with_norm(
-        qt.select(F.col("qtok").alias("vec_id"), F.col("eq").alias("embedding"))
-    ).select(
-        F.col("vec_id").alias("qtok"),
-        F.col("embedding").alias("eq"),
-        F.col("norm").alias("nq"),
-    )
-    c = with_norm(cents).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("ec"),
-        F.col("norm").alias("nc"),
-    )
-    qcos = F.expr(DOT_SQL.format(a="eq", b="ec")) / (
-        F.col("nq") * F.col("nc")
-    )
-    pw = Window.partitionBy("qtok").orderBy(F.col("qcos").desc(), "cell")
-    tprobes = (
-        q.join(F.broadcast(c))
-        .select("qtok", "cell", _ra(qcos).alias("qcos"))
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= MAXSIM_NPROBE)
-        .select("qtok", "cell")
-    )
+    tprobes = ivf_probe(
+        with_norm(qt, "eq"), cents, MAXSIM_NPROBE, "qtok", norm="norm"
+    ).select("qtok", "cell")
     if assigned is None:
         assigned = ivf_assign(emb, cents)
     return (
@@ -210,12 +186,8 @@ def _maxsim_score(emb: DataFrame, cand: DataFrame) -> DataFrame:
     scored = sims.groupBy("qdoc", "cdoc").agg(
         F.sum("best_q").cast("long").alias("maxsim_q")
     )
-    w = Window.partitionBy("qdoc").orderBy(
-        F.col("maxsim_q").desc(), "cdoc"
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        topk_cut(scored, "qdoc", "maxsim_q", "cdoc", 3, desc=True)
         .select(
             F.col("qdoc").alias("query_doc"),
             F.col("cdoc").alias("doc_id"),
@@ -499,14 +471,9 @@ def _plaid_topk(
         .groupBy("qdoc", "cdoc")
         .agg(F.sum("mx").cast("long").alias("amaxsim_q"))
     )
-    wp = Window.partitionBy("qdoc").orderBy(
-        F.col("amaxsim_q").desc(), "cdoc"
-    )
-    candp = (
-        approx.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= PLAID_CANDIDATES)
-        .select("qdoc", "cdoc")
-    )
+    candp = topk_cut(
+        approx, "qdoc", "amaxsim_q", "cdoc", PLAID_CANDIDATES, desc=True
+    ).select("qdoc", "cdoc")
     return _maxsim_score(emb, candp)
 
 

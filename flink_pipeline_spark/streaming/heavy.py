@@ -91,10 +91,13 @@ def read_latest(
     and one prior snapshot, so the requested history no longer exists,
     and an empty frame would silently misreport it as "nothing seen
     yet". Batch 0 nuance: in a store that ``init`` does not seed, a
-    non-empty store with nothing before batch 0 means the store dir is
-    being REUSED by a new stream (Structured Streaming never replays
-    batch 0 after batch 1 commits — the checkpoint advances only on
-    commit), which gets its own error.
+    store whose only partition is ``batch_id=0`` is a batch 0 that
+    wrote and crashed before its commit; Structured Streaming replays
+    it, so it reads as empty and the replay overwrites that partition
+    (the same store a fresh start writes). Any partition >= 1 with
+    nothing before batch 0 means the store dir is being REUSED by a
+    new stream (batch 0 is never replayed after batch 1 commits — the
+    checkpoint advances only on commit), which gets its own error.
     ``label`` names what is read in every error. The partition is
     selected by a driver-side FS listing (no historical-partition
     scan) and read directly, so a monitor never races its own prune;
@@ -103,6 +106,10 @@ def read_latest(
     bids = partition_ids(spark, path)
     prior = [b for b in bids if b < before]
     if not prior:
+        if bids == [0] and before == 0 and not required:
+            # a crash-replayed batch 0: re-derive it from an empty read
+            # and overwrite its partition, exactly as a fresh start would
+            return _empty(spark, schema, bids, before, label, required)
         if bids and before == 0 and not required:
             raise ValueError(
                 f"no {label} before batch 0: store already populated "

@@ -122,3 +122,86 @@ def test_recall_rollup_matches_sql_twin(spark, truth_rows, expect):
         assert_parity(df, con, f"WITH {ctes}, {twin} SELECT * FROM rollup")
     finally:
         con.close()
+
+
+# Toy corpus for the probe's tie rule. Cells 3 = (0,1,0), 5 = (1,0,0),
+# 7 = (0,0,1). Vector 1 ties cells 3 and 5 exactly; vector 2 is
+# (1 + 2^-14, 1, 0), whose raw cosine favours cell 5 (0.707128 against
+# 0.707085) but whose rounded cosines tie at 0.7071, so round-before-
+# rank sends it to cell 3; vector 3 has a clear order 7, 3, 5; vector 4
+# ties all three cells.
+_PROBE_CELLS = [
+    (3, [0.0, 1.0, 0.0]),
+    (5, [1.0, 0.0, 0.0]),
+    (7, [0.0, 0.0, 1.0]),
+]
+_PROBE_VECS = [
+    (1, [1.0, 1.0, 0.0]),
+    (2, [1.0 + 2.0**-14, 1.0, 0.0]),
+    (3, [0.0, 0.25, 1.0]),
+    (4, [1.0, 1.0, 1.0]),
+]
+
+
+def test_ivf_probe_matches_argmax_and_oracle_on_ties(spark):
+    """The one IVF probe: at n=1 it equals ivf_assign's packed-key
+    argmax, and at n=1 and n=2 it equals the DuckDB twin
+    ``_assign_duck(..., rn)`` — ties on the rounded cosine go to the
+    smaller cell in all three."""
+    import pandas as pd
+
+    from flink_pipeline_spark.operators.llm import (
+        ivf_assign,
+        ivf_probe,
+        with_norm,
+    )
+    from flink_pipeline_spark.plans.llm_ops import _assign_duck
+
+    schema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    emb = spark.createDataFrame(_PROBE_VECS, schema)
+    cents = spark.createDataFrame(_PROBE_CELLS, schema)
+
+    def probe(n):
+        return ivf_probe(
+            with_norm(emb), cents, n, "vec_id", "embedding", "norm"
+        ).select("vec_id", "cell")
+
+    top1 = sorted(tuple(r) for r in probe(1).collect())
+    assert top1 == [(1, 3), (2, 3), (3, 7), (4, 3)]
+    assert sorted(tuple(r) for r in ivf_assign(emb, cents).collect()) == top1
+
+    con = duckdb.connect()
+    try:
+        cols = ["vec_id", "embedding"]
+        for name, rows in (("embeddings", _PROBE_VECS), ("cents", _PROBE_CELLS)):
+            con.register(f"{name}_df", pd.DataFrame(rows, columns=cols))
+            con.execute(f"CREATE TABLE {name} AS SELECT * FROM {name}_df")
+        for n, rn in ((1, "= 1"), (2, "<= 2")):
+            twin = _assign_duck("cents c ON TRUE", "c.vec_id", "c.embedding", rn)
+            assert_parity(probe(n), con, twin, f"probe n={n}")
+        top2 = sorted(tuple(r) for r in probe(2).collect())
+        assert top2 == [
+            (1, 3), (1, 5), (2, 3), (2, 5), (3, 3), (3, 7), (4, 3), (4, 5)
+        ]
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize(
+    "desc,want", [(False, [(6, 1), (4, 2)]), (True, [(4, 1), (9, 2)])]
+)
+def test_topk_cut_breaks_score_ties_by_item(spark, desc, want):
+    """The one per-key top-k cut keeps equal scores in ascending item
+    order in both score directions, per key."""
+    from flink_pipeline_spark.operators.llm import topk_cut
+
+    rows = [(1, 0.5, 9), (1, 0.5, 4), (1, 0.1, 6), (2, 0.3, 8)]
+    df = spark.createDataFrame(
+        rows, "query_id BIGINT, score DOUBLE, item BIGINT"
+    )
+    got = topk_cut(df, "query_id", "score", "item", 2, desc=desc)
+    by_key = {}
+    for r in got.collect():
+        by_key.setdefault(r.query_id, []).append((r.item, r.rank))
+    assert sorted(by_key[1], key=lambda t: t[1]) == want
+    assert by_key[2] == [(8, 1)]

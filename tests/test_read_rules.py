@@ -49,6 +49,7 @@ CASES = [
      "survives pruning", "init"),
     ("past-pruned-history", [-1, 0, 1, 2], 1, 3, True, [2], [1, 2]),
     ("reused-at-batch-0", [0, 1], None, 0, False, "already populated", []),
+    ("replayed-batch-0", [0], None, 0, False, [], []),
     ("strictly-before", [-1, 0, 1, 2, 3], None, 2, True, [1], [-1, 0, 1]),
 ]
 

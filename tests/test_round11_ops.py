@@ -561,6 +561,25 @@ def test_streaming_cm_replay_idempotent(spark, tmp_path):
     assert first == second
 
 
+def test_streaming_cm_batch0_replay(spark, tmp_path):
+    """A batch 0 that wrote its partition and crashed before its commit
+    is replayed by Structured Streaming: the replay re-derives the same
+    grid instead of refusing the store as reused."""
+    from flink_pipeline_spark.streaming.cm import CMMonitor
+
+    d = spark.read.parquet(SMALL_SF + "/documents.parquet")
+    b = d.filter(F.col("doc_id") % 3 == 0)
+    mon = CMMonitor(str(tmp_path / "store"))
+
+    def grid():
+        return sorted(tuple(r) for r in mon._read_latest(spark, 1).collect())
+
+    mon(b, 0)
+    first = grid()
+    mon(b, 0)  # crash-replay of batch 0
+    assert first and grid() == first
+
+
 def test_streaming_cm_store_reuse_raises(spark, tmp_path):
     """A new stream pointed at a populated store loud-fails at batch 0
     instead of silently double-counting (the heavy.py contract)."""
