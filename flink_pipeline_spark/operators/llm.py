@@ -230,24 +230,18 @@ def capped_bucket_pairs(
 
 
 def verified_near_dups(
-    docs: DataFrame,
-    candidates: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    sets: DataFrame | None = None,
+    docs: DataFrame, sets: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
-    """Exact shingle-Jaccard verification of candidate pairs:
-    (doc_a, doc_b, jacc) with jacc >= threshold. Pass the same persisted
-    ``sets`` used for candidate generation to shingle the corpus once
-    for the whole pipeline."""
-    # persist: both join branches (sa, sb) consume the same shingle
-    # arrays — cache one copy instead of recomputing the shingling per
-    # branch (~3x at sf0.1). One small row per doc; consumed by the
-    # final lazy plan so it cannot release before the caller
-    # materializes — long-lived sessions sweep with release_caches().
-    if sets is None:
-        sets = doc_shingles(docs, n).transform(materialize)
-    return scored_pairs(candidates, sets, JACC_SQL, "jacc", threshold)
+    """The text near-dup graph: (doc_a, doc_b, jacc) for every capped
+    MinHash-LSH candidate pair whose exact shingle-Jaccard is >=
+    threshold. ``sets`` is the caller's materialized
+    ``doc_shingles(docs)`` frame; it feeds both the candidate
+    signatures and the verify join, so the corpus is shingled once.
+    The caller owns its lifetime: materialize it at the plan root and
+    unpersist it once the result is consumed."""
+    return scored_pairs(
+        lsh_candidate_pairs(docs, sets=sets), sets, JACC_SQL, "jacc", threshold
+    )
 
 
 def scored_pairs(
@@ -1175,20 +1169,33 @@ def connected_components(
     ``_stats`` (optional dict) receives ``phase1_iters`` /
     ``twophase_rounds`` for probes and tests."""
     stats = _stats if _stats is not None else {}
-    # localCheckpoint (not persist): cache alone is NOT enough for an
-    # iterative consumer — every iteration's action re-ANALYZES the
-    # full logical lineage of `pairs` even on cache hits, and a deep
-    # pair-generation DAG (e.g. the multiprobe IVF window +
-    # self-joins) multiplied across iterations dominated wall time
-    # (measured 11.5 s -> 2.3 s on a 96-edge sf0.1 graph). Edges are
-    # 2 longs per row, so the one-time materialization is cheap at any
-    # scale; a long-running production job on preemptible hardware
-    # would use reliable checkpoint(dir) here.
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    # Both edge orientations come out of ONE projection of `pairs`, so
+    # the eager localCheckpoint runs the pair DAG exactly once and
+    # callers never persist what they pass in. localCheckpoint (not
+    # persist): cache alone is NOT enough for an iterative consumer —
+    # every iteration's action re-ANALYZES the full logical lineage of
+    # `pairs` even on cache hits, and a deep pair-generation DAG (e.g.
+    # the multiprobe IVF window + self-joins) multiplied across
+    # iterations dominated wall time (measured 11.5 s -> 2.3 s on a
+    # 96-edge sf0.1 graph). Edges are 2 longs per row, so the one-time
+    # materialization is cheap at any scale; a long-running production
+    # job on preemptible hardware would use reliable checkpoint(dir).
+    # The projection is persisted and filled by that same job: the
+    # checkpoint takes its size statistic from the measured cache, not
+    # from the planner's estimate of the pair DAG (a product over its
+    # joins, ~1e17 bytes for the 50-edge sf0.01 text graph), so every
+    # join over the edges plans on their real size.
+    a, b = F.col("doc_a"), F.col("doc_b")
+    oriented = pairs.select(
+        F.inline(
+            F.array(
+                F.struct(a.alias("src"), b.alias("dst")),
+                F.struct(b.alias("src"), a.alias("dst")),
+            )
+        )
+    ).persist()
+    edges = oriented.localCheckpoint(eager=True)
+    oriented.unpersist()
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()

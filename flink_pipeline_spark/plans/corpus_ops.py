@@ -29,13 +29,8 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..caching import materialize
 from ..functions.portable import round_agg
-from ..operators.llm import (
-    connected_components,
-    doc_shingles,
-    lsh_candidate_pairs,
-    verified_near_dups,
-)
-from . import llm_ops  # noqa: F401  (populates ORACLES['q_dedup_clusters'])
+from ..operators.llm import doc_shingles, verified_near_dups
+from .llm_ops import q_dedup_clusters  # also populates its ORACLES entry
 from .registry import ORACLES, register
 
 # ------------------------------------------------------ soft dedup
@@ -85,22 +80,7 @@ def _register_dedup_soft() -> None:
         (tiny) member table against the corpus scan — no new shuffle
         beyond what the clustering already paid."""
         d = load_table(spark, sf_dir, "documents")
-        sets = doc_shingles(d).transform(materialize)
-        pairs = (
-            verified_near_dups(
-                d, lsh_candidate_pairs(d, sets=sets), threshold=0.8, sets=sets
-            )
-            .select("doc_a", "doc_b")
-            .persist()
-        )
-        clusters = connected_components(pairs)
-        # connected_components eagerly localCheckpoints its edge frame,
-        # so the shingle/pair caches are fully consumed by the time it
-        # returns — release them here instead of letting a full-surface
-        # sweep accumulate cached shingle/pair RDDs in executor storage
-        # (ADVICE r8; release_caches() remains the session-wide sweep)
-        sets.unpersist()
-        pairs.unpersist()
+        clusters = q_dedup_clusters(spark, sf_dir)
         sizes = clusters.groupBy("cluster_id").agg(
             F.count("*").cast("long").alias("n")
         )
@@ -1083,9 +1063,7 @@ def _register_graph_triangles() -> None:
         families."""
         d = load_table(spark, sf_dir, "documents")
         sets = doc_shingles(d).transform(materialize)
-        pairs = verified_near_dups(
-            d, lsh_candidate_pairs(d, sets=sets), threshold=0.8, sets=sets
-        ).select("doc_a", "doc_b")
+        pairs = verified_near_dups(d, sets)
         # eager localCheckpoint instead of persist: the edge frame is
         # referenced by three downstream joins, and the query returns
         # only 1-row aggregates — a persist here would outlive the

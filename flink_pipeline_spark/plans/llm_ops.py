@@ -201,10 +201,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass and the verify pass — one shingling of the corpus total. See
     operators/llm.py for the 100 TB notes."""
     d = load_table(spark, sf_dir, "documents")
-    sets = doc_shingles(d).transform(materialize)
-    return verified_near_dups(
-        d, lsh_candidate_pairs(d, sets=sets), threshold=0.8, sets=sets
-    )
+    return verified_near_dups(d, doc_shingles(d).transform(materialize))
 
 
 @register("q_dedup_near", oracle=_MINHASH_ORACLE)
@@ -510,9 +507,7 @@ def _register_dedup_recall() -> None:
             .filter(round_agg(jacc) >= TEXT_RECALL_TAU)
             .select("doc_a", "doc_b")
         )
-        mh = verified_near_dups(
-            d, lsh_candidate_pairs(d, sets=sets), threshold=0.8, sets=sets
-        )
+        mh = verified_near_dups(d, sets)
         # r15 (guide §2.6): the four pair generators (exact truth,
         # minhash verify, 56-bit simhash, 16-bit simhash) are
         # INDEPENDENT once the shared shingle sets are cached —
@@ -878,17 +873,13 @@ def q_dedup_embed_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the exact transitive closure with a recursive CTE, so the
     whole chain is hash-gated declaratively."""
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = (
-        cosine_pairs_ivf(
-            emb,
-            emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS),
-            threshold=EMBED_PAIR_TAU,
-            max_cell=EMBED_MULTI_MAX_CELL,
-            nprobe=EMBED_PAIR_NPROBE,
-        )
-        .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-        .persist()
-    )
+    pairs = cosine_pairs_ivf(
+        emb,
+        emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS),
+        threshold=EMBED_PAIR_TAU,
+        max_cell=EMBED_MULTI_MAX_CELL,
+        nprobe=EMBED_PAIR_NPROBE,
+    ).select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
     cc = connected_components(pairs)
     dropped = (
         cc.filter(F.col("cluster_id") != F.col("doc_id"))
@@ -5692,19 +5683,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative ground truth."""
     d = load_table(spark, sf_dir, "documents")
     sets = doc_shingles(d).transform(materialize)
-    pairs = (
-        verified_near_dups(
-            d, lsh_candidate_pairs(d, sets=sets), threshold=0.8, sets=sets
-        )
-        .select("doc_a", "doc_b")
-        .persist()
-    )
-    clusters = connected_components(pairs)
+    clusters = connected_components(verified_near_dups(d, sets))
     # the operator eagerly localCheckpoints its edge frame, so the
-    # shingle/pair caches are consumed by return time (q_dedup_soft
-    # convention, ADVICE r8)
+    # shingle cache is consumed by return time; the operator's label
+    # frame is the one cache entry the clustering leaves behind
     sets.unpersist()
-    pairs.unpersist()
     return clusters
 
 
@@ -6059,16 +6042,8 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast when small; the accounting aggregate is partial/merged.
     Nothing in the final pass carries shingle or signature state."""
     d = load_table(spark, sf_dir, "documents")
-    sets = doc_shingles(d).transform(materialize)
-    pairs = (
-        verified_near_dups(
-            d, lsh_candidate_pairs(d, sets=sets), threshold=0.8, sets=sets
-        )
-        .select("doc_a", "doc_b")
-        .persist()
-    )
     drops = (
-        connected_components(pairs)
+        q_dedup_clusters(spark, sf_dir)
         .filter(F.col("doc_id") != F.col("cluster_id"))
         .select("doc_id", F.lit(1).alias("dropped"))
     )

@@ -34,16 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import materialize, parallel_frames
+from ..caching import parallel_frames
 from ..catalog import load_table
-from ..operators.llm import (
-    NSW_HOPS,
-    connected_components,
-    doc_shingles,
-    lsh_candidate_pairs,
-    topk_neighbors_l2,
-    verified_near_dups,
-)
+from ..operators.llm import NSW_HOPS, topk_neighbors_l2
 from ..streaming.heavy import build_once
 from .ann_delete import _final_survivor_sql, _hnsw_delete_ctes
 from .llm_ops import (
@@ -56,6 +49,7 @@ from .llm_ops import (
     corpus_file_identity,
     exact_rerank,
     hnsw_store_for,
+    q_dedup_clusters,
 )
 from .pq_serve import _pq_monitor, _pq_store, pq_store_for
 from .recall_rollup import NEIGHBOR_KEYS, recall_rollup, recall_rollup_sql
@@ -100,28 +94,18 @@ def _dedup_dels_ctes() -> str:
 
 def dedup_drop_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, op='delete'): the near-dup drop set as a
-    delete batch for the index-store monitors — q_dedup_apply's exact
-    pipeline (one shingling, LSH candidates, 0.8-Jaccard verify,
-    connected components, non-keeper members), mapped onto the index
-    by the doc_id == vec_id identity and restricted to ids the index
-    actually holds (one semi-join on the vector corpus).
+    delete batch for the index-store monitors — q_dedup_apply's drop
+    rule (the non-keeper members of q_dedup_clusters), mapped onto the
+    index by the doc_id == vec_id identity and restricted to ids the
+    index actually holds (one semi-join on the vector corpus).
 
     Scale: the drop set is dup-graph-sized (far under the corpus);
     the semi-join is key-partitioned; nothing here is new machinery —
     the whole point is that the production loop reuses the dedup
     pipeline's output as the delete feed."""
-    d = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    sets = doc_shingles(d).transform(materialize)
-    pairs = (
-        verified_near_dups(
-            d, lsh_candidate_pairs(d, sets=sets), threshold=0.8, sets=sets
-        )
-        .select("doc_a", "doc_b")
-        .persist()
-    )
     drops = (
-        connected_components(pairs)
+        q_dedup_clusters(spark, sf_dir)
         .filter(F.col("doc_id") != F.col("cluster_id"))
         .select(F.col("doc_id").alias("vec_id"))
     )

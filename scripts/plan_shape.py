@@ -1,11 +1,20 @@
 """Print the shape of registered queries' executed plans, one JSON line each.
 
 Each query is built and run once (no rows are collected), then its
-final physical plan is counted: shuffle exchanges, sort-merge,
-broadcast-hash and broadcast-nested-loop joins, window operators,
-Python evaluation nodes and checkpoint scans (``Scan ExistingRDD``,
-which is how a localCheckpoint is read back). The record is small and
-diffable: run it before and after a change and compare the lines.
+physical plan is counted twice: ``initial`` is the plan adaptive
+execution started from, ``final`` the plan it re-planned into while
+running. Counted are shuffle exchanges, sort-merge, broadcast-hash and
+broadcast-nested-loop joins, window operators, Python evaluation
+nodes and checkpoint scans (``Scan ExistingRDD``, which is how a
+localCheckpoint is read back). The record is small and diffable:
+``{"query", "initial": {...}, "final": {...}}``; run it before and
+after a change and compare the lines.
+
+A plan proof compares ``initial``. The final plan is not reproducible
+run to run for some queries at the same code (stage completion order
+decides some broadcast conversions, e.g. q_ann_delete_recall,
+q_dedup_embed_apply, q_pq_refresh_serve, q_sim_ivfpq_serve), so a
+difference only in ``final`` on such a query is noise.
 
 Usage:
   python scripts/plan_shape.py [q_a q_b ...] --sf DIR [--cpus 4]
@@ -37,32 +46,31 @@ SHAPE = (
 _NODE = re.compile(r"^[\s:+\-|]*(?:\*\(\d+\)\s+)?(Scan ExistingRDD|[A-Za-z]+)")
 
 
-def shape(plan: str) -> dict[str, int]:
-    """Count the SHAPE node kinds in a physical plan's tree string. A
-    cached frame's adaptive plan prints its initial plan under its final
-    one; those lines did not run and are skipped."""
-    names, initial = [], None
+def shape(plan: str, block: str = "Final") -> dict[str, int]:
+    """Count the SHAPE node kinds in a physical plan's tree string. An
+    adaptive plan that re-planned prints its final plan and then its
+    initial plan, each under a header; ``block`` ("Final" or
+    "Initial") picks which one counts, at every nesting level (cached
+    frames carry their own adaptive plans), and the other is skipped."""
+    other = "== Initial Plan ==" if block == "Final" else "== Final Plan =="
+    names, hidden = [], None
     for line in plan.splitlines():
         col = len(line) - len(line.lstrip(" :|"))
-        if initial is not None and col > initial:
+        if hidden is not None and col > hidden:
             continue
-        initial = col if "== Initial Plan ==" in line else None
+        hidden = col if other in line else None
         m = _NODE.match(line)
         if m:
             names.append(m.group(1))
     return {key: sum(map(test, names)) for key, test in SHAPE}
 
 
-def final_plan(df) -> str:
-    """Run ``df`` without collecting it and return its final physical
-    plan: adaptive execution re-plans while it runs, so the plan before
-    the run is not the plan that ran."""
+def executed_plan(df) -> str:
+    """Run ``df`` without collecting it and return its physical plan,
+    which then holds both the initial and the final adaptive plan."""
     qe = df._jdf.queryExecution()
     qe.toRdd().count()
-    plan = qe.executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()
-    return plan.toString()
+    return qe.executedPlan().toString()
 
 
 def main() -> None:
@@ -85,8 +93,9 @@ def main() -> None:
     )
     fns = query_fns()
     for name in args.queries or sorted(fns):
-        plan = final_plan(fns[name](spark, args.sf))
-        print(json.dumps({"query": name, **shape(plan)}), flush=True)
+        plan = executed_plan(fns[name](spark, args.sf))
+        record = {"initial": shape(plan, "Initial"), "final": shape(plan)}
+        print(json.dumps({"query": name, **record}), flush=True)
     spark.stop()
 
 

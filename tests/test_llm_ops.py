@@ -6,11 +6,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from flink_pipeline_spark.caching import materialize
 from flink_pipeline_spark.catalog import load_table
 from flink_pipeline_spark.operators.llm import (
+    doc_shingles,
     knn_classify,
     label_centroids,
-    lsh_candidate_pairs,
     simhash,
     simhash_pairs,
     topk_neighbors,
@@ -31,7 +32,8 @@ def test_minhash_finds_planted_near_dups(spark):
     4 bands x 3 rows must surface them and verification must score
     them high."""
     docs = load_table(spark, SF_DIR, "documents")
-    found = verified_near_dups(docs, lsh_candidate_pairs(docs), threshold=0.8)
+    sets = doc_shingles(docs).transform(materialize)
+    found = verified_near_dups(docs, sets, threshold=0.8)
     rows = {(r.doc_a, r.doc_b): r.jacc for r in found.collect()}
     assert len(rows) >= 5, f"expected planted near-dups, got {rows}"
     assert all(j >= 0.8 for j in rows.values())
@@ -49,7 +51,8 @@ def test_simhash_locality(spark):
     docs = load_table(spark, SF_DIR, "documents")
     sh = {r.doc_id: r.simhash for r in simhash(docs).collect()}
     assert all(0 <= v < 2**SIMHASH_BITS for v in sh.values())
-    near = verified_near_dups(docs, lsh_candidate_pairs(docs), threshold=0.9).collect()
+    sets = doc_shingles(docs).transform(materialize)
+    near = verified_near_dups(docs, sets, threshold=0.9).collect()
     assert near
 
     def ham(a: int, b: int) -> int:
@@ -283,12 +286,14 @@ def test_connected_components_random_graphs_match_union_find(spark):
     """Seeded random graphs, phase 2 forced (switch_after=1): the
     hybrid's labels must equal a plain union-find's min-of-component
     on every graph — mixed cliques, chains, stars and singleton-free
-    noise edges."""
+    noise edges. The last input is seed 7's graph again with every
+    edge given in both orientations and a fifth of them repeated: the
+    operator orients the edges itself, so the labels must not change."""
     import random
 
     from flink_pipeline_spark.operators.llm import connected_components
 
-    for seed in (7, 21, 99):
+    for seed, both_ways in ((7, False), (21, False), (99, False), (7, True)):
         rng = random.Random(seed)
         n = 120
         edges = {
@@ -308,14 +313,15 @@ def test_connected_components_random_graphs_match_union_find(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         touched = {v for e in edges for v in e}
         expect = {v: find(v) for v in touched}
-        pairs = spark.createDataFrame(
-            sorted(edges), "doc_a BIGINT, doc_b BIGINT"
-        )
+        rows = sorted(edges)
+        if both_ways:
+            rows += [(b, a) for a, b in rows] + rows[::5]
+        pairs = spark.createDataFrame(rows, "doc_a BIGINT, doc_b BIGINT")
         got = {
             r.doc_id: r.cluster_id
             for r in connected_components(pairs, switch_after=1).collect()
         }
-        assert got == expect, f"seed {seed}"
+        assert got == expect, f"seed {seed}, both_ways={both_ways}"
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -967,6 +973,28 @@ def test_cache_hygiene_incremental_dedup(spark):
     out = incremental_dedup(load_table(spark, SF_DIR, "documents"), "doc_id % 10 = 0")
     assert out.count() > 0
     assert _persisted_ids(spark) - before == set()
+
+
+def test_cache_hygiene_text_clustering(spark):
+    """Every text-clustering caller composes q_dedup_clusters, which
+    releases its shingle sets and passes connected_components an
+    unpersisted pair frame — so each leaves exactly one SQL cache
+    entry: the operator's own label frame."""
+    from flink_pipeline_spark.plans import query_fns
+    from flink_pipeline_spark.plans.unindex import dedup_drop_batch
+
+    fns = query_fns()
+    callers = {
+        n: fns[n] for n in ("q_dedup_clusters", "q_dedup_soft", "q_dedup_apply")
+    }
+    callers["dedup_drop_batch"] = dedup_drop_batch
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    left = {}
+    for name, fn in callers.items():
+        spark.catalog.clearCache()
+        fn(spark, SF_DIR).count()
+        left[name] = cache.numCachedEntries()
+    assert left == dict.fromkeys(callers, 1)
 
 
 def test_release_caches_sweeps_lazy_persists(spark):

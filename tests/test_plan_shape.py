@@ -1,6 +1,7 @@
 """scripts/plan_shape.py's counting rule, on a hand-written plan tree
-(no Spark): every kind is counted once per node that ran, and a cached
-frame's adaptive plan counts its final plan only."""
+(no Spark): every kind is counted once per node of the chosen block —
+the final plan (what ran) or the initial plan (what adaptive
+execution started from) — at every nesting level."""
 
 from __future__ import annotations
 
@@ -45,6 +46,21 @@ AdaptiveSparkPlan isFinalPlan=true
    HashAggregate(keys=[a], functions=[count(1)])
    +- Exchange hashpartitioning(a, 4), ENSURE_REQUIREMENTS
       +- SortMergeJoin [a], [b], Inner
+         :- InMemoryTableScan [a]
+         :     +- InMemoryRelation [a], StorageLevel(disk, memory, 1 replicas)
+         :           +- AdaptiveSparkPlan isFinalPlan=true
+         :              +- == Final Plan ==
+         :                 *(1) Project [a]
+         :                 +- Window [row_number() AS rank], [a], [b ASC]
+         :                    +- *(1) Scan ExistingRDD[a,b]
+         :              +- == Initial Plan ==
+         :                 Project [a]
+         :                 +- Window [row_number() AS rank], [a], [b ASC]
+         :                    +- Exchange hashpartitioning(a, 4)
+         :                       +- Scan ExistingRDD[a,b]
+         +- Exchange hashpartitioning(b, 4)
+            +- ArrowEvalPython [f(b)], [pythonUDF0], 200
+               +- LocalTableScan [b]
 """
 
 
@@ -54,6 +70,18 @@ def test_shape_counts_only_the_plan_that_ran():
         "smj": 1,
         "bhj": 1,
         "bnlj": 1,
+        "windows": 1,
+        "python_evals": 1,
+        "checkpoint_scans": 1,
+    }
+
+
+def test_shape_initial_counts_only_the_initial_plans():
+    assert plan_shape.shape(PLAN, "Initial") == {
+        "exchanges": 3,
+        "smj": 1,
+        "bhj": 0,
+        "bnlj": 0,
         "windows": 1,
         "python_evals": 1,
         "checkpoint_scans": 1,
