@@ -76,20 +76,12 @@ fan_out = _fan_out  # public name: plans use it to widen 1-file corpus
 def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, s: array<string>) — distinct word n-gram shingles.
 
-    NOTE: do NOT select this array and explode it in a separate
-    projection — Catalyst then re-evaluates the whole shingle
-    expression once per emitted element (~|shingles| x blowup,
-    measured 60x). Use exploded_shingles() instead."""
+    NOTE: materialize this frame before exploding its array — Catalyst
+    otherwise re-evaluates the whole shingle expression once per
+    emitted element (~|shingles| x blowup, measured 60x). Every
+    shingle consumer below takes the caller's materialized frame."""
     return _fan_out(docs).select(
         "doc_id", F.expr(shingles_sql("spark", "text", n)).alias("s")
-    )
-
-
-def exploded_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) — the explode fused into the same projection as
-    the shingle expression (single evaluation per row)."""
-    return _fan_out(docs).select(
-        "doc_id", F.explode(F.expr(shingles_sql("spark", "text", n))).alias("shingle")
     )
 
 
@@ -97,20 +89,20 @@ def exploded_from_sets(sets: DataFrame) -> DataFrame:
     """(doc_id, shingle) from a precomputed (doc_id, s) frame. Only use
     with a persisted/cached ``sets`` — exploding an UNcached projected
     array re-evaluates the shingle expression once per element (the
-    measured 60x blowup exploded_shingles() exists to avoid)."""
+    measured 60x blowup)."""
     return sets.select("doc_id", F.explode("s").alias("shingle"))
 
 
-def minhash_wide(docs: DataFrame, n: int = 3, sets: DataFrame | None = None) -> DataFrame:
+def minhash_wide(sets: DataFrame) -> DataFrame:
     """(doc_id, mh_0..mh_{k-1}): all k minhashes in ONE narrow pass —
     the md5 is computed once per shingle, the k affine transforms are
     codegen'd column expressions, and the single groupBy(doc_id) gets
     map-side partial min. (The naive shingle x hash-function cross join
     recomputes the md5 k times and shuffles k x |shingles| rows — 25x
-    slower at sf0.1.) Pass a persisted ``sets`` (from doc_shingles) to
-    share one shingling pass with the verify stage."""
-    exploded = exploded_from_sets(sets) if sets is not None else exploded_shingles(docs, n)
-    hashed = exploded.select(
+    slower at sf0.1.) ``sets`` is the caller's materialized
+    doc_shingles frame, so one shingling pass also feeds the verify
+    stage."""
+    hashed = exploded_from_sets(sets).select(
         "doc_id", F.expr(shingle_hash_sql("spark", "shingle")).alias("x")
     )
     hcols = [
@@ -124,28 +116,19 @@ def minhash_wide(docs: DataFrame, n: int = 3, sets: DataFrame | None = None) -> 
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, n: int = 3, sets: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id, i, mh): long-form view of minhash_wide. Pass a
-    persisted ``sets`` to share one shingling pass with the caller's
-    other stages (same contract as minhash_wide)."""
-    wide = minhash_wide(docs, n, sets=sets)
+def minhash_signatures(sets: DataFrame) -> DataFrame:
+    """(doc_id, i, mh): long-form view of minhash_wide over the
+    caller's materialized shingle ``sets``."""
+    wide = minhash_wide(sets)
     k = len(MINHASH_PARAMS)
     stack = ", ".join(f"{i}, mh_{i}" for i in range(k))
     return wide.selectExpr("doc_id", f"stack({k}, {stack}) AS (i, mh)")
 
 
-def lsh_band_signatures(
-    docs_or_wide: DataFrame, n: int = 3, sets: DataFrame | None = None
-) -> DataFrame:
+def lsh_band_signatures(sets: DataFrame) -> DataFrame:
     """(doc_id, band, sig): band signature = '-'-joined minhashes of the
     band's rows, built from the wide form with no extra shuffle."""
-    wide = (
-        docs_or_wide
-        if "mh_0" in docs_or_wide.columns
-        else minhash_wide(docs_or_wide, n, sets=sets)
-    )
+    wide = minhash_wide(sets)
     bands = len(MINHASH_PARAMS) // MINHASH_ROWS
     sig_cols = [
         F.concat_ws(
@@ -176,43 +159,34 @@ JACC_SQL = "CAST(size(array_intersect(sa, sb)) AS DOUBLE) / size(array_union(sa,
 
 
 def lsh_candidate_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    sets: DataFrame | None = None,
-    max_bucket: int = MAX_LSH_BUCKET,
+    sets: DataFrame, max_bucket: int = MAX_LSH_BUCKET
 ) -> DataFrame:
-    """(doc_a, doc_b): distinct unordered pairs sharing >= 1 band bucket
-    of size <= max_bucket.
-
-    One shuffle (groupBy band, sig) replaces the former self-join on
-    (band, sig): pairs are generated by double-exploding each bucket's
-    collected id array, so bucket size is observed and capped BEFORE any
-    pair exists — the skew guard the module header describes. Memory per
-    group is O(max_bucket), pair output O(max_bucket^2) worst case."""
-    sigs = lsh_band_signatures(docs, n, sets=sets)
-    return capped_bucket_pairs(sigs, ["band", "sig"], max_bucket)
+    """(doc_a, doc_b, n_shared): the capped_bucket_pairs candidates over
+    the MinHash-LSH (band, sig) buckets of the caller's materialized
+    shingle ``sets``; ``n_shared`` counts the bands the pair agrees
+    on."""
+    return capped_bucket_pairs(
+        lsh_band_signatures(sets), ["band", "sig"], max_bucket
+    )
 
 
 def capped_bucket_pairs(
-    keyed: DataFrame, key_cols: list[str], max_bucket: int, min_shared: int = 1
+    keyed: DataFrame, key_cols: list[str], max_bucket: int
 ) -> DataFrame:
-    """(doc_a, doc_b): distinct unordered doc_id pairs sharing at least
-    ``min_shared`` buckets of size in [2, max_bucket] — THE candidate-
-    generation skew guard shared by every blocked dedup family member
-    (LSH band buckets, rare-shingle inverted index). One shuffle
-    (groupBy key_cols), then pairs by double-exploding each bucket's
-    collected id array, so bucket size is observed and capped BEFORE
-    any pair exists. Memory per group is O(max_bucket), pair output
-    O(max_bucket^2) worst case.
-
-    ``min_shared``: the dedup of repeated pairs is an aggregate over
-    (doc_a, doc_b) counting how many buckets co-list the pair, so
-    requiring >= 2 co-occurrences costs nothing extra — and for
-    high-overlap metrics (containment) it is the cheap pre-filter that
-    keeps the array-attach verify join off the long tail of
-    single-shingle coincidences (measured 48x-corpus: 9.1M candidates
-    -> the verify join shuffles ~4 KB of shingle arrays per candidate,
-    which is the whole cost; see scripts/scale_probe.py)."""
+    """(doc_a, doc_b, n_shared): distinct unordered doc_id pairs that
+    share a bucket of ``key_cols`` holding between 2 and
+    ``max_bucket`` rows (both bounds inclusive); ``n_shared`` counts
+    the capped buckets the pair shares. This is the one candidate rule
+    of every blocked dedup family member: MinHash-LSH band buckets,
+    the rare-shingle containment index, the image/audio hash bands
+    and the video fingerprint sets. One shuffle (groupBy key_cols),
+    then pairs by double-exploding each bucket's collected id array,
+    so bucket size is observed and capped BEFORE any pair exists.
+    Memory per group is O(max_bucket), pair output O(max_bucket^2)
+    worst case. The dedup of repeated pairs is the count aggregate
+    itself, so callers that gate on overlap (containment's >= 2 rare
+    shingles, video's 2*n_shared >= min size) filter ``n_shared`` at
+    no extra cost; the rest drop it."""
     buckets = (
         keyed.groupBy(*key_cols)
         .agg(F.collect_list("doc_id").alias("ids"))
@@ -223,15 +197,11 @@ def capped_bucket_pairs(
         .select("doc_a", F.explode("ids").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("_shared"))
-        .filter(F.col("_shared") >= min_shared)
-        .select("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_shared"))
     )
 
 
-def verified_near_dups(
-    docs: DataFrame, sets: DataFrame, threshold: float = 0.8
-) -> DataFrame:
+def verified_near_dups(sets: DataFrame, threshold: float = 0.8) -> DataFrame:
     """The text near-dup graph: (doc_a, doc_b, jacc) for every capped
     MinHash-LSH candidate pair whose exact shingle-Jaccard is >=
     threshold. ``sets`` is the caller's materialized
@@ -240,7 +210,7 @@ def verified_near_dups(
     The caller owns its lifetime: materialize it at the plan root and
     unpersist it once the result is consumed."""
     return scored_pairs(
-        lsh_candidate_pairs(docs, sets=sets), sets, JACC_SQL, "jacc", threshold
+        lsh_candidate_pairs(sets), sets, JACC_SQL, "jacc", threshold
     )
 
 
@@ -280,10 +250,8 @@ MAX_SHINGLE_DF = 8
 
 
 def containment_pairs(
-    docs: DataFrame,
-    n: int = 3,
+    sets: DataFrame,
     threshold: float = 0.9,
-    sets: DataFrame | None = None,
     max_df: int = MAX_SHINGLE_DF,
 ) -> DataFrame:
     """(doc_a, doc_b, containment): pairs where the smaller document's
@@ -292,24 +260,25 @@ def containment_pairs(
     one (quotes, concatenated crawls, boilerplate wrapping), which
     Jaccard-family dedup structurally misses: the union denominator
     dilutes the score, and length-bin blocking never pairs documents
-    of very different sizes in the first place.
+    of very different sizes in the first place. ``sets`` is the
+    caller's materialized doc_shingles frame.
 
     Blocking is a rare-shingle inverted index: candidates share at
     least one shingle whose document frequency is within
-    [2, max_df] — the same collect/cap/double-explode guard as
-    MinHash-LSH, so bucket size is observed BEFORE any pair exists.
-    At 100 TB the df cap is what keeps the index join sub-quadratic:
-    common shingles (the quadratic mass) never form buckets, and a
-    genuinely contained pair shares MANY shingles, so requiring >= 2
-    of them to be rare (min_shared=2, mirrored in the oracle) loses
-    essentially nothing while cutting the verify join's candidate
-    volume by orders of magnitude — the arrays-attach join is the
-    measured cost center at scale (scripts/scale_probe.py)."""
-    if sets is None:
-        sets = doc_shingles(docs, n).transform(materialize)
+    [2, max_df] — capped_bucket_pairs, the same collect/cap/double-
+    explode guard as MinHash-LSH, so bucket size is observed BEFORE
+    any pair exists. At 100 TB the df cap is what keeps the index
+    join sub-quadratic: common shingles (the quadratic mass) never
+    form buckets, and a genuinely contained pair shares MANY
+    shingles, so requiring n_shared >= 2 rare ones (mirrored in the
+    oracle) loses essentially nothing while cutting the verify join's
+    candidate volume by orders of magnitude — the arrays-attach join
+    is the measured cost center at scale (measured 48x-corpus: 9.1M
+    candidates, each shuffling ~4 KB of shingle arrays;
+    scripts/scale_probe.py)."""
     cand = capped_bucket_pairs(
-        exploded_from_sets(sets), ["shingle"], max_df, min_shared=2
-    )
+        exploded_from_sets(sets), ["shingle"], max_df
+    ).filter(F.col("n_shared") >= 2)
     cont = "CAST(size(array_intersect(sa, sb)) AS DOUBLE) / least(size(sa), size(sb))"
     return scored_pairs(cand, sets, cont, "containment", threshold)
 
@@ -1277,13 +1246,19 @@ def neardup_probe(
     threshold: float = 0.8,
     max_bucket: int = MAX_LSH_BUCKET,
 ) -> DataFrame:
-    """The lazy batch-vs-corpus near-dup probe (the shape
-    incremental_dedup eagerly checkpoints; factored out so the plan
-    stays inspectable — tests assert the collected capped bucket index
-    and equi-probe here): corpus (band, sig) buckets as collect_list
-    arrays capped at ``max_bucket``, batch signatures equi-join the
-    index, candidates verify by exact shingle-Jaccard. Returns the
-    distinct batch doc_ids with a near-dup in the corpus."""
+    """The one text batch-vs-corpus near-dup probe, shared by
+    incremental_dedup (q_dedup_incremental) and the streaming
+    NearDupIngest (the shape incremental_dedup eagerly checkpoints;
+    factored out so the plan stays inspectable — tests assert the
+    collected capped bucket index and equi-probe here): corpus
+    (band, sig) buckets as collect_list arrays capped at
+    ``max_bucket``, batch signatures equi-join the index, candidates
+    verify by exact shingle-Jaccard. Returns the distinct batch
+    doc_ids with a near-dup in the corpus. It is not
+    capped_bucket_pairs: the index is one-sided (only corpus rows
+    form buckets, and a bucket holding one corpus doc still pairs
+    with the batch), where capped_bucket_pairs pairs within buckets.
+    The image twin is operators/multimodal.band_probe."""
     old_buckets = (
         sigs.filter(~is_new)
         .groupBy("band", "sig")
@@ -1376,7 +1351,7 @@ def incremental_dedup(
     # change (SCALING.md r7: exponent 1.03), and negligible against
     # corpus scans at real scale.
     sets = doc_shingles(docs, n).transform(materialize)
-    sigs = lsh_band_signatures(docs, n, sets=sets).transform(materialize)
+    sigs = lsh_band_signatures(sets).transform(materialize)
     near = eager_checkpoint(
         neardup_probe(is_new, sets, sigs, threshold, max_bucket)
     )
@@ -1406,7 +1381,7 @@ def substring_dedup_stats(
 
     Plan: corpus scan -> (doc_id, toks) token arrays
     -> positional n-grams (posexplode fused into the projection —
-    see exploded_shingles for the re-evaluation blowup this avoids) ->
+    see doc_shingles for the re-evaluation blowup this avoids) ->
     8-byte hash56 gram keys -> occurrence-count frequency agg -> equi-join
     back + per-doc collect of duplicated starts (small: only dup-gram
     positions) -> the removal itself is a single VECTORIZED projection,

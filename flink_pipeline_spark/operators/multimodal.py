@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .llm import capped_bucket_pairs, topk_cut
+
 FEATURE_DIM = 8
 
 MULTIMODAL_SCHEMA = (
@@ -435,6 +437,8 @@ def resize_payload(mm: DataFrame, factor: int = 2) -> DataFrame:
 
 AHASH_GRID = 8  # 8x8 cells = 64 hash bits
 AHASH_BANDS = 4  # pigeonhole bands of 16 bits (lossless to hamming 3)
+MAX_HAMMING = 3  # near-dup radius: AHASH_BANDS x 16 bits block LOSSLESSLY to it
+MAX_BUCKET = 1024  # hot-bucket cap of band/fingerprint blocking, as in simhash_pairs
 LUMA_WEIGHTS = (299, 587, 114)  # integer ITU-R 601 luma x1000
 
 AHASH_SCHEMA = "file STRING, blk BIGINT, key BIGINT"
@@ -570,6 +574,84 @@ def dhash_bands(files: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=["file", "blk", "key"])
 
     return files.select("file", "content").mapInPandas(enc, schema=AHASH_SCHEMA)
+
+
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """(file_a, file_b, hamming): every pair of files whose 64-bit
+    hashes, given as (file, blk, key) band rows, lie within
+    MAX_HAMMING bits. Candidates are capped_bucket_pairs over exact
+    (blk, key) agreement (pigeonhole: lossless to MAX_HAMMING), then
+    the exact bit_count(xor) verify is summed over the bands. Shared
+    by the aHash, dHash and audio fingerprint pair queries; the Spark
+    twin of plans/image_dedup._pairs_sql."""
+    cand = capped_bucket_pairs(
+        bands.select(F.col("file").alias("doc_id"), "blk", "key"),
+        ["blk", "key"],
+        MAX_BUCKET,
+    ).select(F.col("doc_a").alias("file_a"), F.col("doc_b").alias("file_b"))
+    ka = bands.select(
+        F.col("file").alias("file_a"), "blk", F.col("key").alias("key_a")
+    )
+    kb = bands.select(
+        F.col("file").alias("file_b"), "blk", F.col("key").alias("key_b")
+    )
+    return (
+        cand.join(ka, "file_a")
+        .join(kb, ["file_b", "blk"])
+        .groupBy("file_a", "file_b")
+        .agg(
+            F.sum(F.expr("bit_count(key_a ^ key_b)"))
+            .cast("long")
+            .alias("hamming")
+        )
+        .filter(F.col("hamming") <= MAX_HAMMING)
+    )
+
+
+def band_probe(probe: DataFrame, store: DataFrame) -> DataFrame:
+    """(file, dup_of, hamming): each ``probe`` file's best ``store``
+    match within MAX_HAMMING, ties to the smaller store file; files
+    with no match are absent. Both inputs are (file, blk, key) band
+    frames. The one image batch-vs-store probe, shared by
+    q_dedup_image_phash_incremental and the streaming
+    ImageDedupIngest (the text twin is operators/llm.neardup_probe).
+
+    Work stays bounded by the probe, not the store: the store is
+    first semi-joined down to the (blk, key) buckets the probe hits,
+    and candidates are the equi-join on those buckets. The verify
+    needs each candidate's FULL band signature, while the probed rows
+    hold only the matching bands (Hamming over them reads 0 by
+    construction), so the store is read again, bounded to the
+    candidate files."""
+    probed = store.join(
+        probe.select("blk", "key").distinct(), ["blk", "key"], "left_semi"
+    )
+    cand = (
+        probe.join(
+            probed.select(F.col("file").alias("store_file"), "blk", "key"),
+            ["blk", "key"],
+        )
+        .select("file", "store_file")
+        .distinct()
+    )
+    pk = probe.select("file", "blk", F.col("key").alias("pkey"))
+    sk = store.join(
+        cand.select(F.col("store_file").alias("file")).distinct(),
+        "file",
+        "left_semi",
+    ).select(F.col("file").alias("store_file"), "blk", F.col("key").alias("skey"))
+    ham = (
+        cand.join(pk, "file")
+        .join(sk, ["store_file", "blk"])
+        .groupBy("file", "store_file")
+        .agg(
+            F.sum(F.expr("bit_count(pkey ^ skey)")).cast("long").alias("hamming")
+        )
+        .filter(F.col("hamming") <= MAX_HAMMING)
+    )
+    return topk_cut(ham, "file", "hamming", "store_file", 1).select(
+        "file", F.col("store_file").alias("dup_of"), "hamming"
+    )
 
 
 GRAY_SCHEMA = "file STRING, width BIGINT, height BIGINT, p BIGINT, g BIGINT"

@@ -2,8 +2,11 @@
 modality's dedup story, r10 verdict Missing #2): 64-bit energy-
 gradient fingerprint over decoded PCM16 windows, the SAME pigeonhole
 band blocking / hot-bucket cap / exact Hamming verify as the image
-family (imported, not re-implemented), and a recall/precision audit
-against exact per-sample distance ground truth.
+family (operators/multimodal.band_pairs, whose candidates come from
+the one blocked-dedup rule, operators/llm.capped_bucket_pairs), and a
+recall/precision audit against exact per-sample distance ground
+truth. The WAV bytes are read by sources/fixtures.fixture_files and,
+on the oracle side, decoded with its _b hex-byte helper.
 
 Reference contract: U2's record-level wide transform
 (workflow.py:241-277) moves opaque payloads; operators/multimodal.py
@@ -27,8 +30,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.multimodal import AFP_WINDOWS, audio_fp_bands, pcm_stream
-from .image_dedup import MAX_HAMMING, _band_pairs, _pairs_sql
+from ..operators.multimodal import (
+    AFP_WINDOWS,
+    MAX_HAMMING,
+    audio_fp_bands,
+    band_pairs,
+    pcm_stream,
+)
+from ..sources.fixtures import _b, fixture_files
+from .image_dedup import _pairs_sql
 from .recall_rollup import recall_rollup, recall_rollup_sql
 from .registry import register
 
@@ -41,17 +51,7 @@ AFP_DIR = os.path.abspath(
 TRUTH_SUM_AFP = 200_000  # near-dup truth: sum |a_k - b_k| <= this
 # (keep in sync with scripts/make_afp_fixtures.py)
 
-_HEXDIGITS = "0123456789ABCDEF"
 _HDR = 44  # canonical RIFF/PCM16 header bytes
-
-
-def _b(j: str) -> str:
-    """DuckDB hex arithmetic: byte value at 1-based byte index j
-    (the image_dedup._b convention)."""
-    return (
-        f"((strpos('{_HEXDIGITS}', h[2*({j})-1:2*({j})-1]) - 1) * 16"
-        f" + (strpos('{_HEXDIGITS}', h[2*({j}):2*({j})]) - 1))"
-    )
 
 
 def _hx(b: bytes) -> str:
@@ -116,20 +116,6 @@ _AFP_CTE = f"""braw AS (
     )"""
 
 
-def _load_afp_files(spark: SparkSession) -> DataFrame:
-    # self-heal confs + ship the package: fixture queries bypass
-    # load_table's hook (the image-family r10 finding)
-    from ..catalog import _ensure_session_conf
-
-    _ensure_session_conf(spark)
-    df = spark.read.format("binaryFile").load(
-        os.path.join(AFP_DIR, "*.wav")
-    )
-    return df.select(
-        F.regexp_extract("path", r"([^/]+)$", 1).alias("file"), "content"
-    )
-
-
 @register(
     "q_dedup_audio_fp",
     oracle=f"WITH {_AFP_CTE}, {_pairs_sql('abands', 'af')}",
@@ -143,9 +129,10 @@ def q_dedup_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     band agreement (any pair within Hamming {mh} shares >= 1 of the
     4 16-bit bands, so candidates are an equi-join; all-pairs never
     materializes) -> exact bit_count(xor) verify per band, summed.
-    Blocking, cap, and verify are IMPORTED from the image family
-    (plans/image_dedup._pairs_sql / _band_pairs) — one L2 machinery,
-    three modalities. The DuckDB oracle replays the ENTIRE path from
+    Blocking, cap, and verify are the image family's
+    (operators/multimodal.band_pairs, oracle
+    plans/image_dedup._pairs_sql) — one L2 machinery, three
+    modalities. The DuckDB oracle replays the ENTIRE path from
     read_blob hex bytes: container guards, signed sample
     reinterpretation, window energies, gradient bits, band packing,
     blocking, cap, verify.
@@ -162,7 +149,7 @@ def q_dedup_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds bucket occupancy sub-linear to ~10^6 clips/band-key — past
     that, widen to a spectral fingerprint (constant-Q peaks, 256
     bits) exactly as SIMHASH_BITS replaced the calib width."""
-    return _band_pairs(audio_fp_bands(_load_afp_files(spark)))
+    return band_pairs(audio_fp_bands(fixture_files(spark, AFP_DIR, "*.wav")))
 
 
 q_dedup_audio_fp.__doc__ = q_dedup_audio_fp.__doc__.format(mh=MAX_HAMMING)
@@ -207,8 +194,7 @@ def q_dedup_audio_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins on sample index + length — the audit path, priced for
     fixtures; the method side stays on the 4-rows-per-clip scale
     path. The 1-row denominator broadcast is the vetted gate."""
-    files = _load_afp_files(spark)
-    st = pcm_stream(files)
+    st = pcm_stream(fixture_files(spark, AFP_DIR, "*.wav"))
     a = st.select(
         F.col("file").alias("file_a"), "n", "k", F.col("s").alias("sa")
     )

@@ -1063,21 +1063,28 @@ def _register_graph_triangles() -> None:
         families."""
         d = load_table(spark, sf_dir, "documents")
         sets = doc_shingles(d).transform(materialize)
-        pairs = verified_near_dups(d, sets)
+        pairs = verified_near_dups(sets)
         # eager localCheckpoint instead of persist: the edge frame is
         # referenced by three downstream joins, and the query returns
         # only 1-row aggregates — a persist here would outlive the
         # return and accumulate across a full-surface sweep (ADVICE
         # r9). Checkpointing cuts the LSH lineage, so the shingle
         # cache can be released immediately and no cache entry leaks.
-        e = (
+        # The canonical projection is persisted for the checkpoint job
+        # and released after it, as connected_components does: the
+        # checkpoint then carries the measured edge size, not the
+        # planner's join-product estimate of the pair DAG, so the
+        # triangle joins plan as broadcasts from the start.
+        canon = (
             pairs.select(
                 F.least("doc_a", "doc_b").alias("a"),
                 F.greatest("doc_a", "doc_b").alias("b"),
             )
             .distinct()
-            .localCheckpoint(eager=True)
+            .persist()
         )
+        e = canon.localCheckpoint(eager=True)
+        canon.unpersist()
         sets.unpersist()
         deg = (
             e.select(F.col("a").alias("v"))

@@ -25,7 +25,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.multimodal import ahash_bands, dhash_bands, gray_pixels
+from ..operators.multimodal import (
+    MAX_BUCKET,
+    MAX_HAMMING,
+    ahash_bands,
+    band_pairs,
+    band_probe,
+    dhash_bands,
+    gray_pixels,
+)
+from ..sources.fixtures import _b, fixture_files
 from .recall_rollup import recall_rollup, recall_rollup_sql
 from .registry import register
 
@@ -36,23 +45,12 @@ PHASH_DIR = os.path.abspath(
 )
 
 PHASH_SIDE = 16  # fixture corpus is pinned 16x16 (generator asserts)
-MAX_HAMMING = 3  # 4 bands x 16 bits: blocking is LOSSLESS to this
-MAX_BUCKET = 1024  # hot-bucket cap, the simhash_pairs guard
 TRUTH_SUM = 2_000_000  # exact truth: sum |gray_a - gray_b| <= this
 # (keep PHASH_SIDE/TRUTH_SUM in sync with scripts/make_phash_fixtures.py)
 
-_HEXDIGITS = "0123456789ABCDEF"
 _HDR_HEX = "P6\n16 16\n255\n".encode("ascii").hex().upper()
 _HDR_LEN = 13
 _N_PX_BYTES = PHASH_SIDE * PHASH_SIDE * 3
-
-
-def _b(j: str) -> str:
-    """DuckDB hex arithmetic: byte value at 1-based byte index j."""
-    return (
-        f"((strpos('{_HEXDIGITS}', h[2*({j})-1:2*({j})-1]) - 1) * 16"
-        f" + (strpos('{_HEXDIGITS}', h[2*({j}):2*({j})]) - 1))"
-    )
 
 
 # Shared oracle prefix: read_blob -> strict 16x16 P6 guard -> integer
@@ -152,22 +150,6 @@ _DHASH_CTE = """dbits AS (
     )"""
 
 
-def _load_phash_files(spark: SparkSession) -> DataFrame:
-    # self-heal confs + ship the package (catalog hook): these queries
-    # read fixtures, not sf tables, so load_table's hook never runs —
-    # a bare driver session running an image query FIRST would
-    # otherwise hit ModuleNotFoundError in the mapInPandas workers
-    from ..catalog import _ensure_session_conf
-
-    _ensure_session_conf(spark)
-    df = spark.read.format("binaryFile").load(
-        os.path.join(PHASH_DIR, "*.ppm")
-    )
-    return df.select(
-        F.regexp_extract("path", r"([^/]+)$", 1).alias("file"), "content"
-    )
-
-
 @register(
     "q_dedup_image_phash",
     oracle=f"WITH {_PHASH_CTE}, {_PAIRS_SQL}",
@@ -194,40 +176,7 @@ def q_dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     65536 keys/band holds bucket occupancy sub-linear until ~10^6
     images/band-key — past that, widen the hash (pHash-DCT, 256 bits)
     exactly as SIMHASH_BITS replaced the calib width."""
-    return _band_pairs(ahash_bands(_load_phash_files(spark)))
-
-
-def _band_pairs(bands: DataFrame) -> DataFrame:
-    """Shared blocking/cap/verify over a (file, blk, key) band frame —
-    the Spark twin of _pairs_sql, used by both hash methods."""
-    buckets = (
-        bands.groupBy("blk", "key")
-        .agg(F.collect_list("file").alias("ms"))
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= MAX_BUCKET))
-    )
-    cand = (
-        buckets.select(F.explode("ms").alias("file_a"), "ms")
-        .select("file_a", F.explode("ms").alias("file_b"))
-        .filter(F.col("file_a") < F.col("file_b"))
-        .distinct()
-    )
-    ka = bands.select(
-        F.col("file").alias("file_a"), "blk", F.col("key").alias("key_a")
-    )
-    kb = bands.select(
-        F.col("file").alias("file_b"), "blk", F.col("key").alias("key_b")
-    )
-    return (
-        cand.join(ka, "file_a")
-        .join(kb, ["file_b", "blk"])
-        .groupBy("file_a", "file_b")
-        .agg(
-            F.sum(F.expr("bit_count(key_a ^ key_b)"))
-            .cast("long")
-            .alias("hamming")
-        )
-        .filter(F.col("hamming") <= MAX_HAMMING)
-    )
+    return band_pairs(ahash_bands(fixture_files(spark, PHASH_DIR, "*.ppm")))
 
 
 q_dedup_image_phash.__doc__ = q_dedup_image_phash.__doc__.format(
@@ -259,7 +208,7 @@ def q_dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to the aHash path — 4 fixed rows per image,
     (blk, key) equi-join blocking, capped buckets."""
-    return _band_pairs(dhash_bands(_load_phash_files(spark)))
+    return band_pairs(dhash_bands(fixture_files(spark, PHASH_DIR, "*.ppm")))
 
 
 @register(
@@ -308,8 +257,7 @@ def q_dedup_image_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixtures; both method sides stay on the 4-rows-per-image scale
     path. The 1-row denominator broadcast is the vetted source-mix
     gate."""
-    files = _load_phash_files(spark)
-    gp = gray_pixels(files)
+    gp = gray_pixels(fixture_files(spark, PHASH_DIR, "*.ppm"))
     a = gp.select(
         F.col("file").alias("file_a"), "width", "height", "p",
         F.col("g").alias("ga"),
@@ -403,56 +351,33 @@ def q_dedup_image_phash_incremental(
     (5 bits) and heavy (13 bits) variants correctly probe as NEW at
     the lossless-3 threshold.
 
-    Scale: the probe side is batch-sized; the store join is equi on
-    (blk, key) against a store whose size is 4 rows per image ever
-    kept — the candidate set is bucket-collision-bounded, never
-    store x batch."""
-    bands = ahash_bands(_load_phash_files(spark))
-    is_probe = F.col("file").isin(*PROBE_FILES)
-    store = bands.filter(~is_probe)
-    probe = bands.filter(is_probe)
-    cand = (
-        probe.alias("p")
-        .join(
-            store.alias("s"),
-            (F.col("s.blk") == F.col("p.blk"))
-            & (F.col("s.key") == F.col("p.key")),
-        )
-        .select(
-            F.col("p.file").alias("file"),
-            F.col("s.file").alias("store_file"),
-        )
-        .distinct()
-    )
-    pk = probe.select("file", "blk", F.col("key").alias("pkey"))
-    sk = store.select(
-        F.col("file").alias("store_file"), "blk", F.col("key").alias("skey")
-    )
-    ham = (
-        cand.join(pk, "file")
-        .join(sk, ["store_file", "blk"])
-        .groupBy("file", "store_file")
-        .agg(
-            F.sum(F.expr("bit_count(pkey ^ skey)"))
-            .cast("long")
-            .alias("hamming")
-        )
-        .filter(F.col("hamming") <= MAX_HAMMING)
-    )
-    from pyspark.sql.window import Window
+    The probe is operators/multimodal.band_probe, the same call the
+    streaming ImageDedupIngest makes per micro-batch, so batch and
+    stream decide through one code path.
 
-    w = Window.partitionBy("file").orderBy("hamming", "store_file")
-    best = (
-        ham.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("file", F.col("store_file").alias("dup_of"), "hamming")
+    Scale: the probe side is batch-sized; the store is semi-joined
+    down to the probed (blk, key) buckets before the equi-join, and
+    re-read only for the candidates' full signatures — the candidate
+    set is bucket-collision-bounded, never store x batch."""
+    # one codec run feeds both sides: band_probe reads the probe three
+    # times and the store twice, and the lazy frame would re-run the
+    # codec per read (9 Python evaluations against 1)
+    bands = ahash_bands(fixture_files(spark, PHASH_DIR, "*.ppm")).localCheckpoint(
+        eager=True
     )
-    probes = probe.select("file").distinct()
-    return probes.join(best, "file", "left").select(
-        "file",
-        "dup_of",
-        "hamming",
-        F.col("dup_of").isNotNull().alias("is_dup"),
+    is_probe = F.col("file").isin(*PROBE_FILES)
+    probe = bands.filter(is_probe)
+    best = band_probe(probe, bands.filter(~is_probe))
+    return (
+        probe.select("file")
+        .distinct()
+        .join(best, "file", "left")
+        .select(
+            "file",
+            "dup_of",
+            "hamming",
+            F.col("dup_of").isNotNull().alias("is_dup"),
+        )
     )
 
 
@@ -498,7 +423,10 @@ def q_dedup_image_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SCALING.md), and the keeper join is component-sized — identical
     cost profile to the text apply. Note string keys are fine at
     fixture scale; a web-scale image corpus would map file ids to
-    BIGINT first (the PageRank lesson, SCALING.md r8j)."""
+    BIGINT first (the PageRank lesson, SCALING.md r8j). The stamped
+    file list is the fixture listing itself: the pair query hashes
+    every file, and ahash_bands raises on any it cannot hash, so the
+    listing is exactly the hashed set without a second codec pass."""
     from ..operators.llm import connected_components
 
     pairs = q_dedup_image_phash(spark, sf_dir).select(
@@ -507,7 +435,7 @@ def q_dedup_image_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = connected_components(pairs).select(
         F.col("doc_id").alias("file"), F.col("cluster_id").alias("keeper")
     )
-    files = ahash_bands(_load_phash_files(spark)).select("file").distinct()
+    files = fixture_files(spark, PHASH_DIR, "*.ppm").select("file")
     return files.join(clusters, "file", "left").select(
         "file",
         F.coalesce("keeper", "file").alias("keeper"),

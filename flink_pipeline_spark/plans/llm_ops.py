@@ -201,7 +201,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass and the verify pass — one shingling of the corpus total. See
     operators/llm.py for the 100 TB notes."""
     d = load_table(spark, sf_dir, "documents")
-    return verified_near_dups(d, doc_shingles(d).transform(materialize))
+    return verified_near_dups(doc_shingles(d).transform(materialize))
 
 
 @register("q_dedup_near", oracle=_MINHASH_ORACLE)
@@ -267,8 +267,8 @@ def q_dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     between the dedup query and its audit."""
     d = load_table(spark, sf_dir, "documents")
     sets = doc_shingles(d).persist()
-    cand = lsh_candidate_pairs(d, sets=sets)
-    mh = minhash_signatures(d, sets=sets)
+    cand = lsh_candidate_pairs(sets)
+    mh = minhash_signatures(sets)
     ma = mh.select(
         F.col("doc_id").alias("doc_a"), "i", F.col("mh").alias("mha")
     )
@@ -507,7 +507,7 @@ def _register_dedup_recall() -> None:
             .filter(round_agg(jacc) >= TEXT_RECALL_TAU)
             .select("doc_a", "doc_b")
         )
-        mh = verified_near_dups(d, sets)
+        mh = verified_near_dups(sets)
         # r15 (guide §2.6): the four pair generators (exact truth,
         # minhash verify, 56-bit simhash, 16-bit simhash) are
         # INDEPENDENT once the shared shingle sets are cached —
@@ -5683,7 +5683,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative ground truth."""
     d = load_table(spark, sf_dir, "documents")
     sets = doc_shingles(d).transform(materialize)
-    clusters = connected_components(verified_near_dups(d, sets))
+    clusters = connected_components(verified_near_dups(sets))
     # the operator eagerly localCheckpoints its edge frame, so the
     # shingle cache is consumed by return time; the operator's label
     # frame is the one cache entry the clustering leaves behind
@@ -5911,7 +5911,9 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking. See operators/llm.py containment_pairs for the 100 TB
     blocking design (df-capped inverted index)."""
     d = load_table(spark, sf_dir, "documents")
-    return containment_pairs(d, threshold=0.9)
+    return containment_pairs(
+        doc_shingles(d).transform(materialize), threshold=0.9
+    )
 
 
 def _register_keeper_quality() -> None:

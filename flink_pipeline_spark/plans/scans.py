@@ -14,7 +14,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.fixtures import fixture_df, fixture_values_sql
+from ..sources.fixtures import (
+    _HEXDIGITS,
+    _b,
+    fixture_df,
+    fixture_files,
+    fixture_values_sql,
+)
 from .registry import register
 
 # The gzipped log fixture is committed in-repo (generated from the same
@@ -117,13 +123,12 @@ def q_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scan_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary file source (SURVEY.md §2.1 SRC4 — the reference
     moves opaque payload files it never parses, workflow.py:251):
-    ``spark.read.format("binaryFile")`` yields (path, length, content)
-    per file; downstream multimodal decode consumes the same shape. At
-    scale each file is one row/partition-slice — the pattern for
-    image/audio payload ingestion."""
-    df = spark.read.format("binaryFile").load(os.path.join(BLOB_DIR, "*.bin"))
-    return df.select(
-        F.regexp_extract("path", r"([^/]+)$", 1).alias("file"),
+    the binaryFile source (sources/fixtures.fixture_files) yields
+    (file, content) per file; downstream multimodal decode consumes
+    the same shape. At scale each file is one row/partition-slice —
+    the pattern for image/audio payload ingestion."""
+    return fixture_files(spark, BLOB_DIR, "*.bin").select(
+        "file",
         F.length("content").cast("bigint").alias("n_bytes"),
         F.substring(F.hex("content"), 1, 16).alias("head_hex"),
     )
@@ -147,8 +152,6 @@ def q_tsv_header_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.col("line"), "\t").getItem(0).alias("first_field")
     )
 
-
-_HEXDIGITS = "0123456789ABCDEF"
 
 
 @register(
@@ -194,11 +197,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction over a payload lake."""
     from ..operators.multimodal import decode_pcm16
 
-    df = spark.read.format("binaryFile").load(os.path.join(BLOB_DIR, "*.bin"))
-    files = df.select(
-        F.regexp_extract("path", r"([^/]+)$", 1).alias("file"), "content"
-    )
-    return decode_pcm16(files)
+    return decode_pcm16(fixture_files(spark, BLOB_DIR, "*.bin"))
 
 
 @register(
@@ -301,30 +300,19 @@ def q_multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed fixtures dependency-free and byte-replayable."""
     from ..operators.multimodal import decode_ppm
 
-    df = spark.read.format("binaryFile").load(os.path.join(IMG_DIR, "*.ppm"))
-    files = df.select(
-        F.regexp_extract("path", r"([^/]+)$", 1).alias("file"), "content"
-    )
-    return decode_ppm(files)
+    return decode_ppm(fixture_files(spark, IMG_DIR, "*.ppm"))
 
 
-# Hex arithmetic for the WAV oracle: byte value at 1-based byte index j
-# of hex string h is _WB(j); little-endian u16/u32 compose from it.
-def _wb(j: str) -> str:
-    return (
-        f"((strpos('{_HEXDIGITS}', h[2*({j})-1:2*({j})-1]) - 1) * 16"
-        f" + (strpos('{_HEXDIGITS}', h[2*({j}):2*({j})]) - 1))"
-    )
-
-
-_WAV_U16_23 = f"({_wb('23')} + 256 * {_wb('24')})"
+# Hex arithmetic for the WAV oracle: little-endian u16/u32 fields
+# compose from _b(j), the byte value at 1-based byte index j.
+_WAV_U16_23 = f"({_b('23')} + 256 * {_b('24')})"
 _WAV_U32_25 = (
-    f"({_wb('25')} + 256 * {_wb('26')}"
-    f" + 65536 * {_wb('27')} + 16777216 * {_wb('28')})"
+    f"({_b('25')} + 256 * {_b('26')}"
+    f" + 65536 * {_b('27')} + 16777216 * {_b('28')})"
 )
 _WAV_U32_41 = (
-    f"({_wb('41')} + 256 * {_wb('42')}"
-    f" + 65536 * {_wb('43')} + 16777216 * {_wb('44')})"
+    f"({_b('41')} + 256 * {_b('42')}"
+    f" + 65536 * {_b('43')} + 16777216 * {_b('44')})"
 )
 
 
@@ -368,7 +356,7 @@ _WAV_U32_41 = (
                CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS s
         FROM (
             SELECT file, channels, sample_rate, t,
-                   {_wb('45 + 2*t')} + 256 * {_wb('46 + 2*t')} AS u
+                   {_b('45 + 2*t')} + 256 * {_b('46 + 2*t')} AS u
             FROM (SELECT file, h, channels, sample_rate,
                          unnest(range(0, data_size // 2)) AS t
                   FROM guard)
@@ -409,8 +397,4 @@ def q_multimodal_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed fixtures dependency-free and byte-replayable."""
     from ..operators.multimodal import decode_wav
 
-    df = spark.read.format("binaryFile").load(os.path.join(AUDIO_DIR, "*.wav"))
-    files = df.select(
-        F.regexp_extract("path", r"([^/]+)$", 1).alias("file"), "content"
-    )
-    return decode_wav(files)
+    return decode_wav(fixture_files(spark, AUDIO_DIR, "*.wav"))

@@ -32,7 +32,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.portable import round_agg, round_sql
-from ..operators.multimodal import VID_KEY_STRIDE, dhash_bands, video_keyframes
+from ..operators.llm import capped_bucket_pairs
+from ..operators.multimodal import (
+    MAX_BUCKET,
+    VID_KEY_STRIDE,
+    dhash_bands,
+    gray_pixels,
+    video_keyframes,
+)
+from ..sources.fixtures import _b, fixture_files
 from .recall_rollup import recall_rollup, recall_rollup_sql
 from .registry import register
 
@@ -42,23 +50,13 @@ VIDEO_DIR = os.path.abspath(
 
 VID_SIDE = 16  # fixture corpus is pinned 16x16 (generator asserts)
 FRAME_TRUTH = 2_000_000  # per-frame truth: sum |gray_a - gray_b| <= this
-MAX_FP_BUCKET = 1024  # hot-fingerprint cap, the simhash_pairs guard
 # containment decision: 2 * |A∩B| >= min(|A|, |B|)  (the 0.5 gate as an
 # EXACT integer compare — no float threshold anywhere in the decision)
 # (keep these in sync with scripts/make_video_fixtures.py)
 
-_HEXDIGITS = "0123456789ABCDEF"
 _HDR_LEN = 20
 _FRAME_BYTES = VID_SIDE * VID_SIDE * 3
 _HDR_PREFIX_HEX = "FV01 0016 0016 ".encode("ascii").hex().upper()
-
-
-def _b(j: str) -> str:
-    """DuckDB hex arithmetic: byte value at 1-based byte index j."""
-    return (
-        f"((strpos('{_HEXDIGITS}', h[2*({j})-1:2*({j})-1]) - 1) * 16"
-        f" + (strpos('{_HEXDIGITS}', h[2*({j}):2*({j})]) - 1))"
-    )
 
 
 # Shared oracle prefix: read_blob -> fixed-width FVID header guard +
@@ -131,7 +129,7 @@ _VID_CTE = f"""b AS (
 # pair generation: hot-capped fp-bucket equi-join + containment
 _VID_PAIRS_SQL = f"""bucket AS (
         SELECT fp FROM sets GROUP BY fp
-        HAVING count(*) BETWEEN 2 AND {MAX_FP_BUCKET}
+        HAVING count(*) BETWEEN 2 AND {MAX_BUCKET}
     ), inter AS (
         SELECT a.file AS file_a, b.file AS file_b,
                CAST(count(*) AS BIGINT) AS n_shared
@@ -156,17 +154,7 @@ def _frame_fp_sets(spark: SparkSession) -> DataFrame:
     demux -> per-keyframe PPM -> the image modality's dhash_bands on a
     composite file#frame key -> 4 band keys packed into one ordered
     fingerprint string per keyframe."""
-    from ..catalog import _ensure_session_conf
-
-    _ensure_session_conf(spark)
-    files = (
-        spark.read.format("binaryFile")
-        .load(os.path.join(VIDEO_DIR, "*.fvid"))
-        .select(
-            F.regexp_extract("path", r"([^/]+)$", 1).alias("file"), "content"
-        )
-    )
-    kf = video_keyframes(files)
+    kf = video_keyframes(fixture_files(spark, VIDEO_DIR, "*.fvid"))
     # the composite file#frame key splits back on '#' below — a file
     # name containing '#' would corrupt the split silently, so the key
     # build guards it in-plan (the generator controls names today;
@@ -203,25 +191,17 @@ def _frame_fp_sets(spark: SparkSession) -> DataFrame:
 
 
 def _vid_pairs(sets: DataFrame) -> DataFrame:
-    """Shared blocking/cap/containment over a (file, fp) set frame —
-    the Spark twin of _VID_PAIRS_SQL."""
+    """Containment pairs over a (file, fp) set frame — the Spark twin
+    of _VID_PAIRS_SQL: capped_bucket_pairs over the fingerprint
+    buckets (``n_shared`` counts the shared fingerprints outside hot
+    buckets), then the exact 2*n_shared >= min(|A|, |B|) gate."""
     sizes = sets.groupBy("file").agg(F.count("*").cast("long").alias("nfp"))
-    bucket = (
-        sets.groupBy("fp")
-        .agg(F.count("*").alias("nocc"))
-        .filter(
-            (F.col("nocc") >= 2) & (F.col("nocc") <= MAX_FP_BUCKET)
-        )
-        .select("fp")
-    )
-    a = sets.select(F.col("file").alias("file_a"), "fp")
-    b = sets.select(F.col("file").alias("file_b"), "fp")
-    inter = (
-        a.join(b, "fp")
-        .filter(F.col("file_a") < F.col("file_b"))
-        .join(bucket, "fp", "left_semi")
-        .groupBy("file_a", "file_b")
-        .agg(F.count("*").cast("long").alias("n_shared"))
+    inter = capped_bucket_pairs(
+        sets.select(F.col("file").alias("doc_id"), "fp"), ["fp"], MAX_BUCKET
+    ).select(
+        F.col("doc_a").alias("file_a"),
+        F.col("doc_b").alias("file_b"),
+        "n_shared",
     )
     sa = sizes.select(F.col("file").alias("file_a"), F.col("nfp").alias("n_a"))
     sb = sizes.select(F.col("file").alias("file_b"), F.col("nfp").alias("n_b"))
@@ -270,9 +250,9 @@ def q_dedup_video_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     jittered/heavy variants correctly absent.
 
     Scale: ceil(nf/{stride}) fixed-size rows per asset out of the
-    demux, 4 band rows per keyframe out of the codec; the pair join
-    is an equi-join on exact fingerprints with the same hot-bucket
-    cap as every blocked family — never assets x assets, never
+    demux, 4 band rows per keyframe out of the codec; the pairs are
+    capped_bucket_pairs over exact fingerprints, the one candidate
+    rule of every blocked family — never assets x assets, never
     frames x frames. Long videos bound per-asset cost with the
     stride (production: shot-boundary sampling); web-scale corpora
     widen the per-frame hash before fp buckets saturate, exactly the
@@ -336,18 +316,7 @@ def q_dedup_video_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     method = _vid_pairs(sets).select("file_a", "file_b")
     sizes = sets.groupBy("file").agg(F.count("*").cast("long").alias("nfp"))
 
-    from ..catalog import _ensure_session_conf
-    from ..operators.multimodal import gray_pixels
-
-    _ensure_session_conf(spark)
-    files = (
-        spark.read.format("binaryFile")
-        .load(os.path.join(VIDEO_DIR, "*.fvid"))
-        .select(
-            F.regexp_extract("path", r"([^/]+)$", 1).alias("file"), "content"
-        )
-    )
-    kf = video_keyframes(files)
+    kf = video_keyframes(fixture_files(spark, VIDEO_DIR, "*.fvid"))
     gp = gray_pixels(
         kf.select(
             F.concat_ws("#", "file", "frame_idx").alias("file"), "content"

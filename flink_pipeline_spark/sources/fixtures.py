@@ -14,11 +14,18 @@ Shapes mirror the reference's implicit record schemas:
   * ATTEMPTS    — benchmark results rows (reference experiment.py:259-281)
   * JOB_EVENTS  — YARN job-state stream (reference workflow.py:124-192)
   * READ_PAIRS  — PRQ read-pair records (reference workflow.py:35,487)
+
+The committed binary fixtures (images, audio, video, raw blobs) are
+read by ``fixture_files``; their DuckDB oracles read the same bytes
+with ``read_blob`` and decode them with the ``_b`` hex-byte helper.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # Literal data
@@ -164,6 +171,35 @@ def fixture_df(spark: SparkSession, name: str) -> DataFrame:
     _ensure_session_conf(spark)
     cols, rows, ddl = _SCHEMAS[name]
     return spark.createDataFrame(rows, schema=ddl)
+
+
+def fixture_files(spark: SparkSession, directory: str, glob: str) -> DataFrame:
+    """(file, content): one row per committed binary fixture matching
+    ``glob`` in ``directory``, keyed by base file name — the one
+    binaryFile read of every codec query. It self-heals the session
+    confs and ships the package first: these queries read fixtures,
+    not sf tables, so load_table's hook never runs, and a bare driver
+    session running a codec query first would otherwise hit
+    ModuleNotFoundError in the mapInPandas workers."""
+    from ..catalog import _ensure_session_conf
+
+    _ensure_session_conf(spark)
+    df = spark.read.format("binaryFile").load(os.path.join(directory, glob))
+    return df.select(
+        F.regexp_extract("path", r"([^/]+)$", 1).alias("file"), "content"
+    )
+
+
+_HEXDIGITS = "0123456789ABCDEF"
+
+
+def _b(j: str) -> str:
+    """DuckDB hex arithmetic: byte value at 1-based byte index j of the
+    upper-case hex string ``h`` (``hex(content)`` of a read_blob row)."""
+    return (
+        f"((strpos('{_HEXDIGITS}', h[2*({j})-1:2*({j})-1]) - 1) * 16"
+        f" + (strpos('{_HEXDIGITS}', h[2*({j}):2*({j})]) - 1))"
+    )
 
 
 def _sql_lit(v) -> str:

@@ -111,7 +111,7 @@ class NearDupIngest:
         # batch signatures feed BOTH the probe and the kept-index
         # write — persist so the minhash pass runs once per trigger
         bsets = doc_shingles(docs, self.n).persist()
-        bsigs = lsh_band_signatures(docs, self.n, sets=bsets).persist()
+        bsigs = lsh_band_signatures(bsets).persist()
         # bound the bucket aggregation to the buckets the batch probes
         # (left-semi on the key keeps FULL membership of matched
         # buckets — the occupancy cap still sees true sizes)

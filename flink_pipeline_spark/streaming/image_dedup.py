@@ -12,11 +12,13 @@ regardless of how many images the corpus holds. Each micro-batch:
   queries use, not a re-implementation);
 * ``drop_exact``: byte-identical payload already indexed (digest
   semi-join);
-* ``drop_near``: best store match within MAX_HAMMING via the
-  pigeonhole band equi-join + exact bit_count(xor) verify — the
-  store side is first semi-joined down to the (blk, key) buckets the
-  batch actually probes, so per-trigger shuffle work is O(probed
-  buckets), not O(corpus);
+* ``drop_near``: best store match within MAX_HAMMING via
+  operators/multimodal.band_probe — the probe
+  q_dedup_image_phash_incremental runs, so stream and batch decide
+  through the same code: pigeonhole band equi-join + exact
+  bit_count(xor) verify, with the store first semi-joined down to
+  the (blk, key) buckets the batch actually probes, so per-trigger
+  shuffle work is O(probed buckets), not O(corpus);
 * ``keep``: everything else; kept images' digests and band rows are
   appended to the store.
 
@@ -35,12 +37,9 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..operators.multimodal import ahash_bands
+from ..operators.multimodal import ahash_bands, band_probe
 from .heavy import read_log
-
-MAX_HAMMING = 3  # the q_dedup_image_phash lossless-blocking threshold
 
 
 class ImageDedupIngest:
@@ -48,12 +47,9 @@ class ImageDedupIngest:
     ``keep`` / ``drop_exact`` / ``drop_near`` against the standing
     store, emit decisions to ``out_dir``, and index kept images."""
 
-    def __init__(
-        self, store_dir: str, out_dir: str, max_hamming: int = MAX_HAMMING
-    ) -> None:
+    def __init__(self, store_dir: str, out_dir: str) -> None:
         self.store_dir = store_dir
         self.out_dir = out_dir
-        self.max_hamming = max_hamming
 
     def _store(self, kind: str) -> str:
         return os.path.join(self.store_dir, kind)
@@ -80,52 +76,7 @@ class ImageDedupIngest:
         ).select("file")
 
         bbands = ahash_bands(imgs).persist()
-        # bound store work to the buckets the batch probes
-        probed = band_store.join(
-            bbands.select("blk", "key").distinct(), ["blk", "key"], "left_semi"
-        )
-        cand = (
-            bbands.alias("p")
-            .join(
-                probed.alias("s"),
-                (F.col("s.blk") == F.col("p.blk"))
-                & (F.col("s.key") == F.col("p.key")),
-            )
-            .select(
-                F.col("p.file").alias("file"),
-                F.col("s.file").alias("store_file"),
-            )
-            .distinct()
-        )
-        pk = bbands.select("file", "blk", F.col("key").alias("pkey"))
-        # the verify needs each candidate's FULL 4-band signature —
-        # `probed` holds only the bucket-matching band rows (hamming
-        # over that subset reads 0 by construction), so re-read the
-        # store bounded to candidate files instead (still O(candidates))
-        sk = band_store.join(
-            cand.select(F.col("store_file").alias("file")).distinct(),
-            "file",
-            "left_semi",
-        ).select(
-            F.col("file").alias("store_file"), "blk", F.col("key").alias("skey")
-        )
-        ham = (
-            cand.join(pk, "file")
-            .join(sk, ["store_file", "blk"])
-            .groupBy("file", "store_file")
-            .agg(
-                F.sum(F.expr("bit_count(pkey ^ skey)"))
-                .cast("long")
-                .alias("hamming")
-            )
-            .filter(F.col("hamming") <= self.max_hamming)
-        )
-        w = Window.partitionBy("file").orderBy("hamming", "store_file")
-        near = (
-            ham.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("file", F.col("store_file").alias("dup_of"), "hamming")
-        )
+        near = band_probe(bbands, band_store)
 
         decisions = (
             imgs.select("file")

@@ -33,7 +33,7 @@ def test_minhash_finds_planted_near_dups(spark):
     them high."""
     docs = load_table(spark, SF_DIR, "documents")
     sets = doc_shingles(docs).transform(materialize)
-    found = verified_near_dups(docs, sets, threshold=0.8)
+    found = verified_near_dups(sets, threshold=0.8)
     rows = {(r.doc_a, r.doc_b): r.jacc for r in found.collect()}
     assert len(rows) >= 5, f"expected planted near-dups, got {rows}"
     assert all(j >= 0.8 for j in rows.values())
@@ -52,7 +52,7 @@ def test_simhash_locality(spark):
     sh = {r.doc_id: r.simhash for r in simhash(docs).collect()}
     assert all(0 <= v < 2**SIMHASH_BITS for v in sh.values())
     sets = doc_shingles(docs).transform(materialize)
-    near = verified_near_dups(docs, sets, threshold=0.9).collect()
+    near = verified_near_dups(sets, threshold=0.9).collect()
     assert near
 
     def ham(a: int, b: int) -> int:
@@ -371,12 +371,11 @@ def test_containment_catches_embedded_doc(spark):
         [(1, big), (2, small), (3, "totally unrelated words here now")],
         "doc_id BIGINT, text STRING",
     )
-    rows = containment_pairs(docs, threshold=0.9).collect()
+    sets = doc_shingles(docs).transform(materialize)
+    rows = containment_pairs(sets, threshold=0.9).collect()
     assert [(r.doc_a, r.doc_b) for r in rows] == [(1, 2)]
     assert rows[0].containment == 1.0
     # the same pair fails union-normalized Jaccard at any sane cutoff
-    from flink_pipeline_spark.operators.llm import doc_shingles
-
     sets = {r.doc_id: set(r.s) for r in doc_shingles(docs).collect()}
     jacc = len(sets[1] & sets[2]) / len(sets[1] | sets[2])
     assert jacc < 0.1
@@ -392,8 +391,36 @@ def test_containment_df_cap_prunes_hot_shingles(spark):
     docs = spark.createDataFrame(
         [(i, common) for i in range(1, 6)], "doc_id BIGINT, text STRING"
     )
-    assert containment_pairs(docs, max_df=4).count() == 0
-    assert containment_pairs(docs, max_df=5).count() == 10
+    sets = doc_shingles(docs).transform(materialize)
+    assert containment_pairs(sets, max_df=4).count() == 0
+    assert containment_pairs(sets, max_df=5).count() == 10
+
+
+def test_capped_bucket_pairs_counts_shared_buckets_and_caps_inclusively(spark):
+    """n_shared counts the capped buckets a pair shares, and both cap
+    bounds are inclusive: a 2-row bucket and a max_bucket-row bucket
+    pair their members, a max_bucket+1-row bucket and a singleton do
+    not."""
+    from flink_pipeline_spark.operators.llm import capped_bucket_pairs
+
+    keyed = spark.createDataFrame(
+        [(1, "x"), (2, "x")]
+        + [(i, "y") for i in (1, 2, 3)]
+        + [(i, "z") for i in (1, 2, 3, 4)]
+        + [(5, "w")],
+        "doc_id BIGINT, k STRING",
+    )
+
+    def pairs(max_bucket):
+        return {
+            (r.doc_a, r.doc_b): r.n_shared
+            for r in capped_bucket_pairs(keyed, ["k"], max_bucket).collect()
+        }
+
+    assert pairs(3) == {(1, 2): 2, (1, 3): 1, (2, 3): 1}
+    assert pairs(4) == {
+        (1, 2): 3, (1, 3): 2, (2, 3): 2, (1, 4): 1, (2, 4): 1, (3, 4): 1
+    }
 
 
 def test_substring_dedup_removes_shared_span_everywhere(spark):

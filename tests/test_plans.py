@@ -238,7 +238,7 @@ def test_incremental_dedup_corpus_index_shape(spark):
     docs = load_table(spark, SF_DIR, "documents")
     sets = doc_shingles(docs)
     probe_plan = neardup_probe(
-        F.expr("doc_id % 10 = 0"), sets, lsh_band_signatures(docs, sets=sets)
+        F.expr("doc_id % 10 = 0"), sets, lsh_band_signatures(sets)
     )._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" in probe_plan, probe_plan
     plan = _plan(spark, "q_dedup_incremental")

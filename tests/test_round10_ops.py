@@ -460,14 +460,14 @@ def test_dhash_matches_python_reimplementation(spark):
     import numpy as np
 
     from flink_pipeline_spark.operators.multimodal import dhash_bands
-    from flink_pipeline_spark.plans.image_dedup import (
-        PHASH_DIR,
-        _load_phash_files,
-    )
+    from flink_pipeline_spark.plans.image_dedup import PHASH_DIR
+    from flink_pipeline_spark.sources.fixtures import fixture_files
 
     got = {
         (r.file, r.blk): r.key
-        for r in dhash_bands(_load_phash_files(spark)).collect()
+        for r in dhash_bands(
+            fixture_files(spark, PHASH_DIR, "*.ppm")
+        ).collect()
     }
     import glob
     import os

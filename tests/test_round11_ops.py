@@ -307,14 +307,14 @@ def test_audio_fp_bands_matches_python_reimplementation(spark):
     import numpy as np
 
     from flink_pipeline_spark.operators.multimodal import audio_fp_bands
-    from flink_pipeline_spark.plans.audio_dedup import (
-        AFP_DIR,
-        _load_afp_files,
-    )
+    from flink_pipeline_spark.plans.audio_dedup import AFP_DIR
+    from flink_pipeline_spark.sources.fixtures import fixture_files
 
     got = {
         (r.file, r.blk): r.key
-        for r in audio_fp_bands(_load_afp_files(spark)).collect()
+        for r in audio_fp_bands(
+            fixture_files(spark, AFP_DIR, "*.wav")
+        ).collect()
     }
     expect = {}
     paths = sorted(glob.glob(os.path.join(AFP_DIR, "*.wav")))

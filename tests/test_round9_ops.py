@@ -7,10 +7,11 @@ from pyspark.sql import functions as F
 
 from flink_pipeline_spark.operators.multimodal import ahash_bands
 from flink_pipeline_spark.plans.image_dedup import (
-    _load_phash_files,
+    PHASH_DIR,
     q_dedup_image_phash,
     q_dedup_image_phash_recall,
 )
+from flink_pipeline_spark.sources.fixtures import fixture_files
 
 from .conftest import SF_DIR
 
@@ -69,7 +70,7 @@ def test_ahash_rejects_non_grid_dims(spark):
 
 
 def test_phash_band_keys_are_16_bit(spark):
-    bands = ahash_bands(_load_phash_files(spark)).collect()
+    bands = ahash_bands(fixture_files(spark, PHASH_DIR, "*.ppm")).collect()
     assert len(bands) == 40  # 10 images x 4 bands
     assert all(0 <= r.key <= 0xFFFF and 0 <= r.blk <= 3 for r in bands)
 
@@ -291,6 +292,39 @@ def test_streaming_image_dedup_replay_idempotent(spark, tmp_path):
     ]
     bands = spark.read.parquet(str(tmp_path / "store" / "bands"))
     assert bands.count() == 8  # 2 kept images x 4 bands, no dup rows
+
+
+def test_streaming_image_dedup_equals_batch_incremental(spark, tmp_path):
+    """Stream == batch for the image probe: with the non-probe phash
+    files ingested as batch 0 and PROBE_FILES as batch 1, batch 1's
+    (file, dup_of, hamming) decisions equal
+    q_dedup_image_phash_incremental's rows — both run band_probe."""
+    import os
+
+    from flink_pipeline_spark.plans.image_dedup import (
+        PROBE_FILES,
+        q_dedup_image_phash_incremental,
+    )
+    from flink_pipeline_spark.streaming.image_dedup import ImageDedupIngest
+
+    files = fixture_files(spark, PHASH_DIR, "*.ppm")
+    is_probe = F.col("file").isin(*PROBE_FILES)
+    ingest = ImageDedupIngest(str(tmp_path / "store"), str(tmp_path / "out"))
+    ingest(files.filter(~is_probe), 0)
+    ingest(files.filter(is_probe), 1)
+
+    stream = {
+        (r.file, r.dup_of, r.hamming)
+        for r in spark.read.parquet(
+            os.path.join(str(tmp_path / "out"), "batch_id=1")
+        ).collect()
+    }
+    batch = {
+        (r.file, r.dup_of, r.hamming)
+        for r in q_dedup_image_phash_incremental(spark, SF_DIR).collect()
+    }
+    assert stream == batch
+    assert {f for f, _, _ in stream} == set(PROBE_FILES)
 
 
 def test_streaming_kmv_equals_batch_sketch(spark, tmp_path):
