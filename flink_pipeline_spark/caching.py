@@ -1,44 +1,82 @@
-"""Session cache hygiene.
+"""Stage boundaries and session cache hygiene.
 
-The query library persists intermediate frames that the FINAL lazy
-plan consumes (shingle sets, scored corpora) — those cannot be
-released before the caller materializes the result, so they stay
-cached, LRU-evictable, until session end. Fine for one-shot driver /
-bench runs; in a long-lived 100 TB session repeated pipeline
-invocations would accrete evictable blocks and thrash the storage
-tier (r6 advice). Two tools close that hole:
+The engine runs the reference dataflow as chains of eager Spark jobs.
+Every boundary in such a chain is one of these, by one rule:
 
-* ``release_caches(spark)`` — drop every cached DataFrame and any
-  stray persisted RDD in the session. Call between pipelines in a
-  long-lived session. Total by design: the library's caches are all
-  rebuildable one-scan intermediates, never irreplaceable state.
-* ``eager_checkpoint(df)`` — for operators whose cached inputs feed
-  only INTERMEDIATE results (incremental_dedup's signature index,
-  substring_dedup_stats' duplicated-span table): reliably checkpoint
-  the small derived frame NOW, so the corpus-sized caches can be
-  unpersisted before the operator returns — zero persisted residue,
-  verified by tests/test_llm_ops.py::test_cache_hygiene_*.
+* ``stage(df)`` cuts lineage NOW: one eager job computes ``df`` and
+  the result is read back from a local checkpoint. Use it when a
+  frame is read by later eager jobs or by an iterative loop (each
+  round's plan would otherwise nest the previous round's, and
+  re-analysis and recomputation grow with the chain), and no cache
+  entry may outlive the query. The checkpoint blocks live in the
+  executors' storage and are released once the frame is unreachable;
+  a job on preemptible hardware would cut with a reliable checkpoint.
+* ``eager_checkpoint(df)`` is the same cut written as a reliable
+  checkpoint, for operators whose corpus-sized caches feed only an
+  INTERMEDIATE result (incremental_dedup's near-dup id set,
+  substring_dedup_stats' duplicated-span table): the small frame is
+  cut, the caches are unpersisted before the operator returns, and
+  the call leaves zero persisted residue (tests/test_llm_ops.py::
+  test_cache_hygiene_*). Local checkpoint blocks would count as
+  residue, as they live in the storage tier hygiene empties.
+* ``materialize(df)`` shares one frame between several branches of
+  ONE plan and keeps its lineage: ``persist()`` plus one count job.
+* ``parallel_frames(*thunks)`` runs independent eager chains on
+  concurrent driver threads.
+* ``release_caches(spark)`` drops every cache in the session; call it
+  between pipelines in a long-lived session.
 
-Reliable checkpoint (not localCheckpoint) is deliberate: local
-checkpoint blocks live in the storage tier — exactly what hygiene is
-trying to empty — while reliable checkpoint writes to the checkpoint
-dir and leaves zero cached blocks. Checkpoint files are removed by
-the ContextCleaner when ``spark.cleaner.referenceTracking
-.cleanCheckpoints`` is set (session.py sets it); under a foreign
-session without it they persist until JVM exit — disk residue in
-/tmp, never memory residue.
+Why both cuts measure: a checkpoint carries the size statistic the
+planner reads for its source plan when the cut runs. Over a join
+chain that is the product of the join estimates (1.07e17 bytes for
+the 800-byte sf0.01 text near-dup graph), so every join over a bare
+checkpoint plans on a fiction (sort-merge where a broadcast fits).
+Both cuts therefore persist the frame for the checkpoint job, which
+fills the cache, and the checkpoint takes the cache's measured size.
+The checkpoint is taken over a fresh Dataset (``select("*")``): a
+frame whose plan was already optimized (run, or its statistics read)
+does not see a cache added later. A cache the caller owns stays
+cached; only the cut's own is released. The measured cut costs one
+more job for a frame with a shuffle.
+
+Reliable checkpoint files are removed by the ContextCleaner when
+``spark.cleaner.referenceTracking.cleanCheckpoints`` is set
+(session.py sets it); under a foreign session without it they persist
+until JVM exit: disk residue in /tmp, never memory residue.
 """
 
 from __future__ import annotations
 
 import tempfile
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _measured(df: DataFrame, cut) -> DataFrame:
+    """``cut`` applied to a fresh Dataset over ``df`` persisted for
+    the cut's job, so the result carries the measured size; the
+    persist is released after unless the caller owns the cache."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
+    try:
+        return cut(df.select("*"))
+    finally:
+        if owned:
+            df.unpersist()
+
+
+def stage(df: DataFrame) -> DataFrame:
+    """Local-checkpoint ``df`` now (one eager job) and return the
+    checkpointed frame, which carries its measured size. The lineage
+    cut of every eager chain; see the module docstring."""
+    return _measured(df, lambda f: f.localCheckpoint(eager=True))
+
+
 def eager_checkpoint(df: DataFrame) -> DataFrame:
-    """Reliable-checkpoint ``df`` immediately and return the
-    checkpointed frame.
+    """Reliable-checkpoint ``df`` now and return the checkpointed
+    frame, which carries its measured size; zero persisted residue.
 
     If the session has no checkpoint dir, one is auto-provisioned ONLY
     in local mode (the driver's bare local session): a driver-local
@@ -59,7 +97,7 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
                 "master — call spark.sparkContext.setCheckpointDir with "
                 "a SHARED filesystem path (HDFS/S3) at session build"
             )
-    return df.checkpoint(eager=True)
+    return _measured(df, lambda f: f.checkpoint(eager=True))
 
 
 def release_caches(spark: SparkSession) -> int:
@@ -101,10 +139,10 @@ def parallel_frames(*thunks):
 
     Audit/lifecycle queries chain several INDEPENDENT eager
     materializations (graph builds, exact-truth lists, per-method
-    sub-searches) whose internal ``localCheckpoint(eager=True)`` jobs
-    otherwise run strictly serially during query construction — at
-    sf0.1 that serialization, not compute, dominates their wall time
-    (each chain leaves most cores idle). Spark's scheduler happily
+    sub-searches) whose internal ``stage`` jobs otherwise run strictly
+    serially during query construction — at sf0.1 that serialization,
+    not compute, dominates their wall time (each chain leaves most
+    cores idle). Spark's scheduler happily
     runs jobs from several driver threads at once, so submitting each
     chain from its own thread lets the next chain's tasks back-fill
     the tail of the current one (optimization guide §2.6). FIFO

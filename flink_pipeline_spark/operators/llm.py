@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
-from ..caching import eager_checkpoint, materialize
+from ..caching import eager_checkpoint, materialize, stage
 from ..functions.portable import hash56, hash56_sql_spark, round_agg
 from ..functions.text import (
     MINHASH_PARAMS,
@@ -1034,15 +1034,11 @@ def _twophase_star_rounds(
     is a fixed number of distributed joins/aggs; the only driver-side
     action is one star-forest violation count per round.
 
-    Each round's output is checkpointed to TRUNCATE LINEAGE — without
-    it the logical plan nests the previous round's whole tree and
-    Catalyst re-analysis grows exponentially (measured: driver OOM on
-    a 1,000-link chain from plan-tree strings alone). localCheckpoint
-    keeps blocks on executors, which matches the fail-fast contract
-    here (non-convergence raises); a long-running production job on
-    preemptible hardware would use reliable checkpoint(dir) at the
-    same call site."""
-    e = edges.localCheckpoint(eager=True)
+    Each round's output is staged to TRUNCATE LINEAGE — without it the
+    logical plan nests the previous round's whole tree and Catalyst
+    re-analysis grows exponentially (measured: driver OOM on a
+    1,000-link chain from plan-tree strings alone)."""
+    e = stage(edges)
     for r in range(1, max_rounds + 1):
         # large-star: every node u connects its LARGER neighbors to
         # m(u) = min(Gamma(u) + {u}); needs the symmetric view
@@ -1072,7 +1068,7 @@ def _twophase_star_rounds(
                 F.greatest("a", "b").alias("src"), F.least("a", "b").alias("dst")
             )
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(stage)
         )
         # converged iff a star forest: no node has two distinct roots,
         # and no root is itself a leaf (no chains). EXACT check — a
@@ -1139,32 +1135,21 @@ def connected_components(
     ``twophase_rounds`` for probes and tests."""
     stats = _stats if _stats is not None else {}
     # Both edge orientations come out of ONE projection of `pairs`, so
-    # the eager localCheckpoint runs the pair DAG exactly once and
-    # callers never persist what they pass in. localCheckpoint (not
-    # persist): cache alone is NOT enough for an iterative consumer —
-    # every iteration's action re-ANALYZES the full logical lineage of
-    # `pairs` even on cache hits, and a deep pair-generation DAG (e.g.
-    # the multiprobe IVF window + self-joins) multiplied across
-    # iterations dominated wall time (measured 11.5 s -> 2.3 s on a
-    # 96-edge sf0.1 graph). Edges are 2 longs per row, so the one-time
-    # materialization is cheap at any scale; a long-running production
-    # job on preemptible hardware would use reliable checkpoint(dir).
-    # The projection is persisted and filled by that same job: the
-    # checkpoint takes its size statistic from the measured cache, not
-    # from the planner's estimate of the pair DAG (a product over its
-    # joins, ~1e17 bytes for the 50-edge sf0.01 text graph), so every
-    # join over the edges plans on their real size.
+    # the stage job runs the pair DAG exactly once and callers never
+    # persist what they pass in. A persist alone re-analyzes the pair
+    # DAG in every iteration (staging: 11.5 s -> 2.3 s on a 96-edge
+    # sf0.1 graph).
     a, b = F.col("doc_a"), F.col("doc_b")
-    oriented = pairs.select(
-        F.inline(
-            F.array(
-                F.struct(a.alias("src"), b.alias("dst")),
-                F.struct(b.alias("src"), a.alias("dst")),
+    edges = stage(
+        pairs.select(
+            F.inline(
+                F.array(
+                    F.struct(a.alias("src"), b.alias("dst")),
+                    F.struct(b.alias("src"), a.alias("dst")),
+                )
             )
         )
-    ).persist()
-    edges = oriented.localCheckpoint(eager=True)
-    oriented.unpersist()
+    )
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -1205,11 +1190,8 @@ def connected_components(
                 return labels
     stats["phase1_iters"] = min(switch_after, max_iter)
     # phase 2: two-phase star rounds on the label-contracted graph.
-    # Contract from the PERSISTED edges frame (one orientation of it),
-    # not the raw `pairs` lineage — pairs is typically the output of
-    # the whole LSH candidate+verify pipeline, and rebuilding it here
-    # would re-execute that DAG a second time just to list edges that
-    # are already cached.
+    # Contract from the staged edges frame (one orientation of it),
+    # not `pairs`, whose DAG would run a second time.
     ls = labels.select(
         F.col("doc_id").alias("src"), F.col("cluster_id").alias("lbl_a")
     )
@@ -1231,8 +1213,6 @@ def connected_components(
     roots = stars.select(
         F.col("src").alias("cluster_id"), F.col("dst").alias("root")
     )
-    # (edges is a localCheckpoint — its blocks are GC-managed, no
-    # explicit unpersist)
     return labels.join(roots, "cluster_id", "left").select(
         "doc_id",
         F.coalesce(F.col("root"), F.col("cluster_id")).alias("cluster_id"),
@@ -2595,14 +2575,14 @@ def nsw_beam(
     else:
         seed = entries.select("query_id", "node")
     wb = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    # Above the gate each round's beam is localCheckpoint'ed (eager):
+    # Above the gate each round's beam is staged:
     # the monotone recursion cand = cur ∪ expand(cur) references
     # ``cur`` TWICE, so an unchecked lineage doubles per hop — 2^hops
     # copies of the seed subtree in the plan, ~2.5 MiB task binaries
     # per stage, and exponential recomputation (Spark dedupes no
     # common subplans outside exchange reuse). Measured r12: the
-    # un-checkpointed form OOM'ed a default-heap driver sweeping the
-    # full registry at the ANN cluster. The checkpointed frames are
+    # unstaged form OOM'ed a default-heap driver sweeping the
+    # full registry at the ANN cluster. The staged frames are
     # |queries| x beam rows, so the cost is NSW_HOPS materializations
     # — the jobs the local path exists to avoid.
     #
@@ -2615,7 +2595,7 @@ def nsw_beam(
     # rebuild of the deduped frame) disappears while the ranked beam
     # stays bit-identical. The visited set dedups ONCE at the end for
     # the same reason.
-    cur = score(seed).localCheckpoint(eager=True)
+    cur = stage(score(seed))
     vis = seed.select("query_id", "node")
     for _ in range(NSW_HOPS):
         nbrs = adj.join(
@@ -2638,7 +2618,7 @@ def nsw_beam(
             .withColumn("rn", F.row_number().over(wb))
             .filter(F.col("rn") <= beam)
             .drop("rn")
-            .localCheckpoint(eager=True)
+            .transform(stage)
         )
     return score(vis.distinct()) if keep_visited else cur
 

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import stage
 from .llm import capped_bucket_pairs, topk_cut
 
 FEATURE_DIM = 8
@@ -583,7 +584,10 @@ def band_pairs(bands: DataFrame) -> DataFrame:
     (blk, key) agreement (pigeonhole: lossless to MAX_HAMMING), then
     the exact bit_count(xor) verify is summed over the bands. Shared
     by the aHash, dHash and audio fingerprint pair queries; the Spark
-    twin of plans/image_dedup._pairs_sql."""
+    twin of plans/image_dedup._pairs_sql. The band rows are read three
+    times (the buckets and both verify sides), so they are staged once
+    and the caller's codec runs once."""
+    bands = stage(bands)
     cand = capped_bucket_pairs(
         bands.select(F.col("file").alias("doc_id"), "blk", "key"),
         ["blk", "key"],

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import parallel_frames
+from ..caching import parallel_frames, stage
 from ..catalog import load_table
 from ..functions.portable import hash56, hash56_sql_duckdb
 from ..operators.llm import (
@@ -187,9 +187,7 @@ def _register_nsw_delete():
             keep_dist=True,
         )
         dels = emb.filter(is_del).select("vec_id")
-        dadj = nsw_delete(emb, adj0, dels, NSW_DEG).localCheckpoint(
-            eager=True
-        )
+        dadj = stage(nsw_delete(emb, adj0, dels, NSW_DEG))
         surv = emb.filter(~is_del)
         return nsw_search(
             surv,
@@ -284,16 +282,18 @@ def _register_delete_recall():
         # three INDEPENDENT eager chains — the original build + its
         # delete-compaction, the survivor rebuild, and the exact truth
         # — overlap on driver threads (guide §2.6) instead of running
-        # their checkpoint jobs back-to-back
+        # their stage jobs back-to-back
         dadj, radj, truth = parallel_frames(
-            lambda: nsw_delete(
-                emb, build_graph(emb, seeds, keep_dist=True), dels, NSW_DEG
-            ).localCheckpoint(eager=True),
+            lambda: stage(
+                nsw_delete(
+                    emb, build_graph(emb, seeds, keep_dist=True), dels, NSW_DEG
+                )
+            ),
             lambda: build_graph(surv, seeds),
             lambda: (
                 topk_neighbors_l2(surv, queries, k=3)
                 .select("query_id", "neighbor_id")
-                .localCheckpoint(eager=True)
+                .transform(stage)
             ),
         )
         comp = nsw_search(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import parallel_frames
+from ..caching import parallel_frames, stage
 from ..catalog import load_table
 from ..operators.llm import NSW_HOPS, topk_neighbors, topk_neighbors_ivf
 from .llm_ops import (
@@ -206,7 +206,7 @@ def q_ann_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: (
             topk_neighbors(filt, queries, k=3)
             .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
+            .transform(stage)
         ),
         lambda: q_sim_filtered_topk(spark, sf_dir).select(
             "query_id", "neighbor_id"

@@ -59,6 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import stage
 from ..catalog import load_table
 from ..functions.portable import HASH56_HEX_DIGITS, round_agg, round_sql
 from ..operators.llm import (
@@ -300,7 +301,7 @@ def q_gexp_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the generation is a zero-shuffle projection; everything
     else is the registered rows' own plan classes."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cl = line_corpus(emb).localCheckpoint(eager=True)
+    cl = stage(line_corpus(emb))
     queries = cl.filter(F.col("vec_id") < PQ_QUERY_MAX)
     short = ivfpq_topk(
         cl,
@@ -313,17 +314,17 @@ def q_gexp_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank = (
         exact_rerank(cl, short, k=3)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     gexp = (
         graph_expand_topk(spark, cl)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     truth = (
         topk_neighbors_l2(cl, queries, k=3)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     return recall_rollup(
         spark, truth, {"exact": truth, "rerank": rerank, "gexp": gexp}
@@ -438,22 +439,22 @@ def q_nsw_descent_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the registered rows' own plan classes; the link audit is
     a {nodes}-node broadcast-query linear scan."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cl = nav_corpus(emb).localCheckpoint(eager=True)
+    cl = stage(nav_corpus(emb))
     queries = cl.filter(F.col("vec_id") < PQ_QUERY_MAX)
     audit = cl.filter(F.col("vec_id") < DESCENT_AUDIT_NODES)
     adj0 = build_graph(cl, cl.filter(F.col("vec_id") < IVF_SEED_CENTROIDS))
-    adj1 = nsw_descent(cl, adj0, NSW_DEG).localCheckpoint(eager=True)
+    adj1 = stage(nsw_descent(cl, adj0, NSW_DEG))
     s0 = nsw_search(cl, queries, adj0, k=3)
     s1 = nsw_search(cl, queries, adj1, k=3)
     struth = (
         topk_neighbors_l2(cl, queries, k=3)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     ltruth = (
         topk_neighbors_l2(cl, audit, k=NSW_DEG)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
 
     def hits(res: DataFrame, truth: DataFrame, a: str, b: str) -> DataFrame:
@@ -534,7 +535,7 @@ def q_plaid_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered CTE (probe choice, nomination, prune, exact scoring
     all replayed bit-for-bit)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cl = islands_corpus(emb).localCheckpoint(eager=True)
+    cl = stage(islands_corpus(emb))
     return _maxsim_recall_frame(spark, cl)
 
 
@@ -564,5 +565,5 @@ def q_hnsw_beam_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both layer graphs, all three unrolled beams, truth and
     denominators replayed)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cl = nav_corpus(emb).localCheckpoint(eager=True)
+    cl = stage(nav_corpus(emb))
     return hnsw_beam_audit(spark, cl)

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
-from ..caching import materialize
+from ..caching import materialize, stage
 from ..functions.portable import round_agg
 from ..operators.llm import doc_shingles, verified_near_dups
 from .llm_ops import q_dedup_clusters  # also populates its ORACLES entry
@@ -198,21 +198,20 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact join, pre-aggregated to distinct pairs); each iteration is
     one shuffle keyed by dst — the textbook Pregel round. Iteration
     count is FIXED (3), so the lineage is bounded; a production run
-    at higher iteration counts would localCheckpoint every few rounds
-    exactly as operators/llm.connected_components does. The rank
+    at higher iteration counts would stage every few rounds exactly as operators/llm.connected_components does. The rank
     vector is nodes-sized, orders of magnitude smaller than the fact
     table."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # pair is referenced FOUR times downstream (both union branches,
-    # each again under the outw join) — checkpoint it once or the
+    # each again under the outw join) — stage it once or the
     # single edge-build action recomputes the fact join 4x (measured
     # 4.1 s -> 2.0 s for the build at sf0.1)
     pair = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("o_custkey", "l_suppkey")
         .agg(F.count("*").cast("long").alias("w"))
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     # node ids stay BIGINT through every shuffle (customer = 2k,
     # supplier = 2k+1) — string ids tripled the edge list's in-memory
@@ -224,19 +223,14 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair.select(sid.alias("src"), cid.alias("dst"), "w")
     )
     outw = raw.groupBy("src").agg(F.sum("w").cast("long").alias("ow"))
-    # localCheckpoint, not persist: the iterative consumer re-ANALYZES
-    # the full logical lineage every iteration even on cache hits (the
-    # connected_components finding, operators/llm.py) — truncating the
-    # edge build once keeps iteration i from re-planning the whole
-    # build i times. Same for the (small) node list, which every
-    # iteration's left join touches.
-    edges = raw.join(outw, "src").localCheckpoint(eager=True)
+    # staged: every iteration reads the edges and the (small) node list
+    edges = stage(raw.join(outw, "src"))
     counted = Observation("pagerank_nodes")
     nodes = (
         edges.select(F.col("src").alias("id"))
         .distinct()
         .observe(counted, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     base = nodes.agg(
         F.expr(f"CAST({PR_SCALE} div count(*) AS BIGINT)").alias("b")
@@ -247,7 +241,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 (guide §3.1, §2.4): the rank vector and the incoming-sum are
     # both NODES-sized (orders of magnitude smaller than the edge
     # list), but their size ESTIMATES come from an aggregation over the
-    # checkpointed edge frame, so the planner sort-merge-joined every
+    # staged edge frame, so the planner sort-merge-joined every
     # iteration — two full exchanges + sorts of the EDGE list per
     # superstep (`scripts/plan_shape.py q_graph_pagerank` counts the
     # joins of the plan that runs). Explicit
@@ -259,7 +253,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale the rank vector is #nodes rows — broadcastability is the
     # standard Pregel-alternative trade and the hint keeps the decision
     # deliberate rather than estimate-driven. The gate reads the node
-    # count the checkpoint job observed (no extra pass): above
+    # count the stage job observed (no extra pass): above
     # PR_BROADCAST_MAX_NODES the edges are co-partitioned by src ONCE
     # (cached: a checkpoint forgets its partitioning) and both joins
     # sort-merge, so each iteration shuffles only the nodes-sized rank
@@ -804,7 +798,7 @@ def q_sim_seed_farthest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each of the k-1 rounds is ONE corpus pass (zip_with +
     aggregate, JVM codegen, no explode) against a 1-row broadcast
-    seed, with the running min-distance column checkpointed per round
+    seed, with the running min-distance column staged per round
     so round r never recomputes rounds < r. k passes over the corpus
     is the algorithm's intrinsic cost — the same shape FAISS pays on
     one machine, here as k scans that parallelize per partition."""
@@ -831,7 +825,7 @@ def q_sim_seed_farthest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         eq.crossJoin(F.broadcast(s1))
         .select("vec_id", "q", dist_to(F.col("sq")).alias("dist"))
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     out = first.select(
         F.lit(1).cast("long").alias("seed_idx"),
@@ -869,7 +863,7 @@ def q_sim_seed_farthest(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "dist"
                     ),
                 )
-                .localCheckpoint(eager=True)
+                .transform(stage)
             )
     return out
 
@@ -1064,27 +1058,14 @@ def _register_graph_triangles() -> None:
         d = load_table(spark, sf_dir, "documents")
         sets = doc_shingles(d).transform(materialize)
         pairs = verified_near_dups(sets)
-        # eager localCheckpoint instead of persist: the edge frame is
-        # referenced by three downstream joins, and the query returns
-        # only 1-row aggregates — a persist here would outlive the
-        # return and accumulate across a full-surface sweep (ADVICE
-        # r9). Checkpointing cuts the LSH lineage, so the shingle
-        # cache can be released immediately and no cache entry leaks.
-        # The canonical projection is persisted for the checkpoint job
-        # and released after it, as connected_components does: the
-        # checkpoint then carries the measured edge size, not the
-        # planner's join-product estimate of the pair DAG, so the
-        # triangle joins plan as broadcasts from the start.
-        canon = (
+        # staged: three joins read the edges, and the cut lets the
+        # shingle cache go before the 1-row result returns
+        e = stage(
             pairs.select(
                 F.least("doc_a", "doc_b").alias("a"),
                 F.greatest("doc_a", "doc_b").alias("b"),
-            )
-            .distinct()
-            .persist()
+            ).distinct()
         )
-        e = canon.localCheckpoint(eager=True)
-        canon.unpersist()
         sets.unpersist()
         deg = (
             e.select(F.col("a").alias("v"))

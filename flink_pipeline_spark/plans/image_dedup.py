@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import stage
 from ..operators.multimodal import (
     MAX_BUCKET,
     MAX_HAMMING,
@@ -362,9 +363,7 @@ def q_dedup_image_phash_incremental(
     # one codec run feeds both sides: band_probe reads the probe three
     # times and the store twice, and the lazy frame would re-run the
     # codec per read (9 Python evaluations against 1)
-    bands = ahash_bands(fixture_files(spark, PHASH_DIR, "*.ppm")).localCheckpoint(
-        eager=True
-    )
+    bands = stage(ahash_bands(fixture_files(spark, PHASH_DIR, "*.ppm")))
     is_probe = F.col("file").isin(*PROBE_FILES)
     probe = bands.filter(is_probe)
     best = band_probe(probe, bands.filter(~is_probe))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import parallel_frames
+from ..caching import parallel_frames, stage
 from ..catalog import load_table
 from ..operators.llm import topk_neighbors, topk_neighbors_ivf
 from .llm_ops import (
@@ -325,7 +325,7 @@ def q_ann_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes against the new quantizer — the same one-pass
     pq_code_batch fold the store already runs on every arrival."""
     emb = load_table(spark, sf_dir, "embeddings")
-    dr = drifted_corpus(emb).localCheckpoint(eager=True)
+    dr = stage(drifted_corpus(emb))
     queries = dr.filter(F.col("vec_id") < 5)
     stale = topk_neighbors_ivf(
         dr,
@@ -344,7 +344,7 @@ def q_ann_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = (
         topk_neighbors(dr, queries, k=3)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     # the projection gate between original (ref) and drifted (cur) —
     # the shared decision rule (drift_gate_frame)
@@ -563,14 +563,12 @@ def q_pq_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .llm_ops import exact_rerank
 
-    dr = drifted_corpus(emb).localCheckpoint(eager=True)
+    dr = stage(drifted_corpus(emb))
     queries = dr.filter(F.col("vec_id") < PQ_QUERY_MAX)
     cents_o = emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
 
-    # the two ranked lists checkpoint eagerly (12-row frames): the
-    # rollup references them through unions/joins, and carrying two
-    # full IVFADC lineages into the final stage costs plan size for
-    # nothing (the nsw_beam lineage lesson at audit scale)
+    # the two ranked lists are staged (12-row frames): the rollup
+    # reads them through unions/joins
     def _stale_chain() -> DataFrame:
         # artifacts trained on the ORIGINAL corpus (the frozen pair)
         cb_o, _ = ivfpq_artifacts(emb.filter(F.col("vec_id") < 16), cents_o)
@@ -581,7 +579,7 @@ def q_pq_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             exact_rerank(dr, sshort, k=3)
             .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
+            .transform(stage)
         )
 
     def _refreshed_chain() -> DataFrame:
@@ -597,7 +595,7 @@ def q_pq_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             exact_rerank(dr, rshort, k=3)
             .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
+            .transform(stage)
         )
 
     # the stale chain, the refreshed chain, and the exact truth are
@@ -608,7 +606,7 @@ def q_pq_drift_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: (
             topk_neighbors_l2(dr, queries, k=3)
             .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
+            .transform(stage)
         ),
     )
     return recall_rollup(

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..caching import literal_frame, materialize, parallel_frames
+from ..caching import literal_frame, materialize, parallel_frames, stage
 from ..catalog import load_table
 from ..functions.portable import (
     hash56,
@@ -583,15 +583,9 @@ def _register_embed_dedup_recall() -> None:
         truth = (
             q_dedup_embed_cosine(spark, sf_dir)
             .select("vec_a", "vec_b")
-            # eager localCheckpoint, not persist (r10, the triangles
-            # ADVICE-r9 class): three consumers — the control row's
-            # method side, the hit join and the denominator — but
-            # the returned rows are 1-row aggregates, so a persist
-            # would leak past the return; the checkpoint pays the
-            # O(n^2) truth exactly once and caches nothing
-            .localCheckpoint(eager=True)
+            .transform(stage)
         )
-        # the exact method IS the truth set — audit the checkpointed
+        # the exact method IS the truth set — audit the staged
         # frame instead of re-running the O(n^2) pair generation a
         # second time (measured 17.8 s -> ~12 s at sf0.1)
         return recall_rollup(
@@ -1012,13 +1006,7 @@ def _register_embed_dedup_recall_sampled() -> None:
             .filter(F.col("cos") >= EMBED_PAIR_TAU)
             .select("vec_a", "vec_b")
             .distinct()
-            # eager localCheckpoint, not persist: three audit branches
-            # reference the truth frame but the returned rows are
-            # 1-row aggregates — a persist would outlive the return
-            # and accumulate across a full-surface sweep (the
-            # triangles ADVICE-r9 class); checkpointing cuts the
-            # lineage at O(n*s) cost paid once
-            .localCheckpoint(eager=True)
+            .transform(stage)
         )
         n_anch = anchors.agg(
             F.count("*").cast("long").alias("n_anchors")
@@ -2251,13 +2239,9 @@ NSW_GRAPH_KW = dict(
 def build_graph(
     emb: DataFrame, seeds: DataFrame, keep_dist: bool = False
 ) -> DataFrame:
-    """nsw_graph over ``emb`` with the registry keywords, checkpointed
-    eagerly: the adjacency feeds every search round, so the IVF build
-    runs once and no cache entry outlives the query (lineage cut —
-    the triangles convention)."""
-    return nsw_graph(
-        emb, seeds, keep_dist=keep_dist, **NSW_GRAPH_KW
-    ).localCheckpoint(eager=True)
+    """nsw_graph over ``emb`` with the registry keywords, staged: the
+    adjacency feeds every search round, so the IVF build runs once."""
+    return stage(nsw_graph(emb, seeds, keep_dist=keep_dist, **NSW_GRAPH_KW))
 
 
 def hnsw_layers(emb: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -2284,7 +2268,7 @@ def _nsw_shrink_sql(cand: str, p: str, keep_dist: bool = False) -> str:
     The adjacency is MATERIALIZED: every beam hop references it, and
     DuckDB re-evaluates a plain CTE per reference — the whole graph
     build re-ran up to 9x in the multi-beam audits (272 s -> 4.8 s
-    for q_ann_hnsw_beam once materialized). Spark's localCheckpoint
+    for q_ann_hnsw_beam once materialized). Spark's stage
     on the Spark side is the same decision."""
     dcol = ", dist_q" if keep_dist else ""
     return f"""{p}kept AS (
@@ -2554,7 +2538,7 @@ def _register_nsw_descent():
         adj0 = build_graph(
             emb, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
         )
-        adj1 = nsw_descent(emb, adj0, NSW_DEG).localCheckpoint(eager=True)
+        adj1 = stage(nsw_descent(emb, adj0, NSW_DEG))
         return nsw_search(
             emb, emb.filter(F.col("vec_id") < PQ_QUERY_MAX), adj1, k=3
         )
@@ -2783,9 +2767,7 @@ def _register_nsw_insert():
             emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS),
             keep_dist=True,
         )
-        adj1 = nsw_insert(base, adj0, arrivals, deg=NSW_DEG).localCheckpoint(
-            eager=True
-        )
+        adj1 = stage(nsw_insert(base, adj0, arrivals, deg=NSW_DEG))
         return nsw_search(
             emb,
             emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
@@ -3363,9 +3345,7 @@ def hnsw_beam_audit(spark: SparkSession, emb: DataFrame) -> DataFrame:
     (plans/clustered_audit.py) run ONE sweep rule."""
     queries = emb.filter(F.col("vec_id") < PQ_QUERY_MAX)
     adj0, adj1, l1 = hnsw_layers(emb)
-    truth = topk_neighbors_l2(emb, queries, k=3).localCheckpoint(
-        eager=True
-    )
+    truth = stage(topk_neighbors_l2(emb, queries, k=3))
     denom = truth.agg(
         F.countDistinct("query_id").cast("long").alias("nq"),
         F.max("rank").cast("long").alias("k"),
@@ -5684,7 +5664,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sets = doc_shingles(d).transform(materialize)
     clusters = connected_components(verified_near_dups(sets))
-    # the operator eagerly localCheckpoints its edge frame, so the
+    # the operator stages its edge frame, so the
     # shingle cache is consumed by return time; the operator's label
     # frame is the one cache entry the clustering leaves behind
     sets.unpersist()

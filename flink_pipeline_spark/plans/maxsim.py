@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import parallel_frames
+from ..caching import parallel_frames, stage
 from ..catalog import load_table
 from ..operators.llm import DOT_SQL, ivf_assign, ivf_probe, topk_cut, with_norm
 from .llm_ops import (
@@ -362,7 +362,7 @@ def _maxsim_recall_frame(spark: SparkSession, emb: DataFrame) -> DataFrame:
                 F.col("query_doc").alias("qdoc"),
                 F.col("doc_id").alias("cdoc"),
             )
-            .localCheckpoint(eager=True)
+            .transform(stage)
         ),
     )
     return recall_rollup(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import parallel_frames
+from ..caching import parallel_frames, stage
 from ..catalog import load_table
 from ..operators.llm import (
     NORM2_SQL,
@@ -352,7 +352,7 @@ def q_sim_radius_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("dist_q") <= RADIUS_Q)
             .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
+            .transform(stage)
         ),
     )
     return recall_rollup(

@@ -62,6 +62,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import stage
 from ..catalog import load_table
 from ..operators.llm import topk_neighbors_l2
 from ..streaming.heavy import build_once
@@ -119,7 +120,7 @@ def pq_refresh_store_for(spark: SparkSession, sf_dir: str):
 
     def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        dr = drifted_corpus(emb).localCheckpoint(eager=True)
+        dr = stage(drifted_corpus(emb))
         is_fold = (
             (F.col("vec_id") >= REFRESH_FOLD_MIN)
             & (F.col("vec_id") % REFRESH_FOLD_MOD == REFRESH_FOLD_REM)
@@ -235,7 +236,7 @@ def q_pq_refresh_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth audit — the q_ann_recall audit class on the refreshed
     store."""
     emb = load_table(spark, sf_dir, "embeddings")
-    dr = drifted_corpus(emb).localCheckpoint(eager=True)
+    dr = stage(drifted_corpus(emb))
     queries = dr.filter(F.col("vec_id") < PQ_QUERY_MAX)
     mon = pq_refresh_store_for(spark, sf_dir)
     short = mon.adc_topk(
@@ -244,12 +245,12 @@ def q_pq_refresh_serve_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     served = (
         exact_rerank(dr, short, k=3)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     truth = (
         topk_neighbors_l2(dr, queries, k=3)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     return recall_rollup(
         spark, truth, {"exact": truth, "served": served}
@@ -267,7 +268,7 @@ def ann_refresh_store_for(spark: SparkSession, sf_dir: str):
 
     def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        dr = drifted_corpus(emb).localCheckpoint(eager=True)
+        dr = stage(drifted_corpus(emb))
         _assert_gate_fired(emb, dr, tmp)
         _hnsw_monitor(tmp).init(
             dr, dr.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import parallel_frames
+from ..caching import parallel_frames, stage
 from ..catalog import load_table
 from ..operators.llm import NSW_HOPS, topk_neighbors_l2
 from ..streaming.heavy import build_once
@@ -309,19 +309,19 @@ def q_dedup_unindex_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _truth_chain() -> tuple[DataFrame, DataFrame]:
-        # checkpoint the drop set once: the dedup chain (shingles,
+        # stage the drop set once: the dedup chain (shingles,
         # LSH, verify, connected components) otherwise re-executes in
         # BOTH the truth build and the final n_dropped_served rollup
         drops = (
             dedup_drop_batch(spark, sf_dir)
             .select("vec_id")
-            .localCheckpoint(eager=True)
+            .transform(stage)
         )
         surv = emb.join(drops, "vec_id", "left_anti")
         truth = (
             topk_neighbors_l2(surv, queries, k=3)
             .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
+            .transform(stage)
         )
         return drops, truth
 

@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import stage
 from ..functions.portable import round_agg, round_sql
 from ..operators.llm import capped_bucket_pairs
 from ..operators.multimodal import (
@@ -312,7 +313,7 @@ def q_dedup_video_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel index — the audit path, priced for fixture-scale truth;
     the method side stays on the fingerprint-set scale path. The
     1-row denominator broadcast is the vetted audit convention."""
-    sets = _frame_fp_sets(spark).localCheckpoint(eager=True)
+    sets = stage(_frame_fp_sets(spark))
     method = _vid_pairs(sets).select("file_a", "file_b")
     sizes = sets.groupBy("file").agg(F.count("*").cast("long").alias("nfp"))
 
@@ -363,7 +364,7 @@ def q_dedup_video_fp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (2 * F.col("m_ba") >= F.col("nb"))
         )
         .select("file_a", "file_b")
-        .localCheckpoint(eager=True)
+        .transform(stage)
     )
     return recall_rollup(spark, truth, {"fp": method}).drop("method")
 

@@ -23,6 +23,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 48g: a heap cap
+    above the machine lets the JVM grow past what the host can give
+    before it collects."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys // 2**31))}g"
+
+
 @dataclass(frozen=True)
 class EngineConf:
     """Validated engine configuration (GlobalConf analog,
@@ -54,7 +62,7 @@ class EngineConf:
             "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"
         )
     )
-    driver_memory: str = "48g"
+    driver_memory: str = field(default_factory=_default_driver_memory)
     timezone: str = "UTC"
     adaptive: bool = True
     arrow: bool = True

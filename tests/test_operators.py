@@ -205,3 +205,83 @@ def test_topk_cut_breaks_score_ties_by_item(spark, desc, want):
         by_key.setdefault(r.query_id, []).append((r.item, r.rank))
     assert sorted(by_key[1], key=lambda t: t[1]) == want
     assert by_key[2] == [(8, 1)]
+
+
+def _join_product(spark, tag: str):
+    """A 360-row join of two 50-row ranges: the planner's size estimate
+    is the product over the join, with no row count."""
+    a = spark.range(50).withColumn("k", F.col("id") % 7)
+    b = spark.range(50).select(
+        F.col("id").alias("j"), (F.col("id") % 5).alias("k"), F.lit(tag).alias("tag")
+    )
+    return a.join(b, "k")
+
+
+def _stats(df):
+    """(sizeInBytes, rowCount or None) of ``df``'s optimized plan."""
+    s = df._jdf.queryExecution().optimizedPlan().stats()
+    return s.sizeInBytes(), s.rowCount().get() if s.rowCount().isDefined() else None
+
+
+@pytest.mark.parametrize("owned", [False, True], ids=["bare", "caller_cached"])
+@pytest.mark.parametrize("ran", [False, True], ids=["fresh", "ran"])
+@pytest.mark.parametrize("cut", ["stage", "eager_checkpoint"])
+def test_cut_carries_measured_size(spark, cut, ran, owned):
+    """Both eager cuts read back with the measured size and row count of
+    the frame, also when its plan was already run before the cut; a
+    cache the caller owns stays cached, and the cut adds no cache entry."""
+    from pyspark import StorageLevel
+
+    from flink_pipeline_spark import caching
+
+    tag = f"{cut}-{ran}-{owned}"
+    estimate, _ = _stats(_join_product(spark, tag))
+    df = _join_product(spark, tag)
+    if owned:
+        df.persist()
+    if ran:  # optimizes df's own plan, before any cut's cache exists
+        df.collect()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    entries = cache.numCachedEntries()
+    try:
+        out = getattr(caching, cut)(df)
+        assert cache.numCachedEntries() == entries
+        assert (df.storageLevel != StorageLevel.NONE) == owned
+        size, rows = _stats(out)
+        assert rows == 360
+        assert size * 10 < estimate
+        assert sorted(out.collect()) == sorted(df.collect())
+    finally:
+        df.unpersist()
+
+
+def test_only_caching_cuts_lineage():
+    """Every eager checkpoint in the package goes through caching.stage or
+    caching.eager_checkpoint, which measure the size they carry; a bare
+    checkpoint elsewhere would plan its joins on the estimate."""
+    import pathlib
+
+    import flink_pipeline_spark
+
+    root = pathlib.Path(flink_pipeline_spark.__file__).parent
+    bare = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(root.rglob("*.py"))
+        if p.name != "caching.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line or ".checkpoint(" in line
+    ]
+    assert bare == []
+
+
+def test_default_driver_memory_fits_the_machine():
+    """The default heap cap is valid and never above physical memory."""
+    import os
+
+    from flink_pipeline_spark.session import EngineConf
+
+    conf = EngineConf()
+    conf.validate()
+    assert conf.driver_memory.endswith("g")
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert int(conf.driver_memory[:-1]) * 2**30 <= max(phys, 2**30)

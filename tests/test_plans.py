@@ -441,7 +441,6 @@ _BNLJ_MAX = {
 _ALLOWED_ROW_PYTHON = {"q_udtf_explode"}
 
 
-@pytest.mark.slow  # 306s
 def test_registry_wide_no_cartesian_no_row_python(spark):
     """Registry-wide scale-discipline sweep: NO registered query may
     plan a CartesianProduct, a row-at-a-time Python eval (outside the
