@@ -86,7 +86,14 @@ from ..operators.llm import (
     nsw_insert,
 )
 from ..plans.llm_ops import NSW_GRAPH_KW  # one source of truth
-from .heavy import prune_partitions, read_latest, read_log, split_ops
+from .heavy import (
+    _part,
+    read_latest,
+    read_log,
+    split_ops,
+    write_latest,
+    write_log,
+)
 
 _ADJ_SCHEMA = "layer INT, src BIGINT, dst BIGINT, dist_q BIGINT"
 
@@ -119,12 +126,8 @@ class ANNIndexMonitor:
         adj = adj.unionByName(
             l1.select(F.lit(1).alias("layer"), "src", "dst", "dist_q")
         )
-        adj.write.mode("overwrite").parquet(
-            os.path.join(self._path("adj"), "batch_id=-1")
-        )
-        vecs.write.mode("overwrite").parquet(
-            os.path.join(self._path("vecs"), "batch_id=-1")
-        )
+        write_log(adj, self._path("adj"), -1)
+        write_log(vecs, self._path("vecs"), -1)
 
     def copy_base(self, dst: str) -> "ANNIndexMonitor":
         """Copy the ``init`` snapshot (both layers' adjacency and the
@@ -133,8 +136,7 @@ class ANNIndexMonitor:
         this one by folding batches in."""
         for kind in ("adj", "vecs"):
             shutil.copytree(
-                os.path.join(self._path(kind), "batch_id=-1"),
-                os.path.join(dst, kind, "batch_id=-1"),
+                _part(self._path(kind), -1), _part(os.path.join(dst, kind), -1)
             )
         return ANNIndexMonitor(dst)
 
@@ -213,20 +215,11 @@ class ANNIndexMonitor:
         ).unionByName(
             new1.select(F.lit(1).alias("layer"), "src", "dst", "dist_q")
         )
-        nadj.write.mode("overwrite").parquet(
-            os.path.join(self._path("adj"), f"batch_id={batch_id}")
-        )
-        arrivals.write.mode("overwrite").parquet(
-            os.path.join(self._path("vecs"), f"batch_id={batch_id}")
-        )
-        dels.write.mode("overwrite").parquet(
-            os.path.join(self._path("tombs"), f"batch_id={batch_id}")
-        )
-        # adjacency is a snapshot: latest + one prior suffice
-        # (crash-replay reads latest-strictly-before); the vecs and
-        # tombstone logs are never pruned — together they are the
-        # index's vector storage
-        prune_partitions(spark, self._path("adj"), batch_id - 1)
+        # adjacency is a snapshot; the vecs and tombstone logs are
+        # never pruned — together they are the index's vector storage
+        write_latest(nadj, self._path("adj"), batch_id)
+        write_log(arrivals, self._path("vecs"), batch_id)
+        write_log(dels, self._path("tombs"), batch_id)
 
     # -- the serving path ----------------------------------------------
 
@@ -313,16 +306,3 @@ class ANNIndexMonitor:
             k=k,
             exclude=tombs,
         )
-
-
-def start_ann_index_stream(
-    arrivals_stream: DataFrame, monitor: ANNIndexMonitor, **opts
-):
-    """Wire an arriving-vectors stream into the monitor (foreachBatch;
-    exactly-once via the checkpoint + the store's replay idempotence)."""
-    return (
-        arrivals_stream.writeStream.foreachBatch(monitor)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

@@ -11,11 +11,8 @@ The cell addressing comes from the SAME function the batch query uses
 (plans/profiling.cm_cells / cm_bucket_array), so the two deployments
 cannot fork.
 
-Store layout and replay idempotence follow streaming/heavy.py: each
-batch writes the full merged grid (<= CM_D x CM_W rows — tiny) into a
-``batch_id=N`` partition with overwrite semantics, reads take the
-latest partition strictly before the current batch, and partitions
-older than N-1 are pruned after a successful write.
+Each batch stores the full merged grid (<= CM_D x CM_W rows — tiny)
+as a snapshot (heavy.write_latest / read_latest).
 """
 
 from __future__ import annotations
@@ -26,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.profiling import CM_D, CM_W  # noqa: F401  (one source of truth)
-from .heavy import prune_partitions, read_latest
+from .heavy import read_latest, write_latest
 
 
 class CMMonitor:
@@ -60,9 +57,7 @@ class CMMonitor:
             .groupBy("d", "bucket")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
         )
-        part = os.path.join(self._path(), f"batch_id={batch_id}")
-        merged.write.mode("overwrite").parquet(part)
-        prune_partitions(spark, self._path(), batch_id - 1)
+        write_latest(merged, self._path(), batch_id)
 
     def estimates(self, spark, after_batch_id: int, toks: DataFrame) -> DataFrame:
         """(tok, cm_estimate) for the probe tokens in ``toks`` (one
@@ -85,13 +80,3 @@ class CMMonitor:
                 .alias("cm_estimate")
             )
         )
-
-
-def start_cm_stream(docs_stream: DataFrame, monitor: CMMonitor, **opts):
-    """Wire a streaming documents frame through the monitor sink."""
-    return (
-        docs_stream.writeStream.foreachBatch(monitor)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

@@ -6,11 +6,10 @@ Deployment shape: the benchmark (eval-suite) shingle set is packed
 ONCE into the (word, mask, m_bits) 32-bit-word Bloom filter
 (``build_bloom_reference``) and persisted; every incoming micro-batch
 of documents then probes the filter — k codegen'd md5 hashes per
-distinct shingle plus a broadcast word lookup — and lands its
-per-doc keep/flag decisions in a ``batch_id=N`` partition with
-overwrite semantics, the replay-idempotent foreachBatch convention
-streaming/dedup.py established: a crashed batch re-derives identical
-decisions instead of appending duplicates.
+distinct shingle plus a broadcast word lookup — and writes its
+per-doc keep/flag decisions as one log partition (heavy.write_log): a
+crashed batch re-derives identical decisions instead of appending
+duplicates.
 
 The filter build and the probe are the SAME functions the registered
 batch query uses (plans/training.bloom_filter_words /
@@ -31,10 +30,10 @@ evolving state for the engine's state stores.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .heavy import write_log
 
 
 def _bloom_bits():
@@ -94,18 +93,4 @@ class BloomDecontaminator:
         )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        self.flags(batch).write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch_id={batch_id}")
-        )
-
-
-def start_decontaminate_stream(
-    docs_stream: DataFrame, decon: BloomDecontaminator, **opts
-):
-    """Wire a streaming documents frame through the decontaminator."""
-    return (
-        docs_stream.writeStream.foreachBatch(decon)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )
+        write_log(self.flags(batch), self.out_dir, batch_id)

@@ -19,15 +19,11 @@ Two streaming dedup regimes exist and they are different tools:
   exact shingle-Jaccard verify for near-dups, then writes the KEPT
   documents' index rows.
 
-Replay idempotence: every write (decisions and the three store
-tables) lands in a ``batch_id=N`` partition directory with OVERWRITE
-semantics, and every store read is heavy.read_log — the union of the
-partitions STRICTLY BEFORE the current batch — so a batch re-run
-after a crash probes the store exactly as it stood before the batch
-and re-derives byte-identical decisions instead of matching its own
-half-written rows (the classic foreachBatch at-least-once pitfall).
-Only a store with no earlier partition reads as empty; a corrupt
-partition fails the batch (ADVICE r7).
+Replay idempotence: the decisions and the three store tables are
+append logs (heavy.write_log / read_log), so a batch re-run after a
+crash probes the store exactly as it stood before the batch instead
+of matching its own half-written rows (the classic foreachBatch
+at-least-once pitfall).
 
 Per-batch cost: the signature store is left-semi-joined down to the
 buckets the batch actually touches BEFORE the bucket aggregation
@@ -56,7 +52,7 @@ from ..operators.llm import (
     lsh_band_signatures,
     neardup_probe,
 )
-from .heavy import read_log
+from .heavy import read_log, write_log
 
 
 class NearDupIngest:
@@ -132,33 +128,16 @@ class NearDupIngest:
         decisions = dedup_decisions(
             docs.select("doc_id"), drop_exact, near
         ).persist()
-
-        def part(root: str) -> str:
-            return os.path.join(root, f"batch_id={batch_id}")
-
-        decisions.write.mode("overwrite").parquet(part(self.out_dir))
-
+        write_log(decisions, self.out_dir, batch_id)
         kept = decisions.filter(F.col("action") == "keep").select("doc_id")
-        bdig.join(kept, "doc_id", "left_semi").write.mode("overwrite").parquet(
-            part(self._store("digests"))
-        )
-        bsigs.join(kept, "doc_id", "left_semi").write.mode("overwrite").parquet(
-            part(self._store("sigs"))
-        )
-        bsets.join(kept, "doc_id", "left_semi").write.mode("overwrite").parquet(
-            part(self._store("sets"))
-        )
+        for kind, rows in (
+            ("digests", bdig), ("sigs", bsigs), ("sets", bsets)
+        ):
+            write_log(
+                rows.join(kept, "doc_id", "left_semi"), self._store(kind),
+                batch_id,
+            )
         decisions.unpersist()
         bsigs.unpersist()
         bsets.unpersist()
         docs.unpersist()
-
-
-def start_neardup_stream(docs_stream: DataFrame, ingest: NearDupIngest, **opts):
-    """Wire a streaming documents frame through the ingest sink."""
-    return (
-        docs_stream.writeStream.foreachBatch(ingest)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

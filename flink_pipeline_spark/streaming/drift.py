@@ -9,11 +9,9 @@ then reduces to its own tiny bucket grid, full-outer-joins the profile
 over the union of observed buckets, and computes the SAME
 Laplace-smoothed PSI term text q_drift_psi gates (one shared SQL
 string — plans/profiling._PSI_TERM_SQL — so the streaming and batch
-monitors cannot drift from each other). Output rows land in a
-``batch_id=N`` partition with overwrite semantics, the replay-
-idempotent foreachBatch convention streaming/dedup.py established: a
-crashed batch re-derives byte-identical PSI rows instead of appending
-duplicates.
+monitors cannot drift from each other). Each batch's rows
+are one log partition (heavy.write_log): a crashed batch re-derives
+byte-identical PSI rows instead of appending duplicates.
 
 Per-trigger cost: the batch reduces map-side to #types x #buckets
 cells before any join or PSI math; the reference profile is a
@@ -35,10 +33,10 @@ batch covers the full cohort, because both reduce to identical
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .heavy import write_log
 
 
 def _psi_bits():
@@ -147,16 +145,4 @@ class DriftMonitor:
         )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        self.psi(batch).write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch_id={batch_id}")
-        )
-
-
-def start_drift_stream(events_stream: DataFrame, monitor: DriftMonitor, **opts):
-    """Wire a streaming events frame through the drift monitor sink."""
-    return (
-        events_stream.writeStream.foreachBatch(monitor)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )
+        write_log(self.psi(batch), self.out_dir, batch_id)

@@ -20,11 +20,9 @@ So the monitor never misses a true heavy hitter and its counts are
 certifiably close — the property tests pin all three against exact
 batch counts (tests/test_streaming.py).
 
-Store layout and replay idempotence follow streaming/dedup.py: each
-batch writes the FULL new summary (<= k rows — tiny) and a 1-row meta
-(n_total) into ``batch_id=N`` partitions with overwrite semantics, and
-each read takes the LATEST partition strictly BEFORE the current batch
-— a crashed batch re-derives byte-identical summaries instead of
+Each batch stores the FULL new summary (<= k rows — tiny) and a 1-row
+meta (n_total) as snapshots (``write_latest`` / ``read_latest`` below),
+so a crashed batch re-derives byte-identical summaries instead of
 compounding its own half-written state. Determinism: the (k+1)-th
 largest estimate is selected with a full (est DESC, key) tiebreak, so
 a replayed or re-partitioned batch always decrements by the same value.
@@ -157,6 +155,26 @@ def read_log(
     return _read(spark, schema, parts)
 
 
+def write_log(df: DataFrame, path: str, batch_id: int) -> None:
+    """Overwrite ``df`` into the partition of ``batch_id`` under ``path``
+    — the write of an append log (read_log) and of every per-batch
+    output, and the seed an ``init`` writes at ``batch_id=-1``. The
+    overwrite is what makes a replayed batch idempotent: it replaces
+    its own half-written partition instead of appending to it."""
+    df.write.mode("overwrite").parquet(_part(path, batch_id))
+
+
+def write_latest(df: DataFrame, path: str, batch_id: int) -> None:
+    """write_log, then prune every snapshot before ``batch_id - 1`` —
+    the write of a snapshot store (read_latest). Pruning after a
+    successful write keeps the latest snapshot plus one prior, so a
+    replayed batch N still reads latest-strictly-before-N, and
+    read_latest's listing stays two partitions long instead of growing
+    with the stream (quadratic cumulative cost, ADVICE r8)."""
+    write_log(df, path, batch_id)
+    prune_partitions(df.sparkSession, path, batch_id - 1)
+
+
 def _part(path: str, batch_id: int) -> str:
     return os.path.join(path, f"batch_id={batch_id}")
 
@@ -178,15 +196,12 @@ def _empty(spark, schema, bids, before, label, required) -> DataFrame:
 def prune_partitions(spark, path: str, keep_from: int) -> None:
     """Delete ``batch_id=B`` partitions under ``path`` with
     B < ``keep_from`` via the Hadoop FS API (local and HDFS alike) —
-    the one snapshot-prune rule every monitor shares: pruning to
-    ``batch_id - 1`` after a successful write keeps the latest
-    snapshot plus one prior, which preserves crash-replay — a
-    replayed batch N still reads latest-strictly-before-N."""
+    write_latest's prune."""
     hpath = spark._jvm.org.apache.hadoop.fs.Path
     fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
     for b in partition_ids(spark, path):
         if b < keep_from:
-            fs.delete(hpath(os.path.join(path, f"batch_id={b}")), True)
+            fs.delete(hpath(_part(path, b)), True)
 
 
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -382,22 +397,9 @@ class HeavyHitterMonitor:
             .unionByName(batch_n.select(F.col("bn").alias("n_total")))
             .agg(F.sum("n_total").cast("long").alias("n_total"))
         )
-
-        def part(kind: str) -> str:
-            return os.path.join(self._path(kind), f"batch_id={batch_id}")
-
-        summary.write.mode("overwrite").parquet(part("summary"))
-        n_total.write.mode("overwrite").parquet(part("meta"))
+        write_latest(summary, self._path("summary"), batch_id)
+        write_latest(n_total, self._path("meta"), batch_id)
         merged.unpersist()
-        # prune snapshots older than the one prior partition after a
-        # successful write: read_latest re-lists ALL historical
-        # partitions, so an unpruned store costs linearly more per
-        # trigger (quadratic cumulative) for a summary that only ever
-        # needs the latest snapshot (ADVICE r8). Keeping batch N-1
-        # preserves crash-replay: a replayed batch N still reads
-        # latest-strictly-before-N.
-        prune_partitions(spark, self._path("summary"), batch_id - 1)
-        prune_partitions(spark, self._path("meta"), batch_id - 1)
 
     def summary(self, spark, after_batch_id: int) -> DataFrame:
         """The summary as of AFTER ``after_batch_id`` (key, est)."""
@@ -412,14 +414,3 @@ class HeavyHitterMonitor:
             spark, "meta", "n_total BIGINT", after_batch_id + 1
         )
 
-
-def start_heavy_hitter_stream(
-    events_stream: DataFrame, monitor: HeavyHitterMonitor, **opts
-):
-    """Wire a streaming events frame through the monitor sink."""
-    return (
-        events_stream.writeStream.foreachBatch(monitor)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

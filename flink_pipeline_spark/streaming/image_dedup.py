@@ -24,10 +24,8 @@ regardless of how many images the corpus holds. Each micro-batch:
 
 Batch-internal duplicates are deliberately NOT detected (the
 incremental convention: a batch self-dedups with the batch pair query
-first). Replay idempotence follows streaming/dedup.py exactly: every
-write lands in a ``batch_id=N`` partition with overwrite semantics
-and every store read is heavy.read_log (the partitions strictly
-before the current batch), so a crashed batch re-derives
+first). Decisions and both store tables are append logs
+(heavy.write_log / read_log), so a crashed batch re-derives
 byte-identical decisions.
 """
 
@@ -39,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import ahash_bands, band_probe
-from .heavy import read_log
+from .heavy import read_log, write_log
 
 
 class ImageDedupIngest:
@@ -95,30 +93,13 @@ class ImageDedupIngest:
             )
             .persist()
         )
-
-        def part(root: str) -> str:
-            return os.path.join(root, f"batch_id={batch_id}")
-
-        decisions.write.mode("overwrite").parquet(part(self.out_dir))
+        write_log(decisions, self.out_dir, batch_id)
         kept = decisions.filter(F.col("action") == "keep").select("file")
-        bdig.join(kept, "file", "left_semi").write.mode("overwrite").parquet(
-            part(self._store("digests"))
-        )
-        bbands.join(kept, "file", "left_semi").write.mode("overwrite").parquet(
-            part(self._store("bands"))
-        )
+        for kind, rows in (("digests", bdig), ("bands", bbands)):
+            write_log(
+                rows.join(kept, "file", "left_semi"), self._store(kind),
+                batch_id,
+            )
         decisions.unpersist()
         bbands.unpersist()
         imgs.unpersist()
-
-
-def start_image_dedup_stream(
-    imgs_stream: DataFrame, ingest: ImageDedupIngest, **opts
-):
-    """Wire a streaming (file, content) frame through the ingest sink."""
-    return (
-        imgs_stream.writeStream.foreachBatch(ingest)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

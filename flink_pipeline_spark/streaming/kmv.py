@@ -11,11 +11,8 @@ q_distinct_kmv estimator on the same data.
 The sketch unit comes from the SAME function the batch query uses
 (plans/profiling.gram3_hashes), so the two deployments cannot fork.
 
-Store layout and replay idempotence follow streaming/heavy.py: each
-batch writes the full merged sketch (<= k rows per source — tiny)
-into a ``batch_id=N`` partition with overwrite semantics, reads take
-the latest partition strictly before the current batch, and
-partitions older than N-1 are pruned after a successful write.
+Each batch stores the full merged sketch (<= k rows per source —
+tiny) as a snapshot (heavy.write_latest / read_latest).
 """
 
 from __future__ import annotations
@@ -26,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .heavy import prune_partitions, read_latest
+from .heavy import read_latest, write_latest
 
 KMV_K = 64  # must match plans/profiling.KMV_K (asserted in tests)
 _2_56 = 72057594037927936.0
@@ -62,9 +59,7 @@ class KMVMonitor:
             .filter(F.col("rn") <= self.k)
             .select("source", "h")
         )
-        part = os.path.join(self._path(), f"batch_id={batch_id}")
-        sketch.write.mode("overwrite").parquet(part)
-        prune_partitions(spark, self._path(), batch_id - 1)
+        write_latest(sketch, self._path(), batch_id)
 
     def estimates(self, spark, after_batch_id: int) -> DataFrame:
         """(source, n_sketch, kmv_estimate) as of AFTER
@@ -94,13 +89,3 @@ class KMVMonitor:
         return kth.select(
             "source", "n_sketch", est.cast("long").alias("kmv_estimate")
         )
-
-
-def start_kmv_stream(docs_stream: DataFrame, monitor: KMVMonitor, **opts):
-    """Wire a streaming documents frame through the monitor sink."""
-    return (
-        docs_stream.writeStream.foreachBatch(monitor)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

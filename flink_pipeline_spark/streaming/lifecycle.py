@@ -12,6 +12,11 @@ Structured Streaming subsumes each piece:
   manual retry <=3 (ST7)         -> run_with_restarts + checkpointLocation
                                     (state recovery replaces re-running)
   kill-all on failure (ST9)      -> stop_all_queries(spark)
+
+Every store monitor and ingest under streaming/ deploys the same way:
+``start_sink`` wires a stream into it through foreachBatch, and the
+sink's own replay idempotence (streaming/heavy.py's write rules) makes
+the checkpointed restart exactly-once.
 """
 
 from __future__ import annotations
@@ -19,7 +24,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 
@@ -56,6 +61,19 @@ class MetricsListener(StreamingQueryListener):
 
     def onQueryIdle(self, event) -> None:  # Spark 3.4+
         self.metrics.events.append(("idle", event.id))
+
+
+def start_sink(stream: DataFrame, sink, **opts):
+    """Start ``stream`` into the foreachBatch ``sink`` (any
+    ``sink(batch, batch_id)`` callable), passing ``opts`` to
+    writeStream (e.g. ``checkpointLocation``) — the one deployment
+    form of every streaming monitor and ingest."""
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .options(**opts)
+        .start()
+    )
 
 
 def stop_all_queries(spark: SparkSession) -> int:

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.llm import ivf_assign
-from .heavy import read_log, split_ops
+from .heavy import read_log, split_ops, write_log
 
 _TOKEN_SCHEMA = "vec_id BIGINT, cell BIGINT"
 
@@ -63,9 +63,10 @@ class MaxSimIndexMonitor:
         centroids.select("vec_id", "embedding").write.mode(
             "overwrite"
         ).parquet(self._path("cents.parquet"))
-        ivf_assign(emb, centroids).select("vec_id", "cell").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self._path("tokens"), "batch_id=-1"))
+        write_log(
+            ivf_assign(emb, centroids).select("vec_id", "cell"),
+            self._path("tokens"), -1,
+        )
 
     def _read_cents(self, spark) -> DataFrame:
         path = self._path("cents.parquet")
@@ -108,22 +109,9 @@ class MaxSimIndexMonitor:
                 "vec_id(s) — that would double-post the token; index "
                 "under a fresh vec_id instead"
             )
-        ivf_assign(
-            arrivals.select("vec_id", "embedding"), cents
-        ).select("vec_id", "cell").write.mode("overwrite").parquet(
-            os.path.join(self._path("tokens"), f"batch_id={batch_id}")
+        write_log(
+            ivf_assign(arrivals.select("vec_id", "embedding"), cents).select(
+                "vec_id", "cell"
+            ),
+            self._path("tokens"), batch_id,
         )
-
-
-def start_maxsim_index_stream(
-    arrivals_stream: DataFrame, monitor: MaxSimIndexMonitor, **opts
-):
-    """Wire an arriving-token-vectors stream into the monitor
-    (foreachBatch; exactly-once via the checkpoint + the fold's
-    statelessness)."""
-    return (
-        arrivals_stream.writeStream.foreachBatch(monitor)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

@@ -15,15 +15,12 @@ correct under merge_into's upsert-tolerant semantics (delete-then-
 insert compacts to the insert, insert-then-delete to the no-op
 delete). Malformed ops fail loudly inside merge_into (ADVICE r9).
 
-Store layout and replay idempotence follow streaming/heavy.py: each
-batch writes the FULL merged snapshot into a ``batch_id=N`` partition
-with overwrite semantics, the initial base seeds the sentinel
-``batch_id=-1`` partition, and partitions older than N-1 are pruned
-after a successful write. Every read is heavy.read_latest (the latest
-partition strictly BEFORE the current batch, so a replayed batch
-re-derives a byte-identical snapshot instead of double-applying) with
-the required-store policy: an uninitialized store and a read of pruned
-history both raise (the r9-ADVICE contract).
+Each batch stores the FULL merged base as a snapshot
+(heavy.write_latest / read_latest; ``init`` seeds it at
+``batch_id=-1``), so a replayed batch re-derives a byte-identical
+snapshot instead of double-applying. Reads use the required-store
+policy: an uninitialized store and a read of pruned history both raise
+(the r9-ADVICE contract).
 
 Scale: the merge itself is ONE full-outer key join per trigger — the
 change side is a micro-batch (tiny; AQE broadcasts it), the base side
@@ -46,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.merge import merge_into
-from .heavy import prune_partitions, read_latest
+from .heavy import read_latest, write_latest, write_log
 
 
 class CDCApplyMonitor:
@@ -73,8 +70,7 @@ class CDCApplyMonitor:
         table a CDC feed starts from). Must run once before the
         stream starts; batch ids from Structured Streaming start at 0,
         so the seed lives at the sentinel partition batch_id=-1."""
-        part = os.path.join(self._path(), "batch_id=-1")
-        base.write.mode("overwrite").parquet(part)
+        write_log(base, self._path(), -1)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -94,9 +90,7 @@ class CDCApplyMonitor:
             .select(*self.keys, self.op_col, *payload)
         )
         merged = merge_into(base, compacted, self.keys, op_col=self.op_col)
-        part = os.path.join(self._path(), f"batch_id={batch_id}")
-        merged.write.mode("overwrite").parquet(part)
-        prune_partitions(spark, self._path(), batch_id - 1)
+        write_latest(merged, self._path(), batch_id)
 
     def table(self, spark, after_batch_id: int) -> DataFrame:
         """The merged base as of AFTER ``after_batch_id`` (lazy)."""
@@ -109,15 +103,3 @@ class CDCApplyMonitor:
             spark, self._path(), None, before, "snapshot of the cdc base",
             required=True,
         )
-
-
-def start_cdc_apply_stream(
-    changes_stream: DataFrame, monitor: CDCApplyMonitor, **opts
-):
-    """Wire a streaming change feed through the merge sink."""
-    return (
-        changes_stream.writeStream.foreachBatch(monitor)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

@@ -50,7 +50,7 @@ from ..operators.llm import (
     ivfpq_scan,
     pq_code_batch,
 )
-from .heavy import read_log, split_ops
+from .heavy import _part, read_log, split_ops, write_log
 
 _CODE_SCHEMA = "vec_id BIGINT, sub INT, code INT, cell BIGINT"
 
@@ -91,19 +91,20 @@ class PQIndexMonitor:
         centroids.select("vec_id", "embedding").write.mode(
             "overwrite"
         ).parquet(self._path("cents.parquet"))
-        codes.select("vec_id", "sub", "code", "cell").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self._path("codes"), "batch_id=-1"))
+        write_log(
+            codes.select("vec_id", "sub", "code", "cell"), self._path("codes"),
+            -1,
+        )
 
     def copy_base(self, dst: str) -> "PQIndexMonitor":
         """Copy the ``init`` snapshot (codebook, centroids and the
         ``batch_id=-1`` code partition) into a fresh store at ``dst``
         and return its monitor, with this one's settings — the start
         of a store derived from this one by folding batches in."""
-        for kind in ("cb.parquet", "cents.parquet", "codes/batch_id=-1"):
-            shutil.copytree(
-                os.path.join(self.store_dir, kind), os.path.join(dst, kind)
-            )
+        for kind in ("cb.parquet", "cents.parquet"):
+            shutil.copytree(self._path(kind), os.path.join(dst, kind))
+        codes = self._path("codes")
+        shutil.copytree(_part(codes, -1), _part(os.path.join(dst, "codes"), -1))
         return self._at(dst)
 
     def _at(self, store_dir: str) -> "PQIndexMonitor":
@@ -184,19 +185,11 @@ class PQIndexMonitor:
                 "forever; code under a fresh vec_id instead)"
             )
         if "op" in batch.columns:
-            dels.write.mode("overwrite").parquet(
-                os.path.join(self._path("tombs"), f"batch_id={batch_id}")
-            )
-        pq_code_batch(
-            arrivals,
-            cb,
-            cents,
-            self.m,
-            self.d_sub,
-        ).select("vec_id", "sub", "code", "cell").write.mode(
-            "overwrite"
-        ).parquet(
-            os.path.join(self._path("codes"), f"batch_id={batch_id}")
+            write_log(dels, self._path("tombs"), batch_id)
+        codes = pq_code_batch(arrivals, cb, cents, self.m, self.d_sub)
+        write_log(
+            codes.select("vec_id", "sub", "code", "cell"), self._path("codes"),
+            batch_id,
         )
 
     # -- offline reclamation ---------------------------------------------
@@ -233,9 +226,10 @@ class PQIndexMonitor:
         cents.write.mode("overwrite").parquet(
             os.path.join(out_dir, "cents.parquet")
         )
-        codes.select("vec_id", "sub", "code", "cell").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "codes", "batch_id=-1"))
+        write_log(
+            codes.select("vec_id", "sub", "code", "cell"),
+            os.path.join(out_dir, "codes"), -1,
+        )
         return self._at(out_dir)
 
     # -- the serving path ----------------------------------------------
@@ -289,14 +283,3 @@ class PQIndexMonitor:
             m=self.m,
             d_sub=self.d_sub,
         )
-
-
-def start_pq_index_stream(arrivals_stream: DataFrame, monitor: PQIndexMonitor, **opts):
-    """Wire an arriving-vectors stream into the monitor (foreachBatch;
-    exactly-once via the checkpoint + the fold's statelessness)."""
-    return (
-        arrivals_stream.writeStream.foreachBatch(monitor)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

@@ -12,12 +12,8 @@ pinned by tests/test_round10_ops.py.
 The sketch unit comes from the SAME function the batch query uses
 (plans/profiling.price_tags), so the two deployments cannot fork.
 
-Store layout, replay idempotence, and pruned-read semantics follow
-streaming/kmv.py: full merged sketch (<= k rows — tiny) written into
-``batch_id=N`` partitions with overwrite, reads take the latest
-partition strictly before the current batch via driver-side FS
-listing, partitions older than N-1 are pruned after a successful
-write, and reads of pruned history raise.
+Each batch stores the full merged sketch (<= k rows — tiny) as a
+snapshot (heavy.write_latest / read_latest).
 """
 
 from __future__ import annotations
@@ -28,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .heavy import prune_partitions, read_latest
+from .heavy import read_latest, write_latest
 
 QSK_K = 256  # must match plans/profiling.QSK_K (asserted in tests)
 
@@ -59,9 +55,7 @@ class QuantileMonitor:
         sketch = (
             merged.orderBy("h", "val").limit(self.k).select("val", "h")
         )
-        part = os.path.join(self._path(), f"batch_id={batch_id}")
-        sketch.write.mode("overwrite").parquet(part)
-        prune_partitions(spark, self._path(), batch_id - 1)
+        write_latest(sketch, self._path(), batch_id)
 
     def sketch(self, spark, after_batch_id: int) -> DataFrame:
         """The (val, h) sketch as of AFTER ``after_batch_id``."""
@@ -94,15 +88,3 @@ class QuantileMonitor:
         return grid.join(
             F.broadcast(ranked), F.col("rn") == F.col("r_est")
         ).select("permille", "k", F.col("val").alias("est"))
-
-
-def start_quantile_stream(
-    lineitem_stream: DataFrame, monitor: QuantileMonitor, **opts
-):
-    """Wire a streaming lineitem frame through the sketch sink."""
-    return (
-        lineitem_stream.writeStream.foreachBatch(monitor)
-        .outputMode("update")
-        .options(**opts)
-        .start()
-    )

@@ -1,7 +1,8 @@
 """The two store reads every persisted store shares: heavy.read_latest
 (the newest ``batch_id`` partition strictly before a batch — snapshot
 stores) and heavy.read_log (the union of every partition strictly
-before a batch — append logs), each under both empty-store policies."""
+before a batch — append logs), each under both empty-store policies;
+and the snapshot write heavy.write_latest, whose prune they rely on."""
 
 from __future__ import annotations
 
@@ -10,20 +11,26 @@ import os
 import pytest
 
 from flink_pipeline_spark.streaming.heavy import (
+    partition_ids,
     prune_partitions,
     read_latest,
     read_log,
+    write_latest,
+    write_log,
 )
 
 SCHEMA = "v BIGINT"
 
 
+def _batch(spark, b: int):
+    """One row holding the batch's own id."""
+    return spark.createDataFrame([(b,)], SCHEMA).coalesce(1)
+
+
 def _write(spark, path: str, bids) -> None:
     """One row per partition, holding the partition's own batch id."""
     for b in bids:
-        spark.createDataFrame([(b,)], SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(path, f"batch_id={b}"))
+        write_log(_batch(spark, b), path, b)
 
 
 def _corrupt(path: str, batch_id: int) -> None:
@@ -117,3 +124,23 @@ def test_read_log(spark, tmp_path, case, bids, prune_below, before,
         return
     path = _setup(spark, tmp_path, bids, prune_below)
     _check(read_log, spark, path, before, required, want)
+
+
+def test_write_latest_keeps_two_snapshots_and_replays(spark, tmp_path):
+    """Snapshot writes at -1..3 leave only {2, 3}; a replayed write of
+    3 leaves the same partitions and rows; read_latest(before=3) still
+    reads batch 2."""
+    path = str(tmp_path / "store")
+    for b in range(-1, 4):
+        write_latest(_batch(spark, b), path, b)
+
+    def state():
+        return sorted(partition_ids(spark, path)), _rows(
+            spark.read.parquet(path)
+        )
+
+    first = state()
+    assert first == ([2, 3], [2, 3])
+    write_latest(_batch(spark, 3), path, 3)
+    assert state() == first
+    assert _rows(read_latest(spark, path, SCHEMA, 3, "test store")) == [2]

@@ -482,7 +482,8 @@ def test_streaming_cm_equals_batch_sketch(spark, tmp_path):
     )
     from flink_pipeline_spark.streaming.cm import CM_D as SD
     from flink_pipeline_spark.streaming.cm import CM_W as SW
-    from flink_pipeline_spark.streaming.cm import CMMonitor, start_cm_stream
+    from flink_pipeline_spark.streaming.cm import CMMonitor
+    from flink_pipeline_spark.streaming.lifecycle import start_sink
 
     assert (CM_D, CM_W) == (SD, SW)
 
@@ -503,7 +504,7 @@ def test_streaming_cm_equals_batch_sketch(spark, tmp_path):
         .parquet(str(src) + "/*.parquet")
     )
     mon = CMMonitor(str(tmp_path / "store"))
-    q = start_cm_stream(stream, mon)
+    q = start_sink(stream, mon)
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()

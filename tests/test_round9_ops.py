@@ -197,10 +197,8 @@ def test_streaming_image_dedup_store(spark, tmp_path):
     import os
     import time
 
-    from flink_pipeline_spark.streaming.image_dedup import (
-        ImageDedupIngest,
-        start_image_dedup_stream,
-    )
+    from flink_pipeline_spark.streaming.image_dedup import ImageDedupIngest
+    from flink_pipeline_spark.streaming.lifecycle import start_sink
 
     b1 = [(n, _phash_bytes(n)) for n in ("ph_a.ppm", "ph_b.ppm", "ph_d.ppm")]
     b2 = [
@@ -232,7 +230,7 @@ def test_streaming_image_dedup_store(spark, tmp_path):
         .parquet(str(src) + "/*.parquet")
     )
     ingest = ImageDedupIngest(str(tmp_path / "store"), str(tmp_path / "out"))
-    q = start_image_dedup_stream(stream, ingest)
+    q = start_sink(stream, ingest)
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()

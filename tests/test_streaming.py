@@ -18,6 +18,7 @@ from flink_pipeline_spark.sources.fixtures import fixture_df
 from flink_pipeline_spark.streaming.lifecycle import (
     MetricsListener,
     run_with_restarts,
+    start_sink,
     stop_all_queries,
 )
 from flink_pipeline_spark.streaming.state import track_jobs, track_jobs_stream
@@ -341,10 +342,7 @@ def test_streaming_neardup_signature_store(spark, tmp_path):
     import os
     import time
 
-    from flink_pipeline_spark.streaming.dedup import (
-        NearDupIngest,
-        start_neardup_stream,
-    )
+    from flink_pipeline_spark.streaming.dedup import NearDupIngest
 
     words = [f"w{i}" for i in range(40)]
     t1 = " ".join(words)
@@ -378,7 +376,7 @@ def test_streaming_neardup_signature_store(spark, tmp_path):
         .parquet(str(src) + "/*.parquet")
     )
     ingest = NearDupIngest(str(tmp_path / "store"), str(tmp_path / "out"))
-    q = start_neardup_stream(stream, ingest)
+    q = start_sink(stream, ingest)
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()
@@ -493,7 +491,6 @@ def test_drift_monitor_streaming_and_replay(spark, tmp_path):
     from flink_pipeline_spark.streaming.drift import (
         DriftMonitor,
         build_reference_profile,
-        start_drift_stream,
     )
 
     events = load_table(spark, SF_DIR, "events").select(
@@ -521,7 +518,7 @@ def test_drift_monitor_streaming_and_replay(spark, tmp_path):
         .parquet(str(src) + "/*.parquet")
     )
     mon = DriftMonitor(str(tmp_path / "ref"), str(tmp_path / "out"))
-    q = start_drift_stream(stream, mon)
+    q = start_sink(stream, mon)
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()
@@ -602,7 +599,6 @@ def test_bloom_decontaminator_streaming_and_replay(spark, tmp_path):
     from flink_pipeline_spark.streaming.decontaminate import (
         BloomDecontaminator,
         build_bloom_reference,
-        start_decontaminate_stream,
     )
 
     docs = load_table(spark, SF_DIR, "documents").select(
@@ -630,7 +626,7 @@ def test_bloom_decontaminator_streaming_and_replay(spark, tmp_path):
         .parquet(str(src) + "/*.parquet")
     )
     decon = BloomDecontaminator(str(tmp_path / "ref"), str(tmp_path / "out"))
-    q = start_decontaminate_stream(stream, decon)
+    q = start_sink(stream, decon)
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()
@@ -818,10 +814,7 @@ def test_heavy_hitter_stream_matches_batch_fold(spark, tmp_path):
     import os as _os
     import time as _time
 
-    from flink_pipeline_spark.streaming.heavy import (
-        HeavyHitterMonitor,
-        start_heavy_hitter_stream,
-    )
+    from flink_pipeline_spark.streaming.heavy import HeavyHitterMonitor
 
     rows1 = [("u0",)] * 10 + [("u1",)] * 3 + [(f"t{i}",) for i in range(6)]
     rows2 = [("u0",)] * 7 + [("u2",)] * 5 + [(f"s{i}",) for i in range(6)]
@@ -843,7 +836,7 @@ def test_heavy_hitter_stream_matches_batch_fold(spark, tmp_path):
         .parquet(str(src) + "/*.parquet")
     )
     mon_s = HeavyHitterMonitor(str(tmp_path / "store_s"), k=4, key_col="key")
-    q = start_heavy_hitter_stream(stream, mon_s)
+    q = start_sink(stream, mon_s)
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()
