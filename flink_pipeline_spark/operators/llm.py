@@ -31,7 +31,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import (
+    IntegralType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from ..caching import eager_checkpoint, materialize, stage
@@ -44,6 +50,7 @@ from ..functions.text import (
     shingle_hash_sql,
     shingles_sql,
 )
+from . import local
 
 # ---------------------------------------------------------------------------
 # Shingling + MinHash
@@ -1132,7 +1139,17 @@ def connected_components(
     than returning wrong clusters; the driver-side loop is control
     flow only — every data operation is a distributed join/agg.
     ``_stats`` (optional dict) receives ``phase1_iters`` /
-    ``twophase_rounds`` for probes and tests."""
+    ``twophase_rounds`` for probes and tests.
+
+    Two executions, one answer. When the staged edge frame fits the
+    local-execution gate (operators/local.py: 2*NSW_DEG*LOCAL_MAX
+    edge rows, both orientations), the bounded collect that tests the
+    gate is also the payload: the ids are ranked (Arrow's sort, byte
+    order for strings — Spark's StringType order), min-labels with
+    pointer jumping run in numpy (_cc_local), and the labels come back
+    as a local frame; no job per round. Edges over the gate, a null
+    endpoint, or an id type that is neither integer nor string take
+    the hybrid above."""
     stats = _stats if _stats is not None else {}
     # Both edge orientations come out of ONE projection of `pairs`, so
     # the stage job runs the pair DAG exactly once and callers never
@@ -1150,6 +1167,9 @@ def connected_components(
             )
         )
     )
+    fast = _cc_local(edges)
+    if fast is not None:
+        return fast
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -1216,6 +1236,43 @@ def connected_components(
     return labels.join(roots, "cluster_id", "left").select(
         "doc_id",
         F.coalesce(F.col("root"), F.col("cluster_id")).alias("cluster_id"),
+    )
+
+
+def _cc_local(edges: DataFrame) -> DataFrame | None:
+    """connected_components' under-gate execution over the staged
+    (src, dst) frame, or None when the gate or the id type sends it to
+    the hybrid. Each id's label starts as its own rank; a round hooks
+    every label onto its smallest neighbouring label (np.minimum.at),
+    then jumps pointers until every label is a root. Labels only fall
+    and stay inside their component, and at the fixed point both ends
+    of every edge share one, which is the component's smallest rank."""
+    kind = edges.schema["src"].dataType
+    if not isinstance(kind, IntegralType) and kind != StringType():
+        return None
+    rows = local.collect(edges, 2 * NSW_DEG)
+    if rows is None or rows.column("src").null_count:
+        return None  # dst is src in the other orientation
+    ids = pc.unique(rows.column("src"))
+    ids = ids.take(pc.sort_indices(ids))
+    a = pc.index_in(rows.column("src"), value_set=ids).to_numpy()
+    b = pc.index_in(rows.column("dst"), value_set=ids).to_numpy()
+    lab = np.arange(len(ids))
+    while True:
+        nxt = lab.copy()
+        np.minimum.at(nxt, lab[a], lab[b])
+        while (nxt[nxt] != nxt).any():
+            nxt = nxt[nxt]
+        if (nxt == lab).all():
+            break
+        lab = nxt
+    schema = StructType(
+        [StructField("doc_id", kind), StructField("cluster_id", kind)]
+    )
+    return local.frame(
+        edges.sparkSession,
+        pa.table({"doc_id": ids, "cluster_id": ids.take(lab)}),
+        schema,
     )
 
 
@@ -2138,12 +2195,6 @@ NSW_DEG = 4   # out-links kept per node at build (2*deg after symmetrize)
 NSW_BEAM = 8  # beam width during search
 NSW_HOPS = 3  # expansion rounds (fixed unroll — the kmeans/BPE discipline)
 HNSW_L1_MOD = 8  # layer-1 keeps vec_ids with hash56 % 8 == 0 (~1/8)
-# Local beam gate: at most this many vector rows (and 2*NSW_DEG edges
-# per row) and query rows are collected to the driver, and the corpus'
-# float64 matrix may take at most what this many 64-d rows take
-# (~10 MB, Spark's default autoBroadcastJoinThreshold), so wider vectors
-# fit fewer rows.
-NSW_LOCAL_MAX = 20_000
 
 
 def hnsw_layer1(df: DataFrame) -> DataFrame:
@@ -2522,14 +2573,15 @@ def nsw_beam(
     DuckDB oracle unroll identical rounds.
 
     Two executions, one answer. When the vectors and the queries fit
-    NSW_LOCAL_MAX rows and its byte budget (and the adjacency
-    2*NSW_DEG edges per row), the bounded collects that test the gate
-    are also the payload: every hop of every query runs in numpy on
-    the driver (_beam_local) — no job per hop — and the beam comes
-    back as a local frame. Above the gate the DataFrame loop below
-    runs: per query the search touches O(beam * 2*deg * hops) nodes —
-    independent of corpus size; frontier frames are tiny and BROADCAST
-    onto the adjacency and corpus scans; the corpus never shuffles.
+    the local-execution gate (operators/local.py: LOCAL_MAX rows and
+    its byte budget, the adjacency 2*NSW_DEG edges per row), the
+    bounded collects that test the gate are also the payload: every
+    hop of every query runs in numpy on the driver (_beam_local) — no
+    job per hop — and the beam comes back as a local frame. Above the
+    gate the DataFrame loop below runs: per query the search touches
+    O(beam * 2*deg * hops) nodes — independent of corpus size;
+    frontier frames are tiny and BROADCAST onto the adjacency and
+    corpus scans; the corpus never shuffles.
 
     ``keep_visited=True`` returns EVERY node the search ever scored
     (the union of the seed and all expansion candidate sets, scored
@@ -2544,9 +2596,9 @@ def nsw_beam(
     )
     held = _beam_payload(emb, adj)
     if held is not None:
-        local = _beam_local(q, held, beam, entries, entry_from, keep_visited)
-        if local is not None:
-            return local
+        fast = _beam_local(q, held, beam, entries, entry_from, keep_visited)
+        if fast is not None:
+            return fast
     if entry_from is None:
         entry_from = emb
 
@@ -2626,7 +2678,7 @@ def nsw_beam(
 def _beam_payload(emb: DataFrame, adj: DataFrame) -> tuple | None:
     """(ids, vt, bb, indptr, nbr): the corpus and adjacency as numpy
     arrays for the local beam, or None when either bounded collect
-    overflows the NSW_LOCAL_MAX gate, the matrix outgrows its byte
+    overflows the local gate, the matrix outgrows its byte
     budget, the corpus is empty (it has no dim), or the rows are not
     the plain integer-id, equal-length float vectors the kernel
     assumes; the DataFrame loop then answers. ``ids`` is sorted;
@@ -2635,14 +2687,11 @@ def _beam_payload(emb: DataFrame, adj: DataFrame) -> tuple | None:
     (``nbr`` keeps raw dst ids — a dst absent from the corpus drops
     when scored, as the loop's inner join drops it; edges out of such
     a node are never expanded, since only scored nodes expand)."""
-    vrows = (
-        emb.select("vec_id", "embedding").limit(NSW_LOCAL_MAX + 1).toArrow()
-    )
-    if not 0 < vrows.num_rows <= NSW_LOCAL_MAX:
+    vrows = local.collect(emb.select("vec_id", "embedding"))
+    if vrows is None or not vrows.num_rows:
         return None
-    emax = 2 * NSW_DEG * NSW_LOCAL_MAX
-    erows = adj.select("src", "dst").limit(emax + 1).toArrow()
-    if erows.num_rows > emax:
+    erows = local.collect(adj.select("src", "dst"), 2 * NSW_DEG)
+    if erows is None:
         return None
     vids = vrows.column("vec_id")
     if (
@@ -2652,8 +2701,8 @@ def _beam_payload(emb: DataFrame, adj: DataFrame) -> tuple | None:
         or not pa.types.is_integer(erows.schema.field("dst").type)
     ):
         return None
-    V = _dense(vrows.column("embedding").combine_chunks())
-    if V is None or V.nbytes > NSW_LOCAL_MAX * 64 * 8:
+    V = local.dense(vrows.column("embedding").combine_chunks())
+    if V is None:
         return None
     ids = vids.to_numpy().astype(np.int64)
     order = np.argsort(ids, kind="stable")
@@ -2664,47 +2713,12 @@ def _beam_payload(emb: DataFrame, adj: DataFrame) -> tuple | None:
     erows = erows.drop_null()
     src = erows.column("src").to_numpy().astype(np.int64)
     dst = erows.column("dst").to_numpy().astype(np.int64)
-    pos, ok = _positions(ids, src)
+    pos, ok = local.positions(ids, src)
     pos, dst = pos[ok], dst[ok]
     order = np.argsort(pos, kind="stable")
     indptr = np.zeros(len(ids) + 1, dtype=np.int64)
     np.cumsum(np.bincount(pos, minlength=len(ids)), out=indptr[1:])
-    return ids, vt, _fold(vt, vt), indptr, dst[order]
-
-
-def _dense(col: pa.ListArray) -> np.ndarray | None:
-    """(n, dim) float64 matrix of a list<float|double> column, or None
-    when a vector or element is null or the lengths differ."""
-    if not pa.types.is_floating(col.type.value_type) or col.null_count:
-        return None
-    vals = pc.list_flatten(col)
-    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-    if vals.null_count or (len(lens) and (lens != lens[0]).any()):
-        return None
-    dim = int(lens[0]) if len(lens) else 0
-    return (
-        vals.to_numpy(zero_copy_only=False)
-        .astype(np.float64)
-        .reshape(len(lens), dim)
-    )
-
-
-def _positions(ids: np.ndarray, nodes: np.ndarray):
-    """(pos, ok): each node's index in the sorted ``ids`` and whether
-    it is there at all (``ids`` is not empty)."""
-    pos = np.minimum(np.searchsorted(ids, nodes), len(ids) - 1)
-    return pos, ids[pos] == nodes
-
-
-def _fold(at: np.ndarray, bt: np.ndarray) -> np.ndarray:
-    """Row-wise dot products of two (dim, n) matrices as DOT_SQL's
-    per-dimension sequential fold, so every double matches Spark's and
-    DuckDB's bit-for-bit (np.dot's pairwise/SIMD summation reorders
-    the adds and can flip a quantized distance)."""
-    s = np.zeros(at.shape[1])
-    for i in range(at.shape[0]):
-        s = s + at[i] * bt[i]
-    return s
+    return ids, vt, local.fold(vt, vt), indptr, dst[order]
 
 
 def _beam_local(
@@ -2715,22 +2729,16 @@ def _beam_local(
     entry_from: DataFrame | None,
     keep_visited: bool,
 ) -> DataFrame | None:
-    """nsw_beam's under-gate execution: the queries (bounded like the
-    corpus) and their seeds are collected, _beam_rows runs every hop
-    on the driver, and the rows come back as a local frame. None when
-    the queries overflow the gate or are not the corpus' plain vectors.
-    No Python worker runs: a session that has run one pays up to ~1 s
-    more at stop (PySpark's accumulator server polls its JVM socket
-    once a second), which would land on every caller's session."""
+    """nsw_beam's under-gate execution: the queries and their seeds
+    (each bounded like the corpus) are collected, _beam_rows runs every
+    hop on the driver, and the rows come back as a local frame. None
+    when the queries or seeds overflow the gate or the queries are not
+    the corpus' plain vectors."""
     qt = q.schema["query_id"].dataType
-    qrows = (
-        q.select(F.col("query_id").cast("bigint"), "eq")
-        .limit(NSW_LOCAL_MAX + 1)
-        .toArrow()
-    )
-    if qrows.num_rows > NSW_LOCAL_MAX or qrows.column(0).null_count:
+    qrows = local.collect(q.select(F.col("query_id").cast("bigint"), "eq"))
+    if qrows is None or qrows.column(0).null_count:
         return None
-    Q = _dense(qrows.column(1).combine_chunks())
+    Q = local.dense(qrows.column(1).combine_chunks())
     if Q is None or (len(Q) and Q.shape[1] != held[1].shape[0]):
         return None
     qid = qrows.column(0).to_numpy()
@@ -2749,13 +2757,14 @@ def _beam_local(
         qi = np.arange(len(qid) if entry is not None else 0)
         node = np.full(len(qi), entry or 0, np.int64)
     else:
-        e = (
+        e = local.collect(
             entries.select(
                 F.col("query_id").cast("bigint"), F.col("node").cast("bigint")
             )
-            .toArrow()
-            .drop_null()
         )
+        if e is None:
+            return None
+        e = e.drop_null()
         eid = e.column(0).to_numpy()
         o = np.argsort(eid, kind="stable")
         eid, enode = eid[o], e.column(1).to_numpy()[o]
@@ -2771,11 +2780,11 @@ def _beam_local(
             StructField("dist_q", LongType()),
         ]
     )
-    # one partition: the per-query windows downstream (the hand-off,
-    # the final rank) then need no shuffle
-    return q.sparkSession.createDataFrame(
-        _beam_rows(qid, Q, qi, node, held, beam, keep_visited), schema
-    ).coalesce(1)
+    return local.frame(
+        q.sparkSession,
+        _beam_rows(qid, Q, qi, node, held, beam, keep_visited),
+        schema,
+    )
 
 
 def _runs(cnt: np.ndarray) -> np.ndarray:
@@ -2800,12 +2809,12 @@ def _beam_rows(
     quantized."""
     ids, vt, bb, indptr, nbr = held
     qt = np.ascontiguousarray(Q.T)
-    aa = _fold(qt, qt)
+    aa = local.fold(qt, qt)
 
     def score(qi, node):
-        pos, ok = _positions(ids, node)
+        pos, ok = local.positions(ids, node)
         qi, node, pos = qi[ok], node[ok], pos[ok]
-        ab = _fold(qt[:, qi], vt[:, pos])
+        ab = local.fold(qt[:, qi], vt[:, pos])
         dist = np.floor(((aa[qi] - 2 * ab) + bb[pos]) * 10000 + 0.5)
         return qi, node, pos, dist.astype(np.int64)
 

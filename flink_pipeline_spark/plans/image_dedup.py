@@ -420,9 +420,11 @@ def q_dedup_image_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pair graph is band-blocked (never all-pairs), the CC
     operator is the O(log n)-round hybrid probed to 100k-link chains
     (SCALING.md), and the keeper join is component-sized — identical
-    cost profile to the text apply. Note string keys are fine at
-    fixture scale; a web-scale image corpus would map file ids to
-    BIGINT first (the PageRank lesson, SCALING.md r8j). The stamped
+    cost profile to the text apply. Under the local-execution gate
+    the string keys stay local: connected_components ranks them in
+    UTF-8 byte order on the driver. Above it, a web-scale image corpus
+    would map file ids to BIGINT first (the PageRank lesson,
+    SCALING.md r8j). The stamped
     file list is the fixture listing itself: the pair query hashes
     every file, and ahash_bands raises on any it cannot hash, so the
     listing is exactly the hashed set without a second codec pass."""

@@ -61,6 +61,15 @@ def spark():
     yield s
 
 
+def answered_locally(df) -> bool:
+    """Whether an operator answered through operators/local.py: the rows
+    are a local table, with no file or checkpoint scan left in the plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan and not (
+        "FileScan" in plan or "ExistingRDD" in plan
+    )
+
+
 @pytest.fixture(scope="session")
 def oracle():
     """DuckDB connection with the fixture tables registered as views,

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from flink_pipeline_spark.caching import materialize
 from flink_pipeline_spark.catalog import load_table
+from flink_pipeline_spark.operators import local
 from flink_pipeline_spark.operators.llm import (
     doc_shingles,
     knn_classify,
@@ -24,7 +25,7 @@ from flink_pipeline_spark.operators.multimodal import (
     to_multimodal,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, answered_locally
 
 
 def test_minhash_finds_planted_near_dups(spark):
@@ -261,13 +262,112 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_long_chain_logarithmic(spark):
+def _cc_union_find(rows):
+    """Min-of-component labels by plain union-find: every endpoint is a
+    node, a null one joins nothing (SQL's null equals nothing), and the
+    minimum is taken in UTF-8 byte order for strings."""
+    nodes = {v for e in rows for v in e}
+    parent = {v: v for v in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        if a is not None and b is not None:
+            parent[find(a)] = find(b)
+    comps = {}
+    for v in nodes:
+        comps.setdefault(find(v), []).append(v)
+
+    def key(v):
+        return v.encode() if isinstance(v, str) else v
+
+    return {
+        (v, None if v is None else min(c, key=key))
+        for c in comps.values()
+        for v in c
+    }
+
+
+# name -> (pairs, ddl); the graph shapes both connected_components
+# executions must label alike
+_CC_CASES = {
+    "chain": ([(i, i + 1) for i in range(12)], "doc_a BIGINT, doc_b BIGINT"),
+    "clique": (
+        [(a, b) for a in range(20, 27) for b in range(a + 1, 27)],
+        "doc_a BIGINT, doc_b BIGINT",
+    ),
+    "empty": ([], "doc_a BIGINT, doc_b BIGINT"),
+    "only_as_doc_b": ([(5, 100), (5, 101), (6, 102), (6, 5)], "doc_a INT, doc_b INT"),
+    "repeated_both_ways": (
+        [(3, 4), (4, 3), (3, 4), (9, 4), (4, 9)],
+        "doc_a BIGINT, doc_b BIGINT",
+    ),
+    "self_loop": ([(7, 7), (8, 9), (9, 9)], "doc_a BIGINT, doc_b BIGINT"),
+    # byte order: "Z" < "a" < "ab" < "abc", "e" < "é"; the emoji's UTF-8
+    # lead byte (F0) sorts after the fullwidth A's (EF), where UTF-16
+    # order would put it first
+    "strings": (
+        [
+            ("abc", "ab"),
+            ("ab", "Z"),
+            ("é", "e"),
+            ("a\U0001F600", "a\uFF21"),
+            ("日本", "日"),
+        ],
+        "doc_a STRING, doc_b STRING",
+    ),
+    "null_endpoint": ([(1, None), (2, 3)], "doc_a BIGINT, doc_b BIGINT"),
+}
+
+
+@pytest.mark.parametrize("gate", ["default", "zero"])
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+def test_connected_components_two_paths_one_answer(
+    spark, monkeypatch, gate, case
+):
+    """Both connected_components executions give union-find's labels
+    in the input's id type: the local one (the default gate) on every
+    case but a null endpoint, which takes the DataFrame hybrid, as
+    every case does with the gate at zero. The local path returns a
+    one-partition local frame; the hybrid reports its phase-1 rounds
+    (an empty result is a local table on either path)."""
+    from flink_pipeline_spark.operators.llm import connected_components
+
+    if gate == "zero":
+        monkeypatch.setattr(local, "LOCAL_MAX", 0)
+    rows, ddl = _CC_CASES[case]
+    pairs = spark.createDataFrame(rows, ddl)
+    stats: dict = {}
+    res = connected_components(pairs, _stats=stats)
+    kind = pairs.schema["doc_a"].dataType
+    assert [(f.name, f.dataType) for f in res.schema] == [
+        ("doc_id", kind),
+        ("cluster_id", kind),
+    ]
+    got = [tuple(r) for r in res.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _cc_union_find(rows)
+    fast = gate == "default" and case != "null_endpoint"
+    assert ("phase1_iters" not in stats) == fast
+    if fast:
+        assert answered_locally(res)
+        assert res.rdd.getNumPartitions() == 1
+    elif rows:
+        assert not answered_locally(res)
+
+
+def test_connected_components_long_chain_logarithmic(spark, monkeypatch):
     """A 1,000-link path graph — the crawl-mirror-chain shape whose
     diameter equals its length, where pure min-label propagation would
     need ~1,000 shuffles. The hybrid must hand off to the large-star/
     small-star phase and converge in O(log n) star rounds, yielding
     exact min-of-component labels."""
     from flink_pipeline_spark.operators.llm import connected_components
+
+    monkeypatch.setattr(local, "LOCAL_MAX", 0)  # the hybrid
 
     n = 1001  # nodes 0..1000 in one path component
     pairs = spark.createDataFrame(
@@ -282,18 +382,26 @@ def test_connected_components_long_chain_logarithmic(spark):
     assert 1 <= stats["twophase_rounds"] <= 12, stats
 
 
-def test_connected_components_random_graphs_match_union_find(spark):
-    """Seeded random graphs, phase 2 forced (switch_after=1): the
-    hybrid's labels must equal a plain union-find's min-of-component
-    on every graph — mixed cliques, chains, stars and singleton-free
-    noise edges. The last input is seed 7's graph again with every
-    edge given in both orientations and a fifth of them repeated: the
+def test_connected_components_random_graphs_match_union_find(
+    spark, monkeypatch
+):
+    """Seeded random graphs, under the default gate (the local labels)
+    and with the gate at zero and phase 2 forced (switch_after=1): the
+    labels must equal a plain union-find's min-of-component on every
+    graph — mixed cliques, chains, stars and singleton-free noise
+    edges. The last input is seed 7's graph again with every edge
+    given in both orientations and a fifth of them repeated: the
     operator orients the edges itself, so the labels must not change."""
+    import itertools
     import random
 
     from flink_pipeline_spark.operators.llm import connected_components
 
-    for seed, both_ways in ((7, False), (21, False), (99, False), (7, True)):
+    runs = itertools.product(
+        (local.LOCAL_MAX, 0), ((7, False), (21, False), (99, False), (7, True))
+    )
+    for gate, (seed, both_ways) in runs:
+        monkeypatch.setattr(local, "LOCAL_MAX", gate)
         rng = random.Random(seed)
         n = 120
         edges = {
@@ -317,14 +425,13 @@ def test_connected_components_random_graphs_match_union_find(spark):
         if both_ways:
             rows += [(b, a) for a, b in rows] + rows[::5]
         pairs = spark.createDataFrame(rows, "doc_a BIGINT, doc_b BIGINT")
-        got = {
-            r.doc_id: r.cluster_id
-            for r in connected_components(pairs, switch_after=1).collect()
-        }
-        assert got == expect, f"seed {seed}, both_ways={both_ways}"
+        res = connected_components(pairs, switch_after=1)
+        assert answered_locally(res) == (gate > 0)
+        got = {r.doc_id: r.cluster_id for r in res.collect()}
+        assert got == expect, f"seed {seed}, both_ways={both_ways}, gate={gate}"
 
 
-def test_connected_components_nonconvergence_raises(spark):
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
     """max_iter bounds BOTH phases: with one min-label iteration and a
     single star round allowed, a 6-chain (still a 5-link path after
     contraction) cannot finish, and the guard must raise rather than
@@ -334,6 +441,7 @@ def test_connected_components_nonconvergence_raises(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "doc_a BIGINT, doc_b BIGINT"
     )
+    monkeypatch.setattr(local, "LOCAL_MAX", 0)  # the hybrid
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="did not converge"):
@@ -1002,11 +1110,13 @@ def test_cache_hygiene_incremental_dedup(spark):
     assert _persisted_ids(spark) - before == set()
 
 
-def test_cache_hygiene_text_clustering(spark):
+def test_cache_hygiene_text_clustering(spark, monkeypatch):
     """Every text-clustering caller composes q_dedup_clusters, which
     releases its shingle sets and passes connected_components an
     unpersisted pair frame — so each leaves exactly one SQL cache
-    entry: the operator's own label frame."""
+    entry on the DataFrame path (the gate at zero): the operator's own
+    label frame. Under the default gate the labels come back as a
+    local frame and nothing stays cached."""
     from flink_pipeline_spark.plans import query_fns
     from flink_pipeline_spark.plans.unindex import dedup_drop_batch
 
@@ -1016,12 +1126,14 @@ def test_cache_hygiene_text_clustering(spark):
     }
     callers["dedup_drop_batch"] = dedup_drop_batch
     cache = spark._jsparkSession.sharedState().cacheManager()
-    left = {}
-    for name, fn in callers.items():
-        spark.catalog.clearCache()
-        fn(spark, SF_DIR).count()
-        left[name] = cache.numCachedEntries()
-    assert left == dict.fromkeys(callers, 1)
+    for gate, kept in ((local.LOCAL_MAX, 0), (0, 1)):
+        monkeypatch.setattr(local, "LOCAL_MAX", gate)
+        left = {}
+        for name, fn in callers.items():
+            spark.catalog.clearCache()
+            fn(spark, SF_DIR).count()
+            left[name] = cache.numCachedEntries()
+        assert left == dict.fromkeys(callers, kept), gate
 
 
 def test_release_caches_sweeps_lazy_persists(spark):

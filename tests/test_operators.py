@@ -274,29 +274,38 @@ def test_only_caching_cuts_lineage():
     assert bare == []
 
 
-def test_one_sink_wiring_and_one_partition_layout():
-    """Streams start through lifecycle.start_sink, the one foreachBatch
-    wiring, and store partitions are named only by heavy's write and
-    read rules; no module keeps a start_*_stream wrapper."""
+def _where(pattern: str) -> list[str]:
+    """The package module of every line matching ``pattern``, once per
+    line."""
     import pathlib
     import re
 
     import flink_pipeline_spark
 
     root = pathlib.Path(flink_pipeline_spark.__file__).parent
+    return [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        for line in p.read_text().splitlines()
+        if re.search(pattern, line)
+    ]
 
-    def where(pattern: str) -> list[str]:
-        """The module of every line matching ``pattern``, once per line."""
-        return [
-            str(p.relative_to(root))
-            for p in sorted(root.rglob("*.py"))
-            for line in p.read_text().splitlines()
-            if re.search(pattern, line)
-        ]
 
-    assert where(r"writeStream\.foreachBatch") == ["streaming/lifecycle.py"]
-    assert where(r"\bdef start_\w*_stream\b") == []
-    assert set(where(r"[\"']batch_id=")) == {"streaming/heavy.py"}
+def test_one_sink_wiring_and_one_partition_layout():
+    """Streams start through lifecycle.start_sink, the one foreachBatch
+    wiring, and store partitions are named only by heavy's write and
+    read rules; no module keeps a start_*_stream wrapper."""
+    assert _where(r"writeStream\.foreachBatch") == ["streaming/lifecycle.py"]
+    assert _where(r"\bdef start_\w*_stream\b") == []
+    assert set(_where(r"[\"']batch_id=")) == {"streaming/heavy.py"}
+
+
+def test_one_local_execution_gate():
+    """Frames reach the driver as Arrow only through operators/local.py's
+    bounded collect, and its gate constant is assigned once, there: no
+    operator keeps a private gate."""
+    assert _where(r"\.toArrow\(") == ["operators/local.py"]
+    assert _where(r"^\s*\w*LOCAL_MAX\w*\s*=") == ["operators/local.py"]
 
 
 def test_default_driver_memory_fits_the_machine():

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from flink_pipeline_spark.operators import local
 from flink_pipeline_spark.plans import oracle_sqls, query_fns
 
 from .conftest import SF_DIR
@@ -41,6 +42,58 @@ def test_every_query_has_an_oracle():
     ],
 )
 def test_oracle_parity(spark, oracle, name):
+    df = QUERIES[name](spark, SF_DIR)
+    assert_parity(df, oracle, ORACLES[name], name=name)
+
+
+# Every query whose build reaches a gated operator (connected_components,
+# nsw_beam): the ones that call operators/local.collect at sf0.01.
+GATED = (
+    "q_ann_delete_recall",
+    "q_ann_filtered_recall",
+    "q_ann_hnsw_beam",
+    "q_ann_recall",
+    "q_ann_refresh_serve",
+    "q_build_training_set",
+    "q_build_training_set_weighted",
+    "q_dataset_card",
+    "q_dedup_apply",
+    "q_dedup_cluster_stats",
+    "q_dedup_clusters",
+    "q_dedup_embed_apply",
+    "q_dedup_image_apply",
+    "q_dedup_keeper_quality",
+    "q_dedup_semantic",
+    "q_dedup_soft",
+    "q_dedup_unindex",
+    "q_dedup_unindex_pq",
+    "q_dedup_unindex_recall",
+    "q_hnsw_beam_clustered",
+    "q_nsw_descent_clustered",
+    "q_sim_hnsw_delete",
+    "q_sim_hnsw_filtered",
+    "q_sim_hnsw_radius",
+    "q_sim_hnsw_search",
+    "q_sim_hnsw_topk",
+    "q_sim_nsw_delete",
+    "q_sim_nsw_descent",
+    "q_sim_nsw_insert",
+    "q_sim_nsw_topk",
+    "q_sim_radius_recall",
+    "q_split_leakage_audit",
+    "q_split_leakage_safe",
+)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("name", GATED)
+def test_oracle_parity_gate_shut(spark, oracle, monkeypatch, name):
+    """The gated operators' DataFrame paths, the ones that run above the
+    gate at scale, against the same DuckDB hash: with the local gate
+    shut, every collect a query's build asks for declines. A store a
+    query serves from is built only when missing, so a store built
+    earlier in the session is served as it is."""
+    monkeypatch.setattr(local, "LOCAL_MAX", 0)
     df = QUERIES[name](spark, SF_DIR)
     assert_parity(df, oracle, ORACLES[name], name=name)
 

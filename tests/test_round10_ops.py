@@ -8,7 +8,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from flink_pipeline_spark.operators import llm
+from flink_pipeline_spark.operators import llm, local
 from flink_pipeline_spark.operators.llm import nsw_graph, nsw_search
 from flink_pipeline_spark.plans.llm_ops import (
     EMBED_MULTI_MAX_CELL,
@@ -22,6 +22,8 @@ from flink_pipeline_spark.plans.llm_ops import (
 )
 from flink_pipeline_spark.catalog import load_table
 from flink_pipeline_spark.plans import query_fns
+
+from .conftest import answered_locally as _local
 
 QUERIES_R10 = query_fns()
 
@@ -75,16 +77,7 @@ def _dist_q(a, b):
 
 def _loop_path(monkeypatch):
     """Force nsw_beam's DataFrame loop: no corpus fits a zero gate."""
-    monkeypatch.setattr(llm, "NSW_LOCAL_MAX", 0)
-
-
-def _local(df) -> bool:
-    """Whether nsw_beam answered on the driver: the rows are a local
-    table, with no file or checkpoint scan left in the plan."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "LocalTableScan" in plan and not (
-        "FileScan" in plan or "ExistingRDD" in plan
-    )
+    monkeypatch.setattr(local, "LOCAL_MAX", 0)
 
 
 def test_nsw_beam_trajectory_matches_python_reimplementation(spark):
@@ -132,7 +125,7 @@ def _nsw_replay(spark):
     res = nsw_search(
         emb, emb.filter(F.col("vec_id") < PQ_QUERY_MAX), adj_df, k=3
     )
-    assert _local(res) == (llm.NSW_LOCAL_MAX > 0)
+    assert _local(res) == (local.LOCAL_MAX > 0)
     got = sorted(
         (r.query_id, r.neighbor_id, r.rank, r.dist_q) for r in res.collect()
     )
@@ -206,7 +199,7 @@ def test_nsw_beam_gate_bounds_matrix_bytes(spark, monkeypatch):
 
     fast = llm.nsw_beam(wide(emb), wide(queries), adj)
     assert _local(fast)
-    monkeypatch.setattr(llm, "NSW_LOCAL_MAX", emb.count())
+    monkeypatch.setattr(local, "LOCAL_MAX", emb.count())
     assert _local(llm.nsw_beam(emb, queries, adj))
     # more queries than the gate: the loop answers
     assert not _local(llm.nsw_beam(emb, emb.unionByName(queries), adj))
@@ -728,7 +721,7 @@ def _hnsw_replay(spark):
         )
 
     res = QUERIES_R10["q_sim_hnsw_topk"](spark, SMALL_SF)
-    assert _local(res) == (llm.NSW_LOCAL_MAX > 0)
+    assert _local(res) == (local.LOCAL_MAX > 0)
     got = sorted(
         (r.query_id, r.neighbor_id, r.rank, r.dist_q) for r in res.collect()
     )
