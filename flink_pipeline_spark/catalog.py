@@ -120,20 +120,3 @@ def _fix_nanos_ts(df: DataFrame) -> DataFrame:
     if isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = False
-) -> dict[str, DataFrame]:
-    """Load every fixture table that exists under ``sf_dir`` (through
-    load_table, so session-conf healing and the events timestamp fix
-    apply uniformly)."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        if not os.path.exists(table_path(sf_dir, name)):
-            continue
-        df = load_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -66,11 +66,6 @@ def minhash_params_values_sql() -> str:
     return f"(VALUES {body}) AS hp(i, a, b)"
 
 
-def bits_values_sql(bits: int = SIMHASH_BITS) -> str:
-    body = ", ".join(f"({b})" for b in range(bits))
-    return f"(VALUES {body}) AS bits(b)"
-
-
 # ---------------------------------------------------------------------------
 # Composite quality score (single source of truth)
 # ---------------------------------------------------------------------------

@@ -696,17 +696,32 @@ def ivf_assign_multi(
     ).select("vec_id", "cell")
 
 
-# Per-cell membership cap for cosine_pairs_ivf: a cell larger than this
-# is sub-split before the within-cell self-join. Without it the join is
-# O(cell^2) on whatever the quantizer produces — a degenerate centroid
-# set or a dense embedding region at 100 TB puts one huge cell's square
-# into a single join key (straggler/OOM), the exact failure mode
-# MAX_LSH_BUCKET guards against on the LSH path. Unlike that cap we
-# sub-split rather than drop: dense regions are where the duplicates
-# ARE, so oversized cells keep their intra-sub-cell pairs and only lose
-# the sub-cell-straddling ones (documented recall trade, deterministic,
-# mirrored in the DuckDB oracle).
+# Per-cell membership cap of the cell-blocked pair joins (cosine_pairs_ivf,
+# nsw_graph): a cell larger than this is sub-split before the within-cell
+# self-join. The rule is _sub_split's: number each cell's members by
+# vec_id and bucket the numbers at the cap, so sub-cell ``sub`` holds
+# members sub*cap+1 .. (sub+1)*cap, and pairs join on (cell, sub).
+# Without it the join is O(cell^2) on whatever the quantizer produces — a
+# degenerate centroid set or a dense embedding region at 100 TB puts one
+# huge cell's square into a single join key (straggler/OOM), the exact
+# failure mode MAX_LSH_BUCKET guards against on the LSH path. Unlike that
+# cap we sub-split rather than drop: dense regions are where the
+# duplicates ARE, so oversized cells keep their intra-sub-cell pairs and
+# only lose the sub-cell-straddling ones (documented recall trade,
+# deterministic, mirrored in the DuckDB oracle).
 MAX_IVF_CELL = 4096
+
+
+def _sub_split(assigned: DataFrame, max_cell: int) -> DataFrame:
+    """``assigned`` (vec_id, cell) with the ``sub`` cell of the
+    MAX_IVF_CELL rule: a per-cell sort of 2-long rows (no embeddings
+    attached), which bounds the pair join's per-key fan-out at
+    max_cell^2 regardless of quantizer quality."""
+    w = Window.partitionBy("cell").orderBy("vec_id")
+    return assigned.withColumn(
+        "sub",
+        ((F.row_number().over(w) - F.lit(1)) / F.lit(max_cell)).cast("bigint"),
+    )
 
 
 def cosine_pairs_ivf(
@@ -732,10 +747,7 @@ def cosine_pairs_ivf(
     the final distinct (identical rounded cos both times, so distinct
     is exact).
 
-    The sub-split is a row_number over (cell ORDER BY vec_id) bucketed
-    at ``max_cell`` — a per-cell linearithmic sort of 2-long rows (no
-    embeddings attached), which bounds the subsequent self-join's
-    per-key fan-out at max_cell^2 regardless of quantizer quality."""
+    Cells over ``max_cell`` are sub-split (the MAX_IVF_CELL rule)."""
     # persist the assignment: it is 3 longs per vector (exactly what a
     # production pipeline checkpoints), and BOTH branches of the
     # self-join consume it — uncached, the whole quantizer subtree
@@ -762,11 +774,7 @@ def cosine_pairs_ivf(
             else ivf_assign_multi(emb, centroids, nprobe)
         )
     )
-    w = Window.partitionBy("cell").orderBy("vec_id")
-    assigned = base.withColumn(
-        "sub",
-        ((F.row_number().over(w) - F.lit(1)) / F.lit(max_cell)).cast("bigint"),
-    ).transform(materialize)
+    assigned = _sub_split(base, max_cell).transform(materialize)
     e = with_norm(emb).join(assigned, "vec_id")
     a = e.select(
         "cell",
@@ -1147,15 +1155,16 @@ def connected_components(
     gate is also the payload: the ids are ranked (Arrow's sort, byte
     order for strings — Spark's StringType order), min-labels with
     pointer jumping run in numpy (_cc_local), and the labels come back
-    as a local frame; no job per round. Edges over the gate, a null
-    endpoint, or an id type that is neither integer nor string take
-    the hybrid above."""
+    as a local frame; no job per round. Edges over the gate, or an id
+    type that is neither integer nor string, take the hybrid above.
+    A null endpoint is no node: its pair labels only the other id."""
     stats = _stats if _stats is not None else {}
     # Both edge orientations come out of ONE projection of `pairs`, so
     # the stage job runs the pair DAG exactly once and callers never
     # persist what they pass in. A persist alone re-analyzes the pair
     # DAG in every iteration (staging: 11.5 s -> 2.3 s on a 96-edge
-    # sf0.1 graph).
+    # sf0.1 graph). A null id is no node: its rows drop here, and a
+    # null dst (the other orientation's dropped src) links nothing.
     a, b = F.col("doc_a"), F.col("doc_b")
     edges = stage(
         pairs.select(
@@ -1165,7 +1174,7 @@ def connected_components(
                     F.struct(b.alias("src"), a.alias("dst")),
                 )
             )
-        )
+        ).filter(F.col("src").isNotNull())
     )
     fast = _cc_local(edges)
     if fast is not None:
@@ -1251,10 +1260,11 @@ def _cc_local(edges: DataFrame) -> DataFrame | None:
     if not isinstance(kind, IntegralType) and kind != StringType():
         return None
     rows = local.collect(edges, 2 * NSW_DEG)
-    if rows is None or rows.column("src").null_count:
-        return None  # dst is src in the other orientation
+    if rows is None:
+        return None
     ids = pc.unique(rows.column("src"))
     ids = ids.take(pc.sort_indices(ids))
+    rows = rows.filter(pc.is_valid(rows.column("dst")))
     a = pc.index_in(rows.column("src"), value_set=ids).to_numpy()
     b = pc.index_in(rows.column("dst"), value_set=ids).to_numpy()
     lab = np.arange(len(ids))
@@ -2201,7 +2211,8 @@ def hnsw_layer1(df: DataFrame) -> DataFrame:
     """The rows of ``df`` on HNSW layer 1: the deterministic ~1/8
     hash sample (``hash56(vec_id) % HNSW_L1_MOD == 0``) standing in
     for HNSW's geometric level assignment, cut at one level. Every
-    layer-1 build, insert and search entry takes its members here."""
+    layer-1 build, insert and search (hnsw_entries) takes its members
+    here."""
     return df.filter(hash56(F.col("vec_id")) % HNSW_L1_MOD == 0)
 
 
@@ -2253,11 +2264,7 @@ def nsw_graph(
         if nprobe > 1
         else ivf_assign(emb, centroids)
     )
-    w = Window.partitionBy("cell").orderBy("vec_id")
-    assigned = base.withColumn(
-        "sub",
-        ((F.row_number().over(w) - F.lit(1)) / F.lit(max_cell)).cast("bigint"),
-    )
+    assigned = _sub_split(base, max_cell)
     # self-dots once per vector (NORM2_SQL), not 2x per candidate pair
     e = (
         emb.select("vec_id", "embedding")
@@ -2311,11 +2318,8 @@ def _nsw_shrink(sym: DataFrame, deg: int, keep_dist: bool = False) -> DataFrame:
     refinement (nsw_descent) so the selection rule cannot fork. The
     union dedups the both-endpoints-kept doubles exactly on the
     symmetric BIGINT distance."""
-    wk = Window.partitionBy("src").orderBy("dist_q", "dst")
-    kept = (
-        sym.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= deg)
-        .select("src", "dst", "dist_q")
+    kept = topk_cut(sym, "src", "dist_q", "dst", deg).select(
+        "src", "dst", "dist_q"
     )
     und = kept.unionByName(
         kept.select(
@@ -2330,11 +2334,41 @@ def _reprune(edges: DataFrame, deg: int) -> DataFrame:
     """(src, dst, dist_q): every node's edge list cut back to its
     2*deg nearest (dist_q, then dst) — the HNSW shrink that keeps the
     per-node degree bound after a build, an insert or a delete."""
-    wk = Window.partitionBy("src").orderBy("dist_q", "dst")
+    return topk_cut(edges, "src", "dist_q", "dst", 2 * deg).select(
+        "src", "dst", "dist_q"
+    )
+
+
+def _pair_dist(pairs: DataFrame, emb: DataFrame) -> DataFrame:
+    """``pairs`` with ``dist_q`` attached: the quantized squared L2 of
+    each canonical (vec_a, vec_b) = (least, greatest) pair of ``emb``
+    ids, other columns passed through; pairs whose ids ``emb`` lacks
+    drop. The self-dots are folded once per vector (NORM2_SQL), and
+    SQDIST_Q_PRE_SQL's result is bit-identical to SQDIST_Q_SQL's.
+
+    The one pair score of nsw_descent and nsw_delete's bridge: once
+    per undirected pair in canonical argument order (ADVICE r10), as
+    nsw_graph scores its cell pairs. Scoring each direction separately
+    would evaluate the float fold in two summation orders ((A-2C)+B
+    vs (B-2C)+A), and at a quantization boundary dist_q(s,d) could
+    differ from dist_q(d,s): then the exact-distance dedups
+    (_nsw_shrink's union, nsw_delete's merge) fail and one neighbor
+    occupies two of a node's 2*deg slots. One score per pair makes
+    the distance symmetric by construction."""
+
+    def side(v: str, e: str, n: str) -> DataFrame:
+        return emb.select(
+            F.col("vec_id").alias(v),
+            F.col("embedding").alias(e),
+            F.expr(NORM2_SQL.format(a="embedding")).alias(n),
+        )
+
+    pre = SQDIST_Q_PRE_SQL.format(a="es", b="ed", na2="na2", nb2="nb2")
     return (
-        edges.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= 2 * deg)
-        .select("src", "dst", "dist_q")
+        pairs.join(side("vec_a", "es", "na2"), "vec_a")
+        .join(side("vec_b", "ed", "nb2"), "vec_b")
+        .withColumn("dist_q", F.expr(pre))
+        .drop("es", "ed", "na2", "nb2")
     )
 
 
@@ -2376,18 +2410,9 @@ def nsw_insert(
     adjacency union the new edges — linear in index size, zero
     all-pairs anywhere."""
     q = arrivals.select("vec_id", "embedding")
-    final_beam = nsw_beam(
-        emb_idx, q, adj_scored.select("src", "dst"), entry_from=emb_idx
-    )
-    wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    links = (
-        final_beam.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= deg)
-        .select(
-            F.col("query_id").alias("src"),
-            F.col("node").alias("dst"),
-            "dist_q",
-        )
+    final_beam = nsw_beam(emb_idx, q, adj_scored.select("src", "dst"))
+    links = topk_cut(final_beam, "query_id", "dist_q", "node", deg).select(
+        F.col("query_id").alias("src"), F.col("node").alias("dst"), "dist_q"
     )
     rev = links.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), "dist_q"
@@ -2417,11 +2442,10 @@ def nsw_delete(
     navigable — and every touched list re-prunes to its 2*deg
     nearest (nsw_insert's shrink, the shared degree bound).
 
-    Repair candidates are scored ONCE per undirected pair in
-    canonical (least, greatest) argument order — the NN-descent
-    ADVICE-r10 rule — so a repair edge that coincides with a
-    surviving build-time edge carries the identical BIGINT distance
-    and the exact-distance dedup collapses them. (Insert-era edges
+    Repair candidates are scored by _pair_dist, once per undirected
+    pair, so a repair edge that coincides with a surviving build-time
+    edge carries the identical BIGINT distance and the exact-distance
+    dedup collapses them. (Insert-era edges
     score query-side first rather than canonically; a coinciding
     repair could then differ by one quantization ulp and briefly
     occupy a second slot — a quality nuance, not a correctness
@@ -2452,24 +2476,14 @@ def nsw_delete(
         lost.join(dout, "d")
         .filter(F.col("u") != F.col("w"))
         .select(
-            "u",
-            "w",
-            F.least("u", "w").alias("va"),
-            F.greatest("u", "w").alias("vb"),
+            F.col("u").alias("src"),
+            F.col("w").alias("dst"),
+            F.least("u", "w").alias("vec_a"),
+            F.greatest("u", "w").alias("vec_b"),
         )
         .distinct()
     )
-    ea = emb.select(F.col("vec_id").alias("va"), F.col("embedding").alias("es"))
-    eb = emb.select(F.col("vec_id").alias("vb"), F.col("embedding").alias("ed"))
-    bridge = (
-        pairs.join(ea, "va")
-        .join(eb, "vb")
-        .select(
-            F.col("u").alias("src"),
-            F.col("w").alias("dst"),
-            F.expr(SQDIST_Q_SQL.format(a="es", b="ed")).alias("dist_q"),
-        )
-    )
+    bridge = _pair_dist(pairs, emb).select("src", "dst", "dist_q")
     merged = kept.select("src", "dst", "dist_q").unionByName(bridge).distinct()
     return _reprune(merged, deg)
 
@@ -2492,16 +2506,10 @@ def nsw_descent(emb: DataFrame, adj: DataFrame, deg: int) -> DataFrame:
     this function's shape.
 
     Candidates are canonicalized to UNDIRECTED (least, greatest)
-    pairs and scored ONCE before symmetrizing — nsw_graph's rule.
-    Scoring each direction separately would evaluate SQDIST_Q_SQL's
-    float fold in two different summation orders ((A-2C)+B vs
-    (B-2C)+A), and at a quantization boundary dist_q(s,d) could
-    differ from dist_q(d,s) — then _nsw_shrink's exact-distance
-    dedup fails and one neighbor occupies two of a node's 2*deg
-    slots (ADVICE r10). One score per pair makes the distance
-    symmetric by construction, and symmetrizing the candidate set
-    also matches NN-descent's actual rule (Dong et al. draw from
-    in- AND out-neighborhoods)."""
+    pairs and scored once each (_pair_dist) before symmetrizing —
+    nsw_graph's rule; symmetrizing the candidate set also matches
+    NN-descent's actual rule (Dong et al. draw from in- AND
+    out-neighborhoods)."""
     hop2 = adj.alias("a").join(
         adj.alias("b"), F.col("a.dst") == F.col("b.src")
     ).select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
@@ -2515,30 +2523,7 @@ def nsw_descent(emb: DataFrame, adj: DataFrame, deg: int) -> DataFrame:
         )
         .distinct()
     )
-    # self-dots once per vector, not 2x per 2-hop candidate pair
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("es"),
-        F.expr(NORM2_SQL.format(a="embedding")).alias("na2"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("ed"),
-        F.expr(NORM2_SQL.format(a="embedding")).alias("nb2"),
-    )
-    scored = (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.expr(
-                SQDIST_Q_PRE_SQL.format(
-                    a="es", b="ed", na2="na2", nb2="nb2"
-                )
-            ).alias("dist_q"),
-        )
-    )
+    scored = _pair_dist(cand, emb)
     sym = scored.select(
         F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"), "dist_q"
     ).unionByName(
@@ -2555,16 +2540,14 @@ def nsw_beam(
     adj: DataFrame,
     beam: int = NSW_BEAM,
     entries: DataFrame | None = None,
-    entry_from: DataFrame | None = None,
     keep_visited: bool = False,
 ) -> DataFrame:
     """(query_id, node, dist_q): the final beam after NSW_HOPS
     monotone expansion rounds over ``adj`` — the search primitive
     nsw_search ranks and the HNSW hierarchy chains (layer k's best
-    beam node seeds layer k-1). Seeding: ``entries`` is an explicit
-    per-query (query_id, node) frame (the HNSW descent hand-off);
-    otherwise every query starts at the min vec_id of ``entry_from``
-    (a layer's member frame), defaulting to the whole corpus.
+    beam node seeds layer k-1). Seeding: ``entries``, an explicit
+    per-query (query_id, node) frame (the HNSW descent hand-off),
+    else the corpus' smallest id.
 
     The beam is MONOTONE: every round's candidate set contains the
     previous beam, so the final beam is exactly the best ``beam``
@@ -2596,11 +2579,9 @@ def nsw_beam(
     )
     held = _beam_payload(emb, adj)
     if held is not None:
-        fast = _beam_local(q, held, beam, entries, entry_from, keep_visited)
+        fast = _beam_local(q, held, beam, entries, keep_visited)
         if fast is not None:
             return fast
-    if entry_from is None:
-        entry_from = emb
 
     def score(cand: DataFrame) -> DataFrame:
         # ONE broadcast per scoring pass: the query vectors are
@@ -2622,7 +2603,7 @@ def nsw_beam(
         )
 
     if entries is None:
-        entry = entry_from.agg(F.min("vec_id").alias("node"))
+        entry = emb.agg(F.min("vec_id").alias("node"))
         seed = q.select("query_id").crossJoin(F.broadcast(entry))
     else:
         seed = entries.select("query_id", "node")
@@ -2667,9 +2648,8 @@ def nsw_beam(
             )
             .filter(~F.col("_dup"))
             .drop("_dup")
-            .withColumn("rn", F.row_number().over(wb))
-            .filter(F.col("rn") <= beam)
-            .drop("rn")
+            .transform(topk_cut, "query_id", "dist_q", "node", beam)
+            .drop("rank")
             .transform(stage)
         )
     return score(vis.distinct()) if keep_visited else cur
@@ -2726,7 +2706,6 @@ def _beam_local(
     held: tuple,
     beam: int,
     entries: DataFrame | None,
-    entry_from: DataFrame | None,
     keep_visited: bool,
 ) -> DataFrame | None:
     """nsw_beam's under-gate execution: the queries and their seeds
@@ -2742,20 +2721,9 @@ def _beam_local(
     if Q is None or (len(Q) and Q.shape[1] != held[1].shape[0]):
         return None
     qid = qrows.column(0).to_numpy()
-    if entries is None:
-        if entry_from is None:  # the corpus: its sorted ids are at hand
-            entry = int(held[0][0])
-        else:  # a top-1 scan is one job; a global min is two under AQE
-            row = (
-                entry_from.filter(F.col("vec_id").isNotNull())
-                .orderBy("vec_id")
-                .select(F.col("vec_id").cast("bigint"))
-                .head()
-            )
-            entry = row[0] if row else None
-        # an empty entry frame seeds nothing, as the loop's null entry
-        qi = np.arange(len(qid) if entry is not None else 0)
-        node = np.full(len(qi), entry or 0, np.int64)
+    if entries is None:  # the corpus' sorted ids are at hand
+        qi = np.arange(len(qid))
+        node = np.full(len(qi), held[0][0], np.int64)
     else:
         e = local.collect(
             entries.select(
@@ -2863,20 +2831,19 @@ def hnsw_entries(
     emb: DataFrame,
     queries: DataFrame,
     adj1: DataFrame,
-    l1_members: DataFrame,
     beam: int = NSW_BEAM,
 ) -> DataFrame:
     """(query_id, node): the HNSW descent hand-off — a layer-1 beam
-    over ``adj1`` from the min vec_id of ``l1_members``, reduced to
-    each query's best node (dist_q, then node), which seeds that
-    query's base-layer beam (nsw_beam ``entries``). The one layer-1
-    descent every two-layer search runs."""
-    beam1 = nsw_beam(emb, queries, adj1, beam=beam, entry_from=l1_members)
-    wq = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    return (
-        beam1.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "node")
+    over ``adj1`` through the layer-1 corpus ``hnsw_layer1(emb)``,
+    from its smallest id, reduced to each query's best node (dist_q,
+    then node), which seeds that query's base-layer beam (nsw_beam
+    ``entries``). The one layer-1 descent every two-layer search
+    runs. Every endpoint of a layer-1 adjacency is a layer-1 member
+    (builds, inserts and delete bridges only link members), so the
+    beam scores exactly the nodes it would over the whole corpus."""
+    beam1 = nsw_beam(hnsw_layer1(emb), queries, adj1, beam=beam)
+    return topk_cut(beam1, "query_id", "dist_q", "node", 1).select(
+        "query_id", "node"
     )
 
 
@@ -2892,14 +2859,9 @@ def _rank_nodes(
         cand = cand.join(
             exclude.select(F.col("vec_id").alias("node")), "node", "left_anti"
         )
-    wr = Window.partitionBy("query_id").orderBy("dist_q", "node")
-    return (
-        cand.filter(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", F.col("node").alias("neighbor_id"), "rank", "dist_q"
-        )
+    cand = cand.filter(F.col("node") != F.col("query_id"))
+    return topk_cut(cand, "query_id", "dist_q", "node", k).select(
+        "query_id", F.col("node").alias("neighbor_id"), "rank", "dist_q"
     )
 
 
@@ -2908,15 +2870,16 @@ def hnsw_search(
     queries: DataFrame,
     adj0: DataFrame,
     adj1: DataFrame,
-    l1_members: DataFrame,
     k: int = 3,
     beam: int = NSW_BEAM,
     exclude: DataFrame | None = None,
 ) -> DataFrame:
     """(query_id, neighbor_id, rank, dist_q): two-layer HNSW search
-    (Malkov & Yashunin 2018) — the layer-1 descent (hnsw_entries),
-    base-layer beam seeded at each query's hand-off node, final
-    top-k. ONE implementation shared by the build-per-run audit
+    (Malkov & Yashunin 2018) over the corpus ``emb``, the base-layer
+    graph ``adj0`` and the layer-1 graph ``adj1`` — the layer-1
+    descent (hnsw_entries, which derives the layer-1 members from
+    ``emb``), base-layer beam seeded at each query's hand-off node,
+    final top-k. ONE implementation shared by the build-per-run audit
     query (q_sim_hnsw_topk) and the persisted-index serving path
     (streaming/ann_index.py), so the search rule cannot fork between
     the benchmarked form and the deployed form.
@@ -2930,7 +2893,7 @@ def hnsw_search(
     are dropped from the final beam BEFORE ranking, so a search
     served from a store with pending tombstones can never return a
     deleted vector (see nsw_search)."""
-    entries0 = hnsw_entries(emb, queries, adj1, l1_members, beam=beam)
+    entries0 = hnsw_entries(emb, queries, adj1, beam=beam)
     cur = nsw_beam(emb, queries, adj0, beam=beam, entries=entries0)
     return _rank_nodes(cur, k, exclude)
 
@@ -2940,14 +2903,13 @@ def hnsw_visited(
     queries: DataFrame,
     adj0: DataFrame,
     adj1: DataFrame,
-    l1_members: DataFrame,
 ) -> DataFrame:
-    """(query_id, node, dist_q): every node the two-layer search
-    scores — the layer-1 descent (hnsw_entries), then the base-layer
-    beam's full visited set (nsw_beam keep_visited). The one
+    """(query_id, node, dist_q): every node the two-layer search over
+    ``emb`` scores — the layer-1 descent (hnsw_entries), then the
+    base-layer beam's full visited set (nsw_beam keep_visited). The one
     visited-set search: hnsw_filtered_search ranks a predicate's
     matches over it, and the store's radius search thresholds it."""
-    entries0 = hnsw_entries(emb, queries, adj1, l1_members)
+    entries0 = hnsw_entries(emb, queries, adj1)
     return nsw_beam(emb, queries, adj0, entries=entries0, keep_visited=True)
 
 
@@ -2956,7 +2918,6 @@ def hnsw_filtered_search(
     queries: DataFrame,
     adj0: DataFrame,
     adj1: DataFrame,
-    l1_members: DataFrame,
     filt_ids: DataFrame,
     k: int = 3,
     exclude: DataFrame | None = None,
@@ -2978,7 +2939,7 @@ def hnsw_filtered_search(
 
     ``exclude`` composes the tombstone mask (delete lifecycle), so a
     store serves filtered searches with pending deletes correctly."""
-    vis = hnsw_visited(emb, queries, adj0, adj1, l1_members)
+    vis = hnsw_visited(emb, queries, adj0, adj1)
     cand = vis.join(
         filt_ids.select(F.col("vec_id").alias("node")), "node", "left_semi"
     )

@@ -1,15 +1,13 @@
 """Multimodal columns (SURVEY.md L4): opaque binary payloads + typed
 metadata, with decode/feature-extraction as Arrow-batched pandas UDFs.
 
-The container has no image/audio codec libraries, so the "real" decode
-is a self-contained struct-unpack codec: payload bytes are parsed as
+The codecs use no image/audio library: the PCM decode is a
+self-contained struct-unpack codec — payload bytes are parsed as
 little-endian unsigned 16-bit samples (the 16-bit PCM layout) and
-summarized into deterministic sample-domain features — a genuine
+summarized into deterministic sample-domain statistics — a genuine
 decode step (bytes -> typed samples -> features) with no external
 deps, replayable byte-for-byte by the DuckDB oracle via read_blob hex
-arithmetic. ``impl="fake"`` keeps the original bytes-level summary
-through the exact same Spark plumbing (mapInPandas over binary
-columns, Arrow batches, explicit schema).
+arithmetic.
 
 Scale notes: payloads ride as parquet binary; mapInPandas streams
 Arrow record batches so a partition never fully materializes in
@@ -28,14 +26,10 @@ from pyspark.sql import functions as F
 from ..caching import stage
 from .llm import capped_bucket_pairs, topk_cut
 
-FEATURE_DIM = 8
-
 MULTIMODAL_SCHEMA = (
     "doc_id BIGINT, payload BINARY, "
     "meta STRUCT<byte_len: BIGINT, content_hash: STRING, mime: STRING>"
 )
-
-FEATURES_SCHEMA = "doc_id BIGINT, byte_len BIGINT, features ARRAY<DOUBLE>"
 
 
 def to_multimodal(docs: DataFrame) -> DataFrame:
@@ -51,90 +45,6 @@ def to_multimodal(docs: DataFrame) -> DataFrame:
             F.lit("application/octet-stream").alias("mime"),
         ).alias("meta"),
     )
-
-
-def _fake_decode(payload: bytes) -> list[float]:
-    """Deterministic stand-in for a codec: bytes-level summary stats
-    shaped like a FEATURE_DIM-dim embedding."""
-    if not payload:
-        return [0.0] * FEATURE_DIM
-    n = len(payload)
-    return [
-        float(n),
-        float(payload[0]),
-        float(payload[-1]),
-        float(sum(payload) % 997),
-        float(max(payload)),
-        float(min(payload)),
-        float(len(set(payload))),
-        float(sum(payload[:16]) % 256),
-    ]
-
-
-def decode_features(mm: DataFrame, impl: str = "fake") -> DataFrame:
-    """Feature extraction over binary payloads via mapInPandas.
-
-    impl="real" runs the PCM16 struct-unpack codec (bytes -> uint16
-    samples -> sample-domain features); impl="fake" runs the original
-    bytes-level summary through identical plumbing.
-    """
-    if impl not in ("real", "fake"):
-        raise ValueError(f"impl must be 'real' or 'fake', got {impl!r}")
-
-    use_real = impl == "real"
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: no module-level references, so the
-        # pickled UDF needs nothing importable on the worker
-        dim = 8
-
-        def fake(payload: bytes) -> list[float]:
-            if not payload:
-                return [0.0] * dim
-            n = len(payload)
-            return [
-                float(n),
-                float(payload[0]),
-                float(payload[-1]),
-                float(sum(payload) % 997),
-                float(max(payload)),
-                float(min(payload)),
-                float(len(set(payload))),
-                float(sum(payload[:16]) % 256),
-            ]
-
-        def real(payload: bytes) -> list[float]:
-            # struct-unpack decode: little-endian uint16 samples, a
-            # trailing odd byte is ignored (truncated frame)
-            import numpy as np
-
-            v = np.frombuffer(
-                bytes(payload)[: len(payload) // 2 * 2], dtype="<u2"
-            ).astype("int64")
-            if v.size == 0:
-                return [0.0] * dim
-            return [
-                float(v.size),
-                float(v[0]),
-                float(v[-1]),
-                float(int(v.sum()) % 99991),
-                float(v.max()),
-                float(v.min()),
-                float(len(np.unique(v))),
-                float(int((v * v).sum()) % 99991),
-            ]
-
-        decode = real if use_real else fake
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "byte_len": pdf["payload"].map(len),
-                    "features": pdf["payload"].map(decode),
-                }
-            )
-
-    return mm.select("doc_id", "payload").mapInPandas(extract, schema=FEATURES_SCHEMA)
 
 
 PCM16_SCHEMA = (

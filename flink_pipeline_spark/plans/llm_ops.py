@@ -2244,17 +2244,17 @@ def build_graph(
     return stage(nsw_graph(emb, seeds, keep_dist=keep_dist, **NSW_GRAPH_KW))
 
 
-def hnsw_layers(emb: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(adj0, adj1, l1): both HNSW layer graphs over ``emb`` plus the
-    layer-1 member frame. The two builds are independent eager chains,
-    so they overlap on driver threads (guide §2.6) instead of paying
-    both build walls back-to-back."""
+def hnsw_layers(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(adj0, adj1): both HNSW layer graphs over ``emb``, adj1 over
+    its layer-1 members (hnsw_layer1). The two builds are independent
+    eager chains, so they overlap on driver threads (guide §2.6)
+    instead of paying both build walls back-to-back."""
     seeds = emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS)
     l1 = hnsw_layer1(emb).select("vec_id", "embedding")
     adj1, adj0 = parallel_frames(
         lambda: build_graph(l1, seeds), lambda: build_graph(emb, seeds)
     )
-    return adj0, adj1, l1
+    return adj0, adj1
 
 
 def _nsw_shrink_sql(cand: str, p: str, keep_dist: bool = False) -> str:
@@ -2655,14 +2655,9 @@ def _register_hnsw():
         broadcast join to the serving path. Everything else inherits
         the base machinery's shapes."""
         emb = load_table(spark, sf_dir, "embeddings")
-        adj0, adj1, l1 = hnsw_layers(emb)
+        adj0, adj1 = hnsw_layers(emb)
         return hnsw_search(
-            emb,
-            emb.filter(F.col("vec_id") < PQ_QUERY_MAX),
-            adj0,
-            adj1,
-            l1_members=l1,
-            k=3,
+            emb, emb.filter(F.col("vec_id") < PQ_QUERY_MAX), adj0, adj1, k=3
         )
 
     q_sim_hnsw_topk.__doc__ = q_sim_hnsw_topk.__doc__.format(
@@ -3344,7 +3339,7 @@ def hnsw_beam_audit(spark: SparkSession, emb: DataFrame) -> DataFrame:
     registered isotropic row and the planted-cluster audit
     (plans/clustered_audit.py) run ONE sweep rule."""
     queries = emb.filter(F.col("vec_id") < PQ_QUERY_MAX)
-    adj0, adj1, l1 = hnsw_layers(emb)
+    adj0, adj1 = hnsw_layers(emb)
     truth = stage(topk_neighbors_l2(emb, queries, k=3))
     denom = truth.agg(
         F.countDistinct("query_id").cast("long").alias("nq"),
@@ -3355,9 +3350,7 @@ def hnsw_beam_audit(spark: SparkSession, emb: DataFrame) -> DataFrame:
     )
     out = None
     for b in HNSW_BEAMS:
-        res = hnsw_search(
-            emb, queries, adj0, adj1, l1_members=l1, k=3, beam=b
-        )
+        res = hnsw_search(emb, queries, adj0, adj1, k=3, beam=b)
         h = res.join(
             F.broadcast(pairs), ["query_id", "neighbor_id"], "left"
         ).agg(

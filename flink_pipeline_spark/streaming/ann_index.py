@@ -231,20 +231,16 @@ class ANNIndexMonitor:
         zero build cost; reads are the adjacency snapshot plus the
         vector log, both bounded by what the beams touch once filters
         push down. The SAME hnsw_search the batch audit query runs,
-        so serving results cannot fork from the benchmarked form.
+        so serving results cannot fork from the benchmarked form; its
+        layer-1 beam runs over hnsw_layer1 of the live vectors, which
+        hold every endpoint of the stored layer-1 graph (``init``
+        builds it over hnsw_layer1, inserts add only layer-1
+        arrivals, delete bridges link surviving members).
         Vectors are read through the tombstone mask and tombstoned
         ids are excluded from the final beam, so a deleted vector is
         never served."""
         vecs, adj0, adj1, tombs = self._state(spark, after_batch_id + 1)
-        return hnsw_search(
-            vecs,
-            queries,
-            adj0,
-            adj1,
-            l1_members=hnsw_layer1(vecs),
-            k=k,
-            exclude=tombs,
-        )
+        return hnsw_search(vecs, queries, adj0, adj1, k=k, exclude=tombs)
 
     def search_radius(
         self,
@@ -257,14 +253,15 @@ class ANNIndexMonitor:
         the store — every node the standard two-layer search VISITS
         that lies within quantized squared L2 ``radius_q`` of the
         query. The beam traversal is byte-identical to ``search``
-        (same descent, same hand-off, same footprint); only the
+        (same derived layer-1 descent, same hand-off, same
+        footprint); only the
         result rule changes: instead of truncating the final beam to
         k, the full visited set (which the search already paid to
         score — the hnsw_filtered_search insight) is thresholded.
         Recall is bounded by what the beam visits (widen the beam to
         raise it); tombstoned ids are excluded as in ``search``."""
         vecs, adj0, adj1, tombs = self._state(spark, after_batch_id + 1)
-        vis = hnsw_visited(vecs, queries, adj0, adj1, hnsw_layer1(vecs))
+        vis = hnsw_visited(vecs, queries, adj0, adj1)
         return (
             vis.filter(F.col("node") != F.col("query_id"))
             .join(
@@ -289,7 +286,8 @@ class ANNIndexMonitor:
         k: int = 3,
     ) -> DataFrame:
         """Predicate-constrained serving from the store: the same
-        stored graph and the same traversal as ``search``, with the
+        stored graph and the same traversal (layer-1 members derived
+        from the live vectors) as ``search``, with the
         final ranking over the search's full visited set restricted
         to ``filt_ids`` (a vec_id frame from corpus metadata — the
         store itself holds only vectors, so the predicate arrives as
@@ -297,12 +295,5 @@ class ANNIndexMonitor:
         Tombstones are excluded as in ``search``."""
         vecs, adj0, adj1, tombs = self._state(spark, after_batch_id + 1)
         return hnsw_filtered_search(
-            vecs,
-            queries,
-            adj0,
-            adj1,
-            l1_members=hnsw_layer1(vecs),
-            filt_ids=filt_ids,
-            k=k,
-            exclude=tombs,
+            vecs, queries, adj0, adj1, filt_ids=filt_ids, k=k, exclude=tombs
         )

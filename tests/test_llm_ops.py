@@ -19,11 +19,7 @@ from flink_pipeline_spark.operators.llm import (
     topk_neighbors_ivf,
     verified_near_dups,
 )
-from flink_pipeline_spark.operators.multimodal import (
-    FEATURE_DIM,
-    decode_features,
-    to_multimodal,
-)
+from flink_pipeline_spark.operators.multimodal import to_multimodal
 
 from .conftest import SF_DIR, answered_locally
 
@@ -183,41 +179,13 @@ def test_ivf_pairs_multiprobe_recovers_boundary_pairs(spark):
     assert multi <= exact
 
 
-def test_multimodal_schema_and_fake_decode(spark):
+def test_multimodal_schema(spark):
     docs = load_table(spark, SF_DIR, "documents").limit(50)
     mm = to_multimodal(docs)
     assert [f.name for f in mm.schema.fields] == ["doc_id", "payload", "meta"]
     assert mm.schema["payload"].dataType.typeName() == "binary"
     meta_names = [f.name for f in mm.schema["meta"].dataType.fields]
     assert meta_names == ["byte_len", "content_hash", "mime"]
-
-    feats = decode_features(mm, impl="fake")
-    rows = feats.collect()
-    assert len(rows) == 50
-    for r in rows:
-        assert len(r.features) == FEATURE_DIM
-        assert r.features[0] == float(r.byte_len)
-    # deterministic: re-run yields identical features
-    again = {r.doc_id: r.features for r in decode_features(mm, impl="fake").collect()}
-    assert all(again[r.doc_id] == r.features for r in rows)
-
-
-def test_multimodal_real_decode_pcm16(spark):
-    """impl='real' is the PCM16 struct-unpack codec: deterministic,
-    sample-domain (first feature = sample count = byte_len // 2), and
-    distinct from the bytes-level fake."""
-    mm = to_multimodal(load_table(spark, SF_DIR, "documents").limit(5))
-    rows = decode_features(mm, impl="real").collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert len(r.features) == FEATURE_DIM
-        assert r.features[0] == float(r.byte_len // 2)
-    again = {r.doc_id: r.features for r in decode_features(mm, impl="real").collect()}
-    assert all(again[r.doc_id] == r.features for r in rows)
-    fake = {r.doc_id: r.features for r in decode_features(mm, impl="fake").collect()}
-    assert any(fake[r.doc_id] != r.features for r in rows)
-    with pytest.raises(ValueError, match="impl must be"):
-        decode_features(mm, impl="nope")
 
 
 def test_decode_pcm16_matches_numpy(spark):
@@ -263,10 +231,10 @@ def test_connected_components_chain_and_islands(spark):
 
 
 def _cc_union_find(rows):
-    """Min-of-component labels by plain union-find: every endpoint is a
-    node, a null one joins nothing (SQL's null equals nothing), and the
+    """Min-of-component labels by plain union-find: every non-null
+    endpoint is a node (a null one is none and joins nothing), and the
     minimum is taken in UTF-8 byte order for strings."""
-    nodes = {v for e in rows for v in e}
+    nodes = {v for e in rows for v in e if v is not None}
     parent = {v: v for v in nodes}
 
     def find(x):
@@ -285,7 +253,7 @@ def _cc_union_find(rows):
         return v.encode() if isinstance(v, str) else v
 
     return {
-        (v, None if v is None else min(c, key=key))
+        (v, min(c, key=key))
         for c in comps.values()
         for v in c
     }
@@ -329,9 +297,9 @@ def test_connected_components_two_paths_one_answer(
     spark, monkeypatch, gate, case
 ):
     """Both connected_components executions give union-find's labels
-    in the input's id type: the local one (the default gate) on every
-    case but a null endpoint, which takes the DataFrame hybrid, as
-    every case does with the gate at zero. The local path returns a
+    in the input's id type, with no row for a null endpoint: the local
+    one on every case under the default gate, the DataFrame hybrid on
+    every case with the gate at zero. The local path returns a
     one-partition local frame; the hybrid reports its phase-1 rounds
     (an empty result is a local table on either path)."""
     from flink_pipeline_spark.operators.llm import connected_components
@@ -350,7 +318,7 @@ def test_connected_components_two_paths_one_answer(
     got = [tuple(r) for r in res.collect()]
     assert len(got) == len(set(got))
     assert set(got) == _cc_union_find(rows)
-    fast = gate == "default" and case != "null_endpoint"
+    fast = gate == "default"
     assert ("phase1_iters" not in stats) == fast
     if fast:
         assert answered_locally(res)

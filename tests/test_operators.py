@@ -308,6 +308,26 @@ def test_one_local_execution_gate():
     assert _where(r"^\s*\w*LOCAL_MAX\w*\s*=") == ["operators/local.py"]
 
 
+def test_one_rule_per_graph_ann_decision():
+    """The graph-ANN operators state each decision once: the two-layer
+    search derives its layer-1 corpus (no seeding option survives), a
+    rank cut in operators/llm.py is topk_cut or the capped-cell
+    sub-split, and the two operators that score a stored pair share
+    one pair distance."""
+    import inspect
+
+    from flink_pipeline_spark.operators import llm
+
+    assert _where(r"\bl1_members\b|\bentry_from\b") == []
+    row_numbers = _where(r"F\.row_number\(\)").count("operators/llm.py")
+    owners = (llm.topk_cut, llm._sub_split)
+    assert row_numbers == 2
+    assert all(inspect.getsource(f).count("F.row_number()") == 1 for f in owners)
+    for op in (llm.nsw_descent, llm.nsw_delete):
+        src = inspect.getsource(op)
+        assert "_pair_dist(" in src and "SQDIST_Q" not in src, op.__name__
+
+
 def test_default_driver_memory_fits_the_machine():
     """The default heap cap is valid and never above physical memory."""
     import os

@@ -7,7 +7,13 @@ from __future__ import annotations
 import pytest
 
 from flink_pipeline_spark.operators import local
-from flink_pipeline_spark.plans import oracle_sqls, query_fns
+from flink_pipeline_spark.plans import (
+    llm_ops,
+    maxsim,
+    oracle_sqls,
+    pq_serve,
+    query_fns,
+)
 
 from .conftest import SF_DIR
 from .parity import assert_parity
@@ -87,15 +93,28 @@ GATED = (
 
 @pytest.mark.slow
 @pytest.mark.parametrize("name", GATED)
-def test_oracle_parity_gate_shut(spark, oracle, monkeypatch, name):
+def test_oracle_parity_gate_shut(spark, oracle, monkeypatch, tmp_path, name):
     """The gated operators' DataFrame paths, the ones that run above the
     gate at scale, against the same DuckDB hash: with the local gate
-    shut, every collect a query's build asks for declines. A store a
-    query serves from is built only when missing, so a store built
-    earlier in the session is served as it is."""
+    shut, every collect a query's build asks for declines. Every store
+    root points into this test's own directory, so a store the query
+    serves from is built here, with the gate shut, and never served
+    from an earlier build under the open gate."""
+    for mod, root in (
+        (llm_ops, "HNSW_INDEX_CACHE"),
+        (pq_serve, "PQ_INDEX_CACHE"),
+        (maxsim, "MAXSIM_INDEX_CACHE"),
+    ):
+        monkeypatch.setattr(mod, root, str(tmp_path / root))
     monkeypatch.setattr(local, "LOCAL_MAX", 0)
+    calls = []
+    collect = local.collect
+    monkeypatch.setattr(
+        local, "collect", lambda *a: calls.append(a) or collect(*a)
+    )
     df = QUERIES[name](spark, SF_DIR)
     assert_parity(df, oracle, ORACLES[name], name=name)
+    assert calls, name  # the build reached a gated operator
 
 
 def test_entry_smoke(spark):

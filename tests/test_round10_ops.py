@@ -139,9 +139,10 @@ def test_nsw_beam_paths_agree_on_visited_sets_and_dangling_edges(
     and the keep_visited set — when some queries carry several seeds
     (one beam per query), one seed and some edges name a vec_id absent
     from the vector frame (dropped when scored, never expanded), and
-    the corpus misses one graph node, or the entry frame is empty (a
-    store with no layer-1 vector). An empty corpus (every vector
-    deleted) has no dim to ship: the loop answers it, empty."""
+    the corpus misses one graph node. A two-layer search over a corpus
+    with no layer-1 vector (its layer-1 beam has no entry) returns no
+    rows on either path. An empty corpus (every vector deleted) has no
+    dim to ship: the loop answers it, empty."""
     emb = load_table(spark, SMALL_SF, "embeddings")
     gone = 7  # a graph node missing from the vector frame
     vecs = emb.filter(F.col("vec_id") != gone)
@@ -158,8 +159,15 @@ def test_nsw_beam_paths_agree_on_visited_sets_and_dangling_edges(
         "query_id long, node long",
     )
 
+    # a corpus whose layer 1 is empty
+    no_l1 = vecs.join(llm.hnsw_layer1(vecs), "vec_id", "left_anti")
+
     def run(**kw):
         res = llm.nsw_beam(vecs, queries, adj, **kw)
+        return _local(res), sorted(tuple(r) for r in res.collect())
+
+    def run_hnsw():
+        res = llm.hnsw_search(no_l1, queries, adj, adj)
         return _local(res), sorted(tuple(r) for r in res.collect())
 
     cases = [
@@ -167,14 +175,14 @@ def test_nsw_beam_paths_agree_on_visited_sets_and_dangling_edges(
         dict(entries=entries),
         dict(keep_visited=True),
         dict(beam=4),
-        dict(entry_from=vecs.limit(0)),
     ]
-    fast = [run(**kw) for kw in cases]
+    fast = [run(**kw) for kw in cases] + [run_hnsw()]
     none = llm.nsw_beam(vecs.limit(0), queries, adj, keep_visited=True)
     assert not none.collect()
     _loop_path(monkeypatch)
-    slow = [run(**kw) for kw in cases]
-    for (f_in, f_rows), (s_in, s_rows), kw in zip(fast, slow, cases):
+    slow = [run(**kw) for kw in cases] + [run_hnsw()]
+    names = cases + ["hnsw_search"]
+    for (f_in, f_rows), (s_in, s_rows), kw in zip(fast, slow, names):
         assert f_in and not s_in, kw
         assert f_rows == s_rows, kw
         assert not {r[1] for r in f_rows} & {gone, ghost}, kw

@@ -206,7 +206,6 @@ def test_ann_index_stream_equals_batch(spark, tmp_path):
             queries,
             a0.select("src", "dst"),
             a1.select("src", "dst"),
-            l1_members=l1(idx),
             k=3,
             beam=NSW_BEAM,
         ).collect()

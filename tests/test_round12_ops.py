@@ -119,6 +119,50 @@ def test_nsw_delete_matches_python_reimplementation(spark):
     assert had_live_edge <= {s for s, _, _ in got}
 
 
+def test_layer1_endpoints_are_layer1_members(spark, tmp_path):
+    """hnsw_entries beams layer 1 over hnsw_layer1 of the corpus, which
+    scores what a beam over the whole corpus would only while every
+    endpoint of a layer-1 adjacency is a layer-1 member. That holds for
+    hnsw_layers' build, the store's init, and the store after one
+    mixed delete+insert batch that touches layer 1 both ways."""
+    from flink_pipeline_spark.operators.llm import hnsw_layer1
+    from flink_pipeline_spark.plans.llm_ops import hnsw_layers
+
+    emb = load_table(spark, SMALL_SF, "embeddings")
+    members = {r.vec_id for r in hnsw_layer1(emb).select("vec_id").collect()}
+    # arrivals: every third layer-1 node and a seventh of the rest
+    new = sorted(members)[1::3]
+    is_new = F.col("vec_id").isin(new) | (F.col("vec_id") % 7 == 0)
+    base = emb.filter(~is_new).select("vec_id", "embedding")
+    arrivals = emb.filter(is_new).select("vec_id", "embedding")
+
+    def endpoints(adj):
+        return {v for r in adj.select("src", "dst").collect() for v in r}
+
+    def stored(batch_id):
+        adj = mon.adjacency(spark, batch_id)
+        return endpoints(adj.filter(F.col("layer") == 1))
+
+    built = endpoints(hnsw_layers(emb)[1])
+    assert built and built <= members
+    mon = _mon(tmp_path)
+    mon.init(base, emb.filter(F.col("vec_id") < IVF_SEED_CENTROIDS))
+    before = stored(-1)
+    assert before and before <= members
+    # every third layer-1 node, the entry (its smallest id) among them
+    dead = set(sorted(before)[::3])
+    dels = base.filter(F.col("vec_id").isin(sorted(dead)))
+    mon(
+        dels.select("vec_id", "embedding", F.lit("delete").alias("op"))
+        .unionByName(arrivals.select(
+            "vec_id", "embedding", F.lit("insert").alias("op")
+        )),
+        0,
+    )
+    after = stored(0)
+    assert after and after <= members - dead and after & set(new)
+
+
 def test_ann_index_delete_stream_equals_batch(spark, tmp_path):
     """An insert batch followed by a MIXED delete+insert batch through
     the foreachBatch sink yields the same adjacency — layer by layer
@@ -188,7 +232,6 @@ def test_ann_index_delete_stream_equals_batch(spark, tmp_path):
             queries,
             a0.select("src", "dst"),
             a1.select("src", "dst"),
-            l1_members=l1(live),
             k=3,
             beam=NSW_BEAM,
             exclude=dels,

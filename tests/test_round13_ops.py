@@ -218,7 +218,6 @@ def test_unindex_stream_equals_batch_and_replay(spark, tmp_path):
             queries,
             a0.select("src", "dst"),
             a1.select("src", "dst"),
-            l1_members=l1(live),
             k=3,
             beam=NSW_BEAM,
             exclude=dels,
